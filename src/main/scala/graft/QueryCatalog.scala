@@ -8693,7 +8693,7 @@ object QueryCatalog {
              |FROM e ORDER BY operation_id, index""".stripMargin),
       (s, dir) =>
         graft.operators.StellarTradesEffects.historyEffects(
-            graft.sources.LcmBatchFiles.ledgerRowsViaConnector(
+            graft.sources.LcmBatchFiles.ledgerRowsForRange(
               s, classicXdrDir, 3300, 3331))
           .drop("closed_at")
           .withColumn("details", to_json(col("details")))

@@ -1,10 +1,11 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.model.LedgerModel.LedgerRow
 import graft.operators._
-import graft.sources.StellarFixture
+import graft.sources.{LcmBatchFiles, StellarFixture}
 
 /** Thin command layer mirroring the reference CLI (`cmd/export_*.go`): same
   * command names and flag vocabulary, Spark underneath.
@@ -218,60 +219,78 @@ object Export {
     written
   }
 
-  private def ledgerSource(spark: SparkSession, a: Args) = {
+  private def ledgerSource(spark: SparkSession, a: Args): Dataset[LedgerRow] = {
     import spark.implicits._
-    // --batch-input <datastore tree>: the reference's REAL backfill
-    // substrate — zstd LedgerCloseMetaBatch objects (1 ledger/file), the
-    // object-key law pruning the listing to the requested range
-    if (a.batchInput.isDefined && a.permissive) {
-      // poison OBJECTS become reported error rows: counted by the same
-      // observe() metric, dumped beside the output, good ledgers flow on
-      val res = graft.sources.LcmBatchFiles
-        .objectsPermissive(spark, a.batchInput.get, a.networkId).persist()
-      val errs = res.filter(r => r.error.isDefined)
-      val nBad = errs.count()
-      if (nBad > 0) {
-        val errPath = a.output.stripSuffix("/") + "_decode_errors"
-        errs.toDF().select(col("error"), col("path"))
-          .write.mode("overwrite").json(errPath)
-        println(s"""{"xdr_poisoned":$nBad,"errors_path":"$errPath"}""")
-      }
-      graft.operators.Stats.observedDecode(res.toDF())
-        .as[graft.sources.LcmBatchFiles.ObjectDecodeResult]
-        .flatMap(_.rows)
-        .filter(r => r.sequence >= a.start && r.sequence <= a.end)
-    } else if (a.batchInput.isDefined)
-      graft.sources.LcmBatchFiles.ledgerRowsForRange(
-        spark, a.batchInput.get, a.start, a.end, a.networkId)
-    else (a.xdrInput, a.input) match {
+    (a.batchInput, a.xdrInput, a.input) match {
+      // --batch-input <datastore tree>: the reference's REAL backfill
+      // substrate — zstd LedgerCloseMetaBatch objects (1 ledger/file) read
+      // through the graft-lcm-datastore connector, bounded to the range
+      case (Some(root), _, _) if a.permissive =>
+        reportPoisoned(LcmBatchFiles.objectsPermissive(
+          spark, root, a.start, a.end, a.networkId), a, "path").flatMap(_.rows)
+      case (Some(root), _, _) =>
+        LcmBatchFiles.ledgerRowsForRange(
+          spark, root, a.start, a.end, a.networkId)
       // --xdr-input <file/dir of frame NDJSON>: REAL network XDR — one row
       // per ledger with base64 `ledger_header` + `transactions` array of
       // (tx_envelope, tx_result[, tx_meta, tx_fee_meta]); decodes in the
       // executors (RealXdrSource) and feeds the same model-path transforms,
       // so every export command replays genuine archive bytes
-      // --permissive: poison frames become REPORTED error rows — counted
-      // by an observe() metric riding the export query, dumped beside the
-      // output, surfaced in the stats line — never silently dropped
-      case (Some(path), _) if a.permissive =>
-        val res = graft.operators.RealXdrSource
-          .ledgerRowsPermissive(spark.read.json(path), a.networkId).persist()
-        val errs = res.filter(r => r.error.isDefined)
-        val nBad = errs.count()
-        if (nBad > 0) {
-          val errPath = a.output.stripSuffix("/") + "_decode_errors"
-          errs.toDF().select(col("error"), col("ledger_header"))
-            .write.mode("overwrite").json(errPath)
-          println(s"""{"xdr_poisoned":$nBad,"errors_path":"$errPath"}""")
-        }
-        graft.operators.Stats.observedDecode(res.toDF())
-          .as[graft.operators.RealXdrSource.DecodeResult]
+      case (None, Some(path), _) if a.permissive =>
+        reportPoisoned(graft.operators.RealXdrSource.ledgerRowsPermissive(
+            spark.read.json(path), a.networkId), a, "ledger_header")
           .flatMap(_.row)
-      case (Some(path), _) =>
+      case (None, Some(path), _) =>
         graft.operators.RealXdrSource.ledgerRows(spark.read.json(path),
           a.networkId)
-      case (None, Some(path)) =>
-        spark.read.parquet(path).as[graft.model.LedgerModel.LedgerRow]
-      case (None, None) => StellarFixture.ledgers(spark, a.start, a.end)
+      case (None, None, Some(path)) => spark.read.parquet(path).as[LedgerRow]
+      case (None, None, None) => StellarFixture.ledgers(spark, a.start, a.end)
+    }
+  }
+
+  /** --permissive: poison inputs (frames or datastore objects) become
+    * REPORTED error rows — counted in a stats line and dumped beside the
+    * output with the `evidence` column that identifies them — never
+    * silently dropped. One job counts the persisted result; the export then
+    * reads the same cache. */
+  private def reportPoisoned[R](decoded: Dataset[R], a: Args,
+      evidence: String): Dataset[R] = {
+    val res = decoded.persist()
+    val c = res.agg(count(lit(1)), count_if(col("error").isNull),
+      count_if(col("error").isNotNull)).head()
+    println(s"""{"xdr_frames":${c.getLong(0)},"xdr_decoded":${c.getLong(1)},""" +
+      s""""xdr_poisoned":${c.getLong(2)}}""")
+    if (c.getLong(2) > 0) {
+      val errPath = a.output.stripSuffix("/") + "_decode_errors"
+      res.filter(col("error").isNotNull).select(col("error"), col(evidence))
+        .write.mode("overwrite").json(errPath)
+      println(s"""{"xdr_poisoned":${c.getLong(2)},"errors_path":"$errPath"}""")
+    }
+    res
+  }
+
+  /** Runs `write` over the command's ledgers, trimmed to [start, end]. A
+    * `--batch-input` export then prints ledgers expected against ledgers
+    * read, counted by an observe() riding the export's own query (no extra
+    * job): a hole in the datastore tree shows without failing the export.
+    * Not under `--limit`: the sink's limit stops the read early, so the
+    * count would show a hole that is not there (and `--limit 0` prunes the
+    * observed plan away entirely). `persisted` caches the ledgers for an
+    * export that reads them more than once; the cache sits below the
+    * observe(), whose metrics Spark does not report from inside a cached
+    * plan. */
+  private def withLedgers(spark: SparkSession, a: Args,
+      persisted: Boolean = false)(write: Dataset[LedgerRow] => Unit): Unit = {
+    val src = ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))
+    val ledgers =
+      if (persisted) src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else src
+    if (a.batchInput.isEmpty || a.limit >= 0) write(ledgers)
+    else {
+      val read = Observation("graft_ledgers_read")
+      write(ledgers.observe(read, count(lit(1)).as("ledgers")))
+      println(s"""{"ledgers_expected":${a.end - a.start + 1},""" +
+        s""""ledgers_read":${read.get.getOrElse("ledgers", 0L)}}""")
     }
   }
 
@@ -340,23 +359,6 @@ object Export {
   def run(spark: SparkSession, a: Args): Unit = {
     import spark.implicits._
 
-    // permissive-decode observability: print the observe() counters that
-    // ride the export query (frames/decoded/poisoned) once the sink runs
-    val unlisten: () => Unit =
-      if (a.permissive)
-        graft.operators.Stats.listen(spark,
-            graft.operators.Stats.DecodeMetricName) { m =>
-          println(s"""{"xdr_frames":${m.getOrElse("frames", 0L)},""" +
-            s""""xdr_decoded":${m.getOrElse("decoded", 0L)},""" +
-            s""""xdr_poisoned":${m.getOrElse("poisoned", 0L)}}""")
-        }
-      else () => ()
-    try runInner(spark, a) finally unlisten()
-  }
-
-  private def runInner(spark: SparkSession, a: Args): Unit = {
-    import spark.implicits._
-
     // fail fast on a missing --end for every bounded export command; the
     // one continuous mode is export_ledger_entry_changes with an EXPLICIT
     // --end 0 (handled in the wire branch below)
@@ -410,49 +412,43 @@ object Export {
 
     a.command match {
       case "export_ledgers" =>
-        sink(StellarTransforms.historyLedgers(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l => sink(StellarTransforms.historyLedgers(l), a))
 
       case "export_transactions" =>
-        sink(StellarTransforms.historyTransactions(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l =>
+          sink(StellarTransforms.historyTransactions(l), a))
 
       case "export_operations" =>
-        sink(StellarTransforms.historyOperations(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l =>
+          sink(StellarTransforms.historyOperations(l), a))
 
       case "export_effects" =>
-        sink(StellarTradesEffects.historyEffects(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l =>
+          sink(StellarTradesEffects.historyEffects(l), a))
 
       case "export_trades" =>
-        sink(StellarTradesEffects.historyTrades(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l =>
+          sink(StellarTradesEffects.historyTrades(l), a))
 
       case "export_token_transfers" =>
-        sink(TokenTransfers.fromLedgers(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end)),
-          a.passphrase), a)
+        withLedgers(spark, a)(l =>
+          sink(TokenTransfers.fromLedgers(l, a.passphrase), a))
 
       case "export_assets" =>
-        sink(StellarTransforms.historyAssets(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))), a)
+        withLedgers(spark, a)(l => sink(StellarTransforms.historyAssets(l), a))
 
       case "export_ledger_transaction" =>
-        sink(StellarTransforms.ledgerTransactions(
-          ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))
-            .toDF()), a)
+        withLedgers(spark, a)(l =>
+          sink(StellarTransforms.ledgerTransactions(l.toDF()), a))
 
       case "export_contract_events" =>
-        val src = ledgerSource(spark, a)
-          .where(col("sequence").between(a.start, a.end))
         // real-XDR inputs carry the FULL diagnostic grain (tx meta v3
         // SorobanMeta → TxModel.diag_events); the fixture model carries
         // op-level SAC events only — each substrate gets its renderer
-        if (a.batchInput.isDefined || a.xdrInput.isDefined)
-          sink(graft.operators.SorobanStateTables
-            .contractEventsFromLedgers(src), a)
-        else sink(StellarTransforms.contractEvents(src.toDF()), a)
+        withLedgers(spark, a)(l =>
+          if (a.batchInput.isDefined || a.xdrInput.isDefined)
+            sink(graft.operators.SorobanStateTables.contractEventsFromLedgers(l), a)
+          else sink(StellarTransforms.contractEvents(l.toDF()), a))
 
       case "version" =>
         println(s"graft 0.4.0 (spark ${spark.version})")
@@ -557,55 +553,60 @@ object Export {
               s"(${sorobanTypes.mkString(", ")}), not $t"))
         w
       }
-    // persisted once: all four state resources project the SAME decoded
-    // rows — without this each resource re-reads and re-decodes the tree
-    // (4× read amplification on a real backfill)
-    lazy val realLedgers = graft.sources.LcmBatchFiles.ledgerRowsForRange(
-        spark, a.batchInput.getOrElse(""), a.start, a.end, a.networkId)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    require(wanted.nonEmpty, s"no entry type in --export-type '${a.exportType}'")
+    def entryType(t: String) = EntryTypes.find(_._1 == t).get
 
-    lazy val changes = StellarFixture.changes(spark, a.start, a.end,
-        includeTrustlines = true)
-      .where(col("ledger_sequence").between(a.start, a.end))
-    lazy val tableDir = a.tableDir.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
-      .getOrElse(sys.error("--table-dir (or SPARK_GRAFT_SF_DIR) is required " +
-        "for state-entry export types"))
-    def tbl(name: String) = LedgerFixtures.table(spark, tableDir, name)
+    if (a.batchInput.isDefined)
+      // persisted once: all four state resources project the SAME decoded
+      // rows — without this each resource re-reads and re-decodes the tree
+      // (4× read amplification on a real backfill). Real changes batch by
+      // the ledger they occurred in (the reference's batch loop walks
+      // ledger ranges).
+      withLedgers(spark, a, persisted = true) { ledgers =>
+        wanted.foreach { t =>
+          val frame = t match {
+            case "contract_data" =>
+              SorobanStateTables.contractDataFromLedgers(ledgers, a.passphrase)
+            case "contract_code" => SorobanStateTables.contractCodeFromLedgers(ledgers)
+            case "config_setting" =>
+              SorobanStateTables.configSettingsFromLedgers(ledgers)
+            case "ttl" => SorobanStateTables.ttlFromLedgers(ledgers)
+          }
+          writeBatchFiles(spark, frame, "ledger_sequence", entryType(t)._2, a)
+        }
+      }
+    else {
+      lazy val changes = StellarFixture.changes(spark, a.start, a.end,
+          includeTrustlines = true)
+        .where(col("ledger_sequence").between(a.start, a.end))
+      lazy val tableDir = a.tableDir.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+        .getOrElse(sys.error("--table-dir (or SPARK_GRAFT_SF_DIR) is required " +
+          "for state-entry export types"))
+      def tbl(name: String) = LedgerFixtures.table(spark, tableDir, name)
 
-    def frameFor(t: String): DataFrame = t match {
-      case "contract_data" if a.batchInput.isDefined =>
-        graft.operators.SorobanStateTables
-          .contractDataFromLedgers(realLedgers, a.passphrase)
-      case "contract_code" if a.batchInput.isDefined =>
-        graft.operators.SorobanStateTables.contractCodeFromLedgers(realLedgers)
-      case "config_setting" if a.batchInput.isDefined =>
-        graft.operators.SorobanStateTables.configSettingsFromLedgers(realLedgers)
-      case "ttl" if a.batchInput.isDefined =>
-        graft.operators.SorobanStateTables.ttlFromLedgers(realLedgers)
-      case "account" => ChangeTransforms.accounts(changes)
-      case "signer" => ChangeTransforms.accountSigners(changes)
-      case "offer" =>
-        val o = ChangeTransforms.offers(changes)
-        if (a.strict && ChangeTransforms.invalidOffers(o).limit(1).count() > 0)
-          sys.error("strict-export: offer invariant violation")
-        o
-      case "trustline" => ChangeTransforms.trustlines(changes)
-      case "claimable_balance" =>
-        EntryProjections.claimableBalances(tbl("customer"))
-      case "pool" => EntryProjections.liquidityPools(tbl("part"))
-      case "contract_data" => EntryProjections.contractData(tbl("part"))
-      case "contract_code" => EntryProjections.contractCode(tbl("part"))
-      case "config_setting" => EntryProjections.configSettings(tbl("nation"))
-      case "ttl" => EntryProjections.ttls(LedgerFixtures.events(spark, tableDir))
-    }
+      def frameFor(t: String): DataFrame = t match {
+        case "account" => ChangeTransforms.accounts(changes)
+        case "signer" => ChangeTransforms.accountSigners(changes)
+        case "offer" =>
+          val o = ChangeTransforms.offers(changes)
+          if (a.strict && ChangeTransforms.invalidOffers(o).limit(1).count() > 0)
+            sys.error("strict-export: offer invariant violation")
+          o
+        case "trustline" => ChangeTransforms.trustlines(changes)
+        case "claimable_balance" =>
+          EntryProjections.claimableBalances(tbl("customer"))
+        case "pool" => EntryProjections.liquidityPools(tbl("part"))
+        case "contract_data" => EntryProjections.contractData(tbl("part"))
+        case "contract_code" => EntryProjections.contractCode(tbl("part"))
+        case "config_setting" => EntryProjections.configSettings(tbl("nation"))
+        case "ttl" => EntryProjections.ttls(LedgerFixtures.events(spark, tableDir))
+      }
 
-    wanted.foreach { t =>
-      val (_, resource, seqCol0) = EntryTypes.find(_._1 == t).get
-      // real changes batch by the ledger they occurred in (the reference's
-      // batch loop walks ledger ranges); the fixture state tables keep
-      // their last-modified convention
-      val seqCol = if (a.batchInput.isDefined) "ledger_sequence" else seqCol0
-      writeBatchFiles(spark, frameFor(t), seqCol, resource, a)
+      // the fixture state tables keep their last-modified convention
+      wanted.foreach { t =>
+        val (_, resource, seqCol) = entryType(t)
+        writeBatchFiles(spark, frameFor(t), seqCol, resource, a)
+      }
     }
   }
 

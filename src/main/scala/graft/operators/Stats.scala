@@ -22,26 +22,14 @@ object Stats {
       count_if(col(successCol)).as("successful"),
       count_if(!col(successCol)).as("failed"))
 
-  val DecodeMetricName = "graft_xdr_decode"
-
-  /** Attach frame/decoded/poisoned counters to a permissive-decode result
-    * DataFrame (one row per frame, `error` non-null ⇔ poisoned): the counts
-    * ride the export query itself — no second scan of the backfill input. */
-  def observedDecode(df: DataFrame): DataFrame =
-    df.observe(DecodeMetricName,
-      count(lit(1)).as("frames"),
-      count_if(col("error").isNull).as("decoded"),
-      count_if(col("error").isNotNull).as("poisoned"))
-
   /** Register a listener that feeds each run's stats to `onStats`. Returns a
     * deregistration handle. */
-  def listen(spark: org.apache.spark.sql.SparkSession,
-      metricName: String = MetricName)(
+  def listen(spark: org.apache.spark.sql.SparkSession)(
       onStats: Map[String, Long] => Unit): () => Unit = {
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, duration: Long): Unit =
-        qe.observedMetrics.get(metricName).foreach { row =>
+        qe.observedMetrics.get(MetricName).foreach { row =>
           onStats(row.schema.fieldNames.zip(row.toSeq.map {
             case l: Long => l
             case other => other.toString.toLong

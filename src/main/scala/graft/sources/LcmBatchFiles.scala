@@ -18,11 +18,12 @@ import graft.model.LedgerModel.LedgerRow
   * lexicographic listing descends by sequence and object names spread evenly
   * across bucket index ranges).
   *
-  * Read side: `spark.read.format("binaryFile")` over the tree (partition
-  * pruning by pushed path filters), then ONE executor-side flatMap at the
-  * deserialization boundary — decompress, decode, emit LedgerRows. Map-only:
-  * a 100 TB backfill parallelizes per file exactly like the reference's
-  * BufferedStorageBackend workers.
+  * Read side: the `graft-lcm-datastore` DSv2 connector
+  * ([[LcmDatastoreSource]]) derives the range's object keys from the naming
+  * law, then ONE executor-side flatMap at the deserialization boundary —
+  * decompress, decode, emit LedgerRows. Map-only: a 100 TB backfill
+  * spreads over its objects like the reference's BufferedStorageBackend
+  * workers.
   */
 object LcmBatchFiles {
 
@@ -129,18 +130,6 @@ object LcmBatchFiles {
       networkId: Array[Byte] = StellarXdr.PublicNetworkId): Seq[LedgerRow] =
     StellarXdr.decodeLedgerCloseMetaBatch(decompress(bytes), networkId)
 
-  /** The backfill read path: binaryFile scan → executor decode. Column
-    * pruning drops `content` siblings; only `.xdr.zstd` objects match. */
-  def ledgerRows(spark: SparkSession, rootDir: String,
-      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[LedgerRow] =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xdr.zstd")
-      .option("recursiveFileLookup", "true")
-      .load(rootDir)
-      .select(col("content"))
-      .as(binEnc)
-      .flatMap(decodeObject(_, networkId))(ledgerRowEnc)
-
   /** Permissive-mode result: one row per OBJECT file — either its decoded
     * ledgers or the error (poison objects must be reported, never dropped;
     * the caller splits on `error`, mirroring
@@ -148,65 +137,50 @@ object LcmBatchFiles {
   final case class ObjectDecodeResult(path: String, rows: Seq[LedgerRow],
       error: Option[String])
 
+  /** The connector scan bounded to the objects of a ledger range. The
+    * object-level predicate is range OVERLAP (not containment), so a
+    * multi-ledger object straddling a bound still contributes its in-range
+    * ledgers; callers trim the overhang row-level. Pushed sequence bounds
+    * become the object keys BY NAME (visible as PushedFilters in the
+    * plan); an absent object is skipped at read time. `options` passes the
+    * datastore schema config (`ledgersPerFile`, `filesPerPartition`)
+    * through. */
+  private def objectsInRange(spark: SparkSession, rootDir: String,
+      startSeq: Long, endSeq: Long, options: Map[String, String]): DataFrame =
+    spark.read.format("graft-lcm-datastore").options(options).load(rootDir)
+      .where(col("end_sequence") >= startSeq && col("start_sequence") <= endSeq)
+
+  /** The backfill read: the bounded connector scan, then ONE executor-side
+    * decode flatMap per object (fail-fast: a corrupt object fails the job).
+    * Planning lists nothing and each task opens its own objects — no
+    * listing job, no per-object driver stat. A full-history job should
+    * still chunk its range into per-job slices, exactly as the reference's
+    * batch loop does. */
+  def ledgerRowsForRange(spark: SparkSession, rootDir: String,
+      startSeq: Long, endSeq: Long,
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId,
+      options: Map[String, String] = Map.empty): Dataset[LedgerRow] =
+    ledgerRowsFromObjects(
+      objectsInRange(spark, rootDir, startSeq, endSeq, options), networkId)
+      .filter(r => r.sequence >= startSeq && r.sequence <= endSeq)
+
+  /** The same bounded scan in permissive mode: a poison object becomes an
+    * error row instead of failing the job; decoded rows are trimmed to the
+    * range. */
   def objectsPermissive(spark: SparkSession, rootDir: String,
-      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[ObjectDecodeResult] = {
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xdr.zstd")
-      .option("recursiveFileLookup", "true")
-      .load(rootDir)
+      startSeq: Long, endSeq: Long,
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[ObjectDecodeResult] =
+    objectsInRange(spark, rootDir, startSeq, endSeq, Map.empty)
       .select(col("path"), col("content"))
       .as(pathBinEnc)
       .map { case (path, bytes) =>
-        try ObjectDecodeResult(path, decodeObject(bytes, networkId), None)
+        try ObjectDecodeResult(path, decodeObject(bytes, networkId)
+            .filter(r => r.sequence >= startSeq && r.sequence <= endSeq), None)
         catch {
           case e: Exception => ObjectDecodeResult(path, Nil,
             Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
         }
       }(objResEnc)
-  }
-
-  /** Range-pruned variant: the object-key law maps a ledger range to its
-    * file names, so NOTHING is ever listed — the 100 TB shape (a backfill
-    * of 1M ledgers out of 200M touches exactly its 1M objects). r21: the
-    * first cut stat'ed every candidate on the driver (local-FS-only
-    * `Files.exists`) and then let the binaryFile source RE-list the same
-    * paths — an InMemoryFileIndex parallel-discovery Spark job costing
-    * ~0.2 s per query at 128 paths and one driver round-trip per object at
-    * backfill scale. Now each TASK opens its assigned objects directly
-    * through the Hadoop FS (any scheme the cluster knows), skipping
-    * absent objects exactly like the old driver-side exists filter;
-    * no driver stats, no listing job, no file index. Decode stays the
-    * same executor-side fail-fast boundary; a full-history job should
-    * still chunk its range into per-job slices, exactly as the
-    * reference's batch loop does. */
-  def ledgerRowsForRange(spark: SparkSession, rootDir: String,
-      startSeq: Long, endSeq: Long,
-      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[LedgerRow] = {
-    val paths = (startSeq to endSeq by LedgersPerFile)
-      .map(seq => s"$rootDir/${objectKey(seq)}")
-    val conf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val slices = math.max(1,
-      math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val nid = networkId
-    val rows = spark.sparkContext.parallelize(paths, slices)
-      .flatMap { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(conf.value)
-        val bytes =
-          try {
-            val in = fs.open(hp)
-            try Some(in.readAllBytes()) finally in.close()
-          } catch {
-            // absent object = the old driver-side exists filter; any
-            // OTHER failure (corrupt zstd, bad XDR) still fails the job
-            case _: java.io.FileNotFoundException => None
-          }
-        bytes.iterator.flatMap(decodeObject(_, nid))
-      }
-    spark.createDataset(rows)(ledgerRowEnc)
-      .filter(r => r.sequence >= startSeq && r.sequence <= endSeq)
-  }
 
   /** Object→ledger decode over the DSv2 connector's object grain — shared
     * by batch reads and micro-batch `foreachBatch` bodies. */
@@ -214,24 +188,6 @@ object LcmBatchFiles {
       networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[LedgerRow] =
     objects.select(col("content")).as(binEnc)
       .flatMap(decodeObject(_, networkId))(ledgerRowEnc)
-
-  /** The connector form of the backfill read: pushed sequence bounds prune
-    * partition prefixes and objects BY NAME at the scan (visible as
-    * PushedFilters in the plan), then the usual executor-side decode.
-    *
-    * The object-level predicate is range OVERLAP (not containment), so a
-    * multi-ledger object straddling a bound still contributes its in-range
-    * ledgers; the row-level filter trims the overhang. Identical plan and
-    * rows for the 1-ledger-per-file schema. `options` passes the datastore
-    * schema config (`ledgersPerFile`, `filesPerPartition`) through. */
-  def ledgerRowsViaConnector(spark: SparkSession, rootDir: String,
-      startSeq: Long, endSeq: Long,
-      options: Map[String, String] = Map.empty): Dataset[LedgerRow] =
-    ledgerRowsFromObjects(
-      spark.read.format("graft-lcm-datastore").options(options).load(rootDir)
-        .where(col("end_sequence") >= startSeq &&
-          col("start_sequence") <= endSeq))
-      .filter(r => r.sequence >= startSeq && r.sequence <= endSeq)
 
   /** Tail a LIVE datastore tree: micro-batch stream at the object grain
     * (probe-based advance, no per-trigger listing) → executor decode.

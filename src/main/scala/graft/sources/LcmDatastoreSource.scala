@@ -18,17 +18,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * naming law, `/root/reference/internal/utils/main.go:972-1019`), at the
   * OBJECT grain: `(start_sequence, end_sequence, path, content)`.
   *
-  * The decode boundary stays a typed `flatMap`
+  * The only batch reader of a datastore tree ([[LcmBatchFiles]] builds
+  * every range read on it). The decode boundary stays a typed `flatMap`
   * ([[LcmBatchFiles.decodeObject]]) so the connector never hand-marshals the
-  * nested LedgerRow model; what the connector adds over a plain `binaryFile`
-  * scan:
+  * nested LedgerRow model; the connector itself supplies:
   *
   *   - pushed `start_sequence`/`end_sequence` range predicates prune by the
-  *     object-key NAMING LAW — a bounded scan enumerates candidate partition
-  *     prefixes and lists only those directories (a 1M-ledger slice of a
-  *     200M-ledger datastore touches ~16 prefix dirs, never the full tree);
+  *     object-key NAMING LAW. A bounded scan that reads `content` lists
+  *     nothing: it derives every candidate key from the range and each task
+  *     opens its own objects, skipping an absent one. A bounded key-only
+  *     scan lists just the range's candidate partition prefixes (a
+  *     1M-ledger slice of a 200M-ledger datastore touches ~16 prefix dirs,
+  *     never the full tree);
   *   - required-column pruning skips opening the object entirely when
   *     `content` isn't requested (a COUNT or key audit reads zero bytes);
+  *   - the surviving objects are packed in key order into
+  *     `min(objects, defaultParallelism)` contiguous input partitions, one
+  *     task per core rather than one per object;
   *   - MICRO_BATCH_READ tails a LIVE tree by PROBING the next object key —
   *     the exporter writes sequences in order, so the next key appearing IS
   *     the advance signal; no per-trigger tree listing
@@ -153,13 +159,16 @@ class LcmDatastoreScan(path: String, requiredSchema: StructType,
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
   // memoized: AQE re-instantiates the exec node around the SAME Scan, and
-  // against an object store a second listing is a second round of RPCs
-  private lazy val partitions: Array[InputPartition] =
-    LcmDatastoreFiles.list(path, lo, hi, ledgersPerFile, filesPerPartition,
-        hadoopConf)
-      .map(o => LcmDatastorePartition(o.path, o.startSeq, o.endSeq,
-        o.length): InputPartition)
-      .toArray
+  // against an object store a second listing is a second round of RPCs.
+  // A bounded content read needs no listing: the reader opens each key and
+  // skips an absent one. A key-only scan has nothing to open, so it lists
+  // to learn which objects exist.
+  private lazy val partitions: Array[InputPartition] = LcmDatastoreFiles.pack(
+    if (lo != Long.MinValue && hi != Long.MaxValue &&
+        requiredSchema.fieldNames.contains("content"))
+      LcmDatastoreFiles.keyed(path, lo, hi, ledgersPerFile, filesPerPartition)
+    else LcmDatastoreFiles.list(path, lo, hi, ledgersPerFile,
+      filesPerPartition, hadoopConf))
 
   override def planInputPartitions(): Array[InputPartition] = partitions
 
@@ -174,9 +183,11 @@ class LcmDatastoreScan(path: String, requiredSchema: StructType,
       new SerializableHadoopConf(hadoopConf))
 }
 
-/** One discovered datastore object: path, its key-law ledger range, and its
-  * byte length (free from the listing — the reader sizes its single content
-  * allocation from it, no per-object stat RPC). */
+/** One planned datastore object: path, its key-law ledger range, and its
+  * byte length when a listing supplied it (the reader then sizes its single
+  * content allocation from it, no per-object stat RPC). A key derived from
+  * the naming law has `length = -1`: it may be absent, and the reader reads
+  * it to EOF or skips it. */
 case class DatastoreObject(path: String, startSeq: Long, endSeq: Long,
     length: Long)
 
@@ -217,10 +228,36 @@ object LcmDatastoreFiles {
         .filter(o => o.endSeq >= lo && o.startSeq <= hi)
     }.sortBy(_.startSeq)
   }
+
+  /** The candidate objects of `[lo, hi]` from the naming law alone — no
+    * filesystem call. Sequences are non-negative, so `lo` clamps to 0. */
+  def keyed(root: String, lo: Long, hi: Long, ledgersPerFile: Long,
+      filesPerPartition: Long): Seq[DatastoreObject] =
+    (Math.floorDiv(math.max(lo, 0L), ledgersPerFile) * ledgersPerFile to hi
+        by ledgersPerFile).map { start =>
+      DatastoreObject(new org.apache.hadoop.fs.Path(root,
+        LcmBatchFiles.objectKey(start, ledgersPerFile, filesPerPartition))
+        .toString, start, start + ledgersPerFile - 1, -1L)
+    }
+
+  /** Pack key-ordered objects into `min(objects, defaultParallelism)`
+    * contiguous partitions, sliced evenly like an RDD over a local Seq:
+    * a per-object task would cost more to schedule than its decode, and one
+    * output file per object would follow it to the sink. */
+  def pack(objects: Seq[DatastoreObject]): Array[InputPartition] = {
+    val n = math.min(objects.size, org.apache.spark.sql.SparkSession.active
+      .sparkContext.defaultParallelism)
+    Array.tabulate[InputPartition](n) { i =>
+      LcmDatastorePartition(objects.slice(
+        (i.toLong * objects.size / n).toInt,
+        ((i + 1L) * objects.size / n).toInt))
+    }
+  }
 }
 
-case class LcmDatastorePartition(file: String, startSeq: Long, endSeq: Long,
-    length: Long) extends InputPartition
+/** A contiguous run of objects, read by one task. */
+case class LcmDatastorePartition(objects: Seq[DatastoreObject])
+    extends InputPartition
 
 class LcmDatastoreReaderFactory(requiredSchema: StructType,
     conf: SerializableHadoopConf) extends PartitionReaderFactory {
@@ -230,44 +267,62 @@ class LcmDatastoreReaderFactory(requiredSchema: StructType,
       requiredSchema, conf)
 }
 
-/** One row per object. The file is opened ONLY when `content` is in the
-  * required schema — a pruned scan is metadata-only. */
+/** One row per object of the partition, in key order. An object is opened
+  * ONLY when `content` is in the required schema — a pruned scan is
+  * metadata-only. A content read skips an object that is not there. */
 class LcmDatastoreReader(p: LcmDatastorePartition,
     requiredSchema: StructType, conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
-  private var done = false
+  private val objects = p.objects.iterator
+  private val wantsContent = requiredSchema.fieldNames.contains("content")
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    if (done) return false
-    done = true
-    val values = requiredSchema.fields.map(_.name match {
-      case "start_sequence" => p.startSeq: Any
-      case "end_sequence" => p.endSeq: Any
-      case "path" => UTF8String.fromString(p.file)
-      case "content" =>
-        // one open RPC, one allocation: the object's length rode the
-        // planning listing, so the content streams straight into its
-        // final buffer (objects are immutable under the datastore law;
-        // a length drift surfaces loudly, never as silent truncation)
-        if (p.length > Int.MaxValue - 8)
-          throw new IllegalStateException(
-            s"datastore object too large for one row: ${p.file} (${p.length} bytes)")
-        val fsPath = new org.apache.hadoop.fs.Path(p.file)
-        val in = fsPath.getFileSystem(conf.value).open(fsPath)
-        try {
-          val buf = new Array[Byte](p.length.toInt)
+    current = null
+    while (current == null && objects.hasNext) {
+      val o = objects.next()
+      val content = if (wantsContent) read(o) else Some(null)
+      content.foreach { bytes =>
+        current = new GenericInternalRow(requiredSchema.fields.map(_.name match {
+          case "start_sequence" => o.startSeq: Any
+          case "end_sequence" => o.endSeq: Any
+          case "path" => UTF8String.fromString(o.path)
+          case "content" => bytes
+          case other => throw new IllegalArgumentException(s"unknown col $other")
+        }))
+      }
+    }
+    current != null
+  }
+
+  /** One open RPC, one read. A listed object's length sizes the buffer
+    * (objects are immutable under the datastore law; a length drift
+    * surfaces loudly, never as silent truncation); a key-derived object is
+    * read to EOF, and `None` when it does not exist. */
+  private def read(o: DatastoreObject): Option[Array[Byte]] = {
+    if (o.length > Int.MaxValue - 8)
+      throw new IllegalStateException(
+        s"datastore object too large for one row: ${o.path} (${o.length} bytes)")
+    val fsPath = new org.apache.hadoop.fs.Path(o.path)
+    try {
+      val in = fsPath.getFileSystem(conf.value).open(fsPath)
+      try {
+        if (o.length < 0) Some(in.readAllBytes())
+        else {
+          val buf = new Array[Byte](o.length.toInt)
           in.readFully(buf) // stream-relative: cursor lands at EOF
           if (in.read() != -1)
             throw new IllegalStateException(
-              s"datastore object grew after listing: ${p.file}")
-          buf
-        } finally in.close()
-      case other => throw new IllegalArgumentException(s"unknown col $other")
-    })
-    current = new GenericInternalRow(values)
-    true
+              s"datastore object grew after listing: ${o.path}")
+          Some(buf)
+        }
+      } finally in.close()
+    } catch {
+      // an object store may defer the not-found error to the first read
+      case _: java.io.FileNotFoundException => None
+    }
   }
+
   override def get(): InternalRow = current
   override def close(): Unit = ()
 }
@@ -364,18 +419,10 @@ class LcmDatastoreMicroBatchStream(path: String, requiredSchema: StructType,
     val s = start.asInstanceOf[LcmDatastoreOffset].endSeq
     val e = end.asInstanceOf[LcmDatastoreOffset].endSeq
     if (e <= s) return Array.empty
-    (nextFileStart(s) to e by ledgersPerFile).flatMap { seq =>
-      val p = objectPathFor(seq)
-      // getFileStatus instead of exists: same single RPC, and its length
-      // sizes the reader's one content allocation
-      val st = try Some(fs.getFileStatus(p)) catch {
-        case _: java.io.FileNotFoundException => None
-      }
-      st.flatMap(s0 => LcmDatastoreSource.rangeOf(p.getName).map {
-        case (fsq, feq) =>
-          LcmDatastorePartition(p.toString, fsq, feq,
-            s0.getLen): InputPartition })
-    }.toArray
+    // every key up to `e` was probed present, so plan by the naming law
+    // with no stat; a content read skips one deleted since
+    LcmDatastoreFiles.pack(LcmDatastoreFiles.keyed(path, nextFileStart(s), e,
+      ledgersPerFile, filesPerPartition))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -424,30 +424,39 @@ object ExplainAudit {
       ("x_curation_pipeline", Seq("partial_min", "Window "),
         Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
       // real-XDR soroban fee decomposition off the datastore batch files:
-      // executor-side decode (SerializeFromObject over the flatMap) with
-      // NO shuffle anywhere — the backfill is embarrassingly parallel
-      ("stellar_soroban_real_xdr", Seq("SerializeFromObject"),
+      // the connector scan, executor-side decode (SerializeFromObject over
+      // the flatMap) and NO shuffle anywhere — the backfill is
+      // embarrassingly parallel. Every *_real_xdr plan reads through the
+      // graft-lcm-datastore connector, its only datastore reader.
+      ("stellar_soroban_real_xdr",
+        Seq("SerializeFromObject", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
       // the contract-events fan-out off decoded rows: two explodes +
       // codegen'd renderers, map-only
-      ("stellar_contract_events_real_xdr", Seq("Generate"),
+      ("stellar_contract_events_real_xdr",
+        Seq("Generate", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
       // the soroban state tables off the datastore tree: executor-side
       // decode + flatMap projection, shuffle-free map-only backfill shape
-      ("stellar_contract_data_real_xdr", Seq("SerializeFromObject"),
+      ("stellar_contract_data_real_xdr",
+        Seq("SerializeFromObject", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
-      ("stellar_contract_code_real_xdr", Seq("SerializeFromObject"),
+      ("stellar_contract_code_real_xdr",
+        Seq("SerializeFromObject", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
-      ("stellar_config_setting_real_xdr", Seq("SerializeFromObject"),
+      ("stellar_config_setting_real_xdr",
+        Seq("SerializeFromObject", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
       // SAC transfer legs off decoded rows: explode + codegen'd event
       // parse, map-only (the fee/transfer union adds no shuffle)
-      ("stellar_transfers_real_xdr", Seq("Generate"),
+      ("stellar_transfers_real_xdr",
+        Seq("Generate", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
       // effects fan-out off decoded rows: one typed flatMap (the column
       // tree cost ~4s of fixed Catalyst latency per job — see the
       // historyEffects scaladoc), still map-only
-      ("stellar_effects_real_xdr", Seq("SerializeFromObject"),
+      ("stellar_effects_real_xdr",
+        Seq("SerializeFromObject", "BatchScan graft-lcm-datastore"),
         Seq("Exchange hashpartitioning", "BroadcastNestedLoopJoin")),
       // the datastore DSv2 connector: range pushdown reaches the scan
       // (key-law pruning) and the object grain stays metadata-only

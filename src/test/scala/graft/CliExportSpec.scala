@@ -498,4 +498,100 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(transferContractIds("--testnet") == Set(nativeTestnet))
     assert(transferContractIds() == Set(nativeMainnet))
   }
+
+  // ---- --batch-input: the datastore tree through the connector ---------------
+
+  /** A RealXdrFixture datastore tree over [start, end]; `poisoned` objects
+    * are truncated to half their zstd frame, `deleted` ones removed. */
+  private def batchTree(start: Long, end: Long, poisoned: Seq[Long] = Nil,
+      deleted: Seq[Long] = Nil): String = {
+    val dir = tmpDir("batch-tree")
+    graft.sources.RealXdrFixture.writeBatchTree(dir, start, end)
+    def obj(seq: Long) =
+      Paths.get(dir, graft.sources.LcmBatchFiles.objectKey(seq))
+    poisoned.foreach { seq =>
+      val bytes = Files.readAllBytes(obj(seq))
+      Files.write(obj(seq), java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    }
+    deleted.foreach(seq => Files.delete(obj(seq)))
+    dir
+  }
+
+  /** Runs one export; returns what it printed. */
+  private def printed(args: String*): String = {
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
+      Export.run(spark, Export.parse(args.toArray))
+    }
+    stdout.toString("UTF-8")
+  }
+
+  private def jsonRows(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".json")).flatMap(ndjsonLines(_)).toSeq
+
+  test("--permissive reaches export_ledger_entry_changes --batch-input: the " +
+      "poison object is reported and the good batches still export") {
+    val tree = batchTree(9100, 9107, poisoned = Seq(9105))
+    val out = tmpDir("changes-permissive") + "/changes"
+    val log = printed("export_ledger_entry_changes", "--start", "9100",
+      "--end", "9107", "--batch-size", "4", "--export-type", "contract_data",
+      "--batch-input", tree, "--permissive", "--output", out)
+    assert(log.contains(
+      """{"xdr_frames":8,"xdr_decoded":7,"xdr_poisoned":1}"""), log)
+    assert(log.contains(""""xdr_poisoned":1,"errors_path""""), log)
+    assert(log.contains(""""ledgers_expected":8,"ledgers_read":7"""), log)
+    assert(Files.exists(Paths.get(out + "_decode_errors")))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val seqs = Seq("9100-9103", "9104-9107").map { b =>
+      ndjsonLines(Paths.get(out, s"$b-contract_data.txt"))
+        .map(l => om.readTree(l).get("ledger_sequence").asLong()).toSet
+    }
+    assert(seqs(0) == Set(9100L, 9101L, 9102L, 9103L))
+    assert(seqs(1) == Set(9104L, 9106L, 9107L))
+  }
+
+  test("--permissive --batch-input reads only the range: a poison object " +
+      "outside [start, end] is never decoded") {
+    val tree = batchTree(9200, 9204, poisoned = Seq(9204))
+    val out = tmpDir("range-permissive") + "/txs"
+    val log = printed("export_transactions", "--start", "9200", "--end",
+      "9203", "--batch-input", tree, "--permissive", "--output", out)
+    assert(log.contains(
+      """{"xdr_frames":4,"xdr_decoded":4,"xdr_poisoned":0}"""), log)
+    assert(!log.contains(""""xdr_poisoned":1"""), log)
+    assert(!Files.exists(Paths.get(out + "_decode_errors")))
+    assert(jsonRows(out).size == (9200L to 9203L).map(_ % 3 + 1).sum)
+  }
+
+  test("--batch-input reports ledgers read against ledgers expected: a " +
+      "missing object shows as one ledger short, without failing") {
+    val tree = batchTree(9300, 9307, deleted = Seq(9303))
+    val out = tmpDir("hole") + "/ledgers"
+    val log = printed("export_ledgers", "--start", "9300", "--end", "9307",
+      "--batch-input", tree, "--output", out)
+    assert(log.contains("""{"ledgers_expected":8,"ledgers_read":7}"""), log)
+    assert(jsonRows(out).size == 7)
+  }
+
+  test("--batch-input --limit: the export finishes and prints no ledgers " +
+      "read line, which a limited read would show as a false hole") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val tree = batchTree(9400, 9405)
+    def limited(n: Int): (String, Seq[String]) = {
+      val out = tmpDir(s"limit-$n") + "/ledgers"
+      val log = Await.result(Future(printed("export_ledgers", "--start",
+        "9400", "--end", "9405", "--limit", n.toString, "--batch-input", tree,
+        "--output", out)), 3.minutes)
+      (log, if (Files.exists(Paths.get(out))) jsonRows(out) else Nil)
+    }
+    val (log0, rows0) = limited(0)
+    assert(!log0.contains("ledgers_read"), log0)
+    assert(rows0.isEmpty)
+    val (log1, rows1) = limited(1)
+    assert(!log1.contains("ledgers_read"), log1)
+    assert(rows1.size == 1)
+  }
 }

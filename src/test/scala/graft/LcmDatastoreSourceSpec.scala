@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.net.URI
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
 
 import graft.sources.{LcmBatchFiles, RealXdrFixture}
@@ -60,8 +62,9 @@ object CountingFs {
 
 /** E2e for the `graft-lcm-datastore` DSv2 connector over the reference's
   * REAL datastore object layout: key-law range pruning across partition
-  * prefixes, metadata-only column-pruned scans, batch parity with the
-  * `binaryFile` path, and micro-batch tailing of a live tree. */
+  * prefixes, metadata-only column-pruned scans, batch parity with a
+  * driver-side decode of each object, packing into one partition per core,
+  * and micro-batch tailing of a live tree. */
 class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -78,24 +81,28 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createTempDirectory(prefix).toString
 
   test("batch scan: key-law pruning across a partition-prefix boundary, " +
-      "parity with the binaryFile path") {
+      "parity with a driver-side decode of each object") {
     // 63996..64010 spans TWO partition prefixes (partition size 64000)
     val dir = tmp("graft-ds-batch")
     RealXdrFixture.writeBatchTree(dir, 63996, 64010)
     assert(Files.list(Paths.get(dir)).count() == 2, "two prefix dirs")
 
-    val viaConnector =
-      LcmBatchFiles.ledgerRowsViaConnector(spark, dir, 63996, 64010)
-    val viaBinaryFile =
-      LcmBatchFiles.ledgerRowsForRange(spark, dir, 63996, 64010)
-    assert(viaConnector.count() == 15)
-    assert(viaConnector.select("sequence").collect().map(_.getLong(0)).sorted
-      .toSeq == viaBinaryFile.select("sequence").collect().map(_.getLong(0))
-      .sorted.toSeq)
+    def key(r: graft.model.LedgerModel.LedgerRow) =
+      (r.sequence, r.ledger_hash.toSeq, r.transactions.map(_.hash_hex))
+    val viaConnector = LcmBatchFiles.ledgerRowsForRange(spark, dir, 63996, 64010)
+      .collect().map(key).sortBy(_._1).toSeq
+    val objectFiles = Files.walk(Paths.get(dir)).iterator().asScala
+      .filter(Files.isRegularFile(_)).toSeq
+    val direct = objectFiles
+      .flatMap(f => LcmBatchFiles.decodeObject(Files.readAllBytes(f)))
+      .map(key).sortBy(_._1)
+    assert(objectFiles.size == 15)
+    assert(viaConnector.map(_._1) == (63996L to 64010L))
+    assert(viaConnector == direct)
 
     // a bounded subrange straddling the boundary returns exactly it, and
     // the plan carries the connector + its pushed range
-    val sub = LcmBatchFiles.ledgerRowsViaConnector(spark, dir, 63999, 64002)
+    val sub = LcmBatchFiles.ledgerRowsForRange(spark, dir, 63999, 64002)
     assert(sub.select("sequence").collect().map(_.getLong(0)).sorted.toSeq ==
       (63999L to 64002L))
     val objects = spark.read.format("graft-lcm-datastore").load(dir)
@@ -122,7 +129,7 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // the decode path over the same range fails loudly on the poison bytes
     val ex = intercept[org.apache.spark.SparkException] {
-      LcmBatchFiles.ledgerRowsViaConnector(spark, dir, 5000, 5004).count()
+      LcmBatchFiles.ledgerRowsForRange(spark, dir, 5000, 5004).count()
     }
     assert(ex.getMessage != null)
   }
@@ -237,9 +244,9 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CountingFs.opens.get() == 0,
       s"metadata-only scan opened ${CountingFs.opens.get()} objects")
 
-    // content scan: exactly one open per surviving object, and the length
-    // that sizes the reader's single allocation rode the planning listing —
-    // no per-object stat at read time (stats stay at the planning budget)
+    // content scan: exactly one open per surviving object and no
+    // per-object stat — a bounded content scan plans its keys from the
+    // naming law and reads each object to EOF
     CountingFs.reset(dir)
     val sizes = spark.read.format("graft-lcm-datastore").load(root)
       .where(col("start_sequence").between(7100, 7107))
@@ -250,9 +257,47 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CountingFs.stats.get() <= 8,
       s"content scan stat'd ${CountingFs.stats.get()} paths (planning only)")
     // the bytes really are the whole object: decode parity on the range
-    val viaConnector = LcmBatchFiles.ledgerRowsViaConnector(
+    val viaConnector = LcmBatchFiles.ledgerRowsForRange(
       spark, root, 7100, 7107).collect().map(_.sequence).sorted
     assert(viaConnector.toSeq == (7100L to 7107L))
+  }
+
+  test("packing: a bounded scan plans min(objects, defaultParallelism) " +
+      "contiguous partitions and still opens each object once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingFs].getName)
+    val dir = tmp("graft-ds-pack")
+    RealXdrFixture.writeBatchTree(dir, 7200, 7215)
+    val root = s"graftcount:$dir"
+    def objects() = spark.read.format("graft-lcm-datastore").load(root)
+      .where(col("start_sequence").between(7200, 7215))
+
+    // one task per core, each a contiguous run of keys in key order
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots < 16)
+    val perPartition = objects().select("start_sequence").rdd
+      .mapPartitions(rows => Iterator(rows.map(_.getLong(0)).toSeq))
+      .collect().toSeq
+    assert(perPartition.size == slots)
+    assert(perPartition.flatten == (7200L to 7215L))
+    assert(perPartition.map(_.size).max - perPartition.map(_.size).min <= 1)
+
+    CountingFs.reset(dir)
+    assert(objects().select(length(col("content"))).collect()
+      .forall(_.getInt(0) > 0))
+    assert(CountingFs.opens.get() == 16,
+      s"packed scan opened ${CountingFs.opens.get()} objects, want 16")
+    // the keys come from the naming law: nothing is listed or stat'd
+    assert(CountingFs.lists.get() == 0 && CountingFs.stats.get() == 0,
+      s"content scan listed ${CountingFs.lists.get()} dirs, " +
+        s"stat'd ${CountingFs.stats.get()} paths")
+
+    // a hole is skipped at read time: one failed open, one row fewer
+    Files.delete(Paths.get(dir, LcmBatchFiles.objectKey(7207)))
+    CountingFs.reset(dir)
+    assert(objects().select("start_sequence", "content").collect()
+      .map(_.getLong(0)).sorted.toSeq == (7200L to 7215L).filter(_ != 7207L))
+    assert(CountingFs.opens.get() == 16)
   }
 
   test("multi-ledger batch objects (ledgersPerFile=2): key law, bounded " +
@@ -281,7 +326,7 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // overlap pushdown keeps the straddling objects, row filter trims
     val lpfOpts = Map("ledgersPerFile" -> "2")
     assert(LcmBatchFiles
-      .ledgerRowsViaConnector(spark, dir, 9003, 9006, lpfOpts)
+      .ledgerRowsForRange(spark, dir, 9003, 9006, options = lpfOpts)
       .collect().map(_.sequence).sorted.toSeq ==
       Seq(9003L, 9004L, 9005L, 9006L))
 
@@ -353,8 +398,8 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bounded.select("start_sequence").collect()
       .map(_.getLong(0)).sorted.toSeq == (4008L to 4013L))
     // decode parity through the helper with the schema options
-    assert(LcmBatchFiles.ledgerRowsViaConnector(spark, dir, 4018, 4022,
-        Map("filesPerPartition" -> "10"))
+    assert(LcmBatchFiles.ledgerRowsForRange(spark, dir, 4018, 4022,
+        options = Map("filesPerPartition" -> "10"))
       .collect().map(_.sequence).sorted.toSeq == (4018L to 4022L))
   }
 
@@ -372,7 +417,7 @@ class LcmDatastoreSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         else graft.codec.XdrEncode.ledgerCloseMetaV1(header, txs)
       LcmBatchFiles.writeObject(root, seq, seq, Seq(lcm))
     }
-    val rows = LcmBatchFiles.ledgerRowsViaConnector(spark, dir, 5000L, 5009L)
+    val rows = LcmBatchFiles.ledgerRowsForRange(spark, dir, 5000L, 5009L)
       .collect().sortBy(_.sequence)
     assert(rows.map(_.sequence).toSeq == (5000L to 5009L))
     // v2 arms thread the ext fee + live-state size; v1 (ext v0) stays 0

@@ -24,7 +24,7 @@ import graft.sources.LcmBatchFiles
   *
   * Also proves the datastore batch-file path ([[LcmBatchFiles]]): write a
   * `LedgerCloseMetaBatch` tree (1 ledger/file), read it back through the
-  * binaryFile scan + executor decode, and match the direct decode.
+  * datastore connector + executor decode, and match the direct decode.
   */
 class SorobanTxReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -685,7 +685,7 @@ class SorobanTxReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- datastore batch files --------------------------------------------------
 
-  test("datastore batch files: write the tree, read through binaryFile + " +
+  test("datastore batch files: write the tree, read through the connector + " +
       "executor decode, match the direct path") {
     val dir = java.nio.file.Files.createTempDirectory("lcm-batch").toString
     val classicTx = {
@@ -709,7 +709,7 @@ class SorobanTxReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(LcmBatchFiles.objectKey(70001L) ==
       "ffff05ff--64000-127999/fffeee8e--70001.xdr.zstd")
 
-    val rows = LcmBatchFiles.ledgerRows(spark, dir)
+    val rows = LcmBatchFiles.ledgerRowsForRange(spark, dir, 70001, 70003)
     val txsOut = StellarTransforms.historyTransactions(rows)
       .select("ledger_sequence", "transaction_hash", "fee_charged",
         "resource_fee", "account")
