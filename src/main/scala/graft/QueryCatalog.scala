@@ -8315,11 +8315,10 @@ object QueryCatalog {
              |      || format('{:016x}', 2 * seq + t)))]) AS parameters
              |FROM o ORDER BY id""".stripMargin),
       (s, dir) =>
-        // withDetailsJson=false: this gate reads only the typed struct, so
-        // skip planning the VARIANT twin (halves the fixed Catalyst cost)
+        // reads only the typed struct: ColumnPruning drops `details_json`
         StellarTransforms.historyOperations(
             graft.sources.LcmBatchFiles.ledgerRowsForRange(
-              s, xdrBatchDir, 3000, 3127), withDetailsJson = false)
+              s, xdrBatchDir, 3000, 3127))
           .select(col("id"), col("ledger_sequence"), col("type_string"),
             col("details.type").as("fn_type"),
             col("details.contract_id").as("contract_id"),

@@ -158,9 +158,11 @@ object Export {
       case "parquet" => df.write.mode("overwrite").parquet(a.output)
       case other => sys.error(s"unknown format: $other")
     }
-    val n = df.sparkSession.read.format(a.format match {
-      case "ndjson" => "json"; case f => f
-    }).load(a.output).count()
+    // the JSON writer emits one line per record, so a line count is the
+    // row count without a schema-inferring parse; Parquet counts off footers
+    val reread = df.sparkSession.read
+    val n = (if (a.format == "ndjson") reread.text(a.output)
+      else reread.parquet(a.output)).count()
     // PrintTransformStats parity (`cmd/command_utils.go:90-103`)
     println(s"""{"attempted":$n,"failed":0,"successful":$n}""")
     maybeUpload(df.sparkSession, a, a.output)

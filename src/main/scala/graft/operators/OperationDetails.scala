@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 
@@ -432,8 +432,12 @@ object OperationDetails {
       in.sponsorAddr.as("sponsor"))
   }
 
-  /** The `details_json` rendering both paths share: the same struct with
-    * null keys dropped, as a VARIANT so it lands as a raw JSON object.
+  /** The `details_json` rendering both paths share: the computed
+    * `details` column ([[struct]]) with null keys dropped, as a VARIANT so
+    * it lands as a raw JSON object. Like the reference (`operation.go:97`
+    * assigns one map to both fields) it renders the struct the row already
+    * carries; building the case law a second time would double every plan
+    * that emits both columns.
     *
     * One mixed-type quirk the typed struct cannot carry: a FAILED
     * strict-receive path payment's `source_amount` is the STRING
@@ -441,13 +445,26 @@ object OperationDetails {
     * the success arm overwrites it with a float) — real goldens show the
     * string on every failed pp op. The struct keeps the typed double 0;
     * the JSON rendering patches that one token to the reference's exact
-    * shape. */
-  def json(in: DetailInputs): Column = {
-    val base = to_json(struct(in), Map("ignoreNullFields" -> "true"))
+    * shape, keyed on the op type `ty` and the tx's `successful` flag. */
+  def json(details: Column, ty: Column, successful: Column): Column = {
+    val base = to_json(details, Map("ignoreNullFields" -> "true"))
     parse_json(
-      when(in.ty === 2 && !in.successful,
+      when(ty === 2 && !successful,
         regexp_replace(base, "\"source_amount\":0\\.0([,}])",
           "\"source_amount\":\"0.0000000\"$1"))
         .otherwise(base))
   }
+
+  /** `ops` with `details_json` ([[json]] of its `details` column) projected
+    * right after `details`, reading the op type from `type` and the tx
+    * outcome from the `successful` column. The rendering sits in its own
+    * projection over the one that computes `details`: that projection
+    * reads `details` twice, so `CollapseProject` leaves the two apart and
+    * the plan carries the case law once. */
+  def withJson(ops: DataFrame, successful: String): DataFrame =
+    ops.select(ops.columns.toSeq.flatMap {
+      case "details" => Seq(col("details"),
+        json(col("details"), col("type"), col(successful)).as("details_json"))
+      case c => Seq(col(c))
+    }: _*)
 }

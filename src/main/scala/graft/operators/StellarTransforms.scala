@@ -364,15 +364,12 @@ object StellarTransforms {
       parametersJson = when(wParams.isNotNull,
         transform(wParams, p => GraftFunctions.scvalJson(p))),
       extendTo = col("op.op_extend_to"))
-    val wireDetailsStruct = OperationDetails.struct(wireDetailInputs)
+    // the SHARED details contract (one renderer with the model path):
+    // wide struct + its null-dropped JSON, wire-determined keys only
     val detailCols =
       if (!withDetails) Seq.empty[Column]
-      else Seq(
-        // the SHARED details contract (one renderer with the model path):
-        // wide struct + null-dropped JSON, wire-determined keys only
-        wireDetailsStruct.as("details"),
-        OperationDetails.json(wireDetailInputs).as("details_json"))
-    lcm.select(col("sequence"),
+      else Seq(OperationDetails.struct(wireDetailInputs).as("details"))
+    val ops = lcm.select(col("sequence"),
         posexplode(col("transactions")).as(Seq("pos", "tx")))
       .select(col("sequence"), col("pos"), col("tx"),
         posexplode(col("tx.operations")).as(Seq("op_pos", "op")))
@@ -469,6 +466,8 @@ object StellarTransforms {
             lit("]"))).as("parameters_decoded"),
         sacBalanceChanges.as("asset_balance_changes"),
         col("op.op_extend_to").as("extend_to")) ++ detailCols: _*)
+    if (withDetails) OperationDetails.withJson(ops, "transaction_successful")
+    else ops
   }
 
   /** P6/A2 composed over the wire source: every asset mentioned by a
@@ -1334,9 +1333,8 @@ object StellarTransforms {
   /** P3 — `history_operations`: op grain with source fallback, type names,
     * op-index+1 TOIDs. The `details` union is a WIDE NULLABLE STRUCT
     * (SURVEY §1.2 option (a), BigQuery's own shape) — queryable columns,
-    * prunable by Parquet, with `details` additionally rendered to JSON for
-    * parity with the reference's map-typed field; the decoder's raw
-    * passthrough stays as `details_json`.
+    * prunable by Parquet. `details_json` is that same column rendered to
+    * JSON, for parity with the reference's map-typed field.
     *
     * The per-type case law follows `operation.go:584-1173`: 25 op types
     * populate their own sparse slice of the struct; everything below is
@@ -1346,13 +1344,7 @@ object StellarTransforms {
     * claimants array (the reference nests raw JSON); `ledger_key_hash` /
     * `contract_code_hash` need envelope internals the decoded model does not
     * carry. */
-  /** `withDetailsJson = false` plans WITHOUT the `details_json` VARIANT
-    * twin — the struct and the json are two near-equal giant expression
-    * trees, and Catalyst analysis cost is linear in tree size, so callers
-    * that only read the typed struct (e.g. the real-XDR invoke-details
-    * gate) halve their fixed per-job planning latency by opting out. */
-  def historyOperations(ledgers: Dataset[LedgerRow],
-      withDetailsJson: Boolean = true): DataFrame = {
+  def historyOperations(ledgers: Dataset[LedgerRow]): DataFrame = {
     val ty = col("op.op_type")
     val successful = col("tx.successful")
     val sourceKey = coalesce(col("op.source_key"), col("tx.source_key"))
@@ -1640,40 +1632,37 @@ object StellarTransforms {
           assetCanon(col("op.preimage_from_asset")))))
     val detailsStruct = OperationDetails.struct(detailInputs)
 
-    ledgers
+    val ops = ledgers
       .select(col("sequence"), col("closed_at"),
         posexplode(col("transactions")).as(Seq("tx_pos", "tx")))
       .select(col("sequence"), col("closed_at"), col("tx_pos"), col("tx"),
         posexplode(col("tx.operations")).as(Seq("op_pos", "op")))
       .select(
-        (Seq(
-          strkeyAccount(coalesce(col("op.source_key"), col("tx.source_key")))
-            .as("source_account"),
-          when(col("op.source_key").isNull &&
-              col("tx.source_muxed_id").isNotNull,
-            strkeyMuxed(col("tx.source_key"), col("tx.source_muxed_id")))
-            .as("source_account_muxed"),
-          col("op.op_type").as("type"),
-          element_at(opTypeNameCol, col("op.op_type")).as("type_string"),
-          // `details` is the typed wide struct — the reference's sparse
-          // per-type map (`schema.go:137`): null fields drop out of NDJSON
-          // via the writer's ignoreNullFields, so the rendered object
-          // carries only the keys the op type populates. `details_json` is
-          // the SAME map (`operation.go:97` assigns outputDetails to both),
-          // emitted as a VARIANT so it renders as a raw JSON object, not a
-          // quoted string.
-          detailsStruct.as("details")) ++
-          (if (withDetailsJson)
-            Seq(OperationDetails.json(detailInputs).as("details_json"))
-          else Nil) ++ Seq(
-          transactionToid(col("sequence"), col("tx_pos") + 1)
-            .as("transaction_id"),
-          operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos"))
-            .as("id"),
-          col("closed_at"),
-          col("op.result_code").as("operation_result_code"),
-          col("op.trace_code").as("operation_trace_code"),
-          col("sequence").as("ledger_sequence"))): _*)
+        strkeyAccount(coalesce(col("op.source_key"), col("tx.source_key")))
+          .as("source_account"),
+        when(col("op.source_key").isNull &&
+            col("tx.source_muxed_id").isNotNull,
+          strkeyMuxed(col("tx.source_key"), col("tx.source_muxed_id")))
+          .as("source_account_muxed"),
+        col("op.op_type").as("type"),
+        element_at(opTypeNameCol, col("op.op_type")).as("type_string"),
+        // `details` is the typed wide struct — the reference's sparse
+        // per-type map (`schema.go:137`): null fields drop out of NDJSON
+        // via the writer's ignoreNullFields, so the rendered object
+        // carries only the keys the op type populates. `details_json`
+        // (added by `OperationDetails.withJson`) renders this SAME
+        // column (`operation.go:97` assigns outputDetails to both).
+        detailsStruct.as("details"),
+        transactionToid(col("sequence"), col("tx_pos") + 1)
+          .as("transaction_id"),
+        operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos"))
+          .as("id"),
+        col("closed_at"),
+        col("op.result_code").as("operation_result_code"),
+        col("op.trace_code").as("operation_trace_code"),
+        col("sequence").as("ledger_sequence"),
+        successful.as("tx_successful"))
+    OperationDetails.withJson(ops, "tx_successful").drop("tx_successful")
   }
 
   /** P6/A2 model path — `history_assets`: payment + manage-sell-offer issued

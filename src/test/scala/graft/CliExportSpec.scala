@@ -594,4 +594,25 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!log1.contains("ledgers_read"), log1)
     assert(rows1.size == 1)
   }
+
+  test("the K5 stats line counts the rows written, for NDJSON and Parquet " +
+      "alike, under --limit and --extra-fields") {
+    val tree = batchTree(9500, 9503)
+    for (format <- Seq("ndjson", "parquet")) {
+      val out = tmpDir(s"k5-$format") + "/ops"
+      val log = printed("export_operations", "--start", "9500", "--end",
+        "9503", "--batch-input", tree, "--format", format, "--limit", "3",
+        "--extra-fields", "batch=k5", "--output", out)
+      val back = format match {
+        case "ndjson" => spark.read.json(out)
+        case "parquet" => spark.read.parquet(out)
+      }
+      val n = back.count()
+      assert(n == 3, format)
+      assert(back.where(org.apache.spark.sql.functions.col("batch") === "k5")
+        .count() == n, format)
+      assert(log.contains(s"""{"attempted":$n,"failed":0,"successful":$n}"""),
+        s"$format: $log")
+    }
+  }
 }

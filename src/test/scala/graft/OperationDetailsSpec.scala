@@ -537,6 +537,63 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(missing.isEmpty,
       s"reference detail keys unknown to the renderer: ${missing.toSeq.sorted}")
   }
+
+  /** How many times the optimized plan spells the invoke-host-function
+    * type prefix: only the struct's `function` field uses that literal, so
+    * this counts the copies of the details case law the plan carries. */
+  private def caseLawCopies(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.unsafe.types.UTF8String
+    val tag = UTF8String.fromString("HostFunctionTypeHostFunctionType")
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case l @ Literal(v: UTF8String, _) if v == tag => l
+    })).size
+  }
+
+  test("details_json renders the details column: the plan carries the " +
+      "case law once on both paths") {
+    val model = StellarTransforms.historyOperations(
+      StellarFixture.ledgers(spark, 2700, 2700))
+    assert(caseLawCopies(model) == 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-lcm-law").toString
+    graft.sources.LcmWriter.writeFixture(dir, 2600, 2603)
+    val wire = StellarTransforms.historyOperationsFromLcm(
+      spark.read.format("graft-lcm").load(dir))
+    assert(caseLawCopies(wire) == 1)
+    // a consumer of both columns still plans one copy
+    assert(caseLawCopies(model.select(to_json(col("details")),
+      col("details_json"))) == 1)
+  }
+
+  test("details_json is details with null keys dropped, except a failed " +
+      "strict-receive path payment's string source_amount") {
+    val ops = StellarTransforms.historyOperations(
+      StellarFixture.ledgers(spark, 2700, 2740))
+    // the fixture fails tx t when t % 3 == 0; t is the TOID's tx field - 1
+    val txIndex = shiftright(col("id"), 12).bitwiseAND(0xFFFFFL) - 1
+    val failedPp = col("type") === 2 && txIndex % 3 === 0
+    val failed = ops.where(failedPp)
+      .select(col("id"), col("details.source_amount"),
+        col("details_json").cast("string"))
+      .collect()
+    // (2702, t = 0, o = 0): a one-op failed tx whose type is 2702 % 27 = 2
+    assert(failed.map(_.getLong(0)).contains(
+      graft.codec.Toid.pack(2702L, 1, 1)))
+    failed.foreach { r =>
+      assert(r.getDouble(1) == 0.0)
+      assert(r.getString(2).contains("\"source_amount\":\"0.0000000\""),
+        r.getString(2))
+    }
+    // every other row: the JSON is the struct's own rendering (both sides
+    // through parse_json, which orders keys the same way)
+    val others = ops.where(!failedPp)
+    val struct = to_json(parse_json(to_json(col("details"),
+      java.util.Map.of("ignoreNullFields", "true"))))
+    assert(others.count() > 100)
+    val differ = others.where(!(to_json(col("details_json")) <=> struct))
+      .select(col("id"), to_json(col("details_json"))).collect()
+    assert(differ.isEmpty, differ.take(3).mkString("; "))
+  }
 }
 
 private object GraftTestB64 {
