@@ -57,15 +57,6 @@ object QueryCatalog {
 
   private val txBase = LedgerFixtures.txBaseSql
 
-  /** One-time deterministic `.lcmb` fixture export for the DSv2 source
-    * query (8 × 64-ledger batch files under the JVM temp dir). */
-  private lazy val lcmFixtureDir: String = {
-    val d = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-lcm-${ProcessHandle.current().pid()}")
-    graft.sources.LcmWriter.writeFixture(d.getAbsolutePath, 2048, 2559)
-    d.getAbsolutePath
-  }
-
   /** REAL-XDR datastore batch-file tree (zstd LedgerCloseMetaBatch, the
     * reference's backfill substrate) with post-protocol-20 soroban txs —
     * affine laws in [[graft.sources.RealXdrFixture]]. */
@@ -159,15 +150,6 @@ object QueryCatalog {
   private def amt7(e: String): String =
     s"(CAST(($e)//10000000 AS VARCHAR) || '.' || " +
     s"lpad(CAST(($e)%10000000 AS VARCHAR), 7, '0'))"
-
-  /** One-time fixture archive (checkpoint-layout gzip files) for the S7
-    * history-archive source query. */
-  private lazy val archiveFixtureDir: String = {
-    val d = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-archive-${ProcessHandle.current().pid()}")
-    graft.sources.HistoryArchive.writeFixture(d.getAbsolutePath, 4000, 4500)
-    d.getAbsolutePath
-  }
 
   /** Session-scoped persisted-frame memo for the stellar op-grain
     * transforms: several `stellar_*` golden queries rebuild
@@ -5736,1490 +5718,6 @@ object QueryCatalog {
       }),
 
     // ===== opaque codecs (rows-only: no SQL twin by design) ==================
-
-    Q("src_lcm_range_scan",
-      // the DSv2 binary source end-to-end: write 8 batch files once, range
-      // scan (file-level pruning via the {start}-{end}.lcmb name), decode
-      // frames, aggregate the nested tx array. The fixture is formula-
-      // deterministic, so DuckDB re-derives it from generate_series.
-      Some("""SELECT seq AS sequence, CAST((seq % 5) + 1 AS INT) AS n_tx,
-             |       CAST(50 * ((seq % 5) + 1) * ((seq % 5) + 2) AS BIGINT) AS total_fee
-             |FROM generate_series(2100, 2299) t(seq) ORDER BY sequence""".stripMargin),
-      (s, dir) => {
-        s.read.format("graft-lcm").load(lcmFixtureDir)
-          .where(col("sequence").between(2100, 2299))
-          .select(col("sequence"),
-            size(col("transactions")).as("n_tx"),
-            aggregate(col("transactions"), lit(0L),
-              (acc, t) => acc + t("fee_charged")).as("total_fee"))
-          .orderBy("sequence")
-      }),
-
-    Q("src_lcm_header_scan",
-      // the Stellar-ledger.x header arms decoded by the DSv2 source: the
-      // LedgerHeader subset (protocol, chained prev-hash, monetary and
-      // limit fields), checkpoint-aligned upgrade entries and the V1
-      // soroban extras (optional — odd ledgers exercise the None arm),
-      // all re-derived by DuckDB from the fixture laws
-      Some("""SELECT seq AS sequence,
-             |       CAST(20 + seq % 3 AS INT) AS protocol_version,
-             |       sha256('ledger:' || (seq - 1)) AS prev_ledger_hash_hex,
-             |       CAST(1000000000000 + seq * 7 AS BIGINT) AS total_coins,
-             |       CAST(seq * 100 + 5 AS BIGINT) AS fee_pool,
-             |       CAST(100 + seq % 2 AS BIGINT) AS base_fee,
-             |       CAST(5000000 AS BIGINT) AS base_reserve,
-             |       CAST(1000 + seq % 10 AS BIGINT) AS max_tx_set_size,
-             |       CAST(CASE WHEN seq % 64 = 63 THEN 2 ELSE 0 END AS INT)
-             |         AS upgrade_count,
-             |       CAST(1000000 + seq * 10 AS BIGINT) AS bucket_list_size_bytes,
-             |       CASE WHEN seq % 2 = 0
-             |            THEN CAST(1000 + seq % 500 AS BIGINT) END
-             |         AS soroban_fee_write1000
-             |FROM generate_series(2100, 2299) t(seq) ORDER BY sequence""".stripMargin),
-      (s, dir) => {
-        s.read.format("graft-lcm").load(lcmFixtureDir)
-          .where(col("sequence").between(2100, 2299))
-          .select("sequence", "protocol_version", "prev_ledger_hash_hex",
-            "total_coins", "fee_pool", "base_fee", "base_reserve",
-            "max_tx_set_size", "upgrade_count", "bucket_list_size_bytes",
-            "soroban_fee_write1000")
-          .orderBy("sequence")
-      }),
-
-    Q("stellar_ledgers_from_lcm",
-      // history_ledgers composed directly over the wire source: counts from
-      // the tx laws, header columns from the ledger-arm laws — proving the
-      // source → reference-schema path without the typed stand-in model
-      Some("""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls)
-             |SELECT ls.seq AS sequence,
-             |       sha256('ledger:' || (ls.seq - 1)) AS previous_ledger_hash,
-             |       (ls.seq << 32) AS id,
-             |       CAST(count(*) FILTER (WHERE tx.t % 3 <> 0) AS INT)
-             |         AS transaction_count,
-             |       CAST(count(*) FILTER (WHERE tx.t % 3 <> 0) AS INT)
-             |         AS successful_transaction_count,
-             |       CAST(count(*) FILTER (WHERE tx.t % 3 = 0) AS INT)
-             |         AS failed_transaction_count,
-             |       CAST(sum(CASE WHEN tx.t % 3 <> 0
-             |                THEN (ls.seq + tx.t) % 3 + 1 ELSE 0 END) AS INT)
-             |         AS operation_count,
-             |       CAST(CAST(sum((ls.seq + tx.t) % 3 + 1) AS INT) AS VARCHAR)
-             |         AS tx_set_operation_count,
-             |       CAST(1000000000000 + ls.seq * 7 AS BIGINT) AS total_coins,
-             |       CAST(ls.seq * 100 + 5 AS BIGINT) AS fee_pool,
-             |       CAST(100 + ls.seq % 2 AS BIGINT) AS base_fee,
-             |       CAST(5000000 AS BIGINT) AS base_reserve,
-             |       CAST(1000 + ls.seq % 10 AS BIGINT) AS max_tx_set_size,
-             |       CAST(20 + ls.seq % 3 AS INT) AS protocol_version,
-             |       CASE WHEN ls.seq % 2 = 0
-             |            THEN CAST(1000 + ls.seq % 500 AS BIGINT) END
-             |         AS soroban_fee_write_1kb,
-             |       CAST(1000000 + ls.seq * 10 AS BIGINT)
-             |         AS total_byte_size_of_bucket_list
-             |FROM ls JOIN tx ON tx.seq = ls.seq
-             |GROUP BY ls.seq ORDER BY sequence""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.historyLedgersFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2299)))
-          .orderBy("sequence")),
-
-    Q("stellar_transactions_from_lcm",
-      // history_transactions composed directly over the wire source: TOIDs,
-      // Go memo-type names + the coalesce memo rendering (id as decimal,
-      // hashes as base64), bounds interval strings, the PreconditionsV2
-      // lattice, fee-bump shell and soroban fee triple — every law
-      // re-derived by DuckDB from the fixture rules
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls)
-             |SELECT (seq << 32) | ((t + 1) << 12) AS id,
-             |  seq AS ledger_sequence,
-             |  CAST(t + 1 AS INT) AS application_order,
-             |  make_timestamp((1700000000000 + seq * 5000) * 1000) AS created_at,
-             |  CAST(100 * (t + 1) AS BIGINT) AS fee_charged,
-             |  t % 3 <> 0 AS successful,
-             |  CAST(CASE WHEN t % 3 = 0 THEN -(1 + (seq + t) % 17)
-             |       WHEN t % 4 = 1 THEN 1
-             |       ELSE 0 END AS INT) AS transaction_result_code,
-             |  ${strkeyG("sha256('src-' || seq || '-' || t)")} AS account,
-             |  ${strkeyM("sha256('src-' || seq || '-' || t)",
-                  "CASE WHEN t % 3 = 1 THEN seq * 1000 + t END")} AS account_muxed,
-             |  CASE WHEN t % 3 = 1 THEN seq * 1000 + t END AS account_muxed_id,
-             |  ['MemoTypeMemoNone','MemoTypeMemoText','MemoTypeMemoId',
-             |   'MemoTypeMemoHash','MemoTypeMemoReturn'][CAST(t + 1 AS INT)]
-             |    AS memo_type,
-             |  CASE WHEN t = 1 THEN 'm-' || seq || '-' || t
-             |       WHEN t = 2 THEN CAST(seq * 16 + t AS VARCHAR)
-             |       WHEN t = 3 THEN base64(from_hex(sha256('mh-' || seq || '-' || t)))
-             |       WHEN t = 4 THEN base64(from_hex(sha256('mr-' || seq || '-' || t)))
-             |       ELSE '' END AS memo,
-             |  CASE WHEN (seq + t) % 3 = 1
-             |       THEN '[' || (1700000000 + seq) || ',' || (1700003600 + seq + t) || ')'
-             |       WHEN (seq + t) % 3 = 2 AND t % 2 = 0
-             |       THEN '[' || (1700000000 + seq) || ',' || (1700007200 + seq + t) || ')'
-             |       ELSE '' END AS time_bounds,
-             |  CASE WHEN (seq + t) % 3 = 2
-             |       THEN '[' || (seq - 64) || ',' || (seq + 64) || ')'
-             |       ELSE '' END AS ledger_bounds,
-             |  CASE WHEN (seq + t) % 3 = 2 AND t % 3 = 0 THEN seq * 4096 + t
-             |       END AS min_account_sequence,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN (seq % 7) * 100 + t
-             |       END AS min_account_sequence_age,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN (seq + t) % 5
-             |       END AS min_account_sequence_ledger_gap,
-             |  CASE WHEN (seq + t) % 3 = 2
-             |       THEN to_json([sha256('es-' || seq || '-' || t || '-' || j)
-             |                     for j in range(t % 3)])::VARCHAR
-             |       END AS extra_signers,
-             |  t % 4 = 1 AS is_fee_bump,
-             |  CASE WHEN t % 4 = 1 THEN CAST(500 + t AS BIGINT) END AS new_max_fee,
-             |  ${strkeyG(
-                  "CASE WHEN t % 4 = 1 THEN sha256('fb-' || seq || '-' || t) END")}
-             |    AS fee_account,
-             |  CAST(CASE WHEN (seq + t) % 2 = 0 THEN 1000 + seq ELSE 0 END
-             |       AS BIGINT) AS non_refundable_resource_fee_charged,
-             |  CAST(CASE WHEN (seq + t) % 2 = 0 THEN 500 + t ELSE 0 END
-             |       AS BIGINT) AS refundable_resource_fee_charged,
-             |  CAST(CASE WHEN (seq + t) % 2 = 0 THEN seq % 9 + 10 * t ELSE 0 END
-             |       AS BIGINT) AS rent_fee_charged
-             |FROM tx ORDER BY id""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.historyTransactionsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2299)))
-          .orderBy("id")),
-
-    Q("stellar_operations_from_lcm",
-      // history_operations composed over the wire source at op grain:
-      // op TOIDs (op-index+1), the 27-way type-name map, the float64
-      // rational price, and every typed detail column — untyped arms
-      // surface nulls, DuckDB re-derives all laws per (seq, t)
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx),
-             |o AS (SELECT seq, t, u, CAST((seq + t + u) % 27 AS INT) AS op_type,
-             |             ['XLM','USDC','EURC'] AS codes,
-             |             ['init','transfer','swap']
-             |               [CAST((seq + t) % 3 + 1 AS INT)] AS fn_name FROM ops),
-             |abc AS (SELECT seq, t, e % ((seq + t) % 3 + 1) AS u,
-             |               string_agg('{"type":"' ||
-             |                 ['transfer','mint','burn']
-             |                   [CAST((seq + e) % 3 + 1 AS INT)] ||
-             |                 '","amount":"' || (100000 * (t + 1) + seq % 97 + e)
-             |                 || '","to":"' || (seq * 1000 + t * 10 + e) ||
-             |                 '","contract":"' ||
-             |                 ${strkeyC(
-                                  "sha256('ev-ct-' || seq || '-' || t || '-' || e)")}
-             |                 || '"}', ',' ORDER BY e) AS abc
-             |        FROM (SELECT seq, t, unnest(generate_series(0,
-             |                CAST((seq + t) // 2 % 2 AS INT))) AS e
-             |              FROM tx WHERE (seq + t) % 2 = 0)
-             |        GROUP BY 1, 2, 3)
-             |SELECT ((seq << 32) | ((t + 1) << 12)) | (u + 1) AS id,
-             |  (seq << 32) | ((t + 1) << 12) AS transaction_id,
-             |  seq AS ledger_sequence,
-             |  CAST(u + 1 AS INT) AS application_order,
-             |  op_type AS type,
-             |  ['create_account','payment','path_payment_strict_receive',
-             |   'manage_sell_offer','create_passive_sell_offer','set_options',
-             |   'change_trust','allow_trust','account_merge','inflation',
-             |   'manage_data','bump_sequence','manage_buy_offer',
-             |   'path_payment_strict_send','create_claimable_balance',
-             |   'claim_claimable_balance','begin_sponsoring_future_reserves',
-             |   'end_sponsoring_future_reserves','revoke_sponsorship',
-             |   'clawback','clawback_claimable_balance','set_trust_line_flags',
-             |   'liquidity_pool_deposit','liquidity_pool_withdraw',
-             |   'invoke_host_function','extend_footprint_ttl',
-             |   'restore_footprint'][op_type + 1] AS type_string,
-             |  ${strkeyG("""CASE WHEN (seq + t) % 5 = 0
-                  THEN sha256('osrc-' || seq || '-' || t)
-                  ELSE sha256('src-' || seq || '-' || t) END""")}
-             |    AS source_account,
-             |  t % 3 <> 0 AS transaction_successful,
-             |  CAST(1000000 * (t + 1) AS BIGINT) AS amount,
-             |  ${strkeyG("""CASE WHEN op_type IN (0, 1, 2, 8, 13)
-                  THEN sha256('dst-' || seq || '-' || t) END""")}
-             |    AS destination,
-             |  CASE WHEN op_type = 1 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type IN (6, 7, 14, 21)
-             |       THEN codes[CAST((seq + t) % 3 + 1 AS INT)]
-             |       WHEN op_type = 19 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS asset_code,
-             |  CASE WHEN op_type = 2 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type = 13 THEN codes[CAST((seq + 2) % 3 + 1 AS INT)]
-             |       END AS send_asset_code,
-             |  CASE WHEN op_type = 2 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       WHEN op_type = 13 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS dest_asset_code,
-             |  CASE WHEN op_type = 2
-             |       THEN CAST(2000000 * (t + 1) + seq % 97 AS BIGINT)
-             |       END AS source_max,
-             |  CASE WHEN op_type = 13
-             |       THEN CAST(800000 * (t + 1) + seq % 89 AS BIGINT)
-             |       END AS destination_min,
-             |  CASE WHEN op_type = 2
-             |       THEN CAST(1500000 * (t + 1) + seq % 53 AS BIGINT)
-             |       WHEN op_type = 13
-             |       THEN CAST(900000 * (t + 1) + seq % 59 AS BIGINT)
-             |       END AS result_amount,
-             |  CASE WHEN op_type = 3 THEN CAST(seq * 10 + t AS BIGINT)
-             |       WHEN op_type = 12 THEN CAST(seq * 10 + t + 1 AS BIGINT)
-             |       END AS offer_id,
-             |  CASE WHEN op_type IN (3, 4) THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type = 12 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       END AS selling_asset_code,
-             |  CASE WHEN op_type = 3 THEN codes[CAST((seq + 2) % 3 + 1 AS INT)]
-             |       WHEN op_type = 4 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       WHEN op_type = 12 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS buying_asset_code,
-             |  CASE WHEN op_type = 3 THEN CAST(seq % 9 + 1 AS INT)
-             |       WHEN op_type = 4 THEN CAST(t % 9 + 1 AS INT)
-             |       WHEN op_type = 12 THEN CAST(t % 5 + 1 AS INT)
-             |       END AS price_n,
-             |  CASE WHEN op_type = 3 THEN CAST(t % 7 + 1 AS INT)
-             |       WHEN op_type = 4 THEN CAST(seq % 13 + 1 AS INT)
-             |       WHEN op_type = 12 THEN CAST(seq % 11 + 1 AS INT)
-             |       END AS price_d,
-             |  -- FloatString(7) law: rational rounded half-up to 7 decimals
-             |  -- (operation.go addPriceDetails; real-golden verified)
-             |  round(CASE WHEN op_type = 3
-             |       THEN CAST(seq % 9 + 1 AS DOUBLE) / (t % 7 + 1)
-             |       WHEN op_type = 4
-             |       THEN CAST(t % 9 + 1 AS DOUBLE) / (seq % 13 + 1)
-             |       WHEN op_type = 12
-             |       THEN CAST(t % 5 + 1 AS DOUBLE) / (seq % 11 + 1)
-             |       END, 7) AS price,
-             |  CASE WHEN op_type = 6
-             |       THEN CAST(5000000 * (t + 1) + seq % 101 AS BIGINT)
-             |       END AS trust_limit,
-             |  CASE WHEN op_type = 10
-             |       THEN 'cfg-' || (seq % 19) || '-' || t
-             |       END AS data_name,
-             |  CASE WHEN op_type = 10 AND (seq + t) % 3 <> 0
-             |       THEN lower(hex(encode('val-' || seq || '-' || t)))
-             |       END AS data_value_hex,
-             |  CASE WHEN op_type = 11 THEN CAST(seq * 8 + t + 7 AS BIGINT)
-             |       END AS bump_to,
-             |  ${strkeyG("""CASE WHEN op_type = 5 AND t % 2 = 0
-                  THEN sha256('inf-' || seq || '-' || t) END""")}
-             |    AS inflation_dest,
-             |  CASE WHEN op_type = 5 AND seq % 2 = 0
-             |       THEN CAST(seq % 16 AS INT)
-             |       WHEN op_type = 21
-             |       THEN CAST(seq % 8 AS INT) END AS clear_flags,
-             |  CASE WHEN op_type = 5 AND seq % 2 = 1
-             |       THEN CAST((seq + 1) % 16 AS INT)
-             |       WHEN op_type = 21
-             |       THEN CAST((seq + 1) % 8 AS INT) END AS set_flags,
-             |  CASE WHEN op_type = 5 AND t % 3 = 0
-             |       THEN CAST((seq + t) % 256 AS INT) END AS master_key_weight,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST(seq % 255 AS INT) END AS low_threshold,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST((seq + 1) % 255 AS INT) END AS med_threshold,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST((seq + 2) % 255 AS INT) END AS high_threshold,
-             |  CASE WHEN op_type = 5 AND t % 2 = 1
-             |       THEN 'dom-' || (seq % 23) || '.example'
-             |       END AS home_domain,
-             |  ${strkeyG("""CASE WHEN op_type = 5 AND (seq + t) % 2 = 1
-                  THEN sha256('sg-' || seq || '-' || t)
-                  WHEN op_type = 18 AND (seq + t) % 2 = 1
-                  THEN sha256('sk-' || seq || '-' || t) END""")}
-             |    AS signer_key,
-             |  CASE WHEN op_type = 5 AND (seq + t) % 2 = 1
-             |       THEN CAST((seq + t) % 256 AS INT) END AS signer_weight,
-             |  ${strkeyG("""CASE WHEN op_type IN (7, 21)
-                  THEN sha256('tr-' || seq || '-' || t) END""")}
-             |    AS trustor,
-             |  CASE WHEN op_type = 7 THEN CAST((seq + t) % 3 AS INT)
-             |       END AS authorize,
-             |  ${strkeyG("""CASE WHEN op_type = 19
-                  THEN sha256('cb-' || seq || '-' || t) END""")}
-             |    AS from_account,
-             |  CASE WHEN op_type = 14
-             |       THEN to_json([${strkeyG(
-                        "sha256('cl-' || seq || '-' || t || '-' || jc)")}
-             |                     for jc in generate_series(0, t % 2)])
-             |       END AS claimants_json,
-             |  CASE WHEN op_type IN (15, 20)
-             |       THEN sha256('bal-' || seq || '-' || t)
-             |       END AS balance_id_hex,
-             |  ${strkeyG("""CASE WHEN op_type = 16
-                  THEN sha256('sp-' || seq || '-' || t) END""")}
-             |    AS sponsored_id,
-             |  CASE WHEN op_type = 18 THEN CAST((seq + t) % 2 AS INT)
-             |       END AS revoke_type,
-             |  CASE WHEN op_type = 18 AND (seq + t) % 2 = 0
-             |       THEN CAST(seq % 4 AS INT) END AS ledger_entry_type,
-             |  CASE WHEN op_type = 18 AND (seq + t) % 2 = 0
-             |       THEN sha256('lk-' || seq || '-' || t)
-             |       END AS ledger_key_hex,
-             |  ${strkeyG("""CASE WHEN op_type = 18 AND (seq + t) % 2 = 1
-                  THEN sha256('sa-' || seq || '-' || t) END""")}
-             |    AS signer_account,
-             |  CASE WHEN op_type IN (22, 23)
-             |       THEN sha256('lp-' || seq || '-' || t)
-             |       END AS pool_id_hex,
-             |  ${strkeySql("""CASE WHEN op_type IN (22, 23)
-                  THEN sha256('lp-' || seq || '-' || t) END""", 88)}
-             |    AS liquidity_pool_id_strkey,
-             |  CASE WHEN op_type = 22
-             |       THEN CAST(3000000 * (t + 1) + seq % 71 AS BIGINT)
-             |       END AS max_amount_a,
-             |  CASE WHEN op_type = 22
-             |       THEN CAST(4000000 * (t + 1) + seq % 73 AS BIGINT)
-             |       END AS max_amount_b,
-             |  CASE WHEN op_type = 23
-             |       THEN CAST(600000 * (t + 1) + seq % 67 AS BIGINT)
-             |       END AS min_amount_a,
-             |  CASE WHEN op_type = 23
-             |       THEN CAST(700000 * (t + 1) + seq % 61 AS BIGINT)
-             |       END AS min_amount_b,
-             |  CASE WHEN op_type = 22 THEN CAST(seq % 7 + 1 AS INT)
-             |       END AS min_price_n,
-             |  CASE WHEN op_type = 22 THEN CAST(t % 5 + 1 AS INT)
-             |       END AS min_price_d,
-             |  CASE WHEN op_type = 22 THEN CAST(seq % 9 + 2 AS INT)
-             |       END AS max_price_n,
-             |  CASE WHEN op_type = 22 THEN CAST(t % 3 + 1 AS INT)
-             |       END AS max_price_d,
-             |  CASE WHEN op_type = 24 THEN CAST((seq + t) % 4 AS INT)
-             |       END AS host_fn_type,
-             |  ${strkeySql("""CASE WHEN op_type = 24 AND (seq + t) % 4 <> 2
-                  THEN sha256('ct-' || seq || '-' || t) END""", 16)}
-             |    AS contract_id,
-             |  CASE WHEN op_type = 24 AND (seq + t) % 4 = 0
-             |       THEN to_json([
-             |         to_base64(from_hex('0000000f'
-             |           || format('{:08x}', length(fn_name))
-             |           || hex(encode(fn_name))
-             |           || repeat('00', (4 - length(fn_name) % 4) % 4))),
-             |         to_base64(from_hex('00000005'
-             |           || format('{:016x}', seq * 3 + t)))]
-             |         || CASE WHEN t % 2 = 1 THEN [
-             |              to_base64(from_hex('0000000a0000000000000000'
-             |                || format('{:016x}', 50000 * (t + 1) + seq % 83)))]
-             |            ELSE [] END)
-             |       END AS parameters,
-             |  CASE WHEN op_type = 24 AND (seq + t) % 4 = 0
-             |       THEN '[{"symbol":"' || fn_name || '"},{"u64":'
-             |         || (seq * 3 + t) || '}'
-             |         || CASE WHEN t % 2 = 1
-             |            THEN ',{"i128":{"hi":0,"lo":'
-             |              || (50000 * (t + 1) + seq % 83)
-             |              || '}}' ELSE '' END || ']'
-             |       END AS parameters_decoded,
-             |  CASE WHEN op_type = 24 THEN '[' || abc || ']'
-             |       END AS asset_balance_changes,
-             |  CASE WHEN op_type = 25
-             |       THEN CAST(100000 + (seq * 3 + t) % 50000 AS BIGINT)
-             |       END AS extend_to
-             |FROM o LEFT JOIN abc USING (seq, t, u) ORDER BY id""".stripMargin),
-      (s, dir) =>
-        // details/details_json are spec-covered (OperationDetailsSpec wire
-        // parity), not gate-hashed — VARIANT columns and double-formatted
-        // JSON don't survive the pandas comparator; withDetails=false
-        // plans without the construction entirely
-        StellarTransforms.historyOperationsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2299)),
-            withDetails = false)
-          .orderBy("id")),
-
-    Q("stellar_soroban_ops_from_lcm",
-      // the Soroban op-detail slice as a first-class query: invoke ops
-      // only, with the serializeParameters pair (base64 + decoded JSON)
-      // and the SAC asset_balance_changes array, every byte re-derived
-      // by DuckDB from the fixture laws (XDR reconstructed hex-by-hex)
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2300, 2499)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx),
-             |o AS (SELECT seq, t, u,
-             |             ['init','transfer','swap']
-             |               [CAST((seq + t) % 3 + 1 AS INT)] AS fn_name
-             |      FROM ops WHERE (seq + t + u) % 27 = 24),
-             |abc AS (SELECT seq, t, e % ((seq + t) % 3 + 1) AS u,
-             |               string_agg('{"type":"' ||
-             |                 ['transfer','mint','burn']
-             |                   [CAST((seq + e) % 3 + 1 AS INT)] ||
-             |                 '","amount":"' || (100000 * (t + 1) + seq % 97 + e)
-             |                 || '","to":"' || (seq * 1000 + t * 10 + e) ||
-             |                 '","contract":"' ||
-             |                 ${strkeyC(
-                                  "sha256('ev-ct-' || seq || '-' || t || '-' || e)")}
-             |                 || '"}', ',' ORDER BY e) AS abc
-             |        FROM (SELECT seq, t, unnest(generate_series(0,
-             |                CAST((seq + t) // 2 % 2 AS INT))) AS e
-             |              FROM tx WHERE (seq + t) % 2 = 0)
-             |        GROUP BY 1, 2, 3)
-             |SELECT ((seq << 32) | ((t + 1) << 12)) | (u + 1) AS id,
-             |  seq AS ledger_sequence,
-             |  CAST((seq + t) % 4 AS INT) AS host_fn_type,
-             |  ${strkeyC("""CASE WHEN (seq + t) % 4 <> 2
-                  THEN sha256('ct-' || seq || '-' || t) END""")}
-             |    AS contract_id,
-             |  CASE WHEN (seq + t) % 4 = 0
-             |       THEN to_json([
-             |         to_base64(from_hex('0000000f'
-             |           || format('{:08x}', length(fn_name))
-             |           || hex(encode(fn_name))
-             |           || repeat('00', (4 - length(fn_name) % 4) % 4))),
-             |         to_base64(from_hex('00000005'
-             |           || format('{:016x}', seq * 3 + t)))]
-             |         || CASE WHEN t % 2 = 1 THEN [
-             |              to_base64(from_hex('0000000a0000000000000000'
-             |                || format('{:016x}', 50000 * (t + 1) + seq % 83)))]
-             |            ELSE [] END)
-             |       END AS parameters,
-             |  CASE WHEN (seq + t) % 4 = 0
-             |       THEN '[{"symbol":"' || fn_name || '"},{"u64":'
-             |         || (seq * 3 + t) || '}'
-             |         || CASE WHEN t % 2 = 1
-             |            THEN ',{"i128":{"hi":0,"lo":'
-             |              || (50000 * (t + 1) + seq % 83)
-             |              || '}}' ELSE '' END || ']'
-             |       END AS parameters_decoded,
-             |  '[' || abc || ']' AS asset_balance_changes
-             |FROM o LEFT JOIN abc USING (seq, t, u) ORDER BY id""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.historyOperationsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2300, 2499)),
-            withDetails = false)
-          .where(col("type") === 24)
-          .select("id", "ledger_sequence", "host_fn_type", "contract_id",
-            "parameters", "parameters_decoded", "asset_balance_changes")
-          .orderBy("id")),
-
-    Q("stellar_assets_from_lcm",
-      // P6/A2 composed over the wire source: asset mentions across the
-      // typed arms (single codes, path-payment pairs, offer pairs),
-      // deduped to the first-seen op TOID. DuckDB re-derives the per-arm
-      // mention lists from the fixture laws and takes min(toid)
-      Some("""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx),
-             |o AS (SELECT seq, t, u, CAST((seq + t + u) % 27 AS INT) AS op_type,
-             |             ['XLM','USDC','EURC'] AS codes FROM ops),
-             |m AS (SELECT seq, t, u, unnest(CASE
-             |  WHEN op_type IN (1, 19) THEN [codes[CAST(seq % 3 + 1 AS INT)]]
-             |  WHEN op_type IN (6, 7, 14, 21)
-             |    THEN [codes[CAST((seq + t) % 3 + 1 AS INT)]]
-             |  WHEN op_type = 2 THEN [codes[CAST(seq % 3 + 1 AS INT)],
-             |                         codes[CAST((seq + 1) % 3 + 1 AS INT)]]
-             |  WHEN op_type = 13 THEN [codes[CAST((seq + 2) % 3 + 1 AS INT)],
-             |                          codes[CAST(seq % 3 + 1 AS INT)]]
-             |  WHEN op_type = 3 THEN [codes[CAST(seq % 3 + 1 AS INT)],
-             |                         codes[CAST((seq + 2) % 3 + 1 AS INT)]]
-             |  WHEN op_type = 4 THEN [codes[CAST(seq % 3 + 1 AS INT)],
-             |                         codes[CAST((seq + 1) % 3 + 1 AS INT)]]
-             |  WHEN op_type = 12 THEN [codes[CAST((seq + 1) % 3 + 1 AS INT)],
-             |                          codes[CAST(seq % 3 + 1 AS INT)]]
-             |  ELSE [] END) AS asset_code FROM o)
-             |SELECT asset_code,
-             |       min((seq << 32) | ((t + 1) << 12) | (u + 1)) AS first_seen_id
-             |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.historyAssetsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2299)))
-          .orderBy("asset_code")),
-
-    Q("stellar_effects_from_lcm",
-      // P4-shaped effects over the wire — the FULL wire-determined family
-      // set (account family, set-options, trustline/offer/data CRUD, CB
-      // lifecycle, trade quads + LP trades, LP deposit/withdraw/entry
-      // loop, and the pre/post-sponsor-classified sponsorship families).
-      // DuckDB re-derives every branch as a UNION ALL over the fixture
-      // laws with a (family, key) order pair; the effect index is a
-      // row_number over that order — the engine's array-position law
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2100, 2499)) AS seq),
-             |txs AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM txs WHERE t % 3 <> 0),
-             |o AS (SELECT seq, t, u, CAST((seq + t + u) % 27 AS INT) AS op_type,
-             |             ['XLM','USDC','EURC'] AS codes,
-             |             CASE WHEN (seq + t) % 5 = 0
-             |                  THEN sha256('osrc-' || seq || '-' || t)
-             |                  ELSE sha256('src-' || seq || '-' || t)
-             |                  END AS actsrc,
-             |             (seq << 32) | ((t + 1) << 12) | (u + 1) AS opid,
-             |             CAST(1000000 * (t + 1) AS BIGINT) AS amt
-             |      FROM ops),
-             |chx AS (SELECT seq, t, j, j % ((seq + t) % 3 + 1) AS u,
-             |               (seq + t + j) % 3 AS kind, (seq + j) % 10 AS et,
-             |               CASE WHEN (seq + t + j) % 3 <> 0
-             |                     AND (2 * seq + t + j) % 3 = 0
-             |                    THEN sha256('chsp-' || seq || '-' || t || '-' || j)
-             |                    WHEN (seq + t + j) % 3 <> 0
-             |                     AND (2 * seq + t + j) % 3 = 1
-             |                    THEN sha256('chspp-' || seq || '-' || t || '-' || j)
-             |                    END AS pre_sp,
-             |               CASE WHEN (seq + t + j) % 3 <> 2
-             |                     AND (seq + 2 * t + j) % 2 = 0
-             |                    THEN sha256('chsp-' || seq || '-' || t || '-' || j)
-             |                    END AS post_sp,
-             |               CAST(1000000 + seq * 2 + t
-             |                    + (seq + t * 2 + j) % 201 - 100 AS BIGINT)
-             |                 AS post_shares
-             |        FROM (SELECT seq, t,
-             |                unnest(generate_series(0, (seq + t) % 2)) AS j
-             |              FROM txs WHERE t % 3 <> 0)),
-             |sg AS (SELECT * FROM (
-             |    SELECT seq, t, j, u, m,
-             |      ((seq + t + j) % 3 <> 0 AND m < (seq + t + j) % 3) AS preh,
-             |      ((seq + t + j) % 3 <> 2
-             |       AND m < (seq + 2 * t + j) % 3) AS posth,
-             |      sha256('sgsp-' || seq || '-' || t || '-' || j || '-' || m
-             |             || '-' || (seq + t + m) % 2) AS presp,
-             |      sha256('sgsp-' || seq || '-' || t || '-' || j || '-' || m
-             |             || '-' || (2 * seq + t + m) % 2) AS postsp,
-             |      ${strkeyG(
-                      "sha256('sg-' || seq || '-' || t || '-' || j || '-' || m)")}
-             |        AS sk
-             |    FROM chx, (SELECT unnest(generate_series(0, 1)) AS m)
-             |    WHERE et = 0)
-             |  WHERE (preh OR posth)
-             |    AND NOT (preh AND posth AND presp = postsp)),
-             |tl AS (SELECT seq, t, u, max_by(kind, j) AS tl_kind
-             |       FROM chx WHERE et = 1 GROUP BY 1, 2, 3),
-             |dt AS (SELECT seq, t, u, max_by(kind, j) AS dt_kind
-             |       FROM chx WHERE et = 3 GROUP BY 1, 2, 3),
-             |lp AS (SELECT seq, t, u,
-             |              max_by((seq + t * 2 + j) % 201 - 100, j) AS d_shares
-             |       FROM chx WHERE et = 5 GROUP BY 1, 2, 3),
-             |at AS (SELECT a.*, j, (seq + t + j) % 4 = 0 AS is_pool,
-             |              seq * 100 + t * 10 + j AS atom_offer,
-             |              codes[CAST((seq + j) % 3 + 1 AS INT)] AS sold_code,
-             |              CAST(500000 * (t + 1) + seq % 43 + j AS BIGINT)
-             |                AS sold_amt,
-             |              codes[CAST((seq + j + 1) % 3 + 1 AS INT)]
-             |                AS bought_code,
-             |              CAST(600000 * (t + 1) + seq % 47 + j AS BIGINT)
-             |                AS bought_amt,
-             |              sha256('se-' || seq || '-' || t || '-' || j) AS seller
-             |       FROM (SELECT *, unnest(generate_series(0, (seq + t) % 2)) AS j
-             |             FROM o WHERE op_type IN (2, 3, 12, 13)) a),
-             |e AS (
-             |  -- create_account: created, debited, master signer
-             |  SELECT seq, opid, 0 AS fam, 0 AS k, 0 AS typ,
-             |         sha256('dst-' || seq || '-' || t) AS account,
-             |         CAST(NULL AS VARCHAR) AS asset, amt AS amount,
-             |         CAST(NULL AS BIGINT) AS offer
-             |  FROM o WHERE op_type = 0
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 3, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 0
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 2, 10, sha256('dst-' || seq || '-' || t),
-             |         NULL, 1, NULL
-             |  FROM o WHERE op_type = 0
-             |  -- payment family: credited (strict-send delivers RESULT),
-             |  -- debited (strict-receive pays RESULT)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 2, sha256('dst-' || seq || '-' || t),
-             |         CASE WHEN op_type = 2
-             |              THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |              ELSE codes[CAST(seq % 3 + 1 AS INT)] END,
-             |         CASE WHEN op_type = 13
-             |              THEN CAST(900000 * (t + 1) + seq % 59 AS BIGINT)
-             |              ELSE amt END,
-             |         NULL
-             |  FROM o WHERE op_type IN (1, 2, 13)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 3, actsrc,
-             |         CASE WHEN op_type = 13
-             |              THEN codes[CAST((seq + 2) % 3 + 1 AS INT)]
-             |              ELSE codes[CAST(seq % 3 + 1 AS INT)] END,
-             |         CASE WHEN op_type = 2
-             |              THEN CAST(1500000 * (t + 1) + seq % 53 AS BIGINT)
-             |              ELSE amt END,
-             |         NULL
-             |  FROM o WHERE op_type IN (1, 2, 13)
-             |  -- account_merge: debited, credited, removed
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 3, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 8
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 2, sha256('dst-' || seq || '-' || t),
-             |         NULL, amt, NULL
-             |  FROM o WHERE op_type = 8
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 2, 1, actsrc, NULL, NULL, NULL
-             |  FROM o WHERE op_type = 8
-             |  -- set_options: one effect per touched optional
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 4, actsrc, NULL, NULL, NULL
-             |  FROM o WHERE op_type = 5 AND seq % 3 = 0
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 5, actsrc, NULL, NULL, NULL
-             |  FROM o WHERE op_type = 5 AND t % 2 = 1
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 2, 6, actsrc, NULL, NULL, NULL
-             |  FROM o WHERE op_type = 5
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 3, 7, actsrc, NULL, NULL, NULL
-             |  FROM o WHERE op_type = 5 AND t % 2 = 0
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 4,
-             |         CASE WHEN (seq + t) % 256 = 0 THEN 11 ELSE 10 END,
-             |         actsrc, NULL,
-             |         CASE WHEN (seq + t) % 256 = 0 THEN NULL
-             |              ELSE CAST((seq + t) % 256 AS BIGINT) END, NULL
-             |  FROM o WHERE op_type = 5 AND (seq + t) % 2 = 1
-             |  -- change_trust: CRUD off the op's trustline change kind
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0,
-             |         CASE tl.tl_kind WHEN 0 THEN 20 WHEN 2 THEN 21
-             |              WHEN 1 THEN 22 ELSE 20 END,
-             |         actsrc, codes[CAST((seq + t) % 3 + 1 AS INT)],
-             |         CAST(5000000 * (t + 1) + seq % 101 AS BIGINT), NULL
-             |  FROM o LEFT JOIN tl USING (seq, t, u) WHERE op_type = 6
-             |  -- allow_trust dual emission; set_trust_line_flags single
-             |  UNION ALL
-             |  SELECT seq, opid, 0, k2, 26, actsrc,
-             |         codes[CAST((seq + t) % 3 + 1 AS INT)], NULL, NULL
-             |  FROM o, (SELECT unnest(generate_series(0, 1)) AS k2)
-             |  WHERE op_type = 7
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 26, actsrc,
-             |         codes[CAST((seq + t) % 3 + 1 AS INT)], NULL, NULL
-             |  FROM o WHERE op_type = 21
-             |  -- manage_data: removed on nil value, else CRUD off the
-             |  -- op's DATA entry change kind (created fallback)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0,
-             |         CASE WHEN (seq + t) % 3 = 0 THEN 41
-             |              WHEN dt.dt_kind = 1 THEN 42 ELSE 40 END,
-             |         actsrc, NULL, NULL, NULL
-             |  FROM o LEFT JOIN dt USING (seq, t, u) WHERE op_type = 10
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 43, actsrc, NULL,
-             |         CAST(seq * 8 + t + 7 AS BIGINT), NULL
-             |  FROM o WHERE op_type = 11
-             |  -- claimable balances: create (50 + claimants + debit),
-             |  -- claim (52 + credit), clawback (80 + credit)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 50, actsrc,
-             |         codes[CAST((seq + t) % 3 + 1 AS INT)], amt, NULL
-             |  FROM o WHERE op_type = 14
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1 + jc, 51,
-             |         sha256('cl-' || seq || '-' || t || '-' || jc),
-             |         codes[CAST((seq + t) % 3 + 1 AS INT)], amt, NULL
-             |  FROM (SELECT *, unnest(generate_series(0, t % 2)) AS jc
-             |        FROM o WHERE op_type = 14)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 9, 3, actsrc,
-             |         codes[CAST((seq + t) % 3 + 1 AS INT)], amt, NULL
-             |  FROM o WHERE op_type = 14
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 52, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 15
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 2, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 15
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 2, actsrc,
-             |         codes[CAST(seq % 3 + 1 AS INT)], amt, NULL
-             |  FROM o WHERE op_type = 19
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 3, sha256('cb-' || seq || '-' || t),
-             |         codes[CAST(seq % 3 + 1 AS INT)], amt, NULL
-             |  FROM o WHERE op_type = 19
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 80, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 20
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 1, 2, actsrc, NULL, amt, NULL
-             |  FROM o WHERE op_type = 20
-             |  -- LP deposit/withdraw: share delta off the op's LP change
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 90, actsrc, NULL,
-             |         CAST(lp.d_shares AS BIGINT), NULL
-             |  FROM o LEFT JOIN lp USING (seq, t, u) WHERE op_type = 22
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 0, 91, actsrc, NULL,
-             |         CAST(-lp.d_shares AS BIGINT), NULL
-             |  FROM o LEFT JOIN lp USING (seq, t, u) WHERE op_type = 23
-             |  -- orderbook atoms: (source, seller) per type 33/32/31
-             |  -- (+30 off path payments)
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 10 + j * 10 + r * 2 + s,
-             |         [33, 32, 31, 30][CAST(r + 1 AS INT)],
-             |         CASE s WHEN 0 THEN actsrc ELSE seller END,
-             |         CASE s WHEN 0 THEN bought_code ELSE sold_code END,
-             |         CASE s WHEN 0 THEN bought_amt ELSE sold_amt END,
-             |         atom_offer
-             |  FROM at, (SELECT unnest(generate_series(0, 3)) AS r),
-             |       (SELECT unnest(generate_series(0, 1)) AS s)
-             |  WHERE NOT is_pool AND (r <= 2 OR op_type IN (3, 12))
-             |  UNION ALL
-             |  SELECT seq, opid, 0, 10 + j * 10, 92, actsrc,
-             |         sold_code, sold_amt, NULL
-             |  FROM at WHERE is_pool
-             |  -- sponsorship families: the entry-level pre/post pair
-             |  -- classification, then the signer diffs of the same change
-             |  -- (signer strkey rides the asset slot until the final
-             |  -- projection splits it out)
-             |  UNION ALL
-             |  SELECT seq, opid, 2, j * 10,
-             |         CASE WHEN pre_sp IS NULL THEN base
-             |              WHEN post_sp IS NULL THEN base + 2
-             |              ELSE base + 1 END,
-             |         CASE WHEN post_sp IS NULL THEN pre_sp
-             |              ELSE post_sp END,
-             |         NULL, NULL, NULL
-             |  FROM (SELECT o.seq, o.opid, c.j, c.pre_sp, c.post_sp,
-             |               CASE c.et WHEN 0 THEN 60 WHEN 1 THEN 63
-             |                    WHEN 3 THEN 66 WHEN 4 THEN 69 END AS base
-             |        FROM o JOIN chx c USING (seq, t, u)
-             |        WHERE c.et IN (0, 1, 3, 4)
-             |          AND (c.pre_sp IS NOT NULL OR c.post_sp IS NOT NULL)
-             |          AND (c.pre_sp IS NULL OR c.post_sp IS NULL
-             |               OR c.pre_sp <> c.post_sp))
-             |  UNION ALL
-             |  SELECT seq, opid, 2,
-             |         j * 10 + CAST(row_number() OVER (
-             |           PARTITION BY opid, j ORDER BY sk) AS INT),
-             |         CASE WHEN NOT preh THEN 72
-             |              WHEN NOT posth THEN 74 ELSE 73 END,
-             |         CASE WHEN preh AND NOT posth THEN presp
-             |              ELSE postsp END,
-             |         sk, NULL, NULL
-             |  FROM o JOIN sg USING (seq, t, u)
-             |  -- LP entry loop: created(93) / removed(94)
-             |  UNION ALL
-             |  SELECT seq, opid, 3, c.j, 93, actsrc, NULL,
-             |         c.post_shares, NULL
-             |  FROM o JOIN chx c USING (seq, t, u)
-             |  WHERE c.et = 5 AND c.kind = 0
-             |  UNION ALL
-             |  SELECT seq, opid, 3, c.j, 94, actsrc, NULL, NULL, NULL
-             |  FROM o JOIN chx c USING (seq, t, u)
-             |  WHERE c.et = 5 AND c.kind = 2)
-             |SELECT opid AS operation_id, seq AS ledger_sequence,
-             |  CAST(row_number() OVER (PARTITION BY opid ORDER BY fam, k)
-             |       - 1 AS INT) AS effect_index,
-             |  CAST(typ AS INT) AS type,
-             |  CASE typ WHEN 0 THEN 'account_created'
-             |       WHEN 1 THEN 'account_removed'
-             |       WHEN 2 THEN 'account_credited'
-             |       WHEN 3 THEN 'account_debited'
-             |       WHEN 4 THEN 'account_thresholds_updated'
-             |       WHEN 5 THEN 'account_home_domain_updated'
-             |       WHEN 6 THEN 'account_flags_updated'
-             |       WHEN 7 THEN 'account_inflation_destination_updated'
-             |       WHEN 10 THEN 'signer_created'
-             |       WHEN 11 THEN 'signer_removed'
-             |       WHEN 20 THEN 'trustline_created'
-             |       WHEN 21 THEN 'trustline_removed'
-             |       WHEN 22 THEN 'trustline_updated'
-             |       WHEN 26 THEN 'trustline_flags_updated'
-             |       WHEN 30 THEN 'offer_created'
-             |       WHEN 31 THEN 'offer_removed'
-             |       WHEN 32 THEN 'offer_updated'
-             |       WHEN 33 THEN 'trade'
-             |       WHEN 40 THEN 'data_created'
-             |       WHEN 41 THEN 'data_removed'
-             |       WHEN 42 THEN 'data_updated'
-             |       WHEN 43 THEN 'sequence_bumped'
-             |       WHEN 50 THEN 'claimable_balance_created'
-             |       WHEN 51 THEN 'claimable_balance_claimant_created'
-             |       WHEN 52 THEN 'claimable_balance_claimed'
-             |       WHEN 60 THEN 'account_sponsorship_created'
-             |       WHEN 61 THEN 'account_sponsorship_updated'
-             |       WHEN 62 THEN 'account_sponsorship_removed'
-             |       WHEN 63 THEN 'trustline_sponsorship_created'
-             |       WHEN 64 THEN 'trustline_sponsorship_updated'
-             |       WHEN 65 THEN 'trustline_sponsorship_removed'
-             |       WHEN 66 THEN 'data_sponsorship_created'
-             |       WHEN 67 THEN 'data_sponsorship_updated'
-             |       WHEN 68 THEN 'data_sponsorship_removed'
-             |       WHEN 69 THEN 'claimable_balance_sponsorship_created'
-             |       WHEN 70 THEN 'claimable_balance_sponsorship_updated'
-             |       WHEN 71 THEN 'claimable_balance_sponsorship_removed'
-             |       WHEN 72 THEN 'signer_sponsorship_created'
-             |       WHEN 73 THEN 'signer_sponsorship_updated'
-             |       WHEN 74 THEN 'signer_sponsorship_removed'
-             |       WHEN 80 THEN 'claimable_balance_clawed_back'
-             |       WHEN 90 THEN 'liquidity_pool_deposited'
-             |       WHEN 91 THEN 'liquidity_pool_withdrew'
-             |       WHEN 92 THEN 'liquidity_pool_trade'
-             |       WHEN 93 THEN 'liquidity_pool_created'
-             |       WHEN 94 THEN 'liquidity_pool_removed'
-             |       END AS type_string,
-             |  ${strkeyG("account")} AS account,
-             |  CASE WHEN typ NOT IN (72, 73, 74) THEN asset
-             |       END AS asset_code,
-             |  amount,
-             |  offer AS offer_id,
-             |  CASE WHEN typ IN (72, 73, 74) THEN asset END AS signer
-             |FROM e ORDER BY operation_id, effect_index""".stripMargin),
-      (s, dir) =>
-        // `details` (VARIANT payload) is spec-covered, not gate-hashed —
-        // the same split as the op-grain details; withDetails=false plans
-        // without the payload construction
-        StellarTransforms.historyEffectsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2499)),
-            withDetails = false)
-          .orderBy("operation_id", "effect_index")),
-
-    Q("stellar_transfers_from_lcm",
-      // P19-shaped transfer events over the wire: payment-family ops of
-      // successful txs, envelope source → op destination, strict-send
-      // delivering the RESULT amount. DuckDB re-derives the laws
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2300, 2499)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx WHERE t % 3 <> 0),
-             |o AS (SELECT seq, t, u, CAST((seq + t + u) % 27 AS INT) AS op_type,
-             |             ['XLM','USDC','EURC'] AS codes FROM ops
-             |      WHERE CAST((seq + t + u) % 27 AS INT) IN (0, 1, 2, 13))
-             |SELECT (seq << 32) | ((t + 1) << 12) | (u + 1) AS operation_id,
-             |  seq AS ledger_sequence,
-             |  ['create_account','payment','path_payment_strict_receive',
-             |   'path_payment_strict_send']
-             |    [CASE op_type WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 3
-             |     ELSE 4 END] AS transfer_type,
-             |  ${strkeyG("""CASE WHEN (seq + t) % 5 = 0
-                  THEN sha256('osrc-' || seq || '-' || t)
-                  ELSE sha256('src-' || seq || '-' || t) END""")}
-             |    AS from_account,
-             |  CASE WHEN (seq + t) % 5 <> 0 AND t % 3 = 1
-             |       THEN seq * 1000 + t END AS from_muxed_id,
-             |  ${strkeyG("sha256('dst-' || seq || '-' || t)")} AS to_account,
-             |  CASE WHEN op_type = 1 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type = 2 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       WHEN op_type = 13 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS asset_code,
-             |  CASE WHEN op_type = 13
-             |       THEN CAST(900000 * (t + 1) + seq % 59 AS BIGINT)
-             |       ELSE CAST(1000000 * (t + 1) AS BIGINT)
-             |       END AS amount_stroops
-             |FROM o ORDER BY operation_id""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.tokenTransfersFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2300, 2499)))
-          .orderBy("operation_id")),
-
-    Q("stellar_trades_from_lcm",
-      // P5 composed over the wire at claim-atom grain: RESULT atoms on
-      // the trade-shaped arms of successful txs, orderbook/LP tagged.
-      // PRICING re-derives findTradeSellPrice: an orderbook atom whose
-      // owning op has an offer change with pre state and the SAME offer
-      // id (fixture alignment: change j matches atom j exactly when
-      // (seq+j)%10=2, j%nOps=u, kind!=0) takes the pre-state price N/D;
-      // an orderbook atom with NO such change fails the op's transform
-      // and drops ALL its atoms (trade.go:273-278, export_trades.go's
-      // numFailures), replayed here with a per-op bool_or window; LP
-      // atoms bought/sold by definition. DuckDB re-derives every law
-      // per (seq, t, u, j)
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx WHERE t % 3 <> 0),
-             |o AS (SELECT seq, t, u, ['XLM','USDC','EURC'] AS codes FROM ops
-             |      WHERE CAST((seq + t + u) % 27 AS INT) IN (2, 3, 12, 13)),
-             |a0 AS (SELECT seq, t, u, codes,
-             |             unnest(generate_series(0, (seq + t) % 2)) AS j
-             |      FROM o),
-             |a AS (SELECT *,
-             |        (seq + t + j) % 4 = 0 AS is_pool,
-             |        CAST(500000 * (t + 1) + seq % 43 + j AS BIGINT) AS sold,
-             |        CAST(600000 * (t + 1) + seq % 47 + j AS BIGINT) AS bought,
-             |        (seq + j) % 10 = 2 AND j % ((seq + t) % 3 + 1) = u
-             |          AND (seq + t + j) % 3 <> 0 AS pre_matched,
-             |        (seq + j) % 10 = 5 AND j % ((seq + t) % 3 + 1) = u
-             |          AS lp_matched
-             |      FROM a0),
-             |a2 AS (SELECT *, bool_or(NOT is_pool AND NOT pre_matched)
-             |         OVER (PARTITION BY seq, t, u) AS op_bad
-             |       FROM a)
-             |SELECT (seq << 32) | ((t + 1) << 12) | (u + 1) AS operation_id,
-             |  CAST(j AS INT) AS "order",
-             |  seq AS ledger_sequence,
-             |  CASE WHEN is_pool THEN 2 ELSE 1 END AS trade_type,
-             |  ${strkeyG("""CASE WHEN (seq + t) % 5 = 0
-                  THEN sha256('osrc-' || seq || '-' || t)
-                  ELSE sha256('src-' || seq || '-' || t) END""")}
-             |    AS taker,
-             |  ${strkeyG("""CASE WHEN (seq + t + j) % 4 <> 0
-                  THEN sha256('se-' || seq || '-' || t || '-' || j) END""")}
-             |    AS selling_account,
-             |  ${strkeySql("""CASE WHEN (seq + t + j) % 4 = 0
-                  THEN sha256('se-' || seq || '-' || t || '-' || j) END""",
-                88)}
-             |    AS selling_liquidity_pool_id_strkey,
-             |  CASE WHEN NOT is_pool
-             |       THEN seq * 100 + t * 10 + j END AS offer_id,
-             |  CASE WHEN CAST((seq + t + u) % 27 AS INT) IN (3, 12)
-             |            AND (seq + t) % 2 = 0
-             |       THEN seq * 500 + t * 20 + (seq + t + u) % 27
-             |       ELSE ((seq << 32) | ((t + 1) << 12) | (u + 1))
-             |            | (CAST(1 AS BIGINT) << 62)
-             |       END AS buying_offer_id,
-             |  CASE WHEN CAST((seq + t + u) % 27 AS INT) IN (2, 13)
-             |       THEN CAST((seq + t + u) % 27 AS INT) = 2
-             |       END AS seller_is_exact,
-             |  codes[CAST((seq + j) % 3 + 1 AS INT)] AS selling_asset_code,
-             |  sold AS selling_amount,
-             |  codes[CAST((seq + j + 1) % 3 + 1 AS INT)] AS buying_asset_code,
-             |  bought AS buying_amount,
-             |  CASE WHEN is_pool THEN bought
-             |       WHEN pre_matched THEN CAST(seq % 9 + 1 + j AS BIGINT)
-             |       ELSE bought END AS price_n,
-             |  CASE WHEN is_pool THEN sold
-             |       WHEN pre_matched THEN CAST(t % 7 + 1 + j AS BIGINT)
-             |       ELSE sold END AS price_d,
-             |  CAST(CASE WHEN is_pool THEN bought
-             |            WHEN pre_matched THEN seq % 9 + 1 + j
-             |            ELSE bought END AS DOUBLE)
-             |    / (CASE WHEN is_pool THEN sold
-             |            WHEN pre_matched THEN t % 7 + 1 + j
-             |            ELSE sold END) AS price,
-             |  CASE WHEN is_pool AND lp_matched
-             |       THEN CAST(10 + (seq + t) % 90 AS INT)
-             |       END AS liquidity_pool_fee
-             |FROM a2 WHERE NOT op_bad
-             |ORDER BY operation_id, "order"""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.historyTradesFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2100, 2299)))
-          .orderBy("operation_id", "order")),
-
-    Q("stellar_op_changes_from_lcm",
-      // change-DERIVED op details on the wire op grain: LP post−pre
-      // deltas from the op's FIRST liquidity-pool change
-      // (getLiquidityPoolAndProductDelta) and the sponsor from the op's
-      // first sponsored CREATED change (getSponsor) — DuckDB re-derives
-      // both first-change scans with min(j) over the per-op change set
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2304, 2499)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t
-             |       FROM ls),
-             |ops AS (SELECT seq, t,
-             |               unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx WHERE t % 3 <> 0),
-             |ch AS (SELECT seq, t,
-             |              unnest(generate_series(0, (seq + t) % 2)) AS j
-             |       FROM tx WHERE t % 3 <> 0),
-             |lp AS (SELECT seq, t, j % ((seq + t) % 3 + 1) AS u,
-             |              min(j) AS j
-             |       FROM ch WHERE (seq + j) % 10 = 5 GROUP BY 1, 2, 3),
-             |sp AS (SELECT seq, t, j % ((seq + t) % 3 + 1) AS u,
-             |              min(j) AS j
-             |       FROM ch WHERE (seq + t + j) % 3 = 0
-             |         AND (seq + 2 * t + j) % 2 = 0 GROUP BY 1, 2, 3)
-             |SELECT (ops.seq << 32) | ((ops.t + 1) << 12) | (ops.u + 1)
-             |    AS operation_id,
-             |  ops.seq AS ledger_sequence,
-             |  CAST((ops.seq + ops.t + ops.u) % 27 AS INT) AS op_type,
-             |  CAST((ops.seq + ops.t + lp.j) % 2001 - 1000 AS BIGINT)
-             |    AS delta_reserve_a,
-             |  CAST((ops.seq * 3 + ops.t + lp.j) % 2001 - 1000 AS BIGINT)
-             |    AS delta_reserve_b,
-             |  CAST((ops.seq + ops.t * 2 + lp.j) % 201 - 100 AS BIGINT)
-             |    AS delta_shares,
-             |  CASE WHEN lp.j IS NOT NULL
-             |       THEN CAST(10 + (ops.seq + ops.t) % 90 AS INT)
-             |       END AS pool_fee,
-             |  ${strkeyG("""CASE WHEN sp.j IS NOT NULL
-                  THEN sha256('chsp-' || ops.seq || '-' || ops.t || '-' || sp.j) END""")}
-             |    AS sponsor
-             |FROM ops
-             |LEFT JOIN lp ON lp.seq = ops.seq AND lp.t = ops.t
-             |  AND lp.u = ops.u
-             |LEFT JOIN sp ON sp.seq = ops.seq AND sp.t = ops.t
-             |  AND sp.u = ops.u
-             |ORDER BY operation_id""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.opChangeDetailsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2304, 2499)))
-          .orderBy("operation_id")),
-
-    Q("stellar_contract_events_from_lcm",
-      // P17 composed over the wire: Soroban contract events off the tx
-      // meta, topics/data as raw base64 XDR AND ScVal-decoded JSON —
-      // DuckDB re-derives the exact XDR bytes per (seq, t, e) like the
-      // fixture-path p17 oracle, plus the C-address rendering; NO
-      // success filter (failed calls keep their events, flagged)
-      Some(s"""WITH ls AS (SELECT unnest(generate_series(2112, 2303)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t
-             |       FROM ls),
-             |ev AS (SELECT seq, t,
-             |         unnest(generate_series(0, (seq + t) // 2 % 2)) AS e,
-             |         ['transfer', 'mint', 'burn'] AS names
-             |       FROM tx WHERE (seq + t) % 2 = 0),
-             |x AS (SELECT seq, t, e,
-             |        names[CAST((seq + e) % 3 + 1 AS INT)] AS name,
-             |        CAST(100000 * (t + 1) + seq % 97 + e AS BIGINT) AS amt,
-             |        CAST(seq * 1000 + t * 10 + e AS BIGINT) AS to_id,
-             |        CAST(seq * 10 + t AS BIGINT) AS nonce,
-             |        (e % ((seq + t) % 3 + 1)) AS u
-             |      FROM ev)
-             |SELECT (seq << 32) | ((t + 1) << 12) | (u + 1) AS operation_id,
-             |  CAST(e AS INT) AS event_index,
-             |  seq AS ledger_sequence,
-             |  CAST((seq + t + e) % 3 AS INT) AS event_type,
-             |  ['system', 'contract', 'diagnostic']
-             |    [CAST((seq + t + e) % 3 + 1 AS INT)] AS event_type_string,
-             |  ${strkeySql("sha256('ev-ct-' || seq || '-' || t || '-' || e)",
-                  16)}
-             |    AS contract_id,
-             |  to_base64(from_hex(
-             |    '0000000f' || format('{:08x}', length(name))
-             |      || hex(encode(name))
-             |      || repeat('00', (4 - length(name) % 4) % 4)))
-             |    || '|' || to_base64(from_hex(
-             |    '00000005' || format('{:016x}', nonce)))
-             |    AS topics_joined,
-             |  '{"symbol":"' || name || '"}' || '|'
-             |    || '{"u64":' || nonce || '}' AS topics_decoded,
-             |  to_base64(from_hex(
-             |    '000000110000000100000002' ||
-             |    '0000000f00000006616d6f756e740000' ||
-             |    '0000000a0000000000000000' || format('{:016x}', amt) ||
-             |    '0000000f00000002746f0000' ||
-             |    '00000005' || format('{:016x}', to_id))) AS data,
-             |  '{"map":[{"key":{"symbol":"amount"},"val":{"i128":{"hi":0,"lo":'
-             |    || amt ||
-             |    '}}},{"key":{"symbol":"to"},"val":{"u64":' || to_id ||
-             |    '}}]}' AS data_decoded,
-             |  t % 3 <> 0 AS in_successful_contract_call
-             |FROM x ORDER BY operation_id, event_index""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.contractEventsFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2112, 2303)))
-          .orderBy("operation_id", "event_index")),
-
-    Q("src_lcm_change_decode",
-      // the change grain composed over the wire source: per-op
-      // LedgerEntryChanges (TransactionMeta grain) exploded to one row per
-      // change, with the 3-kind and 10-entry-type name maps. DuckDB
-      // re-derives the affine fixture laws per (seq, t, j)
-      Some("""WITH ls AS (SELECT unnest(generate_series(2400, 2559)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ch AS (SELECT seq, t,
-             |              unnest(generate_series(0, (seq + t) % 2)) AS j
-             |       FROM tx)
-             |SELECT seq AS ledger_sequence, CAST(t + 1 AS INT) AS tx_order,
-             |  CAST(j AS INT) AS change_index,
-             |  CAST(j % ((seq + t) % 3 + 1) AS INT) AS op_index,
-             |  CAST((seq + t + j) % 3 AS INT) AS kind,
-             |  ['created', 'updated', 'removed']
-             |    [CAST((seq + t + j) % 3 + 1 AS INT)] AS kind_string,
-             |  CAST((seq + j) % 10 AS INT) AS entry_type,
-             |  ['account', 'trustline', 'offer', 'data', 'claimable_balance',
-             |   'liquidity_pool', 'contract_data', 'contract_code',
-             |   'config_setting', 'ttl']
-             |    [CAST((seq + j) % 10 + 1 AS INT)] AS entry_type_string,
-             |  sha256('ck-' || (seq * 3 + t * 7 + j * 11) % 101) AS key_hash_hex,
-             |  seq AS last_modified,
-             |  CAST(1000000 + seq * 3 + t * 17 + j * 29 AS BIGINT) AS balance,
-             |  CASE WHEN (seq + j) % 10 = 2
-             |       THEN CAST(seq * 100 + t * 10 + j AS BIGINT) END AS offer_id,
-             |  CASE WHEN (seq + j) % 10 = 2 AND (seq + t + j) % 3 <> 0
-             |       THEN CAST(seq % 9 + 1 + j AS INT) END AS pre_price_n,
-             |  CASE WHEN (seq + j) % 10 = 2 AND (seq + t + j) % 3 <> 0
-             |       THEN CAST(t % 7 + 1 + j AS INT) END AS pre_price_d,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(10000000 + seq * 5 + t * 3 + j AS BIGINT)
-             |       END AS pre_reserve_a,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(20000000 + seq * 7 + t * 5 + j AS BIGINT)
-             |       END AS pre_reserve_b,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(1000000 + seq * 2 + t AS BIGINT) END AS pre_shares,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(10000000 + seq * 5 + t * 3 + j
-             |                 + (seq + t + j) % 2001 - 1000 AS BIGINT)
-             |       END AS post_reserve_a,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(20000000 + seq * 7 + t * 5 + j
-             |                 + (seq * 3 + t + j) % 2001 - 1000 AS BIGINT)
-             |       END AS post_reserve_b,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(1000000 + seq * 2 + t
-             |                 + (seq + t * 2 + j) % 201 - 100 AS BIGINT)
-             |       END AS post_shares,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN CAST(10 + (seq + t) % 90 AS INT) END AS pool_fee,
-             |  CASE WHEN (seq + j) % 10 = 5
-             |       THEN sha256('se-' || seq || '-' || t || '-' || j)
-             |       END AS pool_id_hex,
-             |  CASE WHEN (seq + t + j) % 3 <> 0 AND (2 * seq + t + j) % 3 = 0
-             |       THEN sha256('chsp-' || seq || '-' || t || '-' || j)
-             |       WHEN (seq + t + j) % 3 <> 0 AND (2 * seq + t + j) % 3 = 1
-             |       THEN sha256('chspp-' || seq || '-' || t || '-' || j)
-             |       END AS pre_sponsor_hex,
-             |  CASE WHEN (seq + t + j) % 3 <> 2 AND (seq + 2 * t + j) % 2 = 0
-             |       THEN sha256('chsp-' || seq || '-' || t || '-' || j)
-             |       END AS post_sponsor_hex,
-             |  CASE WHEN (seq + j) % 10 = 0 THEN
-             |    '[' || coalesce(array_to_string(list_transform(
-             |      range(0, CASE WHEN (seq + t + j) % 3 = 0 THEN 0
-             |                    ELSE (seq + t + j) % 3 END),
-             |      m -> '{"signer_hex":"' ||
-             |        sha256('sg-' || seq || '-' || t || '-' || j || '-' || m)
-             |        || '","sponsor_hex":"' ||
-             |        sha256('sgsp-' || seq || '-' || t || '-' || j || '-' || m
-             |               || '-' || (seq + t + m) % 2) || '"}'), ','), '')
-             |    || ']' END AS pre_signer_sponsors,
-             |  CASE WHEN (seq + j) % 10 = 0 THEN
-             |    '[' || coalesce(array_to_string(list_transform(
-             |      range(0, CASE WHEN (seq + t + j) % 3 = 2 THEN 0
-             |                    ELSE (seq + 2 * t + j) % 3 END),
-             |      m -> '{"signer_hex":"' ||
-             |        sha256('sg-' || seq || '-' || t || '-' || j || '-' || m)
-             |        || '","sponsor_hex":"' ||
-             |        sha256('sgsp-' || seq || '-' || t || '-' || j || '-' || m
-             |               || '-' || (2 * seq + t + m) % 2) || '"}'), ','),
-             |      '') || ']' END AS post_signer_sponsors
-             |FROM ch
-             |ORDER BY ledger_sequence, tx_order, change_index""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.ledgerChangesFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2400, 2559)))
-          .orderBy("ledger_sequence", "tx_order", "change_index")),
-
-    Q("stellar_changes_from_lcm",
-      // S6-style latest-per-key batch compaction composed over the wire
-      // source: the last change per ledger key in the range wins. The
-      // oracle re-derives the winner with a window; the engine uses one
-      // map-side-combinable max-over-struct hash aggregate (no window,
-      // no sort — ExplainAudit asserts the shape)
-      Some("""WITH ls AS (SELECT unnest(generate_series(2200, 2459)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ch AS (SELECT seq, t,
-             |              unnest(generate_series(0, (seq + t) % 2)) AS j
-             |       FROM tx),
-             |k AS (SELECT *, (seq * 3 + t * 7 + j * 11) % 101 AS kid FROM ch),
-             |r AS (SELECT *, row_number() OVER (PARTITION BY kid
-             |        ORDER BY seq DESC, t DESC, j DESC) AS rn FROM k)
-             |SELECT sha256('ck-' || kid) AS key_hash_hex,
-             |  seq AS last_sequence, CAST(t + 1 AS INT) AS last_tx_order,
-             |  CAST(j AS INT) AS last_change_index,
-             |  CAST((seq + t + j) % 3 AS INT) AS final_kind,
-             |  (seq + t + j) % 3 = 2 AS deleted,
-             |  CAST((seq + j) % 10 AS INT) AS entry_type,
-             |  CAST(1000000 + seq * 3 + t * 17 + j * 29 AS BIGINT) AS balance
-             |FROM r WHERE rn = 1 ORDER BY key_hash_hex""".stripMargin),
-      (s, dir) =>
-        StellarTransforms.compactedChangesFromLcm(
-            s.read.format("graft-lcm").load(lcmFixtureDir)
-              .where(col("sequence").between(2200, 2459)))
-          .orderBy("key_hash_hex")),
-
-    Q("src_lcm_tx_decode",
-      // the Stellar-transaction.x union arms decoded by the DSv2 source —
-      // result codes (signed, fee-bump-inner-success), the five memo arms,
-      // the three precondition arms (incl. V2's optional lattice), and the
-      // fee-bump shell — re-derived by DuckDB from the fixture laws,
-      // sha-256 memo/fee-source hashes included
-      Some("""WITH ls AS (SELECT unnest(generate_series(2100, 2299)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls)
-             |SELECT seq AS sequence, CAST(t AS INT) AS tx_order,
-             |  CAST((seq + t) % 3 + 1 AS INT) AS n_ops,
-             |  CAST(CASE WHEN t % 3 = 0 THEN -(1 + (seq + t) % 17)
-             |       WHEN t % 4 = 1 THEN 1
-             |       ELSE 0 END AS INT) AS result_code,
-             |  ['none','text','id','hash','return'][CAST(t + 1 AS INT)]
-             |    AS memo_type,
-             |  CASE WHEN t = 1 THEN 'm-' || seq || '-' || t END AS memo_text,
-             |  CASE WHEN t = 2 THEN seq * 16 + t END AS memo_id,
-             |  CASE WHEN t = 3 THEN sha256('mh-' || seq || '-' || t)
-             |       WHEN t = 4 THEN sha256('mr-' || seq || '-' || t)
-             |       END AS memo_hash_hex,
-             |  ['none','time','v2'][CAST((seq + t) % 3 + 1 AS INT)]
-             |    AS precond_type,
-             |  CASE WHEN (seq + t) % 3 = 1 THEN 1700000000 + seq
-             |       WHEN (seq + t) % 3 = 2 AND t % 2 = 0 THEN 1700000000 + seq
-             |       END AS time_bound_min,
-             |  CASE WHEN (seq + t) % 3 = 1 THEN 1700003600 + seq + t
-             |       WHEN (seq + t) % 3 = 2 AND t % 2 = 0 THEN 1700007200 + seq + t
-             |       END AS time_bound_max,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN seq - 64 END AS ledger_bound_min,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN seq + 64 END AS ledger_bound_max,
-             |  CASE WHEN (seq + t) % 3 = 2 AND t % 3 = 0 THEN seq * 4096 + t
-             |       END AS min_seq_num,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN (seq % 7) * 100 + t
-             |       END AS min_seq_age,
-             |  CASE WHEN (seq + t) % 3 = 2 THEN (seq + t) % 5
-             |       END AS min_seq_ledger_gap,
-             |  CASE WHEN (seq + t) % 3 = 2
-             |       THEN to_json([CAST((seq + t + j) % 4 AS INT)
-             |                     for j in range(t % 3)])::VARCHAR
-             |       END AS extra_signer_types,
-             |  CASE WHEN (seq + t) % 3 = 2
-             |       THEN to_json([sha256('es-' || seq || '-' || t || '-' || j)
-             |                     for j in range(t % 3)])::VARCHAR
-             |       END AS extra_signer_keys_hex,
-             |  CASE WHEN (seq + t) % 3 = 2
-             |       THEN to_json([CASE WHEN (seq + t + j) % 4 = 3 THEN
-             |               lower(hex(encode('pl-' || seq || '-' || t || '-' || j)))
-             |             END for j in range(t % 3)])::VARCHAR
-             |       END AS extra_signer_payloads_hex,
-             |  CASE WHEN t % 4 = 1 THEN 500 + t END AS fee_bump_fee,
-             |  CASE WHEN t % 4 = 1 THEN sha256('fb-' || seq || '-' || t)
-             |       END AS fee_bump_source_hex,
-             |  CASE WHEN (seq + t) % 2 = 0 THEN 1000 + seq
-             |       END AS soroban_fee_nonrefundable,
-             |  CASE WHEN (seq + t) % 2 = 0 THEN 500 + t
-             |       END AS soroban_fee_refundable,
-             |  CASE WHEN (seq + t) % 2 = 0 THEN seq % 9 + 10 * t
-             |       END AS soroban_fee_rent
-             |FROM tx ORDER BY sequence, tx_order""".stripMargin),
-      (s, dir) =>
-        s.read.format("graft-lcm").load(lcmFixtureDir)
-          .where(col("sequence").between(2100, 2299))
-          .select(col("sequence"),
-            posexplode(col("transactions")).as(Seq("tx_order", "tx")))
-          .select(Seq(col("sequence"), col("tx_order"),
-            size(col("tx.operations")).as("n_ops")) ++
-            Seq("result_code", "memo_type", "memo_text", "memo_id",
-              "memo_hash_hex", "precond_type", "time_bound_min",
-              "time_bound_max", "ledger_bound_min", "ledger_bound_max",
-              "min_seq_num", "min_seq_age", "min_seq_ledger_gap",
-              "fee_bump_fee", "fee_bump_source_hex",
-              "soroban_fee_nonrefundable", "soroban_fee_refundable",
-              "soroban_fee_rent")
-              .map(f => col(s"tx.$f").as(f)) ++
-            // LIST cells are unsortable by the gate's pandas comparator;
-            // compare arrays via their JSON rendering (p15 pattern) —
-            // DuckDB to_json matches Spark's byte-for-byte
-            Seq("extra_signer_types", "extra_signer_keys_hex",
-              "extra_signer_payloads_hex")
-              .map(f => to_json(col(s"tx.$f")).as(f)): _*)
-          .orderBy("sequence", "tx_order")),
-
-    Q("src_lcm_op_decode",
-      // every non-VOID Operation.body arm — 24 typed arms of the 27
-      // operation types (9/17/26 are VOID and wire-exact): path-payment
-      // arms (envelope bound + RESULT-carried actual amount — the law the
-      // reference's operation details take from PathPaymentStrict*Result,
-      // operation.go:641-697), the three offer arms, CHANGE_TRUST limits,
-      // ACCOUNT_MERGE destinations, MANAGE_DATA name + optional value,
-      // BUMP_SEQUENCE targets, the claimable-balance family (claimants
-      // rendered to_json on both sides — the p15 array pattern),
-      // sponsorship begin/revoke (the revoke union's two arms alternating),
-      // SET_TRUST_LINE_FLAGS masks, both liquidity-pool arms with price
-      // bands, INVOKE_HOST_FUNCTION cycling all four HostFunction arms,
-      // and EXTEND_FOOTPRINT_TTL. DuckDB re-derives every affine fixture
-      // law per (seq, t)
-      Some("""WITH ls AS (SELECT unnest(generate_series(2300, 2499)) AS seq),
-             |tx AS (SELECT seq, unnest(generate_series(0, seq % 5)) AS t FROM ls),
-             |ops AS (SELECT seq, t, unnest(generate_series(0, (seq + t) % 3)) AS u
-             |        FROM tx),
-             |o AS (SELECT seq, t, u, CAST((seq + t + u) % 27 AS INT) AS op_type,
-             |             ['XLM','USDC','EURC'] AS codes FROM ops
-             |      WHERE (seq + t + u) % 27 NOT IN (9, 17, 26))
-             |SELECT seq AS sequence, CAST(t AS INT) AS tx_order,
-             |  CAST(u AS INT) AS op_order, op_type,
-             |  CAST(1000000 * (t + 1) AS BIGINT) AS amount,
-             |  CASE WHEN op_type IN (0, 1, 2, 8, 13)
-             |       THEN sha256('dst-' || seq || '-' || t)
-             |       END AS op_destination_hex,
-             |  CASE WHEN op_type = 1 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type IN (6, 7, 14, 21)
-             |       THEN codes[CAST((seq + t) % 3 + 1 AS INT)]
-             |       WHEN op_type = 19 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS op_asset_code,
-             |  CASE WHEN op_type = 2 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type = 13 THEN codes[CAST((seq + 2) % 3 + 1 AS INT)]
-             |       END AS op_send_asset_code,
-             |  CASE WHEN op_type = 2 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       WHEN op_type = 13 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS op_dest_asset_code,
-             |  CASE WHEN op_type = 2
-             |       THEN CAST(2000000 * (t + 1) + seq % 97 AS BIGINT)
-             |       END AS op_send_max,
-             |  CASE WHEN op_type = 13
-             |       THEN CAST(800000 * (t + 1) + seq % 89 AS BIGINT)
-             |       END AS op_dest_min,
-             |  CASE WHEN op_type = 2
-             |       THEN CAST(1500000 * (t + 1) + seq % 53 AS BIGINT)
-             |       WHEN op_type = 13
-             |       THEN CAST(900000 * (t + 1) + seq % 59 AS BIGINT)
-             |       END AS op_result_amount,
-             |  CASE WHEN op_type = 3 THEN CAST(seq * 10 + t AS BIGINT)
-             |       WHEN op_type = 12 THEN CAST(seq * 10 + t + 1 AS BIGINT)
-             |       END AS op_offer_id,
-             |  CASE WHEN op_type IN (3, 4) THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       WHEN op_type = 12 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       END AS op_selling_code,
-             |  CASE WHEN op_type = 3 THEN codes[CAST((seq + 2) % 3 + 1 AS INT)]
-             |       WHEN op_type = 4 THEN codes[CAST((seq + 1) % 3 + 1 AS INT)]
-             |       WHEN op_type = 12 THEN codes[CAST(seq % 3 + 1 AS INT)]
-             |       END AS op_buying_code,
-             |  CASE WHEN op_type = 3 THEN CAST(seq % 9 + 1 AS INT)
-             |       WHEN op_type = 4 THEN CAST(t % 9 + 1 AS INT)
-             |       WHEN op_type = 12 THEN CAST(t % 5 + 1 AS INT)
-             |       END AS op_price_n,
-             |  CASE WHEN op_type = 3 THEN CAST(t % 7 + 1 AS INT)
-             |       WHEN op_type = 4 THEN CAST(seq % 13 + 1 AS INT)
-             |       WHEN op_type = 12 THEN CAST(seq % 11 + 1 AS INT)
-             |       END AS op_price_d,
-             |  CASE WHEN op_type = 6
-             |       THEN CAST(5000000 * (t + 1) + seq % 101 AS BIGINT)
-             |       END AS op_limit,
-             |  CASE WHEN op_type = 10
-             |       THEN 'cfg-' || (seq % 19) || '-' || t
-             |       END AS op_data_name,
-             |  CASE WHEN op_type = 10 AND (seq + t) % 3 <> 0
-             |       THEN lower(hex(encode('val-' || seq || '-' || t)))
-             |       END AS op_data_value_hex,
-             |  CASE WHEN op_type = 11 THEN CAST(seq * 8 + t + 7 AS BIGINT)
-             |       END AS op_bump_to,
-             |  CASE WHEN op_type = 5 AND t % 2 = 0
-             |       THEN sha256('inf-' || seq || '-' || t)
-             |       END AS op_inflation_dest_hex,
-             |  CASE WHEN op_type = 5 AND seq % 2 = 0
-             |       THEN CAST(seq % 16 AS INT)
-             |       WHEN op_type = 21 THEN CAST(seq % 8 AS INT)
-             |       END AS op_clear_flags,
-             |  CASE WHEN op_type = 5 AND seq % 2 = 1
-             |       THEN CAST((seq + 1) % 16 AS INT)
-             |       WHEN op_type = 21 THEN CAST((seq + 1) % 8 AS INT)
-             |       END AS op_set_flags,
-             |  CASE WHEN op_type = 5 AND t % 3 = 0
-             |       THEN CAST((seq + t) % 256 AS INT) END AS op_master_weight,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST(seq % 255 AS INT) END AS op_low_threshold,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST((seq + 1) % 255 AS INT) END AS op_med_threshold,
-             |  CASE WHEN op_type = 5 AND seq % 3 = 0
-             |       THEN CAST((seq + 2) % 255 AS INT) END AS op_high_threshold,
-             |  CASE WHEN op_type = 5 AND t % 2 = 1
-             |       THEN 'dom-' || (seq % 23) || '.example'
-             |       END AS op_home_domain,
-             |  CASE WHEN op_type = 5 AND (seq + t) % 2 = 1
-             |       THEN sha256('sg-' || seq || '-' || t)
-             |       WHEN op_type = 18 AND (seq + t) % 2 = 1
-             |       THEN sha256('sk-' || seq || '-' || t)
-             |       END AS op_signer_key_hex,
-             |  CASE WHEN op_type = 5 AND (seq + t) % 2 = 1
-             |       THEN CAST((seq + t) % 256 AS INT) END AS op_signer_weight,
-             |  CASE WHEN op_type IN (7, 21) THEN sha256('tr-' || seq || '-' || t)
-             |       END AS op_trustor_hex,
-             |  CASE WHEN op_type = 7 THEN CAST((seq + t) % 3 AS INT)
-             |       END AS op_authorize,
-             |  CASE WHEN op_type = 19 THEN sha256('cb-' || seq || '-' || t)
-             |       END AS op_from_hex,
-             |  CASE WHEN op_type = 14
-             |       THEN to_json([sha256('cl-' || seq || '-' || t || '-' || j)
-             |                     for j in range(t % 2 + 1)])::VARCHAR
-             |       END AS op_claimants_hex,
-             |  CASE WHEN op_type IN (15, 20)
-             |       THEN sha256('bal-' || seq || '-' || t)
-             |       END AS op_balance_id_hex,
-             |  CASE WHEN op_type = 16 THEN sha256('sp-' || seq || '-' || t)
-             |       END AS op_sponsored_id_hex,
-             |  CASE WHEN op_type = 18 THEN CAST((seq + t) % 2 AS INT)
-             |       END AS op_revoke_type,
-             |  CASE WHEN op_type = 18 AND (seq + t) % 2 = 0
-             |       THEN CAST(seq % 4 AS INT) END AS op_ledger_entry_type,
-             |  CASE WHEN op_type = 18 AND (seq + t) % 2 = 0
-             |       THEN sha256('lk-' || seq || '-' || t)
-             |       END AS op_ledger_key_hex,
-             |  CASE WHEN op_type = 18 AND (seq + t) % 2 = 1
-             |       THEN sha256('sa-' || seq || '-' || t)
-             |       END AS op_signer_account_hex,
-             |  CASE WHEN op_type IN (22, 23)
-             |       THEN sha256('lp-' || seq || '-' || t)
-             |       END AS op_pool_id_hex,
-             |  CASE WHEN op_type = 22
-             |       THEN CAST(3000000 * (t + 1) + seq % 71 AS BIGINT)
-             |       END AS op_max_amount_a,
-             |  CASE WHEN op_type = 22
-             |       THEN CAST(4000000 * (t + 1) + seq % 73 AS BIGINT)
-             |       END AS op_max_amount_b,
-             |  CASE WHEN op_type = 23
-             |       THEN CAST(600000 * (t + 1) + seq % 67 AS BIGINT)
-             |       END AS op_min_amount_a,
-             |  CASE WHEN op_type = 23
-             |       THEN CAST(700000 * (t + 1) + seq % 61 AS BIGINT)
-             |       END AS op_min_amount_b,
-             |  CASE WHEN op_type = 22 THEN CAST(seq % 7 + 1 AS INT)
-             |       END AS op_min_price_n,
-             |  CASE WHEN op_type = 22 THEN CAST(t % 5 + 1 AS INT)
-             |       END AS op_min_price_d,
-             |  CASE WHEN op_type = 22 THEN CAST(seq % 9 + 2 AS INT)
-             |       END AS op_max_price_n,
-             |  CASE WHEN op_type = 22 THEN CAST(t % 3 + 1 AS INT)
-             |       END AS op_max_price_d,
-             |  CASE WHEN op_type = 24 THEN CAST((seq + t) % 4 AS INT)
-             |       END AS op_host_fn_type,
-             |  CASE WHEN op_type = 24 AND (seq + t) % 4 <> 2
-             |       THEN sha256('ct-' || seq || '-' || t)
-             |       END AS op_contract_id_hex,
-             |  CASE WHEN op_type = 25
-             |       THEN CAST(100000 + (seq * 3 + t) % 50000 AS BIGINT)
-             |       END AS op_extend_to,
-             |  CASE WHEN op_type IN (3, 4, 12) AND (seq + t) % 2 = 0
-             |       THEN CAST(seq * 500 + t * 20 + op_type AS BIGINT)
-             |       END AS op_result_offer_id
-             |FROM o ORDER BY sequence, tx_order, op_order""".stripMargin),
-      (s, dir) =>
-        s.read.format("graft-lcm").load(lcmFixtureDir)
-          .where(col("sequence").between(2300, 2499))
-          .select(col("sequence"),
-            posexplode(col("transactions")).as(Seq("tx_order", "tx")))
-          .select(col("sequence"), col("tx_order"),
-            posexplode(col("tx.operations")).as(Seq("op_order", "op")))
-          .where(!col("op.op_type").isin(9, 17, 26))
-          .select(Seq(col("sequence"), col("tx_order"), col("op_order")) ++
-            Seq("op_type", "amount", "op_destination_hex", "op_asset_code",
-              "op_send_asset_code", "op_dest_asset_code",
-              "op_send_max", "op_dest_min", "op_result_amount",
-              "op_offer_id", "op_selling_code", "op_buying_code",
-              "op_price_n", "op_price_d", "op_limit", "op_data_name",
-              "op_data_value_hex", "op_bump_to",
-              "op_inflation_dest_hex", "op_clear_flags", "op_set_flags",
-              "op_master_weight", "op_low_threshold", "op_med_threshold",
-              "op_high_threshold", "op_home_domain", "op_signer_key_hex",
-              "op_signer_weight", "op_trustor_hex", "op_authorize",
-              "op_from_hex", "op_balance_id_hex", "op_sponsored_id_hex",
-              "op_revoke_type", "op_ledger_entry_type", "op_ledger_key_hex",
-              "op_signer_account_hex", "op_pool_id_hex",
-              "op_max_amount_a", "op_max_amount_b",
-              "op_min_amount_a", "op_min_amount_b",
-              "op_min_price_n", "op_min_price_d",
-              "op_max_price_n", "op_max_price_d",
-              "op_host_fn_type", "op_contract_id_hex", "op_extend_to",
-              "op_result_offer_id")
-              .map(f => col(s"op.$f").as(f)) ++
-            // claimants is LIST-typed → compare via the JSON rendering
-            // (the p15 / src_lcm_tx_decode pattern)
-            Seq(to_json(col("op.op_claimants_hex")).as("op_claimants_hex")): _*)
-          .orderBy("sequence", "tx_order", "op_order")),
-
-    Q("src_archive_range_scan",
-      // S7 history-archive source end-to-end: checkpoint path math finds
-      // the gzip category files, one task per checkpoint decodes XDR
-      // frames, out-of-range frames skip on the header. Same deterministic
-      // fixture laws as the .lcmb source → DuckDB re-derives.
-      Some("""SELECT seq AS sequence, CAST((seq % 5) + 1 AS INT) AS n_tx,
-             |       CAST(50 * ((seq % 5) + 1) * ((seq % 5) + 2) AS BIGINT) AS total_fee
-             |FROM generate_series(4100, 4350) t(seq) ORDER BY sequence""".stripMargin),
-      (s, dir) =>
-        graft.sources.HistoryArchive.read(s, archiveFixtureDir, 4100, 4350)
-          .toDF()
-          .select(col("sequence"),
-            size(col("transactions")).as("n_tx"),
-            aggregate(col("transactions"), lit(0L),
-              (acc, t) => acc + t("fee_charged")).as("total_fee"))
-          .orderBy("sequence")),
 
     Q("fn_sac_contract_id",
       // golden oracle: expected rows derived by an INDEPENDENT implementation

@@ -13,12 +13,13 @@ import graft.sources.{LcmBatchFiles, StellarFixture}
   *   runMain graft.cli.Export export_transactions \
   *     --start 1000 --end 1099 --output /tmp/out \
   *     [--format ndjson|parquet] [--limit N] [--extra-fields k=v,k2=v2]
-  *     [--input <parquet dir of decoded LedgerRow>]  (default: fixture)
-  *     [--wire-input <dir of .lcmb wire batch files>]  (runs the command
-  *       off the graft-lcm DSv2 source — ledgers, transactions,
-  *       operations, assets, ledger_entry_changes, trades, effects,
-  *       contract_events, op_changes, token_transfers; `--end 0` runs
-  *       the wire export UNBOUNDED off the MICRO_BATCH arm)
+  *     [--batch-input <datastore tree of zstd LedgerCloseMetaBatch objects>
+  *       | --xdr-input <frame NDJSON of real XDR> [--permissive]
+  *       | --input <parquet dir of decoded LedgerRow>]  (default: fixture)
+  *
+  * `--end` must be at least `--start`. The one exception is `--end 0` on
+  * `export_ledger_entry_changes --batch-input`: the continuous mode, which
+  * tails the datastore tree from `--start` (see [[streamEntryChanges]]).
   *
   * Commands: export_ledgers, export_transactions, export_operations,
   * export_effects, export_trades, export_assets, export_token_transfers,
@@ -45,12 +46,11 @@ object Export {
       // end defaults to -1 = "not given": a bounded export with no --end
       // fails fast instead of silently entering the unbounded streaming
       // arm; ONLY an explicit `--end 0` means continuous, and only for
-      // export_ledger_entry_changes (the reference's endNum=0 semantics,
-      // `cmd/export_ledger_entry_changes.go:26-28,72-89` — every other
-      // command there requires a bounded range)
+      // export_ledger_entry_changes --batch-input (the reference's endNum=0
+      // semantics, `cmd/export_ledger_entry_changes.go:26-28,72-89` — every
+      // other command there requires a bounded range)
       start: Long = 0, end: Long = -1,
       output: String = "", input: Option[String] = None,
-      wireInput: Option[String] = None,
       xdrInput: Option[String] = None,
       batchInput: Option[String] = None,
       permissive: Boolean = false,
@@ -80,18 +80,16 @@ object Export {
     * renamed or newly-spelled reference command can't drift past us —
     * `export_token_transfer` (singular, the reference's registered Use)
     * normalizes to the plural in [[parse]]. The audit direction is
-    * reference ⊆ KnownCommands; two entries are REPO-SPECIFIC extensions
-    * with no reference cobra registration: `export_op_changes` (the
-    * per-operation change split) and `upload_to_gcs` (the reference has
-    * the `cmd/upload_to_gcs.go` helper but never registers it as a
+    * reference ⊆ KnownCommands; one entry is a REPO-SPECIFIC extension
+    * with no reference cobra registration: `upload_to_gcs` (the reference
+    * has the `cmd/upload_to_gcs.go` helper but never registers it as a
     * subcommand — this repo exposes it directly). */
   val KnownCommands: Set[String] = Set(
     "export_ledgers", "export_transactions", "export_operations",
     "export_effects", "export_trades", "export_assets",
     "export_token_transfers", "export_ledger_transaction",
     "export_contract_events", "export_ledger_entry_changes",
-    "export_op_changes", "get_ledger_range_from_times", "version",
-    "upload_to_gcs")
+    "get_ledger_range_from_times", "version", "upload_to_gcs")
 
   def parse(argv: Array[String]): Args = {
     def loop(a: Args, rest: List[String]): Args = rest match {
@@ -100,7 +98,6 @@ object Export {
       case "--end" :: v :: t => loop(a.copy(end = v.toLong), t)
       case ("--output" | "-o") :: v :: t => loop(a.copy(output = v), t)
       case "--input" :: v :: t => loop(a.copy(input = Some(v)), t)
-      case "--wire-input" :: v :: t => loop(a.copy(wireInput = Some(v)), t)
       case "--xdr-input" :: v :: t => loop(a.copy(xdrInput = Some(v)), t)
       case "--batch-input" :: v :: t => loop(a.copy(batchInput = Some(v)), t)
       case "--permissive" :: t => loop(a.copy(permissive = true), t)
@@ -304,112 +301,28 @@ object Export {
     spark.stop()
   }
 
-  /** `--end 0` ⇒ UNBOUNDED export — the reference's continuous mode
-    * (`cmd/export_ledger_entry_changes.go:72-89`: endNum 0 becomes
-    * MaxInt32 and the change stream BLOCKS on new ledgers). Here the same
-    * contract is the MICRO_BATCH_READ arm of the graft-lcm source: new
-    * `.lcmb` batch files landing in the watched directory become
-    * micro-batches, each transformed by the SAME map-only plan as the
-    * bounded command (so bounded and unbounded runs agree row-for-row)
-    * and appended to the sink partitioned by `batch_id =
-    * floor(sequence / batchSize)` — the reference's every-batchSize-
-    * ledgers file grouping (`changes.go:85-160`), expressed as a
-    * partition column so each batch lands in its own directory.
-    *
-    * Blocks in `awaitTermination` like the reference; the
-    * `graft.stream.once` system property / SPARK_GRAFT_STREAM_ONCE env
-    * (test hook) drains what's available and stops, printing the usual
-    * stats line. */
-  private def streamWire(spark: SparkSession, a: Args): Unit = {
-    val lcm = spark.readStream.format("graft-lcm").load(a.wireInput.get)
-      .where(col("sequence") >= a.start)
-    val df0 = a.command match {
-      case "export_ledgers" =>
-        StellarTransforms.historyLedgersFromLcm(lcm)
-      case "export_transactions" =>
-        StellarTransforms.historyTransactionsFromLcm(lcm)
-      case "export_operations" =>
-        StellarTransforms.historyOperationsFromLcm(lcm)
-      case "export_ledger_entry_changes" =>
-        StellarTransforms.ledgerChangesFromLcm(lcm)
-      case other => sys.error(
-        "unbounded --wire-input (--end 0) supports export_ledgers/" +
-          s"transactions/operations/ledger_entry_changes, not $other")
-    }
-    val seqCol =
-      if (df0.columns.contains("ledger_sequence")) "ledger_sequence"
-      else "sequence"
-    val df = withExtras(df0, a.extraFields)
-      .withColumn("batch_id", floor(col(seqCol) / a.batchSize))
-    val fmt = a.format match { case "ndjson" => "json"; case f => f }
-    val q = df.writeStream.format(fmt)
-      .option("checkpointLocation", a.output.stripSuffix("/") + "_ckpt")
-      .option("path", a.output)
-      .partitionBy("batch_id")
-      .start()
-    if (sys.props.contains("graft.stream.once") ||
-        sys.env.contains("SPARK_GRAFT_STREAM_ONCE")) {
-      q.processAllAvailable()
-      q.stop()
-      val n = spark.read.format(fmt).load(a.output).count()
-      println(s"""{"attempted":$n,"failed":0,"successful":$n}""")
-    } else q.awaitTermination()
-  }
-
   /** Command dispatch, separated from `main` so tests can drive commands on
     * a shared session without `spark.stop()` tearing it down. */
   def run(spark: SparkSession, a: Args): Unit = {
     import spark.implicits._
 
-    // fail fast on a missing --end for every bounded export command; the
-    // one continuous mode is export_ledger_entry_changes with an EXPLICIT
-    // --end 0 (handled in the wire branch below)
-    if (a.command.startsWith("export_") && a.end < 0L) sys.error(
-      s"${a.command} requires --end (use --end 0 on " +
-        "export_ledger_entry_changes --wire-input for the unbounded " +
-        "streaming mode)")
-
-    // --wire-input <dir of .lcmb batch files>: run the command directly
-    // off the wire format through the DSv2 source — the reference's real
-    // substrate (its commands read LedgerCloseMeta from the datastore,
-    // `internal/input/transactions.go:23-71`). The sequence-range filter
-    // is consumed by the scan's file pruning.
-    if (a.wireInput.isDefined) {
+    // fail fast on a missing or impossible range for every export command;
+    // the one continuous mode is export_ledger_entry_changes --batch-input
+    // with an EXPLICIT --end 0
+    if (a.command.startsWith("export_")) {
+      if (a.end < 0L) sys.error(
+        s"${a.command} requires --end (use --end 0 on " +
+          "export_ledger_entry_changes --batch-input for the unbounded " +
+          "streaming mode)")
       if (a.end == 0L) {
-        if (a.command != "export_ledger_entry_changes") sys.error(
-          s"--end 0 (continuous/unbounded) only applies to " +
-            s"export_ledger_entry_changes, not ${a.command}; pass a bounded --end")
-        streamWire(spark, a); return
-      }
-      val lcm = spark.read.format("graft-lcm").load(a.wireInput.get)
-        .where(col("sequence").between(a.start, a.end))
-      a.command match {
-        case "export_ledgers" =>
-          sink(StellarTransforms.historyLedgersFromLcm(lcm), a)
-        case "export_transactions" =>
-          sink(StellarTransforms.historyTransactionsFromLcm(lcm), a)
-        case "export_operations" =>
-          sink(StellarTransforms.historyOperationsFromLcm(lcm), a)
-        case "export_assets" =>
-          sink(StellarTransforms.historyAssetsFromLcm(lcm), a)
-        case "export_ledger_entry_changes" =>
-          sink(StellarTransforms.ledgerChangesFromLcm(lcm), a)
-        case "export_trades" =>
-          sink(StellarTransforms.historyTradesFromLcm(lcm), a)
-        case "export_effects" =>
-          sink(StellarTransforms.historyEffectsFromLcm(lcm), a)
-        case "export_contract_events" =>
-          sink(StellarTransforms.contractEventsFromLcm(lcm), a)
-        case "export_op_changes" =>
-          sink(StellarTransforms.opChangeDetailsFromLcm(lcm), a)
-        case "export_token_transfers" =>
-          sink(StellarTransforms.tokenTransfersFromLcm(lcm), a)
-        case other => sys.error(
-          s"--wire-input supports export_ledgers/transactions/operations/" +
-            s"assets/ledger_entry_changes/trades/effects/contract_events/" +
-            s"op_changes/token_transfers, not $other")
-      }
-      return
+        if (a.command != "export_ledger_entry_changes" || a.batchInput.isEmpty)
+          sys.error("--end 0 (continuous/unbounded) only applies to " +
+            "export_ledger_entry_changes --batch-input; pass a bounded --end")
+        if (a.permissive) sys.error(
+          "--end 0 streams the datastore and --permissive is batch-only; " +
+            "pass a bounded --end")
+      } else if (a.end < a.start) sys.error(
+        s"--end ${a.end} is below --start ${a.start}")
     }
 
     a.command match {
@@ -558,23 +471,30 @@ object Export {
     require(wanted.nonEmpty, s"no entry type in --export-type '${a.exportType}'")
     def entryType(t: String) = EntryTypes.find(_._1 == t).get
 
-    if (a.batchInput.isDefined)
+    // the soroban state families project decoded datastore ledgers; real
+    // changes batch by the ledger they occurred in (the reference's batch
+    // loop walks ledger ranges)
+    def sorobanFrame(t: String, ledgers: Dataset[LedgerRow]): DataFrame = t match {
+      case "contract_data" =>
+        SorobanStateTables.contractDataFromLedgers(ledgers, a.passphrase)
+      case "contract_code" => SorobanStateTables.contractCodeFromLedgers(ledgers)
+      case "config_setting" => SorobanStateTables.configSettingsFromLedgers(ledgers)
+      case "ttl" => SorobanStateTables.ttlFromLedgers(ledgers)
+    }
+
+    if (a.end == 0L) {
+      val ledgers = LcmBatchFiles.ledgerRowsStream(spark, a.batchInput.get,
+        Some(a.start), networkId = a.networkId)
+      streamEntryChanges(spark, a,
+        wanted.map(t => entryType(t)._2 -> sorobanFrame(t, ledgers)))
+    } else if (a.batchInput.isDefined)
       // persisted once: all four state resources project the SAME decoded
       // rows — without this each resource re-reads and re-decodes the tree
-      // (4× read amplification on a real backfill). Real changes batch by
-      // the ledger they occurred in (the reference's batch loop walks
-      // ledger ranges).
+      // (4× read amplification on a real backfill)
       withLedgers(spark, a, persisted = true) { ledgers =>
         wanted.foreach { t =>
-          val frame = t match {
-            case "contract_data" =>
-              SorobanStateTables.contractDataFromLedgers(ledgers, a.passphrase)
-            case "contract_code" => SorobanStateTables.contractCodeFromLedgers(ledgers)
-            case "config_setting" =>
-              SorobanStateTables.configSettingsFromLedgers(ledgers)
-            case "ttl" => SorobanStateTables.ttlFromLedgers(ledgers)
-          }
-          writeBatchFiles(spark, frame, "ledger_sequence", entryType(t)._2, a)
+          writeBatchFiles(spark, sorobanFrame(t, ledgers), "ledger_sequence",
+            entryType(t)._2, a)
         }
       }
     else {
@@ -610,6 +530,55 @@ object Export {
         writeBatchFiles(spark, frameFor(t), seqCol, resource, a)
       }
     }
+  }
+
+  /** `--end 0` ⇒ UNBOUNDED export — the reference's continuous mode
+    * (`cmd/export_ledger_entry_changes.go:72-89`: endNum 0 becomes
+    * MaxInt32 and the change stream BLOCKS on new ledgers). Here the
+    * frames are micro-batch streams over the datastore tree: objects
+    * landing in it after the start become micro-batches, each projected by
+    * the SAME state-table transforms as the bounded `--batch-input` export
+    * (so bounded and unbounded runs agree row-for-row). Each resource gets
+    * its own streaming sink at `{output}/{resource}` with its own
+    * checkpoint at `{output}_ckpt/{resource}`, partitioned by `batch_id =
+    * floor(ledger_sequence / batchSize)` — the reference's
+    * every-batchSize-ledgers file grouping (`changes.go:85-160`) as a
+    * partition column, so each batch lands in its own directory.
+    *
+    * Blocks like the reference; the `graft.stream.once` system property /
+    * SPARK_GRAFT_STREAM_ONCE env (test hook) drains what is available,
+    * stops, and prints one stats line per resource. */
+  private def streamEntryChanges(spark: SparkSession, a: Args,
+      frames: Seq[(String, DataFrame)]): Unit = {
+    val fmt = a.format match {
+      case "ndjson" => "json"
+      case "parquet" => "parquet"
+      case other => sys.error(s"unknown format: $other")
+    }
+    val out = a.output.stripSuffix("/")
+    val sinks = frames.map { case (resource, frame) =>
+      val df = withExtras(frame, a.extraFields)
+        .withColumn("batch_id", floor(col("ledger_sequence") / a.batchSize))
+      val q = df.writeStream.format(fmt)
+        .option("checkpointLocation", s"${out}_ckpt/$resource")
+        .option("path", s"$out/$resource")
+        .partitionBy("batch_id")
+        .start()
+      (resource, df.schema, q)
+    }
+    if (sys.props.contains("graft.stream.once") ||
+        sys.env.contains("SPARK_GRAFT_STREAM_ONCE")) {
+      sinks.foreach { case (resource, schema, q) =>
+        q.processAllAvailable()
+        q.stop()
+        // the sink's own log lists the committed files; the schema is given
+        // so a resource that has received no rows yet still reads as empty
+        val n = spark.read.schema(schema).format(fmt).load(s"$out/$resource")
+          .count()
+        println(s"""{"resource":"$resource","attempted":$n,"failed":0,""" +
+          s""""successful":$n}""")
+      }
+    } else spark.streams.awaitAnyTermination()
   }
 
   /** Distributed per-batch file writer: one shuffle on the batch id, one

@@ -4,162 +4,142 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 
-/** The ONE `history_operations.details` renderer, shared by the decoded
-  * fixture-model path ([[StellarTransforms.historyOperations]]) and the
-  * `.lcmb` wire path ([[StellarTransforms.historyOperationsFromLcm]]).
+/** The `history_operations.details` law, bound by its one caller,
+  * [[StellarTransforms.historyOperations]], through [[DetailInputs]].
   *
   * The reference computes one per-type sparse details map and assigns it
   * to both the struct field and the JSON rendering
-  * (`internal/transform/operation.go:97,584-1173`); splitting the law per
-  * source path invites key-name and format drift, so both paths feed this
-  * single [[struct]] builder through a [[DetailInputs]] binding. Inputs a
-  * path cannot derive (asset issuers off the wire, footprint hashes, SAC
-  * event structs) default to typed nulls and their keys drop out of the
-  * JSON via `ignoreNullFields` — the wire output is exactly the
-  * wire-determined key subset of the model output, never a differently
-  * spelled one. */
+  * (`internal/transform/operation.go:97,584-1173`): [[struct]] builds the
+  * map as one wide nullable struct and [[json]] renders that same column,
+  * so the two fields cannot drift apart. Keys a type does not carry are
+  * null and drop out of the JSON via `ignoreNullFields`. */
 object OperationDetails {
 
-  private val nullS = lit(null).cast("string")
-  private val nullL = lit(null).cast("long")
-  private val nullI = lit(null).cast("int")
-  private val nullD = lit(null).cast("double")
-  private val nullB = lit(null).cast("boolean")
-  private val nullSArr = lit(null).cast("array<string>")
-  private val nullClaimants =
-    lit(null).cast("array<struct<destination:string,predicate:string>>")
-  private val nullAbc = lit(null).cast(
-    "array<struct<from:string,to:string,type:string,amount:string," +
-      "asset_type:string,asset_code:string,asset_issuer:string>>")
-
-  /** Every Column the details law reads, named by role. Defaults are typed
-    * nulls so a path binds only what its source determines. */
+  /** Every Column the details law reads, named by role. */
   case class DetailInputs(
       ty: Column,
       successful: Column,
       sourceAddr: Column,
-      destAddr: Column = nullS,
-      fromMuxed: Column = nullS,
-      fromMuxedId: Column = nullL,
-      toMuxed: Column = nullS,
-      toMuxedId: Column = nullL,
-      startingBalanceStroops: Column = nullL,
-      amountStroops: Column = nullL,
-      cbAmountStroops: Column = nullL,
-      sourceAmountStroops: Column = nullL,
-      sourceMaxStroops: Column = nullL,
-      destMinStroops: Column = nullL,
-      path: Column = lit(null).cast(
-        "array<struct<asset_type:string,asset_code:string,asset_issuer:string>>"),
-      assetType: Column = nullS,
-      assetCode: Column = nullS,
-      assetIssuer: Column = nullS,
+      destAddr: Column,
+      fromMuxed: Column,
+      fromMuxedId: Column,
+      toMuxed: Column,
+      toMuxedId: Column,
+      startingBalanceStroops: Column,
+      amountStroops: Column,
+      cbAmountStroops: Column,
+      sourceAmountStroops: Column,
+      sourceMaxStroops: Column,
+      destMinStroops: Column,
+      path: Column,
+      assetType: Column,
+      assetCode: Column,
+      assetIssuer: Column,
       // farmhash64 asset ids embedded in the details maps
       // (`addAssetDetails` appends `{prefix}asset_id`, the goldens carry
-      // them on payment/trust/offer ops); null where the path cannot
-      // type its assets (the wire)
-      assetId: Column = nullL,
-      trustAssetId: Column = nullL,
-      sourceAssetId: Column = nullL,
-      buyingAssetId: Column = nullL,
-      sellingAssetId: Column = nullL,
-      trustAssetType: Column = nullS,
-      trustAssetCode: Column = nullS,
-      trustAssetIssuer: Column = nullS,
-      trustPoolIdHex: Column = nullS,
-      trustPoolIdStrkey: Column = nullS,
-      trustLimitStroops: Column = nullL,
-      sourceAssetType: Column = nullS,
-      sourceAssetCode: Column = nullS,
-      sourceAssetIssuer: Column = nullS,
-      offerId: Column = nullL,
-      priceN: Column = nullI,
-      priceD: Column = nullI,
-      buyingAssetType: Column = nullS,
-      buyingAssetCode: Column = nullS,
-      buyingAssetIssuer: Column = nullS,
-      sellingAssetType: Column = nullS,
-      sellingAssetCode: Column = nullS,
-      sellingAssetIssuer: Column = nullS,
-      inflationDestAddr: Column = nullS,
-      setFlags: Column = nullI,
-      clearFlags: Column = nullI,
-      masterWeight: Column = nullI,
-      lowThreshold: Column = nullI,
-      medThreshold: Column = nullI,
-      highThreshold: Column = nullI,
-      homeDomain: Column = nullS,
-      signerAddr: Column = nullS,
-      revokeSignerAddr: Column = nullS,
-      signerWeight: Column = nullI,
-      authorizeFlags: Column = nullI,
-      tlSetFlags: Column = nullI,
-      tlClearFlags: Column = nullI,
-      trustorAddr: Column = nullS,
-      dataName: Column = nullS,
-      dataValueB64: Column = nullS,
-      bumpTo: Column = nullL,
-      cbAssetCanon: Column = nullS,
-      claimants: Column = nullClaimants,
-      balanceIdHex: Column = nullS,
-      balanceIdStrkey: Column = nullS,
-      sponsoredIdAddr: Column = nullS,
-      beginSponsorAddr: Column = nullS,
-      revokeSignerAccountAddr: Column = nullS,
-      revokeAccountIdAddr: Column = nullS,
-      revokeOfferId: Column = nullL,
+      // them on payment/trust/offer ops)
+      assetId: Column,
+      trustAssetId: Column,
+      sourceAssetId: Column,
+      buyingAssetId: Column,
+      sellingAssetId: Column,
+      trustAssetType: Column,
+      trustAssetCode: Column,
+      trustAssetIssuer: Column,
+      trustPoolIdHex: Column,
+      trustPoolIdStrkey: Column,
+      trustLimitStroops: Column,
+      sourceAssetType: Column,
+      sourceAssetCode: Column,
+      sourceAssetIssuer: Column,
+      offerId: Column,
+      priceN: Column,
+      priceD: Column,
+      buyingAssetType: Column,
+      buyingAssetCode: Column,
+      buyingAssetIssuer: Column,
+      sellingAssetType: Column,
+      sellingAssetCode: Column,
+      sellingAssetIssuer: Column,
+      inflationDestAddr: Column,
+      setFlags: Column,
+      clearFlags: Column,
+      masterWeight: Column,
+      lowThreshold: Column,
+      medThreshold: Column,
+      highThreshold: Column,
+      homeDomain: Column,
+      signerAddr: Column,
+      revokeSignerAddr: Column,
+      signerWeight: Column,
+      authorizeFlags: Column,
+      tlSetFlags: Column,
+      tlClearFlags: Column,
+      trustorAddr: Column,
+      dataName: Column,
+      dataValueB64: Column,
+      bumpTo: Column,
+      cbAssetCanon: Column,
+      claimants: Column,
+      balanceIdHex: Column,
+      balanceIdStrkey: Column,
+      sponsoredIdAddr: Column,
+      beginSponsorAddr: Column,
+      revokeSignerAccountAddr: Column,
+      revokeAccountIdAddr: Column,
+      revokeOfferId: Column,
       // revoke-sponsorship ledger-key arms (`addLedgerKeyToDetails`):
       // per-family key payloads, sparse — exactly one family per revoke
-      revokeTrustlineAccountAddr: Column = nullS,
-      revokeTrustlineAssetCanon: Column = nullS,
-      revokeTrustlinePoolIdHex: Column = nullS,
-      revokeTrustlinePoolIdStrkey: Column = nullS,
-      revokeDataAccountAddr: Column = nullS,
-      revokeDataName: Column = nullS,
-      revokeCbIdHex: Column = nullS,
-      revokeCbIdStrkey: Column = nullS,
-      revokeLpIdHex: Column = nullS,
-      revokeLpIdStrkey: Column = nullS,
+      revokeTrustlineAccountAddr: Column,
+      revokeTrustlineAssetCanon: Column,
+      revokeTrustlinePoolIdHex: Column,
+      revokeTrustlinePoolIdStrkey: Column,
+      revokeDataAccountAddr: Column,
+      revokeDataName: Column,
+      revokeCbIdHex: Column,
+      revokeCbIdStrkey: Column,
+      revokeLpIdHex: Column,
+      revokeLpIdStrkey: Column,
       // begin-sponsor muxed pair (`addAccountAndMuxedAccountDetails` with
       // the initiating begin op's source)
-      beginSponsorMuxed: Column = nullS,
-      beginSponsorMuxedId: Column = nullL,
+      beginSponsorMuxed: Column,
+      beginSponsorMuxedId: Column,
       // the op-level `sponsor` key (`getSponsor`, operation.go:1164-1170 +
       // 1251-1290): the sponsor of entries/signers this op created
-      sponsorAddr: Column = nullS,
-      lpPoolIdHex: Column = nullS,
-      lpPoolIdStrkey: Column = nullS,
-      reserveAAssetType: Column = nullS,
-      reserveAAssetCode: Column = nullS,
-      reserveAAssetIssuer: Column = nullS,
-      reserveAAssetId: Column = nullL,
-      reserveBAssetType: Column = nullS,
-      reserveBAssetCode: Column = nullS,
-      reserveBAssetIssuer: Column = nullS,
-      reserveBAssetId: Column = nullL,
-      maxAmountA: Column = nullL,
-      maxAmountB: Column = nullL,
-      deltaReserveA: Column = nullL,
-      deltaReserveB: Column = nullL,
-      deltaShares: Column = nullL,
-      minPriceN: Column = nullI,
-      minPriceD: Column = nullI,
-      maxPriceN: Column = nullI,
-      maxPriceD: Column = nullI,
-      minAmountA: Column = nullL,
-      minAmountB: Column = nullL,
-      lpSharesStroops: Column = nullL,
-      hostFnTypeName: Column = nullS,
-      sorobanContractAddr: Column = nullS,
-      ledgerKeyHashArr: Column = nullSArr,
-      contractCodeHash: Column = nullS,
-      parametersB64: Column = nullSArr,
-      parametersJson: Column = nullSArr,
-      assetBalanceChanges: Column = nullAbc,
-      extendTo: Column = nullL,
-      preimageTag: Column = nullS,
-      preimageAddress: Column = nullS,
-      preimageAssetCanon: Column = nullS)
+      sponsorAddr: Column,
+      lpPoolIdHex: Column,
+      lpPoolIdStrkey: Column,
+      reserveAAssetType: Column,
+      reserveAAssetCode: Column,
+      reserveAAssetIssuer: Column,
+      reserveAAssetId: Column,
+      reserveBAssetType: Column,
+      reserveBAssetCode: Column,
+      reserveBAssetIssuer: Column,
+      reserveBAssetId: Column,
+      maxAmountA: Column,
+      maxAmountB: Column,
+      deltaReserveA: Column,
+      deltaReserveB: Column,
+      deltaShares: Column,
+      minPriceN: Column,
+      minPriceD: Column,
+      maxPriceN: Column,
+      maxPriceD: Column,
+      minAmountA: Column,
+      minAmountB: Column,
+      lpSharesStroops: Column,
+      hostFnTypeName: Column,
+      sorobanContractAddr: Column,
+      ledgerKeyHashArr: Column,
+      contractCodeHash: Column,
+      parametersB64: Column,
+      parametersJson: Column,
+      assetBalanceChanges: Column,
+      extendTo: Column,
+      preimageTag: Column,
+      preimageAddress: Column,
+      preimageAssetCanon: Column)
 
   /** Go's account-flag decode: ints + names (`operation.go:555-582`). */
   def accountFlagArrays(v: Column): (Column, Column) = {
@@ -180,8 +160,8 @@ object OperationDetails {
   /** The wide nullable details struct (SURVEY §1.2 option (a)): every
     * expression is the reference's per-type case law
     * (`operation.go:584-1173`) over the bound inputs. Asset codes/issuers
-    * gate on a NULL-SAFE non-native test so a path that cannot type its
-    * assets (the wire carries bare codes) still emits the code. */
+    * gate on a NULL-SAFE non-native test, so an untyped asset still emits
+    * its code. */
   def struct(in: DetailInputs): Column = {
     val ty = in.ty
     val successful = in.successful
@@ -191,7 +171,7 @@ object OperationDetails {
     val (clearFlagsI, clearFlagsS) = accountFlagArrays(in.clearFlags)
     val (tlSetI, tlSetS) = trustlineFlagArrays(in.tlSetFlags)
     val (tlClearI, tlClearS) = trustlineFlagArrays(in.tlClearFlags)
-    // null-safe "not native": null asset_type keeps the code (wire path)
+    // null-safe "not native": null asset_type keeps the code
     def nonNative(t: Column): Column = !(t <=> lit("native"))
     val isPayment = ty.isin(1, 2, 13)
 
@@ -432,7 +412,7 @@ object OperationDetails {
       in.sponsorAddr.as("sponsor"))
   }
 
-  /** The `details_json` rendering both paths share: the computed
+  /** The `details_json` rendering: the computed
     * `details` column ([[struct]]) with null keys dropped, as a VARIANT so
     * it lands as a raw JSON object. Like the reference (`operation.go:97`
     * assigns one map to both fields) it renders the struct the row already

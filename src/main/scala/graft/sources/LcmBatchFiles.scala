@@ -193,15 +193,16 @@ object LcmBatchFiles {
     * (probe-based advance, no per-trigger listing) → executor decode.
     * `startSeq` is a LEDGER bound: with a multi-ledger schema the object
     * straddling it still streams (overlap pushdown) and the overhang is
-    * trimmed row-level. */
+    * trimmed row-level. `networkId` as in [[ledgerRowsForRange]]. */
   def ledgerRowsStream(spark: SparkSession, rootDir: String,
       startSeq: Option[Long] = None,
-      options: Map[String, String] = Map.empty): Dataset[LedgerRow] = {
+      options: Map[String, String] = Map.empty,
+      networkId: Array[Byte] = StellarXdr.PublicNetworkId): Dataset[LedgerRow] = {
     val objects = spark.readStream.format("graft-lcm-datastore")
       .options(options).load(rootDir)
     val rows = ledgerRowsFromObjects(
       startSeq.map(s => objects.where(col("end_sequence") >= s))
-        .getOrElse(objects))
+        .getOrElse(objects), networkId)
     startSeq.map(s => rows.filter(_.sequence >= s)).getOrElse(rows)
   }
 }

@@ -328,8 +328,8 @@ class LcmDatastoreReader(p: LcmDatastorePartition,
 }
 
 /** Streaming offset = the highest ledger sequence fully ingested (the same
-  * monotone cursor as the `.lcmb` stream and the reference's unbounded
-  * export, `cmd/export_ledger_entry_changes.go:72-89`). */
+  * monotone cursor as the reference's unbounded export,
+  * `cmd/export_ledger_entry_changes.go:72-89`). */
 case class LcmDatastoreOffset(endSeq: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = s"""{"endSeq":$endSeq}"""

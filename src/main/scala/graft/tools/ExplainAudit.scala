@@ -294,11 +294,6 @@ object ExplainAudit {
       // it is not — so only the never-correct shapes are forbidden here
       ("x_dedup_clusters", Seq("Scan ExistingRDD"),
         Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
-      // archive source: checkpoint files fan out one per task (round-robin
-      // on the path list), decode stays inside mapPartitions — no shuffle
-      // of decoded rows
-      ("src_archive_range_scan", Seq("RoundRobinPartitioning", "MapPartitions"),
-        Seq("BroadcastNestedLoopJoin")),
       // vocab build: partial-agg + per-partition top-k heaps, never a
       // global sort of the full term table
       ("x_vocab_topk", Seq("partial_count", "TakeOrderedAndProject"),
@@ -351,73 +346,6 @@ object ExplainAudit {
       // sequence packing: one shuffle on the shard + per-shard running sum
       ("x_pack_sequences", Seq("Window "),
         Seq("SortMergeJoin", "BroadcastNestedLoopJoin")),
-      // history_transactions over the wire source: the sequence-range
-      // predicate must reach the DSv2 scan (file-name pruning) THROUGH the
-      // tx explode, and the whole transform is map-only — no exchange
-      // (the LcmScan consumes the range in pushFilters, so the proof is the
-      // ABSENCE of any residual post-scan range filter in the plan)
-      ("stellar_transactions_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2100", "<= 2299",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // op grain over the wire: same contract — range consumed by the
-      // scan, map-only transform
-      ("stellar_operations_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2100", "<= 2299",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // effects over the wire: ONE scan — the branch arrays, the per-atom
-      // trade quads, and the change-scan sponsorship/signer/LP loops are
-      // ALL intra-row, so no Union of re-scans, no exchange, no window,
-      // even with the full family set
-      ("stellar_effects_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2100", "<= 2499", "Union",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // soroban op details over the wire: ScVal parameter decode and the
-      // SAC event scan are in-plan intra-row — map-only
-      ("stellar_soroban_ops_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2300", "<= 2499",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // transfer events over the wire: payment-family filter is intra-row,
-      // the whole transform map-only
-      ("stellar_transfers_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2300", "<= 2499",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // trades over the wire (claim-atom grain): map-only through both
-      // explodes, range consumed by the scan
-      ("stellar_trades_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2100", "<= 2299",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // contract events over the wire: ScVal decode runs in-plan through
-      // the codegen'd codec expressions — map-only, range consumed by
-      // the scan
-      ("stellar_contract_events_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2112", "<= 2303",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // change-derived op details over the wire (LP deltas + sponsor):
-      // both first-change scans are intra-row array ops — map-only,
-      // range consumed by the scan
-      ("stellar_op_changes_from_lcm",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2304", "<= 2499",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // change grain over the wire: two stacked explodes, still map-only
-      // with the range consumed by the scan's file pruning
-      ("src_lcm_change_decode",
-        Seq("Generate posexplode", "BatchScan graft-lcm"),
-        Seq(">= 2400", "<= 2559",
-          "Exchange hashpartitioning", "SortMergeJoin")),
-      // wire-source compaction: latest-per-key via max-over-struct hash
-      // aggregate — partial (map-side) combine before the one exchange,
-      // never a window/sort-based dedup
-      ("stellar_changes_from_lcm",
-        Seq("partial_max", "BatchScan graft-lcm"),
-        Seq(">= 2200", "<= 2459", "Window ", "SortMergeJoin")),
       // composed curation pipeline: dedup survivor via partial min (map-side
       // combinable), the sample is a filter (no extra shuffle), packing's
       // window is the only sort — never a nested-loop join anywhere

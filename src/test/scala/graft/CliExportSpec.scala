@@ -154,79 +154,6 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toString("UTF-8").trim == """{"start":null,"end":null}""")
   }
 
-  test("--wire-input runs supported commands off the .lcmb wire source") {
-    val wire = tmpDir("wire-in")
-    graft.sources.LcmWriter.writeFixture(wire, 5000, 5127)
-
-    // export_transactions off the wire: sink parity with the transform
-    val outTx = tmpDir("wire-tx")
-    Export.run(spark, Export.parse(Array(
-      "export_transactions", "--start", "5010", "--end", "5030",
-      "--wire-input", wire, "--output", outTx, "--format", "parquet")))
-    val sunk = spark.read.parquet(outTx)
-    val direct = graft.operators.StellarTransforms.historyTransactionsFromLcm(
-      spark.read.format("graft-lcm").load(wire)
-        .where(org.apache.spark.sql.functions.col("sequence")
-          .between(5010, 5030)))
-    assert(sunk.count() == direct.count() && sunk.count() > 0)
-    assert(sunk.collect().map(_.toSeq).toSet ==
-      direct.collect().map(_.toSeq).toSet)
-
-    // the change grain exports too, and respects the range bound
-    val outCh = tmpDir("wire-ch")
-    Export.run(spark, Export.parse(Array(
-      "export_ledger_entry_changes", "--start", "5010", "--end", "5030",
-      "--wire-input", wire, "--output", outCh, "--format", "ndjson")))
-    val ch = spark.read.json(outCh)
-    assert(ch.count() > 0)
-    import org.apache.spark.sql.functions.{min => fmin, max => fmax}
-    val r = ch.agg(fmin("ledger_sequence"), fmax("ledger_sequence")).head()
-    assert(r.getLong(0) >= 5010L && r.getLong(1) <= 5030L)
-
-    // trades run off the wire too (pre-state pricing path)
-    val outTr = tmpDir("wire-trades")
-    Export.run(spark, Export.parse(Array(
-      "export_trades", "--start", "5010", "--end", "5030",
-      "--wire-input", wire, "--output", outTr, "--format", "parquet")))
-    assert(spark.read.parquet(outTr).count() > 0)
-
-    // contract events run off the wire (Soroban meta event vector)
-    val outEv = tmpDir("wire-events")
-    Export.run(spark, Export.parse(Array(
-      "export_contract_events", "--start", "5010", "--end", "5030",
-      "--wire-input", wire, "--output", outEv, "--format", "parquet")))
-    assert(spark.read.parquet(outEv).count() > 0)
-
-    // effects run off the wire with the VARIANT details payload: the
-    // NDJSON sink must render it as a raw JSON object (not a quoted
-    // string), null keys dropped — the reference's omitempty shape
-    val outEff = tmpDir("wire-effects")
-    Export.run(spark, Export.parse(Array(
-      "export_effects", "--start", "5010", "--end", "5030",
-      "--wire-input", wire, "--output", outEff, "--format", "ndjson")))
-    val effLines = new java.io.File(outEff).listFiles()
-      .filter(_.getName.endsWith(".json"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines()).toSeq
-    assert(effLines.nonEmpty)
-    val omm = new com.fasterxml.jackson.databind.ObjectMapper()
-    val trades = effLines.map(omm.readTree)
-      .filter(_.get("type_string").asText == "trade")
-    assert(trades.nonEmpty)
-    trades.foreach { n =>
-      val d = n.get("details")
-      assert(d.isObject, s"details must be a raw object: $n")
-      assert(d.get("seller") != null && d.get("offer_id") != null)
-    }
-
-    // unsupported command under --wire-input fails loudly
-    val err = intercept[RuntimeException] {
-      Export.run(spark, Export.parse(Array(
-        "export_ledger_transaction", "--start", "5010", "--end", "5030",
-        "--wire-input", wire, "--output", tmpDir("wire-bad"))))
-    }
-    assert(err.getMessage.contains("--wire-input supports"))
-  }
-
   test("--permissive --xdr-input: a poison frame is reported (counted in " +
       "the observe() metric, dumped beside the output), never dropped") {
     // one good real-XDR frame + one truncated header
@@ -332,48 +259,8 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     // export_ledger_entry_changes
     val e2 = intercept[RuntimeException](Export.run(spark, Export.parse(Array(
       "export_transactions", "--start", "100", "--end", "0",
-      "--wire-input", tmpDir("noend-wire"),
       "--output", tmpDir("noend2"), "--format", "parquet"))))
     assert(e2.getMessage.contains("only applies to"))
-  }
-
-  test("--end 0 runs the wire export UNBOUNDED and matches the bounded run") {
-    // the reference's continuous mode (export_ledger_entry_changes.go:72-89,
-    // endNum 0 ⇒ MaxInt32 + blocking change stream): here the MICRO_BATCH
-    // source — batch files landing later are picked up by the SAME running
-    // query, and the total output matches the bounded command row-for-row
-    val wire = tmpDir("wire-stream-in")
-    graft.sources.LcmWriter.writeFixture(wire, 6000, 6063)
-
-    val out = tmpDir("wire-stream-out")
-    sys.props("graft.stream.once") = "1"
-    try {
-      Export.run(spark, Export.parse(Array(
-        "export_ledger_entry_changes", "--start", "6000", "--end", "0",
-        "--batch-size", "64", "--wire-input", wire,
-        "--output", out, "--format", "parquet")))
-      // more wire lands; a fresh unbounded run (same checkpoint) resumes
-      // and drains ONLY the new batch files into the same sink
-      graft.sources.LcmWriter.writeFixture(wire, 6064, 6127)
-      Export.run(spark, Export.parse(Array(
-        "export_ledger_entry_changes", "--start", "6000", "--end", "0",
-        "--batch-size", "64", "--wire-input", wire,
-        "--output", out, "--format", "parquet")))
-    } finally sys.props.remove("graft.stream.once")
-
-    val streamed = spark.read.parquet(out)
-    // the reference's every-batchSize-ledgers grouping, as partition dirs
-    // absolute 64-ledger batch ids (the K4 law): 6000..6127 spans 93-95
-    assert(streamed.select(org.apache.spark.sql.functions
-        .col("batch_id").cast("long")).distinct().collect()
-      .map(_.getLong(0)).toSet == Set(93L, 94L, 95L))
-    val bounded = graft.operators.StellarTransforms.ledgerChangesFromLcm(
-      spark.read.format("graft-lcm").load(wire)
-        .where(org.apache.spark.sql.functions.col("sequence")
-          .between(6000, 6127)))
-    assert(streamed.drop("batch_id").collect().map(_.toSeq).toSet ==
-      bounded.collect().map(_.toSeq).toSet)
-    assert(streamed.count() == bounded.count())
   }
 
   test("--testnet re-domains the tx hash and the SAC contract-data " +
@@ -613,6 +500,115 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
         .count() == n, format)
       assert(log.contains(s"""{"attempted":$n,"failed":0,"successful":$n}"""),
         s"$format: $log")
+    }
+  }
+
+  test("impossible ranges fail before anything is read or written: --end " +
+      "below --start, --end 0 off export_ledger_entry_changes " +
+      "--batch-input, and --end 0 with --permissive") {
+    val tree = batchTree(9600, 9601)
+    def failure(args: String*): (String, String) = {
+      val out = tmpDir("bad-range") + "/out"
+      val e = intercept[RuntimeException](
+        Export.run(spark, Export.parse((args ++ Seq("--output", out)).toArray)))
+      assert(!Files.exists(Paths.get(out)), args.mkString(" "))
+      (e.getMessage, out)
+    }
+    val (reversed, _) = failure("export_ledgers", "--start", "200", "--end",
+      "100", "--batch-input", tree)
+    assert(reversed.contains("--end 100 is below --start 200"), reversed)
+    assert(failure("export_transactions", "--start", "9601", "--end", "9600")
+      ._1.contains("below --start"))
+    // continuous mode exists only over the datastore tree
+    val (noTree, _) = failure("export_ledger_entry_changes", "--start", "100",
+      "--end", "0")
+    assert(noTree.contains("only applies to"), noTree)
+    assert(failure("export_ledgers", "--start", "9600", "--end", "0",
+      "--batch-input", tree)._1.contains("only applies to"))
+    // the permissive reader is batch-only
+    val (permissive, out) = failure("export_ledger_entry_changes", "--start",
+      "9600", "--end", "0", "--batch-input", tree, "--permissive")
+    assert(permissive.contains("--permissive is batch-only"), permissive)
+    assert(!Files.exists(Paths.get(out + "_ckpt")))
+  }
+
+  test("--end 0 streams export_ledger_entry_changes off the datastore " +
+      "tree: a re-run on the same checkpoints drains only new objects, and " +
+      "each soroban resource equals the bounded --batch-input export") {
+    import org.apache.spark.sql.functions.{col, floor}
+    // the reference's continuous mode (export_ledger_entry_changes.go:72-89,
+    // endNum 0 ⇒ MaxInt32 + blocking change stream); ledgers before
+    // --start are in the tree but never stream
+    val tree = batchTree(6000, 6063)
+    val out = tmpDir("stream-changes") + "/changes"
+    val resources = Seq("contract_data", "contract_code", "config_settings",
+      "ttl")
+    def stream(): String = {
+      sys.props("graft.stream.once") = "1"
+      try printed("export_ledger_entry_changes", "--start", "6010", "--end",
+        "0", "--batch-size", "64", "--batch-input", tree, "--output", out,
+        "--format", "parquet")
+      finally sys.props.remove("graft.stream.once")
+    }
+    def dataFiles(resource: String): Set[java.nio.file.Path] =
+      Files.walk(Paths.get(out, resource)).iterator().asScala
+        .filter(p => p.getFileName.toString.startsWith("part-")).toSet
+    stream()
+    val firstFiles = resources.map(r => r -> dataFiles(r)).toMap
+    // sixty-four more objects land; a fresh run on the same checkpoints
+    // resumes where the first stopped
+    graft.sources.RealXdrFixture.writeBatchTree(tree, 6064, 6127)
+    val log = stream()
+
+    val boundedOut = tmpDir("stream-bounded") + "/changes"
+    Export.run(spark, Export.parse(Array("export_ledger_entry_changes",
+      "--start", "6010", "--end", "6127", "--batch-size", "64",
+      "--batch-input", tree, "--output", boundedOut, "--format", "parquet")))
+
+    resources.foreach { r =>
+      assert(firstFiles(r).nonEmpty, r)
+      val streamed = spark.read.parquet(s"$out/$r")
+      // the re-run wrote only the new objects' ledgers
+      val newFiles = (dataFiles(r) -- firstFiles(r)).toSeq.map(_.toString)
+      assert(newFiles.nonEmpty, r)
+      val newSeqs = spark.read.option("basePath", s"$out/$r")
+        .parquet(newFiles: _*).select("ledger_sequence").distinct()
+        .collect().map(_.getLong(0)).toSet
+      assert(newSeqs == (6064L to 6127L).toSet, r)
+      val bounded = spark.read.parquet(s"$boundedOut/*-$r.parquet")
+      val rows = streamed.drop("batch_id").collect().map(_.toSeq)
+      assert(rows.length == bounded.count(), r)
+      assert(rows.toSet == bounded.collect().map(_.toSeq).toSet, r)
+      assert(rows.map(_(streamed.columns.indexOf("ledger_sequence")))
+        .toSet == (6010L to 6127L).toSet, r)
+      // batch_id = floor(ledger_sequence / batch-size): 6010..6127 → 93..95
+      assert(streamed.where(col("batch_id") =!=
+        floor(col("ledger_sequence") / 64)).isEmpty, r)
+      assert(streamed.select(col("batch_id").cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet == Set(93L, 94L, 95L), r)
+      assert(log.contains(s"""{"resource":"$r","attempted":${rows.length},""" +
+        s""""failed":0,"successful":${rows.length}}"""), log)
+    }
+  }
+
+  test("export_effects --format ndjson writes the VARIANT details as a raw " +
+      "JSON object with null keys dropped") {
+    val out = tmpDir("effects-ndjson") + "/effects"
+    Export.run(spark, Export.parse(Array("export_effects", "--start", "2000",
+      "--end", "2039", "--output", out, "--format", "ndjson")))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = jsonRows(out).map(om.readTree)
+    assert(rows.nonEmpty)
+    rows.foreach { n =>
+      val d = n.get("details")
+      assert(d.isObject, s"details must be a raw object: $n")
+      assert(!d.elements().asScala.exists(_.isNull), s"null key kept: $n")
+    }
+    val trades = rows.filter(_.get("type_string").asText == "trade")
+    assert(trades.nonEmpty)
+    trades.foreach { n =>
+      val d = n.get("details")
+      assert(d.get("seller") != null && d.get("offer_id") != null, n.toString)
     }
   }
 }

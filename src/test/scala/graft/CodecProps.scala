@@ -159,289 +159,4 @@ object CodecProps extends Properties("codec") {
     val extended = data ++ Array(((c >> 8) & 0xff).toByte, (c & 0xff).toByte)
     Crc16.checksum(extended) == 0
   }
-
-  // ---- LCM frame: whole-model encode/decode roundtrip ----------------------
-  // Arbitrary frames across every union arm the wire carries — memo x5,
-  // precond x3 (V2 with age/gap + all four SignerKey arms), the full
-  // result-code enum, fee-bump shells, soroban fee ext, op-body arms, and
-  // the three version arms with their structural constraints.
-
-  private val byteGen: Gen[Byte] = Gen.chooseNum(-128, 127).map(_.toByte)
-  private val b32: Gen[Seq[Byte]] = Gen.containerOfN[Seq, Byte](32, byteGen)
-  private val u32: Gen[Long] = Gen.chooseNum(0L, 4294967295L)
-  private val nonNeg: Gen[Long] = Gen.chooseNum(0L, Long.MaxValue)
-
-  private val codeGen: Gen[String] =
-    Gen.oneOf("XLM", "USDC", "EURC", "A", "TWELVECHARS1")
-
-  private val opGen: Gen[Lcm.Op] = for {
-    t <- Gen.chooseNum(0, 26)
-    amt <- nonNeg
-    d <- t match {
-      case 0 => b32.map(Lcm.OpCreateAccount)
-      case 1 => for {
-        k <- b32
-        c <- codeGen
-      } yield Lcm.OpPayment(k, c)
-      case 2 => for {
-        k <- b32; s <- codeGen; r <- codeGen; mx <- nonNeg; got <- nonNeg
-      } yield Lcm.OpPathPaymentStrictReceive(k, s, r, mx, got)
-      case 13 => for {
-        k <- b32; s <- codeGen; r <- codeGen; mn <- nonNeg; got <- nonNeg
-      } yield Lcm.OpPathPaymentStrictSend(k, s, r, mn, got)
-      case 3 => for {
-        id <- nonNeg; s <- codeGen; b <- codeGen
-        n <- Gen.chooseNum(Int.MinValue, Int.MaxValue)
-        dd <- Gen.chooseNum(1, Int.MaxValue)
-        rid <- Gen.option(Gen.chooseNum(1L, Long.MaxValue))
-      } yield Lcm.OpManageSellOffer(id, s, b, n, dd, rid)
-      case 12 => for {
-        id <- nonNeg; s <- codeGen; b <- codeGen
-        n <- Gen.chooseNum(Int.MinValue, Int.MaxValue)
-        dd <- Gen.chooseNum(1, Int.MaxValue)
-        rid <- Gen.option(Gen.chooseNum(1L, Long.MaxValue))
-      } yield Lcm.OpManageBuyOffer(id, s, b, n, dd, rid)
-      case 4 => for {
-        s <- codeGen; b <- codeGen
-        n <- Gen.chooseNum(Int.MinValue, Int.MaxValue)
-        dd <- Gen.chooseNum(1, Int.MaxValue)
-        rid <- Gen.option(Gen.chooseNum(1L, Long.MaxValue))
-      } yield Lcm.OpCreatePassiveSellOffer(s, b, n, dd, rid)
-      case 6 => for {
-        c <- codeGen; lim <- nonNeg
-      } yield Lcm.OpChangeTrust(c, lim)
-      case 8 => b32.map(Lcm.OpAccountMerge)
-      case 10 => for {
-        nameLen <- Gen.chooseNum(0, 64)
-        name <- Gen.stringOfN(nameLen, Gen.alphaNumChar)
-        value <- Gen.option(Gen.chooseNum(0, 64)
-          .flatMap(n => Gen.containerOfN[Seq, Byte](n, byteGen)))
-      } yield Lcm.OpManageData(name, value)
-      case 11 => Gen.chooseNum(Long.MinValue, Long.MaxValue)
-        .map(Lcm.OpBumpSequence)
-      case 5 => for {
-        dest <- Gen.option(b32)
-        clear <- Gen.option(Gen.chooseNum(0, 15))
-        set <- Gen.option(Gen.chooseNum(0, 15))
-        master <- Gen.option(Gen.chooseNum(0, 255))
-        low <- Gen.option(Gen.chooseNum(0, 255))
-        med <- Gen.option(Gen.chooseNum(0, 255))
-        high <- Gen.option(Gen.chooseNum(0, 255))
-        domLen <- Gen.chooseNum(0, 32)
-        dom <- Gen.option(Gen.stringOfN(domLen, Gen.alphaNumChar))
-        signer <- Gen.option(Gen.zip(b32, Gen.chooseNum(0, 255)))
-      } yield Lcm.OpSetOptions(dest, clear, set, master, low, med, high,
-        dom, signer)
-      case 7 => for {
-        k <- b32; c <- codeGen; a <- Gen.chooseNum(0, 2)
-      } yield Lcm.OpAllowTrust(k, c, a)
-      case 19 => for {
-        c <- codeGen; k <- b32
-      } yield Lcm.OpClawback(c, k)
-      case 14 => for {
-        c <- codeGen
-        n <- Gen.chooseNum(1, 10)
-        cs <- Gen.containerOfN[Seq, Seq[Byte]](n, b32)
-      } yield Lcm.OpCreateClaimableBalance(c, cs)
-      case 15 => b32.map(Lcm.OpClaimClaimableBalance)
-      case 16 => b32.map(Lcm.OpBeginSponsoringFutureReserves)
-      case 18 => Gen.oneOf(
-        for { et <- Gen.chooseNum(0, 9); k <- b32 }
-          yield Lcm.OpRevokeSponsorship(Some((et, k)), None),
-        for { a <- b32; k <- b32 }
-          yield Lcm.OpRevokeSponsorship(None, Some((a, k))))
-      case 20 => b32.map(Lcm.OpClawbackClaimableBalance)
-      case 21 => for {
-        tr <- b32; c <- codeGen
-        cf <- Gen.chooseNum(0, 15); sf <- Gen.chooseNum(0, 15)
-      } yield Lcm.OpSetTrustLineFlags(tr, c, cf, sf)
-      case 22 => for {
-        p <- b32; ma <- nonNeg; mb <- nonNeg
-        n1 <- Gen.chooseNum(Int.MinValue, Int.MaxValue)
-        d1 <- Gen.chooseNum(1, Int.MaxValue)
-        n2 <- Gen.chooseNum(Int.MinValue, Int.MaxValue)
-        d2 <- Gen.chooseNum(1, Int.MaxValue)
-      } yield Lcm.OpLiquidityPoolDeposit(p, ma, mb, n1, d1, n2, d2)
-      case 23 => for {
-        p <- b32; ma <- nonNeg; mb <- nonNeg
-      } yield Lcm.OpLiquidityPoolWithdraw(p, ma, mb)
-      case 24 => for {
-        ft <- Gen.chooseNum(0, 3)
-        cid <- if (ft == 2) Gen.const(None: Option[Seq[Byte]])
-               else b32.map(Some(_): Option[Seq[Byte]])
-        params <- if (ft != 0) Gen.const(Seq.empty[Seq[Byte]])
-                  else Gen.listOfN(3, Gen.chooseNum(0, 20)
-                    .flatMap(n => Gen.listOfN(n,
-                      Gen.chooseNum(Byte.MinValue, Byte.MaxValue))))
-                    .flatMap(ps => Gen.chooseNum(0, 3).map(k =>
-                      ps.take(k).map(_.toSeq)))
-      } yield Lcm.OpInvokeHostFunction(ft, cid, params)
-      case 25 => u32.map(Lcm.OpExtendFootprintTtl)
-      case _ => Gen.const(Lcm.OpGeneric: Lcm.OpDetail)
-    }
-    src <- Gen.option(b32)
-  } yield Lcm.Op(t, amt, d, src)
-
-  private val memoGen: Gen[Lcm.Memo] = Gen.oneOf(
-    Gen.const(Lcm.MemoNone: Lcm.Memo),
-    Gen.alphaNumStr.map(s => Lcm.MemoText(s.take(28))),
-    Gen.chooseNum(Long.MinValue, Long.MaxValue).map(Lcm.MemoId),
-    b32.map(Lcm.MemoHash), b32.map(Lcm.MemoReturn))
-
-  private val tbGen: Gen[Lcm.TimeBounds] =
-    for { a <- nonNeg; b <- nonNeg } yield Lcm.TimeBounds(a, b)
-
-  private val signerGen: Gen[Lcm.SignerKey] = for {
-    k <- b32
-    t <- Gen.chooseNum(0, 3)
-    s <- t match {
-      case 0 => Gen.const(Lcm.SignerEd25519(k): Lcm.SignerKey)
-      case 1 => Gen.const(Lcm.SignerPreAuthTx(k): Lcm.SignerKey)
-      case 2 => Gen.const(Lcm.SignerHashX(k): Lcm.SignerKey)
-      case _ => Gen.chooseNum(0, 64).flatMap(n =>
-        Gen.containerOfN[Seq, Byte](n, byteGen)
-          .map(p => Lcm.SignerEd25519SignedPayload(k, p): Lcm.SignerKey))
-    }
-  } yield s
-
-  private val condGen: Gen[Lcm.Precond] = Gen.oneOf(
-    Gen.const(Lcm.PrecondNone: Lcm.Precond),
-    tbGen.map(Lcm.PrecondTime),
-    for {
-      time <- Gen.option(tbGen)
-      ledger <- Gen.option(for { a <- u32; b <- u32 }
-        yield Lcm.LedgerBounds(a, b))
-      ms <- Gen.option(nonNeg)
-      age <- nonNeg
-      gap <- u32
-      n <- Gen.chooseNum(0, 2)
-      sig <- Gen.listOfN(n, signerGen)
-    } yield Lcm.PrecondV2(time, ledger, ms, age, gap, sig))
-
-  private def changeGen(nOps: Int): Gen[Lcm.WireChange] = for {
-    k <- Gen.chooseNum(0, 2)
-    et <- Gen.chooseNum(0, 9)
-    oi <- Gen.chooseNum(0, math.max(nOps - 1, 0))
-    kh <- b32
-    lm <- u32
-    bal <- nonNeg
-    // entry-type-discriminated arms: offer pre-state on OFFER(2) (0/0
-    // price = CREATED/no-pre), LP constant-product on LIQUIDITY_POOL(5),
-    // pre sponsor off CREATED only, post sponsor off REMOVED only
-    offerId <- if (et == 2) nonNeg else Gen.const(0L)
-    ppn <- if (et == 2 && k != 0) Gen.chooseNum(0, 1000) else Gen.const(0)
-    ppd <- if (et == 2 && k != 0 && ppn != 0) Gen.chooseNum(1, 1000)
-           else Gen.const(0)
-    preA <- if (et == 5) nonNeg else Gen.const(0L)
-    preB <- if (et == 5) nonNeg else Gen.const(0L)
-    preS <- if (et == 5) nonNeg else Gen.const(0L)
-    postA <- if (et == 5) nonNeg else Gen.const(0L)
-    postB <- if (et == 5) nonNeg else Gen.const(0L)
-    postS <- if (et == 5) nonNeg else Gen.const(0L)
-    fee <- if (et == 5) Gen.chooseNum(0, 10000) else Gen.const(0)
-    poolId <- if (et == 5) Gen.option(b32)
-              else Gen.const(None: Option[Seq[Byte]])
-    preSponsor <- if (k != 0) Gen.option(b32)
-                  else Gen.const(None: Option[Seq[Byte]])
-    postSponsor <- if (k != 2) Gen.option(b32)
-                   else Gen.const(None: Option[Seq[Byte]])
-    sigPair = for { a <- b32; b <- b32 } yield (a, b)
-    preSig <- if (et == 0 && k != 0)
-                Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_, sigPair))
-              else Gen.const(List.empty[(Seq[Byte], Seq[Byte])])
-    postSig <- if (et == 0 && k != 2)
-                 Gen.chooseNum(0, 2).flatMap(Gen.listOfN(_, sigPair))
-               else Gen.const(List.empty[(Seq[Byte], Seq[Byte])])
-  } yield Lcm.WireChange(k, et, oi, kh, lm, bal,
-    offerId, if (ppd == 0) 0 else ppn, ppd,
-    preA, preB, preS, postA, postB, postS, fee, poolId,
-    preSponsor, postSponsor, preSig, postSig)
-
-  private def eventGen(nOps: Int): Gen[Lcm.WireContractEvent] = for {
-    oi <- Gen.chooseNum(0, math.max(nOps - 1, 0))
-    et <- Gen.chooseNum(0, 2)
-    cid <- b32
-    nt <- Gen.chooseNum(0, 4)
-    topics <- Gen.listOfN(nt, Gen.chooseNum(0, 24).flatMap(n =>
-      Gen.containerOfN[Seq, Byte](n, byteGen)))
-    data <- Gen.chooseNum(0, 48).flatMap(n =>
-      Gen.containerOfN[Seq, Byte](n, byteGen))
-  } yield Lcm.WireContractEvent(oi, cid, et, topics, data)
-
-  private def claimAtomGen(nOps: Int): Gen[Lcm.WireClaimAtom] = for {
-    oi <- Gen.chooseNum(0, math.max(nOps - 1, 0))
-    pool <- Gen.oneOf(true, false)
-    id <- b32
-    offerId <- if (pool) Gen.const(0L) else nonNeg
-    sc <- codeGen; sa <- nonNeg
-    bc <- codeGen; ba <- nonNeg
-  } yield Lcm.WireClaimAtom(oi, pool, id, offerId, sc, sa, bc, ba)
-
-  private val txGen: Gen[Lcm.Tx] = for {
-    fee <- nonNeg
-    rc <- Gen.chooseNum(Lcm.TxResultCodeMin, Lcm.TxResultCodeMax)
-    n <- Gen.chooseNum(0, 3)
-    ops <- Gen.listOfN(n, opGen)
-    memo <- memoGen
-    cond <- condGen
-    fb <- Gen.option(for { k <- b32; f <- nonNeg } yield Lcm.FeeBump(k, f))
-    sm <- Gen.option(for { a <- nonNeg; b <- nonNeg; c <- nonNeg }
-      yield Lcm.SorobanMeta(a, b, c))
-    nCh <- if (n == 0) Gen.const(0) else Gen.chooseNum(0, 3)
-    chs <- Gen.listOfN(nCh, changeGen(n))
-    nCa <- if (n == 0) Gen.const(0) else Gen.chooseNum(0, 2)
-    cas <- Gen.listOfN(nCa, claimAtomGen(n))
-    src <- b32
-    mux <- Gen.option(Gen.chooseNum(0L, Long.MaxValue))
-    nEv <- if (n == 0) Gen.const(0) else Gen.chooseNum(0, 2)
-    evs <- Gen.listOfN(nEv, eventGen(n))
-  } yield Lcm.Tx(fee, rc, ops, memo, cond, fb, sm, chs, cas, src, mux, evs)
-
-  private val headerGen: Gen[Lcm.HeaderInfo] = for {
-    pv <- Gen.chooseNum(0, Int.MaxValue)
-    prev <- b32
-    coins <- nonNeg; pool <- nonNeg
-    bf <- u32; br <- u32; mts <- u32
-  } yield Lcm.HeaderInfo(pv, prev, coins, pool, bf, br, mts)
-
-  private val upgradeGen: Gen[Lcm.LedgerUpgrade] = for {
-    v <- u32
-    u <- Gen.oneOf[Long => Lcm.LedgerUpgrade](
-      Lcm.UpgradeVersion, Lcm.UpgradeBaseFee, Lcm.UpgradeMaxTxSetSize,
-      Lcm.UpgradeBaseReserve, Lcm.UpgradeFlags)
-  } yield u(v)
-
-  private val frameGen: Gen[Lcm.Frame] = for {
-    seq <- Gen.chooseNum(0L, Int.MaxValue.toLong) // uint32, TOID law
-    ms <- nonNeg
-    n <- Gen.chooseNum(0, 3)
-    txs <- Gen.listOfN(n, txGen)
-    arm <- Gen.chooseNum(0, 2)
-    f <- arm match {
-      case 0 => Gen.const(Lcm.Frame(seq, ms, txs)) // legacy header-less
-      case 1 => for { h <- headerGen; nu <- Gen.chooseNum(0, 2);
-                      up <- Gen.listOfN(nu, upgradeGen) }
-        yield Lcm.Frame(seq, ms, txs, Some(h), up) // v0
-      case _ => for { h <- headerGen; nu <- Gen.chooseNum(0, 2)
-                      up <- Gen.listOfN(nu, upgradeGen)
-                      bl <- nonNeg; sw <- Gen.option(nonNeg) }
-        yield Lcm.Frame(seq, ms, txs, Some(h), up, Some(bl), sw) // v1
-    }
-  } yield f
-
-  property("lcm.frame-roundtrip") = forAll(frameGen) { f =>
-    Lcm.decode(Lcm.encode(f)) == f
-  }
-
-  property("lcm.meta-prefix-consistent") = forAll(frameGen) { f =>
-    // decodeMeta over the encoded bytes must agree with the full decode
-    // and leave the buffer exactly at the tx array
-    val buf = java.nio.ByteBuffer.wrap(Lcm.encode(f))
-    val m = Lcm.decodeMeta(buf)
-    m.sequence == f.sequence && m.closedAtEpochMs == f.closedAtEpochMs &&
-      m.header == f.header && m.upgrades == f.upgrades &&
-      m.bucketListSizeBytes == f.bucketListSizeBytes &&
-      m.sorobanFeeWrite1000 == f.sorobanFeeWrite1000 &&
-      Lcm.decodeTxs(buf) == f.txs
-  }
 }

@@ -346,107 +346,6 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(d == s"""{"begin_sponsor":"${Strkey.encodeAccountId(keyOf("sponsor-op"))}"}""")
   }
 
-  test("wire path shares the ONE details renderer with the model path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lcm-det").toString
-    graft.sources.LcmWriter.writeFixture(dir, 2600, 2663)
-    lazy val wire = StellarTransforms.historyOperationsFromLcm(
-      spark.read.format("graft-lcm").load(dir))
-    // (1) the details struct TYPE is the model path's, field for field —
-    // both paths build it through OperationDetails.struct, so key names
-    // and types cannot drift
-    val model = StellarTransforms.historyOperations(
-      StellarFixture.ledgers(spark, 2700, 2700))
-    // nullability flags reflect each source's array provenance, not the
-    // contract; normalize them before comparing
-    def norm(dt: org.apache.spark.sql.types.DataType):
-        org.apache.spark.sql.types.DataType = dt match {
-      case s: org.apache.spark.sql.types.StructType =>
-        org.apache.spark.sql.types.StructType(s.fields.map(f =>
-          f.copy(dataType = norm(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
-        a.copy(elementType = norm(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
-        m.copy(valueType = norm(m.valueType))
-      case other => other
-    }
-    assert(norm(wire.schema("details").dataType) ==
-      norm(model.schema("details").dataType))
-
-    // (2) wire value laws at chosen coordinates (successful txs)
-    def coord(ty: Int): (Long, Int, Int) =
-      (for {
-        seq <- 2600L to 2663L
-        t <- 0 to (seq % 5).toInt if t % 3 != 0
-        u <- 0 to ((seq + t) % 3).toInt
-        if (seq + t + u) % 27 == ty
-      } yield (seq, t, u)).head
-    def detailsRow(ty: Int) = {
-      val (seq, t, u) = coord(ty)
-      (seq, t, u, wire.where(col("id") ===
-          graft.codec.Toid.pack(seq, t + 1, u + 1))
-        .select(col("details")).head().getStruct(0))
-    }
-    val codes = Seq("XLM", "USDC", "EURC")
-
-    // manage_sell_offer (3): offer id, float price, rational price pair
-    locally {
-      val (seq, t, _, d) = detailsRow(3)
-      assert(d.getAs[Long]("offer_id") == seq * 10 + t)
-      // FloatString(7): the rational rounded half-up to 7 decimals
-      assert(d.getAs[Double]("price") ==
-        BigDecimal(seq % 9 + 1)./(BigDecimal(t % 7 + 1))
-          .setScale(7, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      assert(d.getAs[org.apache.spark.sql.Row]("price_r").getInt(0) ==
-        (seq % 9 + 1).toInt)
-      assert(d.getAs[String]("selling_asset_code") ==
-        codes((seq % 3).toInt))
-    }
-    // change_trust (6): scaled limit, trustor = acting source, line code
-    locally {
-      val (seq, t, _, d) = detailsRow(6)
-      assert(d.getAs[Double]("limit") ==
-        graft.codec.Amounts.stroopsToXlm(5000000L * (t + 1) + seq % 101))
-      val srcLabel = if ((seq + t) % 5 == 0) s"osrc-$seq-$t" else s"src-$seq-$t"
-      assert(d.getAs[String]("trustor") ==
-        Strkey.encodeAccountId(keyOf(srcLabel)))
-      assert(d.getAs[String]("asset_code") == codes(((seq + t) % 3).toInt))
-    }
-    // manage_data (10): name + base64 value (value present on these laws)
-    locally {
-      val (seq, t, _, d) = detailsRow(10)
-      assert(d.getAs[String]("name") == s"cfg-${seq % 19}-$t")
-      assert(d.getAs[String]("value") ==
-        GraftTestB64.b64(s"val-$seq-$t".getBytes("UTF-8")))
-    }
-    // create_claimable_balance (14): claimant list, predicate key dropped
-    locally {
-      val (seq, t, _, d) = detailsRow(14)
-      val cl = d.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("claimants")
-      assert(cl.size == t % 2 + 1)
-      assert(cl.head.getString(0) ==
-        Strkey.encodeAccountId(keyOf(s"cl-$seq-$t-0")))
-      assert(cl.head.isNullAt(1)) // wire carries no predicates
-    }
-    // strict-send (13): delivered RESULT amount scaled
-    locally {
-      val (seq, t, _, d) = detailsRow(13)
-      assert(d.getAs[Double]("amount") ==
-        graft.codec.Amounts.stroopsToXlm(900000L * (t + 1) + seq % 59))
-    }
-    // invoke_host_function (24): Go-style function name + parameters
-    locally {
-      val inv = wire.where(col("type") === 24 && col("host_fn_type") === 0)
-        .select(col("details"), col("ledger_sequence")).head()
-      val d = inv.getStruct(0)
-      assert(d.getAs[String]("function") ==
-        "HostFunctionTypeHostFunctionTypeInvokeContract")
-      assert(d.getAs[String]("type") == "invoke_contract")
-      assert(d.getAs[scala.collection.Seq[String]]("parameters").nonEmpty)
-      assert(d.getAs[scala.collection.Seq[String]]("parameters_decoded")
-        .head.startsWith("{\"symbol\":\""))
-    }
-  }
-
   /** The details-vocabulary audit: the FULL key union the reference's
     * `extractOperationDetails` can emit (operation.go:584-1173 plus the
     * helper expansions it calls) is enumerated here with citations, swept
@@ -529,7 +428,7 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // account/trustline flag splits: the reference reuses
       // set_flags/clear_flags for trustline flags on op 21; the typed
       // struct needs one type per field, so op-21 rides tl_set_flags /
-      // tl_clear_flags (wire-parity pinned in the op-21 test above)
+      // tl_clear_flags (pinned in the op-21 test above)
       )
     val missing = union -- schema -- deviations --
       // trustline flags covered under the tl_ split (see above)
@@ -555,11 +454,12 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val model = StellarTransforms.historyOperations(
       StellarFixture.ledgers(spark, 2700, 2700))
     assert(caseLawCopies(model) == 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lcm-law").toString
-    graft.sources.LcmWriter.writeFixture(dir, 2600, 2603)
-    val wire = StellarTransforms.historyOperationsFromLcm(
-      spark.read.format("graft-lcm").load(dir))
-    assert(caseLawCopies(wire) == 1)
+    // the same transform over ledgers decoded from a datastore tree
+    val dir = java.nio.file.Files.createTempDirectory("graft-ds-law").toString
+    graft.sources.RealXdrFixture.writeBatchTree(dir, 3000, 3003)
+    val datastore = StellarTransforms.historyOperations(
+      graft.sources.LcmBatchFiles.ledgerRowsForRange(spark, dir, 3000, 3003))
+    assert(caseLawCopies(datastore) == 1)
     // a consumer of both columns still plans one copy
     assert(caseLawCopies(model.select(to_json(col("details")),
       col("details_json"))) == 1)

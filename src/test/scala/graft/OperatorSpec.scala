@@ -2794,43 +2794,4 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getLong(0) == graft.codec.Hashes.farmHash64("some-asset-string"))
     assert(r.getLong(1) == graft.codec.Hashes.fnv64a("some-asset-string"))
   }
-
-  test("compactChangeRows is associative: sharded winners re-compact to global") {
-    // the law the streaming per-batch merge and the batch partial-combine
-    // both lean on; random seeded change sets, arbitrary shard splits
-    import spark.implicits._
-    val rnd = new scala.util.Random(20260813L)
-    for (_ <- 1 to 3) {
-      val rows = (1 to 300).map { i =>
-        (rnd.nextInt(20).toLong + 1000L, // ledger_sequence: collides often
-          rnd.nextInt(4) + 1, rnd.nextInt(3), // tx_order, change_index
-          rnd.nextInt(3), rnd.nextInt(10), // kind, entry_type
-          s"k-${rnd.nextInt(25)}", // key: 25 keys over 300 rows
-          rnd.nextLong(1000000L)) // balance
-      }.distinct // (seq, tx, idx) triples must be unique per key
-        .groupBy(r => (r._6, r._1, r._2, r._3)).map(_._2.head).toSeq
-      val df = rows.toDF("ledger_sequence", "tx_order", "change_index",
-          "kind", "entry_type", "key_hash_hex", "balance")
-        .select(col("ledger_sequence"), col("tx_order"), col("change_index"),
-          col("kind"), col("entry_type"), col("key_hash_hex"), col("balance"))
-      val global = StellarTransforms.compactChangeRows(df)
-        .collect().map(_.toSeq).toSet
-      // arbitrary 3-way split on a hash of the whole row
-      val sharded = (0 until 3).map { s =>
-        StellarTransforms.compactChangeRows(
-          df.where(pmod(xxhash64(col("ledger_sequence"), col("tx_order"),
-            col("change_index"), col("key_hash_hex")), lit(3)) === s)
-        ).select(
-          col("key_hash_hex"),
-          col("last_sequence").as("ledger_sequence"),
-          col("last_tx_order").as("tx_order"),
-          col("last_change_index").as("change_index"),
-          col("final_kind").as("kind"),
-          col("entry_type"), col("balance"))
-      }.reduce(_ unionAll _)
-      val merged = StellarTransforms.compactChangeRows(sharded)
-        .collect().map(_.toSeq).toSet
-      assert(merged == global)
-    }
-  }
 }

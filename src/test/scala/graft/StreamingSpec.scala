@@ -484,142 +484,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       packed.collect().map(_.toSeq).toSet)
   }
 
-  test("wire-source streaming: .lcmb batch files arriving mid-stream, batch parity") {
-    // the unbounded export (end=0 mode) off the REAL wire format: new
-    // batch files in the directory are new ledgers; the micro-batch
-    // offset is the highest fully-ingested sequence
-    val dir = Files.createTempDirectory("graft-lcm-stream").toString
-    val out = Files.createTempDirectory("graft-lcm-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-lcm-stream-ckpt").toString
-    graft.sources.LcmWriter.writeFixture(dir, 3000, 3063)
-
-    val stream = spark.readStream.format("graft-lcm").load(dir)
-    assert(stream.isStreaming)
-    // the wire->history_transactions transform is map-only, so it runs
-    // unchanged on the stream
-    val q = graft.operators.StellarTransforms
-      .historyTransactionsFromLcm(stream)
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt).option("path", out)
-      .start()
-    q.processAllAvailable()
-    val afterFirst = spark.read.parquet(out).count()
-    assert(afterFirst > 0)
-
-    // two more batch files land mid-stream (new filenames, later ranges)
-    graft.sources.LcmWriter.writeFixture(dir, 3064, 3191)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.read.parquet(out)
-    val batch = graft.operators.StellarTransforms.historyTransactionsFromLcm(
-      spark.read.format("graft-lcm").load(dir))
-    // parity with the batch path over the same directory, no duplicates
-    assert(streamed.count() == batch.count())
-    assert(streamed.select("id").distinct().count() == streamed.count())
-    assert(streamed.collect().map(_.toSeq).toSet ==
-      batch.collect().map(_.toSeq).toSet)
-
-    // restart on the same checkpoint with no new files: no re-ingestion
-    val q2 = graft.operators.StellarTransforms
-      .historyTransactionsFromLcm(
-        spark.readStream.format("graft-lcm").load(dir))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt).option("path", out)
-      .start()
-    q2.processAllAvailable()
-    q2.stop()
-    assert(spark.read.parquet(out).count() == batch.count())
-
-    // the single-scan effects transform is map-only, so it streams over
-    // the same directory unchanged: full parity with the batch path
-    val effOut = Files.createTempDirectory("graft-lcm-eff-out").toString
-    val effCkpt = Files.createTempDirectory("graft-lcm-eff-ckpt").toString
-    val qe = graft.operators.StellarTransforms
-      .historyEffectsFromLcm(
-        spark.readStream.format("graft-lcm").load(dir))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", effCkpt).option("path", effOut)
-      .start()
-    qe.processAllAvailable()
-    qe.stop()
-    val effBatch = graft.operators.StellarTransforms.historyEffectsFromLcm(
-      spark.read.format("graft-lcm").load(dir))
-    // VARIANT values don't define structural equality on collect —
-    // compare the details payload through its JSON rendering
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("details", to_json(col("details")))
-        .collect().map(_.toSeq).toSet
-    assert(canon(spark.read.parquet(effOut)) == canon(effBatch))
-  }
-
-  test("wire changes stream: per-batch compaction merges to the batch result") {
-    // the unbounded latest-per-key compaction off the wire change grain:
-    // each micro-batch emits its own winners (one hash agg), and because
-    // the max-over-struct law is associative, re-compacting the per-batch
-    // winners equals the batch path over the whole directory — the
-    // merge-tree shape a 100 TB unbounded compaction runs
-    val dir = Files.createTempDirectory("graft-lcm-chg").toString
-    val out = Files.createTempDirectory("graft-lcm-chg-out").toString
-    val ckpt = Files.createTempDirectory("graft-lcm-chg-ckpt").toString
-    graft.sources.LcmWriter.writeFixture(dir, 3400, 3463)
-
-    val stream = spark.readStream.format("graft-lcm").load(dir)
-    val q = graft.operators.StellarTransforms.ledgerChangesFromLcm(stream)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        graft.operators.StellarTransforms.compactChangeRows(b)
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    q.processAllAvailable()
-    assert(spark.read.parquet(out).count() > 0)
-
-    // two more wire batch files land mid-stream
-    graft.sources.LcmWriter.writeFixture(dir, 3464, 3527)
-    q.processAllAvailable()
-    q.stop()
-
-    val perBatch = spark.read.parquet(out)
-    // at least two micro-batches actually contributed winners
-    assert(perBatch.select("batch_id").distinct().count() >= 2)
-    // winners renamed back to the change grain, re-compacted = batch path
-    val merged = graft.operators.StellarTransforms.compactChangeRows(
-      perBatch.select(
-        col("key_hash_hex"),
-        col("last_sequence").as("ledger_sequence"),
-        col("last_tx_order").as("tx_order"),
-        col("last_change_index").as("change_index"),
-        col("final_kind").as("kind"),
-        col("entry_type"), col("balance")))
-    val batch = graft.operators.StellarTransforms.compactedChangesFromLcm(
-      spark.read.format("graft-lcm").load(dir))
-    assert(merged.collect().map(_.toSeq).toSet ==
-      batch.collect().map(_.toSeq).toSet)
-  }
-
-  test("wire-source streaming respects pushdown bounds through the stream") {
-    // a bounded stream over a sequence window: .where on sequence reaches
-    // the stream's reader clamp, same as the batch scan's file pruning
-    val dir = Files.createTempDirectory("graft-lcm-stream-b").toString
-    val out = Files.createTempDirectory("graft-lcm-stream-b-out").toString
-    val ckpt = Files.createTempDirectory("graft-lcm-stream-b-ckpt").toString
-    graft.sources.LcmWriter.writeFixture(dir, 3200, 3327)
-
-    val q = spark.readStream.format("graft-lcm").load(dir)
-      .where(col("sequence").between(3210, 3220))
-      .select(col("sequence"))
-      .writeStream.format("parquet")
-      .option("checkpointLocation", ckpt).option("path", out)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val seqs = spark.read.parquet(out).collect().map(_.getLong(0)).sorted
-    assert(seqs.toSeq == (3210L to 3220L))
-  }
-
   test("streaming KMV distinct sketch: windowed estimates are bit-identical " +
       "to the batch law across micro-batch state round-trips, closed " +
       "windows emit, open windows hold") {

@@ -312,101 +312,4 @@ class TradesEffectsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("Exchange"))
     assert(plan.contains("Generate"))
   }
-
-  test("wire effects carry reference-shaped details payloads") {
-    // the wire path's per-type `details` JSON: the reference's key names
-    // (`effects.go` details maps) over the wire-determined values, %.7f
-    // amounts — checked on the fixture laws at chosen coordinates
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-lcm-effdet").toString
-    graft.sources.LcmWriter.writeFixture(dir, 2600, 2663)
-    val eff = graft.operators.StellarTransforms.historyEffectsFromLcm(
-        spark.read.format("graft-lcm").load(dir))
-      .select(col("operation_id"), col("ledger_sequence"), col("type"),
-        col("effect_index"), to_json(col("details")).as("dj"))
-      .cache()
-    def sk(label: String): String = graft.codec.Strkey.encodeAccountId(
-      graft.codec.Hashes.sha256(label.getBytes("UTF-8")))
-    def djOf(seq: Long, t: Int, u: Int, typ: Int): Seq[String] =
-      eff.where(col("operation_id") ===
-          graft.codec.Toid.pack(seq, t + 1, u + 1) && col("type") === typ)
-        .orderBy("effect_index")
-        .collect().map(_.getAs[String]("dj")).toSeq
-    def coord(ty: Int): (Long, Int, Int) =
-      (for {
-        seq <- 2600L to 2663L
-        t <- 0 to (seq % 5).toInt if t % 3 != 0
-        u <- 0 to ((seq + t) % 3).toInt
-        if (seq + t + u) % 27 == ty
-      } yield (seq, t, u)).head
-
-    // payment: credited amount + asset code, %.7f scaling
-    locally {
-      val (seq, t, u) = coord(1)
-      val codes = Seq("XLM", "USDC", "EURC")
-      val amt = "%.7f".format(1000000L * (t + 1) / 1e7)
-      assert(djOf(seq, t, u, 2).head ==
-        s"""{"amount":"$amt","asset_code":"${codes((seq % 3).toInt)}"}""")
-    }
-    // bump_sequence: new_seq as string
-    locally {
-      val (seq, t, u) = coord(11)
-      assert(djOf(seq, t, u, 43).head ==
-        s"""{"new_seq":"${seq * 8 + t + 7}"}""")
-    }
-    // manage_data: name + b64 value (value present on these laws);
-    // type classifies on the op's DATA entry change kind
-    locally {
-      val (seq, t, u) = coord(10)
-      val b64 = java.util.Base64.getEncoder
-        .encodeToString(s"val-$seq-$t".getBytes("UTF-8"))
-      val dtKind = (0 to ((seq + t) % 2).toInt)
-        .filter(j => (seq + j) % 10 == 3 &&
-          j % ((seq + t) % 3 + 1) == u)
-        .map(j => (seq + t + j) % 3).lastOption
-      val expType = if (dtKind.contains(1L)) 42 else 40
-      assert(djOf(seq, t, u, expType).head ==
-        s"""{"name":"cfg-${seq % 19}-$t","value":"$b64"}""")
-    }
-    // trade: each side's sold_* is what that party gave up, seller is the
-    // counterparty (`addClaimTradeEffects` orientation)
-    locally {
-      val (seq, t, u) = coord(3)
-      val trades = djOf(seq, t, u, 33)
-      assert(trades.nonEmpty)
-      val j = (0 to ((seq + t) % 2).toInt)
-        .find(j => (seq + t + j) % 4 != 0).get
-      val codes = Seq("XLM", "USDC", "EURC")
-      val sold = "%.7f".format((500000L * (t + 1) + seq % 43 + j) / 1e7)
-      val bought = "%.7f".format((600000L * (t + 1) + seq % 47 + j) / 1e7)
-      val srcLabel =
-        if ((seq + t) % 5 == 0) s"osrc-$seq-$t" else s"src-$seq-$t"
-      // the taker-side effect: sold what the seller bought (VARIANT
-      // rendering orders keys alphabetically)
-      assert(trades.head ==
-        s"""{"bought_amount":"$sold",""" +
-        s""""bought_asset_code":"${codes(((seq + j) % 3).toInt)}",""" +
-        s""""offer_id":${seq * 100 + t * 10 + j},""" +
-        s""""seller":"${sk(s"se-$seq-$t-$j")}",""" +
-        s""""sold_amount":"$bought",""" +
-        s""""sold_asset_code":"${codes(((seq + j + 1) % 3).toInt)}"}""")
-      // the seller-side effect mirrors it with the taker as seller
-      assert(trades(1).contains(s""""seller":"${sk(srcLabel)}""""))
-      assert(trades(1).contains(s""""sold_amount":"$sold""""))
-    }
-    // sponsorship: created carries sponsor, removed former_sponsor,
-    // signer diffs add the signer key
-    locally {
-      val sponsorRows = eff.where(col("type") === 60).limit(1).collect()
-      assert(sponsorRows.nonEmpty)
-      assert(sponsorRows.head.getAs[String]("dj")
-        .startsWith("""{"sponsor":"G"""))
-      val signerRows = eff
-        .where(col("type").isin(72, 73, 74))
-        .select("dj").limit(10).collect().map(_.getString(0))
-      assert(signerRows.nonEmpty)
-      assert(signerRows.forall(_.contains("\"signer\":\"G")))
-    }
-    eff.unpersist()
-  }
 }
