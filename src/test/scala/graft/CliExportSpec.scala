@@ -157,17 +157,19 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("--permissive --xdr-input: a poison frame is reported (counted in " +
       "the observe() metric, dumped beside the output), never dropped") {
     // one good real-XDR frame + one truncated header
-    val golden = scala.io.Source.fromFile(
-      "/root/reference/testdata/ledgers/10_ledgers.golden").getLines()
-      .filter(_.trim.nonEmpty).take(1).toSeq.head
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val header = om.readTree(golden).get("ledger_header").asText()
-    val seq = om.readTree(golden).get("sequence").asLong()
-    val tx = om.readTree(scala.io.Source.fromFile(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-      .getLines().filter(_.trim.nonEmpty).take(1).toSeq.head)
-    val txJson = s"""{"tx_envelope":${tx.get("tx_envelope")},""" +
-      s""""tx_result":${tx.get("tx_result")}}"""
+    import graft.codec.{Hashes, XdrEncode}
+    def b64(b: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(b)
+    val seq = 77101L
+    val header = b64(XdrEncode.ledgerHeader(
+      XdrEncode.HeaderSpec(seq, 1719600000L)))
+    val env = XdrEncode.txEnvelopeV1(XdrEncode.TxSpec(
+      sourceKey = Hashes.sha256("poison-src".getBytes("UTF-8")),
+      fee = 100L, seqNum = 7L,
+      ops = Seq(XdrEncode.createAccountOp(
+        Hashes.sha256("poison-dst".getBytes("UTF-8")), 5000000L))))
+    val result = XdrEncode.txResult(100L, 0, Seq(XdrEncode.OpResultSpec(0, 0)))
+    val txJson = s"""{"tx_envelope":"${b64(env)}",""" +
+      s""""tx_result":"${b64(result)}"}"""
     val in = tmpDir("permissive-in")
     Files.writeString(Paths.get(in, "frames.json"),
       s"""{"ledger_header":"$header","transactions":[$txJson]}\n""" +

@@ -63,14 +63,14 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL: stellar_tx_hash / stellar_ledger_hash on real mainnet blobs") {
+    val txPath = "/root/reference/testdata/transactions/10_ledgers_txs.golden"
+    val ledPath = "/root/reference/testdata/ledgers/single_ledger.golden"
+    Seq(txPath, ledPath).foreach(p =>
+      assume(new java.io.File(p).isFile, s"golden missing: $p"))
     GraftExtensions.register(spark)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val tx = om.readTree(scala.io.Source.fromFile(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-      .getLines().next())
-    val led = om.readTree(scala.io.Source.fromFile(
-      "/root/reference/testdata/ledgers/single_ledger.golden")
-      .getLines().next())
+    val tx = om.readTree(scala.io.Source.fromFile(txPath).getLines().next())
+    val led = om.readTree(scala.io.Source.fromFile(ledPath).getLines().next())
     val out = spark.sql(
       s"""SELECT stellar_tx_hash('${tx.get("tx_envelope").asText}') AS th,
          |       stellar_ledger_hash('${led.get("ledger_header").asText}') AS lh,

@@ -42,12 +42,16 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- golden loading ------------------------------------------------------
 
-  private def rows(family: String, file: String): Seq[JsonNode] = {
+  /** The golden's path; cancels the test when the file is absent. */
+  private def goldenPath(family: String, file: String): String = {
     val f = new File(new File(root, family), file)
     assume(f.isFile, s"golden missing: $f")
-    scala.io.Source.fromFile(f).getLines()
-      .filter(_.trim.nonEmpty).map(om.readTree).toSeq
+    f.getPath
   }
+
+  private def rows(family: String, file: String): Seq[JsonNode] =
+    scala.io.Source.fromFile(goldenPath(family, file)).getLines()
+      .filter(_.trim.nonEmpty).map(om.readTree).toSeq
 
   private def txInput(n: JsonNode): StellarXdr.TxInput = StellarXdr.TxInput(
     n.get("tx_envelope").asText(),
@@ -338,11 +342,11 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     * unchanged transforms reproduce the golden — no driver-side decode
     * anywhere in the pipeline. */
   test("distributed decode: frame DataFrame through executors to transforms") {
+    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
+    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
     val s = spark
-    val txDf = s.read.json(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-    val ledDf = s.read.json(
-      "/root/reference/testdata/ledgers/10_ledgers.golden")
+    val txDf = s.read.json(txPath)
+    val ledDf = s.read.json(ledPath)
     val frames = ledDf.select(col("sequence"), col("ledger_header"))
       .join(txDf.select(col("ledger_sequence"), col("id"),
           struct(col("tx_envelope"), col("tx_result"), col("tx_meta"),
@@ -478,12 +482,12 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     * tails the directory, the SAME executor-side decode + transform chain
     * runs per micro-batch — output must equal the batch replay. */
   test("streaming: real-XDR frames through readStream match the batch path") {
+    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
+    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("xdr-stream")
-    val txDf = s.read.json(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-    val ledDf = s.read.json(
-      "/root/reference/testdata/ledgers/10_ledgers.golden")
+    val txDf = s.read.json(txPath)
+    val ledDf = s.read.json(ledPath)
     val frames = ledDf.select(col("sequence"), col("ledger_header"))
       .join(txDf.select(col("ledger_sequence"), col("id"),
           struct(col("tx_envelope"), col("tx_result")).as("tx")),
@@ -517,12 +521,12 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     * to the batch replay. */
   test("streaming: full fan-out (effects/trades/transfers) in foreachBatch " +
       "matches the batch path on real bytes") {
+    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
+    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("xdr-stream-fanout")
-    val txDf = s.read.json(
-      "/root/reference/testdata/transactions/10_ledgers_txs.golden")
-    val ledDf = s.read.json(
-      "/root/reference/testdata/ledgers/10_ledgers.golden")
+    val txDf = s.read.json(txPath)
+    val ledDf = s.read.json(ledPath)
     val frames = ledDf.select(col("sequence"), col("ledger_header"))
       .join(txDf.select(col("ledger_sequence"), col("id"),
           struct(col("tx_envelope"), col("tx_result"), col("tx_meta"),

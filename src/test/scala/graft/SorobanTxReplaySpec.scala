@@ -554,8 +554,9 @@ class SorobanTxReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("state tables end-to-end: REAL golden contract-data bytes ride a tx " +
       "meta through the batch tree and export_ledger_entry_changes") {
     // a REAL mainnet ContractDataEntry from the reference's golden corpus
-    val goldenRow = scala.io.Source.fromFile(
-      "/root/reference/testdata/changes/contract_data.golden").getLines()
+    val goldenPath = "/root/reference/testdata/changes/contract_data.golden"
+    assume(new java.io.File(goldenPath).isFile, s"golden missing: $goldenPath")
+    val goldenRow = scala.io.Source.fromFile(goldenPath).getLines()
       .filter(_.trim.nonEmpty).take(1).toSeq.head
     val g = om.readTree(goldenRow)
     val realBody = java.util.Base64.getDecoder.decode(
