@@ -933,8 +933,8 @@ object QueryCatalog {
     * name it cannot resolve. */
   private val incIndexLock = new Object
   private def incIndexTable(s: SparkSession, dir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val tag = graft.codec.Hashes.hex(java.security.MessageDigest
+      .getInstance("MD5").digest(dir.getBytes("UTF-8")).take(4))
     val tbl = s"graft_inc_minhash_$tag"
     incIndexLock.synchronized {
       if (!s.catalog.tableExists(tbl)) {

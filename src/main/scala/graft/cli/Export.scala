@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.model.LedgerModel.LedgerRow
@@ -540,10 +540,11 @@ object Export {
     * the SAME state-table transforms as the bounded `--batch-input` export
     * (so bounded and unbounded runs agree row-for-row). Each resource gets
     * its own streaming sink at `{output}/{resource}` with its own
-    * checkpoint at `{output}_ckpt/{resource}`, partitioned by `batch_id =
-    * floor(ledger_sequence / batchSize)` — the reference's
-    * every-batchSize-ledgers file grouping (`changes.go:85-160`) as a
-    * partition column, so each batch lands in its own directory.
+    * checkpoint at `{output}_ckpt/{resource}`, partitioned by `batch_id`,
+    * the bounded run's [[batchOf]] — the reference's every-batchSize-ledgers
+    * file grouping counted from `--start` (`changes.go:85-160`) as a
+    * partition column, so each batch lands in its own directory and holds
+    * the rows of the bounded run's file of the same index.
     *
     * Blocks like the reference; the `graft.stream.once` system property /
     * SPARK_GRAFT_STREAM_ONCE env (test hook) drains what is available,
@@ -558,7 +559,7 @@ object Export {
     val out = a.output.stripSuffix("/")
     val sinks = frames.map { case (resource, frame) =>
       val df = withExtras(frame, a.extraFields)
-        .withColumn("batch_id", floor(col("ledger_sequence") / a.batchSize))
+        .withColumn("batch_id", batchOf(col("ledger_sequence"), a))
       val q = df.writeStream.format(fmt)
         .option("checkpointLocation", s"${out}_ckpt/$resource")
         .option("path", s"$out/$resource")
@@ -581,6 +582,11 @@ object Export {
     } else spark.streams.awaitAnyTermination()
   }
 
+  /** The batch a ledger falls in: batches of `--batch-size` ledgers
+    * numbered from `--start`, the reference's export loop. */
+  private def batchOf(seq: Column, a: Args): Column =
+    floor((seq - a.start) / a.batchSize).cast("long")
+
   /** Distributed per-batch file writer: one shuffle on the batch id, one
     * part file per batch (repartition on the partition column ⇒ each batch
     * lands in exactly one task), then driver-side renames to the
@@ -598,8 +604,7 @@ object Export {
     }
     val df = withExtras(df0, a.extraFields)
       .where(col(seqCol).between(a.start, a.end))
-      .withColumn("__batch",
-        floor((col(seqCol) - a.start) / a.batchSize).cast("long"))
+      .withColumn("__batch", batchOf(col(seqCol), a))
     val tmp = new Path(a.output, s".tmp-$resource")
     val writer = df.repartition(col("__batch"))
       .write.mode("overwrite").partitionBy("__batch")

@@ -55,9 +55,8 @@ object Hashes {
 
   def sha256Hex(bytes: Array[Byte]): String = hex(sha256(bytes))
 
-  def hex(bytes: Array[Byte]): String = {
-    val sb = new StringBuilder(bytes.length * 2)
-    bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
-  }
+  private val lowerHex = java.util.HexFormat.of()
+
+  /** Lower-case hex, two digits per byte. */
+  def hex(bytes: Array[Byte]): String = lowerHex.formatHex(bytes)
 }

@@ -250,8 +250,12 @@ object StellarXdr {
     v
   }
 
-  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX = {
-    val r = new Reader(bytes)
+  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX =
+    ledgerHeaderFrom(new Reader(bytes))
+
+  /** LedgerHeader from a reader positioned at its version word — alone or
+    * embedded in a `LedgerHeaderHistoryEntry`. */
+  private def ledgerHeaderFrom(r: Reader): LedgerHeaderX = {
     val version = r.u32()
     val prev = r.bytes(32)
     // StellarValue: txSetHash, closeTime, upgrades<>, ext(0 | 1 signature)
@@ -270,7 +274,7 @@ object StellarXdr {
     val coins = r.i64(); val feePool = r.i64()
     val infl = r.u32(); val idPool = r.u64()
     val baseFee = r.u32(); val baseReserve = r.u32(); val maxTx = r.u32()
-    (0 until 4).foreach(_ => r.bytes(32)) // skipList
+    r.skip(4 * 32) // skipList
     r.i32() match { // LedgerHeader ext: v0 or v1 (flags)
       case 0 =>
       case 1 => r.u32()
@@ -284,9 +288,7 @@ object StellarXdr {
 
   /** One decoded envelope operation: the body fields land directly in the
     * model's OpModel slots; the result-derived slots are merged in
-    * [[decodeTx]]. */
-  final case class OpX(model: OpModel)
-
+    * [[assembleTx]]. */
   def operation(r: Reader): OpModel = {
     val src = r.opt(muxedAccount(r))
     val ty = r.i32()
@@ -298,142 +300,35 @@ object StellarXdr {
       details_json = "",
       result_code = "",
       trace_code = "")
+    // one method per arm: every `copy` of the wide OpModel costs hundreds of
+    // bytecode bytes, and one method holding all arms would pass HotSpot's
+    // 8 000-byte HugeMethodLimit and never be JIT-compiled
     ty match {
-      case 0 => // create account
-        val dest = accountId(r); val bal = r.i64()
-        base.copy(destination_key = Some(dest),
-          starting_balance_stroops = Some(bal))
-      case 1 => // payment
-        val dest = muxedAccount(r); val a = asset(r); val amt = r.i64()
-        base.copy(destination_key = Some(dest.key),
-          destination_muxed_id = dest.muxId, asset = Some(a),
-          amount_stroops = amt)
-      case 2 => // path payment strict receive
-        val sendAsset = asset(r); val sendMax = r.i64()
-        val dest = muxedAccount(r)
-        val destAsset = asset(r); val destAmount = r.i64()
-        val path = r.arr(asset(r))
-        base.copy(destination_key = Some(dest.key),
-          destination_muxed_id = dest.muxId,
-          source_asset = Some(sendAsset), source_max_stroops = Some(sendMax),
-          asset = Some(destAsset), amount_stroops = destAmount, path = path)
-      case 3 | 12 => // manage sell / buy offer
-        val selling = asset(r); val buying = asset(r); val amt = r.i64()
-        val pn = r.i32(); val pd = r.i32(); val offerId = r.i64()
-        base.copy(selling_asset = Some(selling), buying_asset = Some(buying),
-          amount_stroops = amt, price_n = Some(pn), price_d = Some(pd),
-          offer_id = Some(offerId))
-      case 4 => // create passive sell offer (no offer id in body)
-        val selling = asset(r); val buying = asset(r); val amt = r.i64()
-        val pn = r.i32(); val pd = r.i32()
-        base.copy(selling_asset = Some(selling), buying_asset = Some(buying),
-          amount_stroops = amt, price_n = Some(pn), price_d = Some(pd))
-      case 5 => // set options
-        val inflationDest = r.opt(accountId(r))
-        val clearF = r.opt(r.u32()); val setF = r.opt(r.u32())
-        val master = r.opt(r.u32())
-        val low = r.opt(r.u32()); val med = r.opt(r.u32()); val high = r.opt(r.u32())
-        val home = r.opt(r.str())
-        val signer = r.opt { val k = signerKey(r); val w = r.u32(); (k, w) }
-        base.copy(inflation_dest_key = inflationDest,
-          clear_flags = clearF.map(_.toInt), set_flags = setF.map(_.toInt),
-          master_weight = master.map(_.toInt),
-          low_threshold = low.map(_.toInt), med_threshold = med.map(_.toInt),
-          high_threshold = high.map(_.toInt), home_domain = home,
-          signer_key = signer.map(_._1),
-          signer_weight = signer.map(_._2.toInt))
-      case 6 => // change trust
-        val line = changeTrustAsset(r); val limit = r.i64()
-        line match {
-          case TrustAssetClassic(a) =>
-            base.copy(trust_asset = Some(a), trust_limit_stroops = Some(limit))
-          case TrustAssetPool(poolId) =>
-            base.copy(trust_limit_stroops = Some(limit),
-              trust_pool_id = Some(poolId))
-        }
-      case 7 => // allow trust
-        val trustor = accountId(r)
-        val code = r.i32() match {
-          case 1 => new String(r.bytes(4), "UTF-8").replace("\u0000", "")
-          case 2 => new String(r.bytes(12), "UTF-8").replace("\u0000", "")
-          case d => throw new XdrError(s"unsupported AssetCode type $d")
-        }
-        val authorize = r.u32()
-        base.copy(trustor_key = Some(trustor),
-          trust_asset = Some(AssetRef(
-            if (code.length <= 4) "credit_alphanum4" else "credit_alphanum12",
-            code, "")),
-          authorize_flags = Some(authorize.toInt))
-      case 8 => // account merge: body IS the destination MuxedAccount
-        val dest = muxedAccount(r)
-        base.copy(destination_key = Some(dest.key),
-          destination_muxed_id = dest.muxId)
+      case 0 => createAccountBody(r, base)
+      case 1 => paymentBody(r, base)
+      case 2 => pathPaymentStrictReceiveBody(r, base)
+      case 3 | 12 => manageOfferBody(r, base)
+      case 4 => passiveSellOfferBody(r, base)
+      case 5 => setOptionsBody(r, base)
+      case 6 => changeTrustBody(r, base)
+      case 7 => allowTrustBody(r, base)
+      case 8 => accountMergeBody(r, base)
       case 9 => base // inflation: empty body
-      case 10 => // manage data
-        val name = r.str(); val value = r.opt(r.varBytes())
-        base.copy(data_name = Some(name), data_value = value)
+      case 10 => manageDataBody(r, base)
       case 11 => // bump sequence
         base.copy(bump_to = Some(r.i64()))
-      case 13 => // path payment strict send
-        val sendAsset = asset(r); val sendAmount = r.i64()
-        val dest = muxedAccount(r)
-        val destAsset = asset(r); val destMin = r.i64()
-        val path = r.arr(asset(r))
-        base.copy(destination_key = Some(dest.key),
-          destination_muxed_id = dest.muxId,
-          source_asset = Some(sendAsset),
-          source_amount_stroops = Some(sendAmount),
-          destination_min_stroops = Some(destMin),
-          asset = Some(destAsset), path = path)
-      case 14 => // create claimable balance
-        val a = asset(r); val amt = r.i64()
-        val claimants = r.arr {
-          val d = r.i32()
-          if (d != 0) throw new XdrError(s"unsupported Claimant type $d")
-          val dest = accountId(r); val pred = claimPredicateBytes(r)
-          Claimant(dest, pred)
-        }
-        base.copy(cb_asset = Some(a), cb_amount_stroops = Some(amt),
-          claimants = claimants)
-      case 15 => // claim claimable balance
+      case 13 => pathPaymentStrictSendBody(r, base)
+      case 14 => createClaimableBalanceBody(r, base)
+      case 15 | 20 => // claim / clawback claimable balance
         base.copy(balance_id = Some(claimableBalanceId(r)))
       case 16 => // begin sponsoring future reserves
         base.copy(sponsored_id_key = Some(accountId(r)))
       case 17 => base // end sponsoring: empty body
-      case 18 => // revoke sponsorship
-        r.i32() match {
-          case 0 => decodeRevokeLedgerKey(r, base)
-          case 1 =>
-            val acct = accountId(r); val key = signerKey(r)
-            base.copy(revoke_signer_account_key = Some(acct),
-              revoke_signer_key = Some(key))
-          case d => throw new XdrError(s"unsupported RevokeSponsorship type $d")
-        }
-      case 19 => // clawback
-        val a = asset(r); val from = muxedAccount(r); val amt = r.i64()
-        base.copy(asset = Some(a), destination_key = Some(from.key),
-          destination_muxed_id = from.muxId, amount_stroops = amt)
-      case 20 => // clawback claimable balance
-        base.copy(balance_id = Some(claimableBalanceId(r)))
-      case 21 => // set trust line flags
-        val trustor = accountId(r); val a = asset(r)
-        val clearF = r.u32(); val setF = r.u32()
-        base.copy(trustor_key = Some(trustor), trust_asset = Some(a),
-          tl_clear_flags = Some(clearF.toInt), tl_set_flags = Some(setF.toInt))
-      case 22 => // liquidity pool deposit
-        val pool = r.bytes(32)
-        val maxA = r.i64(); val maxB = r.i64()
-        val minPn = r.i32(); val minPd = r.i32()
-        val maxPn = r.i32(); val maxPd = r.i32()
-        base.copy(pool_id = Some(pool), max_amount_a = Some(maxA),
-          max_amount_b = Some(maxB), min_price_n = Some(minPn),
-          min_price_d = Some(minPd), max_price_n = Some(maxPn),
-          max_price_d = Some(maxPd))
-      case 23 => // liquidity pool withdraw
-        val pool = r.bytes(32)
-        val amt = r.i64(); val minA = r.i64(); val minB = r.i64()
-        base.copy(pool_id = Some(pool), lp_shares_stroops = Some(amt),
-          min_amount_a = Some(minA), min_amount_b = Some(minB))
+      case 18 => revokeSponsorshipBody(r, base)
+      case 19 => clawbackBody(r, base)
+      case 21 => setTrustLineFlagsBody(r, base)
+      case 22 => lpDepositBody(r, base)
+      case 23 => lpWithdrawBody(r, base)
       case 24 => decodeInvokeHostFunction(r, base)
       case 25 => // extend footprint TTL: ExtensionPoint ‖ extendTo
         extensionPoint(r)
@@ -443,6 +338,169 @@ object StellarXdr {
         base
       case d => throw new XdrError(s"unknown operation type $d")
     }
+  }
+
+  private def createAccountBody(r: Reader, base: OpModel): OpModel = {
+    val dest = accountId(r); val bal = r.i64()
+    base.copy(destination_key = Some(dest),
+      starting_balance_stroops = Some(bal))
+  }
+
+  private def paymentBody(r: Reader, base: OpModel): OpModel = {
+    val dest = muxedAccount(r); val a = asset(r); val amt = r.i64()
+    base.copy(destination_key = Some(dest.key),
+      destination_muxed_id = dest.muxId, asset = Some(a),
+      amount_stroops = amt)
+  }
+
+  private def pathPaymentStrictReceiveBody(r: Reader,
+      base: OpModel): OpModel = {
+    val sendAsset = asset(r); val sendMax = r.i64()
+    val dest = muxedAccount(r)
+    val destAsset = asset(r); val destAmount = r.i64()
+    val path = r.arr(asset(r))
+    base.copy(destination_key = Some(dest.key),
+      destination_muxed_id = dest.muxId,
+      source_asset = Some(sendAsset), source_max_stroops = Some(sendMax),
+      asset = Some(destAsset), amount_stroops = destAmount, path = path)
+  }
+
+  /** Manage sell offer (3) and manage buy offer (12). */
+  private def manageOfferBody(r: Reader, base: OpModel): OpModel = {
+    val selling = asset(r); val buying = asset(r); val amt = r.i64()
+    val pn = r.i32(); val pd = r.i32(); val offerId = r.i64()
+    base.copy(selling_asset = Some(selling), buying_asset = Some(buying),
+      amount_stroops = amt, price_n = Some(pn), price_d = Some(pd),
+      offer_id = Some(offerId))
+  }
+
+  /** Create passive sell offer: no offer id in the body. */
+  private def passiveSellOfferBody(r: Reader, base: OpModel): OpModel = {
+    val selling = asset(r); val buying = asset(r); val amt = r.i64()
+    val pn = r.i32(); val pd = r.i32()
+    base.copy(selling_asset = Some(selling), buying_asset = Some(buying),
+      amount_stroops = amt, price_n = Some(pn), price_d = Some(pd))
+  }
+
+  private def setOptionsBody(r: Reader, base: OpModel): OpModel = {
+    val inflationDest = r.opt(accountId(r))
+    val clearF = r.opt(r.u32()); val setF = r.opt(r.u32())
+    val master = r.opt(r.u32())
+    val low = r.opt(r.u32()); val med = r.opt(r.u32()); val high = r.opt(r.u32())
+    val home = r.opt(r.str())
+    val signer = r.opt { val k = signerKey(r); val w = r.u32(); (k, w) }
+    base.copy(inflation_dest_key = inflationDest,
+      clear_flags = clearF.map(_.toInt), set_flags = setF.map(_.toInt),
+      master_weight = master.map(_.toInt),
+      low_threshold = low.map(_.toInt), med_threshold = med.map(_.toInt),
+      high_threshold = high.map(_.toInt), home_domain = home,
+      signer_key = signer.map(_._1),
+      signer_weight = signer.map(_._2.toInt))
+  }
+
+  private def changeTrustBody(r: Reader, base: OpModel): OpModel = {
+    val line = changeTrustAsset(r); val limit = r.i64()
+    line match {
+      case TrustAssetClassic(a) =>
+        base.copy(trust_asset = Some(a), trust_limit_stroops = Some(limit))
+      case TrustAssetPool(poolId) =>
+        base.copy(trust_limit_stroops = Some(limit),
+          trust_pool_id = Some(poolId))
+    }
+  }
+
+  private def allowTrustBody(r: Reader, base: OpModel): OpModel = {
+    val trustor = accountId(r)
+    val code = r.i32() match {
+      case 1 => new String(r.bytes(4), "UTF-8").replace("\u0000", "")
+      case 2 => new String(r.bytes(12), "UTF-8").replace("\u0000", "")
+      case d => throw new XdrError(s"unsupported AssetCode type $d")
+    }
+    val authorize = r.u32()
+    base.copy(trustor_key = Some(trustor),
+      trust_asset = Some(AssetRef(
+        if (code.length <= 4) "credit_alphanum4" else "credit_alphanum12",
+        code, "")),
+      authorize_flags = Some(authorize.toInt))
+  }
+
+  /** Account merge: the body IS the destination MuxedAccount. */
+  private def accountMergeBody(r: Reader, base: OpModel): OpModel = {
+    val dest = muxedAccount(r)
+    base.copy(destination_key = Some(dest.key),
+      destination_muxed_id = dest.muxId)
+  }
+
+  private def manageDataBody(r: Reader, base: OpModel): OpModel = {
+    val name = r.str(); val value = r.opt(r.varBytes())
+    base.copy(data_name = Some(name), data_value = value)
+  }
+
+  private def pathPaymentStrictSendBody(r: Reader, base: OpModel): OpModel = {
+    val sendAsset = asset(r); val sendAmount = r.i64()
+    val dest = muxedAccount(r)
+    val destAsset = asset(r); val destMin = r.i64()
+    val path = r.arr(asset(r))
+    base.copy(destination_key = Some(dest.key),
+      destination_muxed_id = dest.muxId,
+      source_asset = Some(sendAsset),
+      source_amount_stroops = Some(sendAmount),
+      destination_min_stroops = Some(destMin),
+      asset = Some(destAsset), path = path)
+  }
+
+  private def createClaimableBalanceBody(r: Reader,
+      base: OpModel): OpModel = {
+    val a = asset(r); val amt = r.i64()
+    val claimants = r.arr {
+      val d = r.i32()
+      if (d != 0) throw new XdrError(s"unsupported Claimant type $d")
+      val dest = accountId(r); val pred = claimPredicateBytes(r)
+      Claimant(dest, pred)
+    }
+    base.copy(cb_asset = Some(a), cb_amount_stroops = Some(amt),
+      claimants = claimants)
+  }
+
+  private def revokeSponsorshipBody(r: Reader, base: OpModel): OpModel =
+    r.i32() match {
+      case 0 => decodeRevokeLedgerKey(r, base)
+      case 1 =>
+        val acct = accountId(r); val key = signerKey(r)
+        base.copy(revoke_signer_account_key = Some(acct),
+          revoke_signer_key = Some(key))
+      case d => throw new XdrError(s"unsupported RevokeSponsorship type $d")
+    }
+
+  private def clawbackBody(r: Reader, base: OpModel): OpModel = {
+    val a = asset(r); val from = muxedAccount(r); val amt = r.i64()
+    base.copy(asset = Some(a), destination_key = Some(from.key),
+      destination_muxed_id = from.muxId, amount_stroops = amt)
+  }
+
+  private def setTrustLineFlagsBody(r: Reader, base: OpModel): OpModel = {
+    val trustor = accountId(r); val a = asset(r)
+    val clearF = r.u32(); val setF = r.u32()
+    base.copy(trustor_key = Some(trustor), trust_asset = Some(a),
+      tl_clear_flags = Some(clearF.toInt), tl_set_flags = Some(setF.toInt))
+  }
+
+  private def lpDepositBody(r: Reader, base: OpModel): OpModel = {
+    val pool = r.bytes(32)
+    val maxA = r.i64(); val maxB = r.i64()
+    val minPn = r.i32(); val minPd = r.i32()
+    val maxPn = r.i32(); val maxPd = r.i32()
+    base.copy(pool_id = Some(pool), max_amount_a = Some(maxA),
+      max_amount_b = Some(maxB), min_price_n = Some(minPn),
+      min_price_d = Some(minPd), max_price_n = Some(maxPn),
+      max_price_d = Some(maxPd))
+  }
+
+  private def lpWithdrawBody(r: Reader, base: OpModel): OpModel = {
+    val pool = r.bytes(32)
+    val amt = r.i64(); val minA = r.i64(); val minB = r.i64()
+    base.copy(pool_id = Some(pool), lp_shares_stroops = Some(amt),
+      min_amount_a = Some(minA), min_amount_b = Some(minB))
   }
 
   // ---- soroban operation bodies (`Stellar-transaction.x`) -------------------
@@ -609,21 +667,29 @@ object StellarXdr {
     -14 -> "TX_BAD_SPONSORSHIP", -15 -> "TX_BAD_MIN_SEQ_AGE_OR_GAP",
     -16 -> "TX_MALFORMED", -17 -> "TX_SOROBAN_INVALID")
 
-  def txResultCodeName(code: Int): String =
-    "TransactionResultCode" + camel(txCodeIdent.getOrElse(code,
-      throw new XdrError(s"unknown TransactionResultCode $code")))
+  /** The rendered names, built once: `camel` is far too slow to run per
+    * transaction and per operation result. */
+  private def named(prefix: String, idents: Map[Int, String]): Map[Int, String] =
+    idents.map { case (code, ident) => code -> (prefix + camel(ident)) }
+
+  private val txCodeName = named("TransactionResultCode", txCodeIdent)
+
+  def txResultCodeName(code: Int): String = txCodeName.getOrElse(code,
+    throw new XdrError(s"unknown TransactionResultCode $code"))
 
   private val opCodeIdent: Map[Int, String] = Map(
     0 -> "OP_INNER", -1 -> "OP_BAD_AUTH", -2 -> "OP_NO_ACCOUNT",
     -3 -> "OP_NOT_SUPPORTED", -4 -> "OP_TOO_MANY_SUBENTRIES",
     -5 -> "OP_EXCEEDED_WORK_LIMIT", -6 -> "OP_TOO_MANY_SPONSORING")
 
+  private val opCodeName = named("OperationResultCode", opCodeIdent)
+
   /** Go enum String() tables for the per-op-type trace codes: the enum TYPE
     * name plus the camel-cased value identifier, exactly the shape the
     * reference emits (`operation.go:168-230`; golden:
     * "ManageSellOfferResultCodeManageSellOfferLowReserve"). */
-  private val traceTables: Map[Int, (String, Map[Int, String])] = {
-    def t(name: String, idents: (Int, String)*) = (name, idents.toMap)
+  private val traceTables: Map[Int, Map[Int, String]] = {
+    def t(name: String, idents: (Int, String)*) = named(name, idents.toMap)
     Map(
       0 -> t("CreateAccountResultCode",
         0 -> "CREATE_ACCOUNT_SUCCESS", -1 -> "CREATE_ACCOUNT_MALFORMED",
@@ -808,10 +874,10 @@ object StellarXdr {
     // union's CreatePassiveSellOfferResult IS a *ManageSellOfferResult, so
     // its code names carry the manage-sell enum name
     val table = if (opType == 4) 3 else opType
-    val (enumName, idents) = traceTables.getOrElse(table,
+    val names = traceTables.getOrElse(table,
       throw new XdrError(s"no trace-code table for op type $opType"))
-    enumName + camel(idents.getOrElse(code,
-      throw new XdrError(s"unknown code $code for op type $opType")))
+    names.getOrElse(code,
+      throw new XdrError(s"unknown code $code for op type $opType"))
   }
 
   private def claimAtom(r: Reader): ClaimAtom = r.i32() match {
@@ -859,8 +925,8 @@ object StellarXdr {
     * the result stream carries its own discriminator when opINNER. */
   private def operationResult(r: Reader): OpResultX = {
     val rc = r.i32()
-    val resultName = "OperationResultCode" + camel(opCodeIdent.getOrElse(rc,
-      throw new XdrError(s"unknown OperationResultCode $rc")))
+    val resultName = opCodeName.getOrElse(rc,
+      throw new XdrError(s"unknown OperationResultCode $rc"))
     if (rc != 0) return emptyOpResult.copy(resultCode = resultName)
     val ty = r.i32()
     val code = r.i32()
@@ -1138,23 +1204,36 @@ object StellarXdr {
 
   private def b64(s: String): Array[Byte] = Base64.getDecoder.decode(s)
 
-  /** Envelope + result → the model's TxModel: identical shape to what the
-    * fixture generator fills, so every downstream transform (P1–P5, trades,
-    * effects) runs unchanged on real bytes. */
+  /** One transaction's blobs, base64 each → the model's TxModel. The meta
+    * blobs are optional (empty string ⇒ absent). */
   def decodeTx(in: TxInput,
       networkId: Array[Byte] = PublicNetworkId): TxModel = {
-    val env = decodeTxEnvelope(b64(in.envelopeB64), networkId)
-    val res = decodeTransactionResult(b64(in.resultB64))
-    // optional meta blobs → per-op change rows (offer pre-states, line
-    // kinds) and the fee-law balance pairs
-    val meta = Option(in.metaB64).filter(_.nonEmpty)
-      .map(m => decodeTxMeta(b64(m)))
-    val feeChanges = Option(in.feeMetaB64).filter(_.nonEmpty)
-      .map(m => balanceChanges(decodeFeeMeta(b64(m)))).getOrElse(Nil)
-    // LCM v2 postTxApplyFeeProcessing: the fee refund that pre-v2 rode in
-    // the meta's txChangesAfter — surfaced in the same place (changes_after)
-    val postFeeChanges = Option(in.postFeeMetaB64).filter(_.nonEmpty)
-      .map(m => balanceChanges(decodeFeeMeta(b64(m)))).getOrElse(Nil)
+    def optional(s: String): Option[Array[Byte]] =
+      Option(s).filter(_.nonEmpty).map(b64)
+    assembleTx(decodeTxEnvelope(b64(in.envelopeB64), networkId),
+      decodeTransactionResult(b64(in.resultB64)),
+      optional(in.metaB64).map(decodeTxMeta),
+      optional(in.feeMetaB64).map(decodeFeeMeta).getOrElse(Nil),
+      optional(in.postFeeMetaB64).map(decodeFeeMeta).getOrElse(Nil),
+      in.envelopeB64, in.resultB64, in.metaB64, in.feeMetaB64)
+  }
+
+  /** Decoded envelope + result (+ meta, fee changes) → the model's TxModel:
+    * identical shape to what the fixture generator fills, so every
+    * downstream transform (P1–P5, trades, effects) runs unchanged on real
+    * bytes. The one assembly law of both the per-blob entry [[decodeTx]]
+    * and the datastore decode [[decodeLedgerCloseMeta]]; the base64
+    * strings are the blobs the row carries. `postFee` is LCM v2's
+    * `postTxApplyFeeProcessing`: the fee refund that pre-v2 rode in the
+    * meta's txChangesAfter, surfaced in the same place (changes_after). */
+  private def assembleTx(env: TxEnvelopeX, res: TxResultX,
+      meta: Option[TxMetaX], fee: Seq[(Int, EntryX)],
+      postFee: Seq[(Int, EntryX)], envelopeB64: String, resultB64: String,
+      metaB64: String, feeMetaB64: String): TxModel = {
+    // meta → per-op change rows (offer pre-states, line kinds); fee meta →
+    // the fee-law balance pairs
+    val feeChanges = balanceChanges(fee)
+    val postFeeChanges = balanceChanges(postFee)
     val ops = env.operations.zipWithIndex.map { case (op0, i) =>
       // allow_trust types its line by (code, issuer = acting source): the
       // body carries only the code (`operation.go` allow-trust details), so
@@ -1246,10 +1325,10 @@ object StellarXdr {
       time_max = env.precond.timeBounds.map(_.max),
       ledger_min = env.precond.ledgerBounds.map(_.min),
       ledger_max = env.precond.ledgerBounds.map(_.max),
-      envelope_b64 = in.envelopeB64,
-      result_b64 = in.resultB64,
-      meta_b64 = in.metaB64,
-      fee_meta_b64 = in.feeMetaB64,
+      envelope_b64 = envelopeB64,
+      result_b64 = resultB64,
+      meta_b64 = metaB64,
+      fee_meta_b64 = feeMetaB64,
       signers = if (env.isFeeBump) env.feeBumpSignatures else env.signatures,
       operations = opsWithChanges,
       fee_changes = feeChanges,
@@ -2039,10 +2118,18 @@ object StellarXdr {
   def decodeLedgerRow(headerB64: String, txs: Seq[TxInput],
       networkId: Array[Byte] = PublicNetworkId): LedgerRow = {
     val headerBytes = b64(headerB64)
-    val h = decodeLedgerHeader(headerBytes)
+    assembleLedger(decodeLedgerHeader(headerBytes), Hashes.sha256(headerBytes),
+      headerB64, txs.map(decodeTx(_, networkId)))
+  }
+
+  /** Decoded header + its hash + its transactions → a LedgerRow; the two
+    * LedgerCloseMeta-only fields default to 0 for a bare header. */
+  private def assembleLedger(h: LedgerHeaderX, hash: Array[Byte],
+      headerB64: String, txs: Seq[TxModel], sorobanFeeWrite1kb: Long = 0L,
+      bucketListSize: Long = 0L): LedgerRow =
     LedgerRow(
       sequence = h.ledgerSeq,
-      ledger_hash = Hashes.sha256(headerBytes),
+      ledger_hash = hash,
       previous_ledger_hash = h.previousLedgerHash,
       header_b64 = headerB64,
       closed_at = new Timestamp(h.closeTime * 1000L),
@@ -2052,37 +2139,39 @@ object StellarXdr {
       base_reserve = h.baseReserve,
       max_tx_set_size = h.maxTxSetSize,
       protocol_version = h.ledgerVersion,
-      soroban_fee_write_1kb = 0L,
+      soroban_fee_write_1kb = sorobanFeeWrite1kb,
       node_id_key = h.nodeId.orNull,
       signature = h.signature.orNull,
-      bucket_list_size = 0L,
-      transactions = txs.map(decodeTx(_, networkId)))
-  }
+      bucket_list_size = bucketListSize,
+      transactions = txs)
 
   // ---- ledger close meta (the datastore wire) --------------------------------
 
-  private def b64e(b: Array[Byte]): String =
-    Base64.getEncoder.encodeToString(b)
+  /** A structure decoded in place, with the base64 of the bytes it spans
+    * (the blob the row carries beside the decoded fields). */
+  private final case class Spanned[T](value: T, b64: String)
 
-  /** Decode one TransactionEnvelope IN PLACE (inside a larger buffer),
-    * returning (computed hash hex, raw slice). */
-  private def envelopeSlice(r: Reader,
-      networkId: Array[Byte]): (String, Array[Byte]) = {
+  private def spanned[T](r: Reader)(f: => T): Spanned[T] = {
     val start = r.offset
-    val env = decodeTxEnvelopeFrom(r, r.buf, networkId)
-    (Hashes.hex(env.hash),
-      java.util.Arrays.copyOfRange(r.buf, start, r.offset))
+    val v = f
+    val enc = Base64.getEncoder.encode(
+      java.nio.ByteBuffer.wrap(r.buf, start, r.offset - start))
+    Spanned(v, new String(enc.array(), 0, enc.remaining(),
+      java.nio.charset.StandardCharsets.ISO_8859_1))
   }
 
-  private def slice[T](r: Reader)(f: => T): Array[Byte] = {
-    val start = r.offset; f
-    java.util.Arrays.copyOfRange(r.buf, start, r.offset)
+  /** Decode one TransactionEnvelope IN PLACE (inside a larger buffer),
+    * keyed by its hash hex — the key `txProcessing` pairs on. */
+  private def envelopeIn(r: Reader,
+      networkId: Array[Byte]): (String, Spanned[TxEnvelopeX]) = {
+    val env = spanned(r)(decodeTxEnvelopeFrom(r, r.buf, networkId))
+    (Hashes.hex(env.value.hash), env)
   }
 
   /** GeneralizedTransactionSet (v1): phases → components → envelopes.
     * Parallel phases (proto 23 TransactionPhase v1) fail loudly. */
   private def generalizedTxSet(r: Reader,
-      networkId: Array[Byte]): Seq[(String, Array[Byte])] = {
+      networkId: Array[Byte]): Seq[(String, Spanned[TxEnvelopeX])] = {
     val v = r.i32()
     if (v != 1) throw new XdrError(s"unsupported GeneralizedTransactionSet v$v")
     r.bytes(32) // previousLedgerHash
@@ -2094,7 +2183,7 @@ object StellarXdr {
             if (compType != 0)
               throw new XdrError(s"unsupported TxSetComponent type $compType")
             r.opt(r.i64()) // baseFee*
-            r.arr(envelopeSlice(r, networkId))
+            r.arr(envelopeIn(r, networkId))
           }.flatten
         case d => throw new XdrError(s"unsupported TransactionPhase v$d")
       }
@@ -2147,8 +2236,10 @@ object StellarXdr {
   }
 
   /** One `LedgerCloseMeta` (v0 classic / v1 protocol-20+ / v2 protocol-23+
-    * datastore layouts) → a LedgerRow via the same per-tx decode the frame
-    * path uses. The envelopes live in the TX SET (arbitrary order);
+    * datastore layouts) → a LedgerRow in one pass: each structure is decoded
+    * once, where it lies, and the per-tx model comes from the same
+    * [[assembleTx]] the per-blob [[decodeTx]] uses. The envelopes live in
+    * the TX SET (arbitrary order);
     * `txProcessing` carries apply order keyed by transaction hash — the
     * pairing the reference's ingest library performs. The self-hash law
     * (LHHE.hash == sha256 of the header bytes) is enforced, not trusted.
@@ -2179,15 +2270,15 @@ object StellarXdr {
     // LedgerHeaderHistoryEntry: hash ‖ header ‖ ext
     val claimedHash = r.bytes(32)
     val headerStart = r.offset
-    decodeLedgerHeaderFrom(r)
-    val headerBytes =
-      java.util.Arrays.copyOfRange(r.buf, headerStart, r.offset)
+    val header = spanned(r)(ledgerHeaderFrom(r))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(r.buf, headerStart, r.offset - headerStart)
     skipExtZero(r)
-    if (!java.util.Arrays.equals(claimedHash, Hashes.sha256(headerBytes)))
+    if (!java.util.Arrays.equals(claimedHash, md.digest()))
       throw new XdrError("LedgerHeaderHistoryEntry hash != sha256(header)")
-    val envelopes: Map[String, Array[Byte]] = (if (v == 0) {
+    val envelopes: Map[String, Spanned[TxEnvelopeX]] = (if (v == 0) {
       // TransactionSet: previousLedgerHash ‖ txs<>
-      r.bytes(32); r.arr(envelopeSlice(r, networkId))
+      r.bytes(32); r.arr(envelopeIn(r, networkId))
     } else generalizedTxSet(r, networkId)).toMap
     val txs = r.arr { // txProcessing, apply order
       if (v == 2) r.i32() match { // TransactionResultMetaV1.ext
@@ -2195,15 +2286,14 @@ object StellarXdr {
         case d => throw new XdrError(s"unsupported TransactionResultMetaV1 ext $d")
       }
       val txHash = Hashes.hex(r.bytes(32))
-      val resultB = slice(r)(decodeTxResultFrom(r, allowFeeBump = true))
-      val feeB = slice(r)(ledgerEntryChanges(r))
-      val metaB = slice(r)(txMetaFrom(r))
-      val postFeeB =
-        if (v == 2) slice(r)(ledgerEntryChanges(r)) else Array.emptyByteArray
-      val envB = envelopes.getOrElse(txHash,
+      val result = spanned(r)(decodeTxResultFrom(r, allowFeeBump = true))
+      val fee = spanned(r)(ledgerEntryChanges(r))
+      val meta = spanned(r)(txMetaFrom(r))
+      val postFee = if (v == 2) ledgerEntryChanges(r) else Nil
+      val env = envelopes.getOrElse(txHash,
         throw new XdrError(s"txProcessing hash $txHash not in tx set"))
-      TxInput(b64e(envB), b64e(resultB), b64e(metaB), b64e(feeB),
-        if (postFeeB.isEmpty) "" else b64e(postFeeB))
+      assembleTx(env.value, result.value, Some(meta.value), fee.value,
+        postFee, env.b64, result.b64, meta.b64, fee.b64)
     }
     r.arr { ledgerUpgrade(r); ledgerEntryChanges(r) } // upgradesProcessing
     r.arr(scpHistoryEntry(r)) // scpInfo: consumed, dropped (reference law)
@@ -2216,30 +2306,8 @@ object StellarXdr {
       bucketListSize = r.u64() // totalByteSizeOfLiveSorobanState
       r.arr(ledgerKey(r)) // evictedKeys (TTL + code/data, post-proto-23)
     }
-    decodeLedgerRow(b64e(headerBytes), txs, networkId).copy(
-      soroban_fee_write_1kb = sorobanFeeWrite1kb,
-      bucket_list_size = bucketListSize)
-  }
-
-  private def decodeLedgerHeaderFrom(r: Reader): Unit = {
-    r.u32(); r.bytes(32) // version, previousLedgerHash
-    r.bytes(32); r.u64() // txSetHash, closeTime
-    val n = r.i32(); (0 until n).foreach(_ => r.varBytes()) // upgrades
-    r.i32() match {
-      case 0 =>
-      case 1 => accountId(r); r.varBytes()
-      case d => throw new XdrError(s"unsupported StellarValue ext $d")
-    }
-    r.bytes(32); r.bytes(32) // txSetResultHash, bucketListHash
-    r.u32(); r.i64(); r.i64() // seq, totalCoins, feePool
-    r.u32(); r.u64() // inflationSeq, idPool
-    r.u32(); r.u32(); r.u32() // baseFee, baseReserve, maxTxSetSize
-    r.bytes(128) // skipList
-    r.i32() match {
-      case 0 =>
-      case 1 => r.u32()
-      case d => throw new XdrError(s"unsupported LedgerHeader ext $d")
-    }
+    assembleLedger(header.value, claimedHash, header.b64, txs,
+      sorobanFeeWrite1kb, bucketListSize)
   }
 
   /** `LedgerCloseMetaBatch` — the datastore object payload (1 ledger/file,

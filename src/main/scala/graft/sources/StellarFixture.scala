@@ -70,231 +70,309 @@ object StellarFixture {
   }
 
   /** Per-type envelope/result payloads mirroring the reference's details
-    * inputs (`operation.go:584-1173`) — deterministic from (l, t, o). */
+    * inputs (`operation.go:584-1173`) — deterministic from (l, t, o). One
+    * method per arm keeps each under HotSpot's 8 000-byte HugeMethodLimit,
+    * so the generator is JIT-compiled (`MethodSizeSpec`). */
   private def withTypePayload(base: OpModel, l: Long, t: Int, o: Int): OpModel = {
-    val ty = base.op_type
-    def cred(code: String, iss: Int) =
-      AssetRef("credit_alphanum4", code, s"ISS$iss")
-    ty match {
-      case 0 => base.copy(
-        starting_balance_stroops = Some(25000000L + o * 10000000L),
-        destination_key = Some(keyOf(s"dest-$l-$t-$o")))
-      case 2 | 13 => base.copy(
-        destination_key = Some(keyOf(s"dest-$l-$t-$o")),
-        asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
-          else cred(s"DST$o", o % 3)),
-        source_asset = Some(cred(s"SRC$o", (o + 1) % 3)),
-        path = if (o % 2 == 0) Seq(cred(s"HOP$o", o % 3), AssetRef("native", "", ""))
-          else Seq.empty,
-        source_amount_stroops = Some(900000L * (o + 1)),
-        source_max_stroops = if (ty == 2) Some(1200000L * (o + 1)) else None,
-        destination_min_stroops = if (ty == 13) Some(800000L * (o + 1)) else None)
-      case 3 | 4 | 12 => base.copy(
-        offer_id = if (ty == 4) None else Some(if (o % 3 == 0) 0L else 6000L + o),
-        selling_asset = Some(cred(s"SL$o", o % 3)),
-        // alternate native / credit buying lines so the non-native
-        // buying_asset_code/issuer detail keys (present on the
-        // reference's golden offer rows) ride the fixtures too
-        buying_asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
-          else cred(s"BY$o", (o + 1) % 3)),
-        price_n = Some(1 + o), price_d = Some(7 + t % 3))
-      case 5 => base.copy(
-        inflation_dest_key = if (o % 2 == 0) Some(keyOf(s"infl-$l-$t")) else None,
-        set_flags = if (o % 2 == 0) Some(5) else None, // required|immutable
-        clear_flags = if (o % 2 == 1) Some(2) else None, // revocable
-        master_weight = Some(o % 256),
-        low_threshold = Some(1), med_threshold = Some(2 + o % 3),
-        high_threshold = Some(3 + o % 3),
-        home_domain = if (o % 3 != 2) Some(s"dom$o.example") else None,
-        signer_key = if (o % 2 == 0) Some(keyOf(s"signer-$l-$t-$o")) else None,
-        signer_weight = if (o % 2 == 0) Some(10 - o % 5) else None)
-      case 6 =>
-        // plant the trustline ledger-entry change the reference's effect
-        // derivation reads (created/updated/removed from pre/post presence,
-        // effects.go:637-695); pool-share lines get no change entry so the
-        // limit-heuristic fallback path stays exercised
-        val removed = (l + t) % 4 == 1
-        val lineIsPool = o % 3 == 2
-        base.copy(
-          trust_asset = if (!lineIsPool) Some(cred(s"TR$o", o % 3)) else None,
-          trust_pool_id = if (lineIsPool) Some(keyOf(s"pool-$l")) else None,
-          trust_limit_stroops = Some(if (removed) 0L else 500000000L * (o + 1)),
-          changes = if (!lineIsPool)
-            base.changes :+ OpChange("trustline",
-              None, None, None, None, None, None,
-              change_kind = Some(
-                if (removed) 2 else if ((l + t + o) % 2 == 0) 0 else 1),
-              tl_asset_type = Some("credit_alphanum4"))
-          else
-            // pool-share lines create/remove the pool entry itself:
-            // kind 0 → liquidity_pool_created (93), 2 → removed (94),
-            // 1 (update) → no LP effect (`addLedgerEntryLiquidityPoolEffects`)
-            base.changes :+ OpChange("liquidity_pool",
-              None, None, Some(keyOf(s"pool-$l")), None, None, Some(30L),
-              post_reserve_a = Some(7000000L + o),
-              post_reserve_b = Some(3000000L + o),
-              post_total_shares = Some(5000000L + o),
-              pool_asset_a = Some(AssetRef("native", "", "")),
-              pool_asset_b = Some(cred(s"PL${l % 4}", (l % 3).toInt)),
-              change_kind = Some(
-                if (removed) 2 else if ((l + t + o) % 2 == 0) 0 else 1)))
-      case 7 => base.copy(
-        trust_asset = Some(cred(s"AL$o", o % 3)),
-        trustor_key = Some(keyOf(s"trustor-$l-$t-$o")),
-        authorize_flags = Some(Seq(1, 2, 4)(o % 3)))
+    base.op_type match {
+      case 0 => createAccountPayload(base, l, t, o)
+      case 2 | 13 => pathPaymentPayload(base, l, t, o)
+      case 3 | 4 | 12 => offerPayload(base, l, t, o)
+      case 5 => setOptionsPayload(base, l, t, o)
+      case 6 => changeTrustPayload(base, l, t, o)
+      case 7 => allowTrustPayload(base, l, t, o)
       case 8 => base.copy(destination_key = Some(keyOf(s"dest-$l-$t-$o")))
-      case 9 => base.copy(inflation_payouts = Seq(
-        InflationPayout(keyOf(s"infl-$l-$t-$o-0"), 8000000L + o),
-        InflationPayout(keyOf(s"infl-$l-$t-$o-1"), 16000000L + o)))
-      case 10 => base.copy(
-        data_name = Some(s"cfg-$o"),
-        data_value = if (o % 2 == 0) Some(keyOf(s"val-$l-$t-$o").take(8)) else None,
-        // the entry change that classifies created-vs-updated
-        // (`addManageDataEffects` wraps the DATA entry change kind);
-        // half the value-bearing ops carry no change → the created
-        // fallback arm stays on the model too
-        changes =
-          if (o % 2 == 0 && (l + t) % 2 == 0)
-            base.changes :+ graft.model.LedgerModel.OpChange(
-              entry_type = "data", seller_key = None, offer_id = None,
-              pool_id = None, pre_price_n = None, pre_price_d = None,
-              pre_pool_fee = None,
-              change_kind = Some(((l + o) % 2).toInt))
-          else base.changes)
+      case 9 => inflationPayload(base, l, t, o)
+      case 10 => manageDataPayload(base, l, t, o)
       case 11 => base.copy(bump_to = Some(l * 1000000L + t * 100L + o))
-      case 14 => base.copy(
-        cb_asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
-          else cred(s"CB$o", o % 3)),
-        cb_amount_stroops = Some(30000000L * (o + 1)),
-        balance_id = Some(keyOf(s"cb-$l-$t-$o")),
-        claimants = Seq(
-          Claimant(keyOf(s"claimant-$l-$t-$o-0"),
-            graft.codec.ClaimPredicate.encode(
-              graft.codec.ClaimPredicate.Unconditional)),
-          Claimant(keyOf(s"claimant-$l-$t-$o-1"),
-            graft.codec.ClaimPredicate.encode(
-              graft.codec.ClaimPredicate.And(Seq(
-                graft.codec.ClaimPredicate.AbsBefore(1700000000L + o),
-                graft.codec.ClaimPredicate.Not(Some(
-                  graft.codec.ClaimPredicate.RelBefore(3600L + o)))))))))
-      case 15 | 20 => base.copy(
-        balance_id = Some(keyOf(s"cb-$l-$t-$o")),
-        // claimed/clawed balance entry pre-state (amount + asset)
-        cb_asset = Some(cred(s"CB$o", o % 3)),
-        cb_amount_stroops = Some(20000000L * (o + 1)))
-      case 16 => base.copy(
-        sponsored_id_key = Some(keyOf(s"sponsoree-$l-$t-$o")),
-        changes = base.changes :+ sponsorshipChange(l, t, o))
+      case 14 => createClaimableBalancePayload(base, l, t, o)
+      case 15 | 20 => claimedBalancePayload(base, l, t, o)
+      case 16 => beginSponsoringPayload(base, l, t, o)
       case 17 => base.copy(changes = base.changes :+ sponsorshipChange(l, t, o))
-      case 18 =>
-        val withSp = base.copy(
-          changes = base.changes :+ sponsorshipChange(l, t, o))
-        if (o % 2 == 0) withSp.copy(
-          revoke_signer_account_key = Some(keyOf(s"racct-$l-$t-$o")),
-          revoke_signer_key = Some(keyOf(s"rsigner-$l-$t-$o")))
-        else if (o % 4 == 1) withSp.copy(
-          revoke_account_id_key = Some(keyOf(s"racct-$l-$t-$o")))
-        else withSp.copy(revoke_offer_id = Some(8000L + o))
-      case 21 =>
-        // clear-flags ops on even ledgers additionally revoke LP shares:
-        // an LP product-delta change plus one created claimable balance
-        // reclaiming reserve asset A (`addLiquidityPoolRevokedEffect`)
-        val revoke = o % 2 == 1 && l % 2 == 0
-        base.copy(
-          trust_asset = Some(cred(s"TF$o", o % 3)),
-          trustor_key = Some(keyOf(s"trustor-$l-$t-$o")),
-          tl_set_flags = if (o % 2 == 0) Some(1) else None, // authorized
-          tl_clear_flags = if (o % 2 == 1) Some(6) else None, // maintain|clawback
-          changes = if (revoke) base.changes ++ Seq(
-            OpChange("liquidity_pool", None, None, Some(keyOf(s"pool-$l")),
-              None, None, Some(30L),
-              pre_reserve_a = Some(900000000L + o),
-              post_reserve_a = Some(600000000L + o),
-              pre_reserve_b = Some(400000000L), post_reserve_b = Some(250000000L),
-              pre_total_shares = Some(80000000L),
-              post_total_shares = Some(50000000L),
-              pool_asset_a = Some(cred(s"RV$o", o % 3)),
-              pool_asset_b = Some(AssetRef("native", "", ""))),
-            // TWO created balances, planted in NON-sorted order (alphanum4
-            // reserve A first, native reserve B second): the effect emitter
-            // must sort by asset — native first — before fanning out, or the
-            // effect indices diverge from the reference (effects.go:1176)
-            OpChange("claimable_balance", None, None, None, None, None, None,
-              cb_revocation = Some(RevokedCb(
-                keyOf(s"cb-rev-$l-$t-$o"), 300000000L - o,
-                cred(s"RV$o", o % 3), keyOf(s"trustor-$l-$t-$o"),
-                graft.codec.ClaimPredicate.encode(
-                  graft.codec.ClaimPredicate.Unconditional)))),
-            OpChange("claimable_balance", None, None, None, None, None, None,
-              cb_revocation = Some(RevokedCb(
-                keyOf(s"cb-revb-$l-$t-$o"), 150000000L,
-                AssetRef("native", "", ""), keyOf(s"trustor-$l-$t-$o"),
-                graft.codec.ClaimPredicate.encode(
-                  graft.codec.ClaimPredicate.Unconditional)))))
-          else base.changes)
-      case 22 => base.copy(
-        pool_id = Some(keyOf(s"pool-$l")),
-        max_amount_a = Some(40000000L + o), max_amount_b = Some(50000000L + o),
-        min_price_n = Some(1), min_price_d = Some(2),
-        max_price_n = Some(3), max_price_d = Some(1),
-        changes = base.changes :+ lpDepositChange(l, deposit = true, o))
-      case 23 => base.copy(
-        pool_id = Some(keyOf(s"pool-$l")),
-        min_amount_a = Some(1000000L + o), min_amount_b = Some(2000000L + o),
-        lp_shares_stroops = Some(7000000L + o),
-        changes = base.changes :+ lpDepositChange(l, deposit = false, o))
-      case 24 =>
-        val fn = Seq("invoke_contract", "create_contract", "upload_wasm",
-          "create_contract_v2")(o % 4)
-        base.copy(
-          host_fn_type = Some(fn),
-          soroban_contract_id =
-            if (fn != "upload_wasm") Some(keyOf(s"contract-$l-$t-$o")) else None,
-          preimage_from_address_key =
-            if (fn == "create_contract") Some(keyOf(s"deployer-$l-$t-$o")) else None,
-          preimage_from_asset =
-            if (fn == "create_contract_v2")
-              Some(AssetRef("credit_alphanum4", s"WR$o", s"ISS${o % 3}"))
-            else None,
-          parameters_xdr = if (fn == "invoke_contract") Seq(
-            graft.codec.ScVal.encode(graft.codec.ScVal.AddrContract(
-              keyOf(s"contract-$l-$t-$o"))),
-            graft.codec.ScVal.encode(graft.codec.ScVal.Sym("transfer")),
-            graft.codec.ScVal.encode(graft.codec.ScVal.U64(100L + o)))
-          else Seq.empty,
-          // SAC events in the meta: a transfer + a burn, plus one junk event
-          // the parser must skip (`NewStellarAssetContractEvent` err branch)
-          sac_events = if (fn == "invoke_contract") {
-            import graft.codec.ScVal._
-            val cid = keyOf(s"contract-$l-$t-$o")
-            Seq(
-              SacEventRaw(cid,
-                Seq(encode(Sym("transfer")),
-                  encode(AddrAccount(keyOf(s"acct-$l-$t"))),
-                  encode(AddrContract(cid)),
-                  encode(Str(s"TK$o:ISS${o % 3}"))),
-                encode(I128(0L, 5000001L + o))),
-              SacEventRaw(cid,
-                Seq(encode(Sym("burn")),
-                  encode(AddrAccount(keyOf(s"acct-$l-$t"))),
-                  encode(Str("native"))),
-                encode(I128(0L, 700003L + o))),
-              SacEventRaw(cid,
-                Seq(encode(Sym("custom_event")), encode(U32(1))),
-                encode(Sym("not_an_amount"))))
-          } else Seq.empty)
-      case 25 => base.copy(
-        extend_to = Some(10000L + o),
-        changes = base.changes ++ (0 to o % 2).map(k =>
-          OpChange("ttl", None, None, None, None, None, None,
-            ttl_key_hash = Some(keyOf(s"ttlkey-$l-$t-$o-$k")))))
-      case 26 => base.copy(
-        changes = base.changes :+ OpChange("ttl",
-          None, None, None, None, None, None,
-          ttl_key_hash = Some(keyOf(s"ttlkey-$l-$t-$o-0"))))
+      case 18 => revokeSponsorshipPayload(base, l, t, o)
+      case 21 => setTrustLineFlagsPayload(base, l, t, o)
+      case 22 => lpDepositPayload(base, l, t, o)
+      case 23 => lpWithdrawPayload(base, l, t, o)
+      case 24 => invokeHostFunctionPayload(base, l, t, o)
+      case 25 => extendTtlPayload(base, l, t, o)
+      case 26 => restoreFootprintPayload(base, l, t, o)
       case _ => base // 1/19 carry no extra envelope payload here
     }
   }
+
+  private def createAccountPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      starting_balance_stroops = Some(25000000L + o * 10000000L),
+      destination_key = Some(keyOf(s"dest-$l-$t-$o")))
+
+  private def pathPaymentPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    val ty = base.op_type
+    base.copy(
+      destination_key = Some(keyOf(s"dest-$l-$t-$o")),
+      asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
+        else cred(s"DST$o", o % 3)),
+      source_asset = Some(cred(s"SRC$o", (o + 1) % 3)),
+      path = if (o % 2 == 0) Seq(cred(s"HOP$o", o % 3), AssetRef("native", "", ""))
+        else Seq.empty,
+      source_amount_stroops = Some(900000L * (o + 1)),
+      source_max_stroops = if (ty == 2) Some(1200000L * (o + 1)) else None,
+      destination_min_stroops = if (ty == 13) Some(800000L * (o + 1)) else None)
+  }
+
+  private def offerPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    val ty = base.op_type
+    base.copy(
+      offer_id = if (ty == 4) None else Some(if (o % 3 == 0) 0L else 6000L + o),
+      selling_asset = Some(cred(s"SL$o", o % 3)),
+      // alternate native / credit buying lines so the non-native
+      // buying_asset_code/issuer detail keys (present on the
+      // reference's golden offer rows) ride the fixtures too
+      buying_asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
+        else cred(s"BY$o", (o + 1) % 3)),
+      price_n = Some(1 + o), price_d = Some(7 + t % 3))
+  }
+
+  private def setOptionsPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      inflation_dest_key = if (o % 2 == 0) Some(keyOf(s"infl-$l-$t")) else None,
+      set_flags = if (o % 2 == 0) Some(5) else None, // required|immutable
+      clear_flags = if (o % 2 == 1) Some(2) else None, // revocable
+      master_weight = Some(o % 256),
+      low_threshold = Some(1), med_threshold = Some(2 + o % 3),
+      high_threshold = Some(3 + o % 3),
+      home_domain = if (o % 3 != 2) Some(s"dom$o.example") else None,
+      signer_key = if (o % 2 == 0) Some(keyOf(s"signer-$l-$t-$o")) else None,
+      signer_weight = if (o % 2 == 0) Some(10 - o % 5) else None)
+
+  private def changeTrustPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    // plant the trustline ledger-entry change the reference's effect
+    // derivation reads (created/updated/removed from pre/post presence,
+    // effects.go:637-695); pool-share lines get no change entry so the
+    // limit-heuristic fallback path stays exercised
+    val removed = (l + t) % 4 == 1
+    val lineIsPool = o % 3 == 2
+    base.copy(
+      trust_asset = if (!lineIsPool) Some(cred(s"TR$o", o % 3)) else None,
+      trust_pool_id = if (lineIsPool) Some(keyOf(s"pool-$l")) else None,
+      trust_limit_stroops = Some(if (removed) 0L else 500000000L * (o + 1)),
+      changes = if (!lineIsPool)
+        base.changes :+ OpChange("trustline",
+          None, None, None, None, None, None,
+          change_kind = Some(
+            if (removed) 2 else if ((l + t + o) % 2 == 0) 0 else 1),
+          tl_asset_type = Some("credit_alphanum4"))
+      else
+        // pool-share lines create/remove the pool entry itself:
+        // kind 0 → liquidity_pool_created (93), 2 → removed (94),
+        // 1 (update) → no LP effect (`addLedgerEntryLiquidityPoolEffects`)
+        base.changes :+ OpChange("liquidity_pool",
+          None, None, Some(keyOf(s"pool-$l")), None, None, Some(30L),
+          post_reserve_a = Some(7000000L + o),
+          post_reserve_b = Some(3000000L + o),
+          post_total_shares = Some(5000000L + o),
+          pool_asset_a = Some(AssetRef("native", "", "")),
+          pool_asset_b = Some(cred(s"PL${l % 4}", (l % 3).toInt)),
+          change_kind = Some(
+            if (removed) 2 else if ((l + t + o) % 2 == 0) 0 else 1)))
+  }
+
+  private def allowTrustPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      trust_asset = Some(cred(s"AL$o", o % 3)),
+      trustor_key = Some(keyOf(s"trustor-$l-$t-$o")),
+      authorize_flags = Some(Seq(1, 2, 4)(o % 3)))
+
+  private def inflationPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(inflation_payouts = Seq(
+      InflationPayout(keyOf(s"infl-$l-$t-$o-0"), 8000000L + o),
+      InflationPayout(keyOf(s"infl-$l-$t-$o-1"), 16000000L + o)))
+
+  private def manageDataPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      data_name = Some(s"cfg-$o"),
+      data_value = if (o % 2 == 0) Some(keyOf(s"val-$l-$t-$o").take(8)) else None,
+      // the entry change that classifies created-vs-updated
+      // (`addManageDataEffects` wraps the DATA entry change kind);
+      // half the value-bearing ops carry no change → the created
+      // fallback arm stays on the model too
+      changes =
+        if (o % 2 == 0 && (l + t) % 2 == 0)
+          base.changes :+ graft.model.LedgerModel.OpChange(
+            entry_type = "data", seller_key = None, offer_id = None,
+            pool_id = None, pre_price_n = None, pre_price_d = None,
+            pre_pool_fee = None,
+            change_kind = Some(((l + o) % 2).toInt))
+        else base.changes)
+
+  private def createClaimableBalancePayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      cb_asset = Some(if (o % 2 == 0) AssetRef("native", "", "")
+        else cred(s"CB$o", o % 3)),
+      cb_amount_stroops = Some(30000000L * (o + 1)),
+      balance_id = Some(keyOf(s"cb-$l-$t-$o")),
+      claimants = Seq(
+        Claimant(keyOf(s"claimant-$l-$t-$o-0"),
+          graft.codec.ClaimPredicate.encode(
+            graft.codec.ClaimPredicate.Unconditional)),
+        Claimant(keyOf(s"claimant-$l-$t-$o-1"),
+          graft.codec.ClaimPredicate.encode(
+            graft.codec.ClaimPredicate.And(Seq(
+              graft.codec.ClaimPredicate.AbsBefore(1700000000L + o),
+              graft.codec.ClaimPredicate.Not(Some(
+                graft.codec.ClaimPredicate.RelBefore(3600L + o)))))))))
+
+  private def claimedBalancePayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      balance_id = Some(keyOf(s"cb-$l-$t-$o")),
+      // claimed/clawed balance entry pre-state (amount + asset)
+      cb_asset = Some(cred(s"CB$o", o % 3)),
+      cb_amount_stroops = Some(20000000L * (o + 1)))
+
+  private def beginSponsoringPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      sponsored_id_key = Some(keyOf(s"sponsoree-$l-$t-$o")),
+      changes = base.changes :+ sponsorshipChange(l, t, o))
+
+  private def revokeSponsorshipPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    val withSp = base.copy(
+      changes = base.changes :+ sponsorshipChange(l, t, o))
+    if (o % 2 == 0) withSp.copy(
+      revoke_signer_account_key = Some(keyOf(s"racct-$l-$t-$o")),
+      revoke_signer_key = Some(keyOf(s"rsigner-$l-$t-$o")))
+    else if (o % 4 == 1) withSp.copy(
+      revoke_account_id_key = Some(keyOf(s"racct-$l-$t-$o")))
+    else withSp.copy(revoke_offer_id = Some(8000L + o))
+  }
+
+  private def setTrustLineFlagsPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    // clear-flags ops on even ledgers additionally revoke LP shares:
+    // an LP product-delta change plus one created claimable balance
+    // reclaiming reserve asset A (`addLiquidityPoolRevokedEffect`)
+    val revoke = o % 2 == 1 && l % 2 == 0
+    base.copy(
+      trust_asset = Some(cred(s"TF$o", o % 3)),
+      trustor_key = Some(keyOf(s"trustor-$l-$t-$o")),
+      tl_set_flags = if (o % 2 == 0) Some(1) else None, // authorized
+      tl_clear_flags = if (o % 2 == 1) Some(6) else None, // maintain|clawback
+      changes = if (revoke) base.changes ++ Seq(
+        OpChange("liquidity_pool", None, None, Some(keyOf(s"pool-$l")),
+          None, None, Some(30L),
+          pre_reserve_a = Some(900000000L + o),
+          post_reserve_a = Some(600000000L + o),
+          pre_reserve_b = Some(400000000L), post_reserve_b = Some(250000000L),
+          pre_total_shares = Some(80000000L),
+          post_total_shares = Some(50000000L),
+          pool_asset_a = Some(cred(s"RV$o", o % 3)),
+          pool_asset_b = Some(AssetRef("native", "", ""))),
+        // TWO created balances, planted in NON-sorted order (alphanum4
+        // reserve A first, native reserve B second): the effect emitter
+        // must sort by asset — native first — before fanning out, or the
+        // effect indices diverge from the reference (effects.go:1176)
+        OpChange("claimable_balance", None, None, None, None, None, None,
+          cb_revocation = Some(RevokedCb(
+            keyOf(s"cb-rev-$l-$t-$o"), 300000000L - o,
+            cred(s"RV$o", o % 3), keyOf(s"trustor-$l-$t-$o"),
+            graft.codec.ClaimPredicate.encode(
+              graft.codec.ClaimPredicate.Unconditional)))),
+        OpChange("claimable_balance", None, None, None, None, None, None,
+          cb_revocation = Some(RevokedCb(
+            keyOf(s"cb-revb-$l-$t-$o"), 150000000L,
+            AssetRef("native", "", ""), keyOf(s"trustor-$l-$t-$o"),
+            graft.codec.ClaimPredicate.encode(
+              graft.codec.ClaimPredicate.Unconditional)))))
+      else base.changes)
+  }
+
+  private def lpDepositPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      pool_id = Some(keyOf(s"pool-$l")),
+      max_amount_a = Some(40000000L + o), max_amount_b = Some(50000000L + o),
+      min_price_n = Some(1), min_price_d = Some(2),
+      max_price_n = Some(3), max_price_d = Some(1),
+      changes = base.changes :+ lpDepositChange(l, deposit = true, o))
+
+  private def lpWithdrawPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      pool_id = Some(keyOf(s"pool-$l")),
+      min_amount_a = Some(1000000L + o), min_amount_b = Some(2000000L + o),
+      lp_shares_stroops = Some(7000000L + o),
+      changes = base.changes :+ lpDepositChange(l, deposit = false, o))
+
+  private def invokeHostFunctionPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel = {
+    val fn = Seq("invoke_contract", "create_contract", "upload_wasm",
+      "create_contract_v2")(o % 4)
+    base.copy(
+      host_fn_type = Some(fn),
+      soroban_contract_id =
+        if (fn != "upload_wasm") Some(keyOf(s"contract-$l-$t-$o")) else None,
+      preimage_from_address_key =
+        if (fn == "create_contract") Some(keyOf(s"deployer-$l-$t-$o")) else None,
+      preimage_from_asset =
+        if (fn == "create_contract_v2")
+          Some(AssetRef("credit_alphanum4", s"WR$o", s"ISS${o % 3}"))
+        else None,
+      parameters_xdr = if (fn == "invoke_contract") Seq(
+        graft.codec.ScVal.encode(graft.codec.ScVal.AddrContract(
+          keyOf(s"contract-$l-$t-$o"))),
+        graft.codec.ScVal.encode(graft.codec.ScVal.Sym("transfer")),
+        graft.codec.ScVal.encode(graft.codec.ScVal.U64(100L + o)))
+      else Seq.empty,
+      // SAC events in the meta: a transfer + a burn, plus one junk event
+      // the parser must skip (`NewStellarAssetContractEvent` err branch)
+      sac_events = if (fn == "invoke_contract") {
+        import graft.codec.ScVal._
+        val cid = keyOf(s"contract-$l-$t-$o")
+        Seq(
+          SacEventRaw(cid,
+            Seq(encode(Sym("transfer")),
+              encode(AddrAccount(keyOf(s"acct-$l-$t"))),
+              encode(AddrContract(cid)),
+              encode(Str(s"TK$o:ISS${o % 3}"))),
+            encode(I128(0L, 5000001L + o))),
+          SacEventRaw(cid,
+            Seq(encode(Sym("burn")),
+              encode(AddrAccount(keyOf(s"acct-$l-$t"))),
+              encode(Str("native"))),
+            encode(I128(0L, 700003L + o))),
+          SacEventRaw(cid,
+            Seq(encode(Sym("custom_event")), encode(U32(1))),
+            encode(Sym("not_an_amount"))))
+      } else Seq.empty)
+  }
+
+  private def extendTtlPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      extend_to = Some(10000L + o),
+      changes = base.changes ++ (0 to o % 2).map(k =>
+        OpChange("ttl", None, None, None, None, None, None,
+          ttl_key_hash = Some(keyOf(s"ttlkey-$l-$t-$o-$k")))))
+
+  private def restoreFootprintPayload(base: OpModel, l: Long, t: Int,
+      o: Int): OpModel =
+    base.copy(
+      changes = base.changes :+ OpChange("ttl",
+        None, None, None, None, None, None,
+        ttl_key_hash = Some(keyOf(s"ttlkey-$l-$t-$o-0"))))
+
+  private def cred(code: String, iss: Int): AssetRef =
+    AssetRef("credit_alphanum4", code, s"ISS$iss")
 
   /** One planted sponsorship transition for the sponsorship ops (16/17/18):
     * entry family from (l+o)%4 over account/trustline/data/claimable-balance,

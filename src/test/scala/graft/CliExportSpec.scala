@@ -583,11 +583,19 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.toSet == bounded.collect().map(_.toSeq).toSet, r)
       assert(rows.map(_(streamed.columns.indexOf("ledger_sequence")))
         .toSet == (6010L to 6127L).toSet, r)
-      // batch_id = floor(ledger_sequence / batch-size): 6010..6127 → 93..95
+      // one batch law with the bounded run: batches of --batch-size ledgers
+      // counted from --start (6010 is not a multiple of 64), so batch b
+      // holds exactly the rows of the bounded run's b-th file
       assert(streamed.where(col("batch_id") =!=
-        floor(col("ledger_sequence") / 64)).isEmpty, r)
+        floor((col("ledger_sequence") - 6010) / 64)).isEmpty, r)
       assert(streamed.select(col("batch_id").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet == Set(93L, 94L, 95L), r)
+        .collect().map(_.getLong(0)).toSet == Set(0L, 1L), r)
+      Seq(0L -> "6010-6073", 1L -> "6074-6127").foreach { case (b, file) =>
+        val batch = streamed.where(col("batch_id") === b).drop("batch_id")
+          .collect().map(_.toSeq).toSet
+        assert(batch == spark.read.parquet(s"$boundedOut/$file-$r.parquet")
+          .collect().map(_.toSeq).toSet, s"$r batch $b")
+      }
       assert(log.contains(s"""{"resource":"$r","attempted":${rows.length},""" +
         s""""failed":0,"successful":${rows.length}}"""), log)
     }
