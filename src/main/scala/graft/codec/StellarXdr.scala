@@ -250,8 +250,10 @@ object StellarXdr {
     v
   }
 
-  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX =
-    ledgerHeaderFrom(new Reader(bytes))
+  def decodeLedgerHeader(bytes: Array[Byte]): LedgerHeaderX = {
+    val r = new Reader(bytes)
+    fullyConsumed(r, "LedgerHeader")(ledgerHeaderFrom(r))
+  }
 
   /** LedgerHeader from a reader positioned at its version word — alone or
     * embedded in a `LedgerHeaderHistoryEntry`. */

@@ -75,16 +75,6 @@ object GraftFunctions {
   /** Offer price ratio n/d as float64. */
   def priceRatio(n: Column, d: Column): Column = n.cast("double") / d.cast("double")
 
-  /** The details-map price law (`operation.go:409-421` addPriceDetails):
-    * ParseFloat(Price.String()) where Price.String() is the rational's
-    * FloatString(7) — i.e. n/d rounded HALF-UP (away from zero) to exactly
-    * 7 decimals, then parsed back to a double. Decimal-division precision
-    * (scale 20) exceeds the 7-digit target, so the columnar round is the
-    * exact law. Distinct from [[priceRatio]]: the offers TABLE keeps plain
-    * float division (`offer.go:63-66`). */
-  def pricePoint7(n: Column, d: Column): Column =
-    round(n.cast("decimal(19,0)") / d.cast("decimal(19,0)"), 7).cast("double")
-
   // ---- flag decoding (`operation.go:555-582`) -------------------------------
 
   def flagSet(flags: Column, bit: Long): Column = flags.bitwiseAND(lit(bit)) =!= 0
@@ -129,6 +119,9 @@ object GraftFunctions {
     nativeCol(graft.plans.RollingHash64Expression(exprOf(c)))
   def strkeyAccount(c: Column): Column =
     nativeCol(graft.plans.StrkeyAccountExpression(exprOf(c)))
+  /** Lower-case hex of a binary column: `lower(hex(c))` without ICU. */
+  def hexLower(c: Column): Column =
+    nativeCol(graft.plans.HexLowerExpression(exprOf(c)))
   def hyperplaneBuckets(c: Column, bits: Int, tables: Int): Column =
     nativeCol(graft.plans.HyperplaneBucketsExpression(exprOf(c), bits, tables))
   def longDot(a: Column, b: Column): Column =
@@ -358,13 +351,6 @@ object GraftFunctions {
       c("entry_type") === "liquidity_pool" && c("pool_id") === poolId)
     get(ms, size(ms) - 1)
   }
-
-  /** Canonical "CODE:ISSUER" / "native" string of an AssetRef struct
-    * (`asset.StringCanonical`), null-safe. */
-  def assetCodeIssuer(a: Column): Column =
-    when(a.isNull, lit(null)).otherwise(
-      when(a("asset_type") === "native", lit("native"))
-        .otherwise(concat(a("asset_code"), lit(":"), a("asset_issuer"))))
 
   /** FarmHash asset id (`asset.go:72-77`): farmhash64(code ‖ issuer ‖ type). */
   def farmHashAssetId(code: Column, issuer: Column, assetType: Column): Column =

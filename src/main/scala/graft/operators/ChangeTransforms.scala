@@ -125,7 +125,7 @@ object ChangeTransforms {
       stroopsToXlm(col("trustline.balance_stroops")).as("balance"),
       col("trustline.limit_stroops").as("trust_line_limit"),
       when(col("trustline.liquidity_pool_id").isNotNull,
-        lower(hex(col("trustline.liquidity_pool_id"))))
+        hexLower(col("trustline.liquidity_pool_id")))
         .otherwise(lit("")).as("liquidity_pool_id"),
       stroopsToXlm(col("trustline.buying_liabilities_stroops")).as("buying_liabilities"),
       stroopsToXlm(col("trustline.selling_liabilities_stroops")).as("selling_liabilities"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.codec.Hashes
 import graft.functions.GraftFunctions._
 import graft.model.LedgerModel.{AssetRef, ClaimAtom, LedgerRow, OpChange, OpModel, TxModel}
 
@@ -110,7 +111,7 @@ object StellarTradesEffects {
         syntheticOfferId(col("sequence"), col("tx_pos") + 1, col("op_pos")))
         .as("buying_offer_id"),
       when(col("atom.atom_type") === "liquidity_pool",
-        lower(hex(col("atom.pool_id")))).as("selling_liquidity_pool_id"),
+        hexLower(col("atom.pool_id"))).as("selling_liquidity_pool_id"),
       when(col("atom.atom_type") === "liquidity_pool",
         lastPoolChange("pre_pool_fee")).as("liquidity_pool_fee"),
       operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos"))
@@ -319,14 +320,12 @@ object StellarTradesEffects {
     * version inherits through `format_string`). */
   private def amtO(v: Option[Long]): String = v.map(fmt7).getOrElse("null")
 
-  private def hexLower(b: Array[Byte]): String =
-    java.util.HexFormat.of().formatHex(b)
   private def b64s(b: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(b)
   private def strkeyG(k: Array[Byte]): String =
     graft.codec.Strkey.encodeAccountId(k)
 
-  /** `assetCodeIssuer`: canonical "CODE:ISSUER" / "native", null-safe. */
+  /** `asset.StringCanonical`: "CODE:ISSUER" / "native", null-safe. */
   private def canonA(a: AssetRef): String =
     if (a == null) null
     else if (a.asset_type == "native") "native"
@@ -348,7 +347,7 @@ object StellarTradesEffects {
     * pool change: id/fee_bp/reserves drop out when unavailable; the type tag
     * is constant and total_shares always renders (the "null" fallback). */
   private def lpDetailsOf(chg: Option[OpChange]): String = obj(
-    kv("id", chg.flatMap(_.pool_id).map(hexLower).orNull),
+    kv("id", chg.flatMap(_.pool_id).map(Hashes.hex).orNull),
     kvRaw("fee_bp", chg.flatMap(_.pre_pool_fee).map(_.toString).orNull),
     kv("type", "constant_product"),
     // rendered as a STRING, matching the reference's strconv.FormatInt
@@ -388,7 +387,7 @@ object StellarTradesEffects {
       else None
     val amount = fmt7(op.amount_stroops)
     val opAsset = op.asset.orNull
-    val cbId = op.balance_id.map(b => "00000000" + hexLower(b)).orNull
+    val cbId = op.balance_id.map(b => "00000000" + Hashes.hex(b)).orNull
     val cbAmt = amtO(op.cb_amount_stroops)
     val cbAsset = canonA(op.cb_asset.orNull)
 
@@ -457,11 +456,11 @@ object StellarTradesEffects {
     val trustAssetKvs =
       if (op.trust_asset.isEmpty && op.trust_pool_id.isDefined) Seq(
         kv("asset_type", "liquidity_pool_shares"),
-        kv("liquidity_pool_id", op.trust_pool_id.map(hexLower).orNull),
+        kv("liquidity_pool_id", op.trust_pool_id.map(Hashes.hex).orNull),
         kv("liquidity_pool_id_strkey", op.trust_pool_id
           .map(graft.codec.Strkey.encodeLiquidityPool).orNull))
       else assetKvs(op.trust_asset.orNull) :+
-        kv("liquidity_pool_id", op.trust_pool_id.map(hexLower).orNull)
+        kv("liquidity_pool_id", op.trust_pool_id.map(Hashes.hex).orNull)
     // created/updated/removed from the op's trustline ledger-entry change
     // whose asset type matches the op line (`addChangeTrustEffects`,
     // effects.go:637-695); limit-only heuristic as fallback when the model
@@ -613,7 +612,7 @@ object StellarTradesEffects {
             // (`addClaimLiquidityPoolTradeEffect`, effects.go:1014-1032);
             // partial width — the atom's pool change carries no post state
             kvRaw("liquidity_pool", obj(
-              kv("id", a.pool_id.map(hexLower).orNull),
+              kv("id", a.pool_id.map(Hashes.hex).orNull),
               kvRaw("fee_bp", lastPool(op.changes, a.pool_id)
                 .flatMap(_.pre_pool_fee).map(_.toString).orNull),
               kv("type", "constant_product"))),
@@ -693,7 +692,7 @@ object StellarTradesEffects {
         c.entry_type == "liquidity_pool" && c.pre_reserve_a.isDefined)
       if (revPool.isEmpty || revCbs.isEmpty) Nil
       else {
-        def cbIdOf(b: Array[Byte]): String = "00000000" + hexLower(b)
+        def cbIdOf(b: Array[Byte]): String = "00000000" + Hashes.hex(b)
         val created = revCbs.flatMap { ch =>
           val r = ch.cb_revocation.get
           Seq(
@@ -810,10 +809,10 @@ object StellarTradesEffects {
           kv("asset", sp.tl_asset.map(canonA).orNull),
           kv("asset_type",
             if (sp.tl_pool_id.isDefined) "liquidity_pool" else null),
-          kv("liquidity_pool_id", sp.tl_pool_id.map(hexLower).orNull),
+          kv("liquidity_pool_id", sp.tl_pool_id.map(Hashes.hex).orNull),
           kv("data_name", sp.data_name.orNull),
           kv("balance_id",
-            sp.cb_id.map(b => "00000000" + hexLower(b)).orNull))
+            sp.cb_id.map(b => "00000000" + Hashes.hex(b)).orNull))
         val entryEff: Seq[Eff] = base match {
           case Some(bse) if preSp == null && postSp != null =>
             Seq(Eff(bse, addr, obj(kv("sponsor", postSp) +: extras: _*)))
@@ -885,7 +884,7 @@ object StellarTradesEffects {
           obj(kvRaw("liquidity_pool", lpDetailsOf(Some(c))))))
       else if (c.entry_type == "liquidity_pool" && c.change_kind.contains(2))
         Seq(Eff(94, sourceAddr,
-          obj(kv("liquidity_pool_id", c.pool_id.map(hexLower).orNull))))
+          obj(kv("liquidity_pool_id", c.pool_id.map(Hashes.hex).orNull))))
       else Nil
     }
 

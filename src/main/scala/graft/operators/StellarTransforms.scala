@@ -40,8 +40,8 @@ object StellarTransforms {
   def historyLedgers(ledgers: Dataset[LedgerRow]): DataFrame =
     ledgers.select(
       col("sequence"),
-      lower(hex(col("ledger_hash"))).as("ledger_hash"),
-      lower(hex(col("previous_ledger_hash"))).as("previous_ledger_hash"),
+      hexLower(col("ledger_hash")).as("ledger_hash"),
+      hexLower(col("previous_ledger_hash")).as("previous_ledger_hash"),
       col("header_b64").as("ledger_header"),
       // successful only: txCount - failedTxCount (`ledger.go:149`; golden
       // single_ledger has transaction_count 46 with 11 failed)
@@ -170,305 +170,18 @@ object StellarTransforms {
   /** P3 — `history_operations`: op grain with source fallback, type names,
     * op-index+1 TOIDs. The `details` union is a WIDE NULLABLE STRUCT
     * (SURVEY §1.2 option (a), BigQuery's own shape) — queryable columns,
-    * prunable by Parquet. `details_json` is that same column rendered to
-    * JSON, for parity with the reference's map-typed field.
+    * prunable by Parquet. `details_json` is that same row rendered to JSON,
+    * for parity with the reference's map-typed field.
     *
-    * The per-type case law follows `operation.go:584-1173`: 25 op types
-    * populate their own sparse slice of the struct; everything below is
-    * intra-row column algebra (no joins, no UDF in the per-row path except
-    * the cold strkey variants). Divergences from the reference, by
-    * environment necessity: claimant predicates are JSON strings inside the
-    * claimants array (the reference nests raw JSON); `ledger_key_hash` /
-    * `contract_code_hash` need envelope internals the decoded model does not
-    * carry. */
+    * Both come from one [[OperationDetails]] kernel per op: the per-type
+    * case law of `operation.go:584-1173`, where 25 op types populate their
+    * own sparse slice of the struct. The kernel sits in its own projection,
+    * which the rendering projection reads twice, so `CollapseProject`
+    * leaves the two apart and the plan evaluates it once per op.
+    * Divergence from the reference, by environment necessity: claimant
+    * predicates are JSON strings inside the claimants array (the reference
+    * nests raw JSON). */
   def historyOperations(ledgers: Dataset[LedgerRow]): DataFrame = {
-    val ty = col("op.op_type")
-    val successful = col("tx.successful")
-    val sourceKey = coalesce(col("op.source_key"), col("tx.source_key"))
-    val sourceAddr = strkeyAccount(sourceKey)
-    val destAddr = when(col("op.destination_key").isNotNull,
-      strkeyAccount(col("op.destination_key")))
-
-    def assetFields(a: Column, prefix: String): Seq[Column] = {
-      val p = if (prefix.isEmpty) "" else prefix + "_"
-      Seq(
-        a("asset_type").as(s"${p}asset_type"),
-        when(a("asset_type") =!= "native", a("asset_code")).as(s"${p}asset_code"),
-        when(a("asset_type") =!= "native", a("asset_issuer")).as(s"${p}asset_issuer"))
-    }
-    def assetCanon(a: Column): Column = GraftFunctions.assetCodeIssuer(a)
-
-    val lpChange =
-      GraftFunctions.lastPoolChange(col("op.changes"), col("op.pool_id"))
-    def lpDelta(pre: String, post: String): Column =
-      when(successful && lpChange.isNotNull,
-        lpChange(post) - lpChange(pre)).otherwise(lit(0L))
-
-    // end_sponsoring: reverse scan for the initiating begin op whose
-    // sponsored id is this op's source (`findInitatingBeginSponsoringOp`)
-    val beginOps = filter(
-      zip_with(col("tx.operations"),
-        sequence(lit(0), size(col("tx.operations")) - 1),
-        (op, i) => struct(op.as("op"), i.as("i"))),
-      x => x("i") < col("op_pos") && x("op")("op_type") === 16 &&
-        x("op")("sponsored_id_key") === sourceKey)
-    val beginOp = get(beginOps, size(beginOps) - 1)("op")
-    val beginSponsorKey =
-      coalesce(beginOp("source_key"), col("tx.source_key"))
-
-    // CB balance id: xdr.MarshalHex(BalanceId) = v0 discriminant + hash;
-    // strkey B-address over the 33-byte (type ‖ hash) payload
-    val balanceIdHex = when(col("op.balance_id").isNotNull,
-      concat(lit("00000000"), lower(hex(col("op.balance_id")))))
-    val balanceIdStrkey = when(col("op.balance_id").isNotNull,
-      strkeyBalance(col("op.balance_id")))
-
-    val detailInputs =
-      (OperationDetails.DetailInputs(
-        ty = ty,
-        successful = successful,
-        sourceAddr = sourceAddr,
-        destAddr = destAddr,
-        // the acting source's muxed pair: the op's own muxed id when the op
-        // carries an explicit source, else the tx source's (the reference's
-        // SourceAccount() law — muxed-ness follows the acting account)
-        fromMuxed = {
-          val actingMuxedId = when(col("op.source_key").isNotNull,
-            col("op.source_muxed_id")).otherwise(col("tx.source_muxed_id"))
-          when(actingMuxedId.isNotNull,
-            strkeyMuxed(sourceKey, actingMuxedId))
-        },
-        fromMuxedId = when(col("op.source_key").isNotNull,
-          col("op.source_muxed_id")).otherwise(col("tx.source_muxed_id")),
-        toMuxed = when(col("op.destination_muxed_id").isNotNull,
-          strkeyMuxed(col("op.destination_key"),
-            col("op.destination_muxed_id"))),
-        toMuxedId = col("op.destination_muxed_id"),
-        startingBalanceStroops = col("op.starting_balance_stroops"),
-        amountStroops = col("op.amount_stroops"),
-        cbAmountStroops = col("op.cb_amount_stroops"),
-        sourceAmountStroops = col("op.source_amount_stroops"),
-        sourceMaxStroops = col("op.source_max_stroops"),
-        destMinStroops = col("op.destination_min_stroops"),
-        path = when(size(col("op.path")) > 0, col("op.path")),
-        assetType = col("op.asset.asset_type"),
-        assetCode = col("op.asset.asset_code"),
-        assetIssuer = col("op.asset.asset_issuer"),
-        assetId = when(col("op.asset").isNotNull,
-          farmHashAssetId(col("op.asset.asset_code"),
-            col("op.asset.asset_issuer"), col("op.asset.asset_type"))),
-        trustAssetId = when(col("op.trust_asset").isNotNull,
-          farmHashAssetId(col("op.trust_asset.asset_code"),
-            col("op.trust_asset.asset_issuer"),
-            col("op.trust_asset.asset_type"))),
-        sourceAssetId = when(col("op.source_asset").isNotNull,
-          farmHashAssetId(col("op.source_asset.asset_code"),
-            col("op.source_asset.asset_issuer"),
-            col("op.source_asset.asset_type"))),
-        buyingAssetId = when(col("op.buying_asset").isNotNull,
-          farmHashAssetId(col("op.buying_asset.asset_code"),
-            col("op.buying_asset.asset_issuer"),
-            col("op.buying_asset.asset_type"))),
-        sellingAssetId = when(col("op.selling_asset").isNotNull,
-          farmHashAssetId(col("op.selling_asset.asset_code"),
-            col("op.selling_asset.asset_issuer"),
-            col("op.selling_asset.asset_type"))),
-        trustAssetType = coalesce(col("op.trust_asset.asset_type"),
-          lit("liquidity_pool_shares")),
-        trustAssetCode = col("op.trust_asset.asset_code"),
-        trustAssetIssuer = col("op.trust_asset.asset_issuer"),
-        trustPoolIdHex = when(col("op.trust_pool_id").isNotNull,
-          lower(hex(col("op.trust_pool_id")))),
-        trustLimitStroops = col("op.trust_limit_stroops"),
-        sourceAssetType = col("op.source_asset.asset_type"),
-        sourceAssetCode = col("op.source_asset.asset_code"),
-        sourceAssetIssuer = col("op.source_asset.asset_issuer"),
-        offerId = col("op.offer_id"),
-        priceN = col("op.price_n"),
-        priceD = col("op.price_d"),
-        buyingAssetType = col("op.buying_asset.asset_type"),
-        buyingAssetCode = col("op.buying_asset.asset_code"),
-        buyingAssetIssuer = col("op.buying_asset.asset_issuer"),
-        sellingAssetType = col("op.selling_asset.asset_type"),
-        sellingAssetCode = col("op.selling_asset.asset_code"),
-        sellingAssetIssuer = col("op.selling_asset.asset_issuer"),
-        inflationDestAddr = when(col("op.inflation_dest_key").isNotNull,
-          strkeyAccount(col("op.inflation_dest_key"))),
-        setFlags = col("op.set_flags"),
-        clearFlags = col("op.clear_flags"),
-        masterWeight = col("op.master_weight"),
-        lowThreshold = col("op.low_threshold"),
-        medThreshold = col("op.med_threshold"),
-        highThreshold = col("op.high_threshold"),
-        homeDomain = col("op.home_domain"),
-        signerAddr = when(col("op.signer_key").isNotNull,
-          strkeyAccount(col("op.signer_key"))),
-        revokeSignerAddr = strkeyAccount(col("op.revoke_signer_key")),
-        signerWeight = col("op.signer_weight"),
-        authorizeFlags = col("op.authorize_flags"),
-        tlSetFlags = col("op.tl_set_flags"),
-        tlClearFlags = col("op.tl_clear_flags"),
-        trustorAddr = strkeyAccount(col("op.trustor_key")),
-        dataName = col("op.data_name"),
-        dataValueB64 = when(col("op.data_value").isNotNull,
-          base64NoWrap(col("op.data_value"))),
-        bumpTo = col("op.bump_to"),
-        cbAssetCanon = assetCanon(col("op.cb_asset")),
-        claimants = transform(col("op.claimants"), c => struct(
-          strkeyAccount(c("destination_key")).as("destination"),
-          claimPredicateJson(c("predicate_xdr")).as("predicate"))),
-        balanceIdHex = balanceIdHex,
-        balanceIdStrkey = balanceIdStrkey,
-        sponsoredIdAddr = strkeyAccount(col("op.sponsored_id_key")),
-        beginSponsorAddr = when(beginOp.isNotNull,
-          strkeyAccount(beginSponsorKey)),
-        revokeSignerAccountAddr =
-          when(col("op.revoke_signer_account_key").isNotNull,
-            strkeyAccount(col("op.revoke_signer_account_key"))),
-        // one ledger-key family per revoke (`addLedgerKeyToDetails`):
-        // `account_id` belongs to the ACCOUNT arm alone — trustline/data
-        // arms re-key the account under their own prefixes
-        revokeAccountIdAddr =
-          when(col("op.revoke_account_id_key").isNotNull &&
-              col("op.revoke_offer_id").isNull &&
-              col("op.data_name").isNull &&
-              col("op.revoke_trustline_asset").isNull &&
-              col("op.revoke_trustline_pool_id").isNull,
-            strkeyAccount(col("op.revoke_account_id_key"))),
-        revokeOfferId = col("op.revoke_offer_id"),
-        revokeTrustlineAccountAddr =
-          when(col("op.revoke_trustline_asset").isNotNull ||
-              col("op.revoke_trustline_pool_id").isNotNull,
-            strkeyAccount(col("op.revoke_account_id_key"))),
-        revokeTrustlineAssetCanon = when(
-          col("op.revoke_trustline_asset").isNotNull,
-          assetCanon(col("op.revoke_trustline_asset"))),
-        revokeTrustlinePoolIdHex =
-          lower(hex(col("op.revoke_trustline_pool_id"))),
-        revokeTrustlinePoolIdStrkey =
-          strkeyPool(col("op.revoke_trustline_pool_id")),
-        revokeDataAccountAddr = when(col("op.data_name").isNotNull,
-          strkeyAccount(col("op.revoke_account_id_key"))),
-        revokeDataName = col("op.data_name"),
-        revokeCbIdHex = balanceIdHex,
-        revokeCbIdStrkey = balanceIdStrkey,
-        revokeLpIdHex = lower(hex(col("op.pool_id"))),
-        revokeLpIdStrkey = strkeyPool(col("op.pool_id")),
-        trustPoolIdStrkey = strkeyPool(col("op.trust_pool_id")),
-        beginSponsorMuxed = {
-          val bsMuxedId = when(beginOp("source_key").isNotNull,
-            beginOp("source_muxed_id")).otherwise(col("tx.source_muxed_id"))
-          when(beginOp.isNotNull && bsMuxedId.isNotNull,
-            strkeyMuxed(beginSponsorKey, bsMuxedId))
-        },
-        beginSponsorMuxedId = when(beginOp.isNotNull,
-          when(beginOp("source_key").isNotNull, beginOp("source_muxed_id"))
-            .otherwise(col("tx.source_muxed_id"))),
-        // `sponsor` (getSponsor law): per change in order — the set-options
-        // signer's NEW sponsor if it changed, else a created entry's
-        // sponsor (pre absent, post set); first hit wins
-        sponsorAddr = {
-          val cands = transform(
-            filter(col("op.changes"), c => c("sponsorship").isNotNull),
-            c => {
-              val sp = c("sponsorship")
-              val postSigner = get(filter(sp("post_signer_sponsors"), s =>
-                s("signer_key") <=> col("op.signer_key")),
-                lit(0))("sponsor_key")
-              val preSigner = get(filter(sp("pre_signer_sponsors"), s =>
-                s("signer_key") <=> col("op.signer_key")),
-                lit(0))("sponsor_key")
-              coalesce(
-                when(col("op.signer_key").isNotNull &&
-                  postSigner.isNotNull && !(preSigner <=> postSigner),
-                  postSigner),
-                when(sp("pre_sponsor_key").isNull,
-                  sp("post_sponsor_key")))
-            })
-          val k = get(filter(cands, x => x.isNotNull), lit(0))
-          when(k.isNotNull, strkeyAccount(k))
-        },
-        lpPoolIdHex = lower(hex(col("op.pool_id"))),
-        lpPoolIdStrkey = strkeyPool(col("op.pool_id")),
-        reserveAAssetType = when(lpChange.isNotNull,
-          lpChange("pool_asset_a")("asset_type")),
-        reserveAAssetCode = lpChange("pool_asset_a")("asset_code"),
-        reserveAAssetIssuer = lpChange("pool_asset_a")("asset_issuer"),
-        reserveAAssetId = when(lpChange.isNotNull,
-          farmHashAssetId(lpChange("pool_asset_a")("asset_code"),
-            lpChange("pool_asset_a")("asset_issuer"),
-            lpChange("pool_asset_a")("asset_type"))),
-        reserveBAssetType = when(lpChange.isNotNull,
-          lpChange("pool_asset_b")("asset_type")),
-        reserveBAssetCode = lpChange("pool_asset_b")("asset_code"),
-        reserveBAssetIssuer = lpChange("pool_asset_b")("asset_issuer"),
-        reserveBAssetId = when(lpChange.isNotNull,
-          farmHashAssetId(lpChange("pool_asset_b")("asset_code"),
-            lpChange("pool_asset_b")("asset_issuer"),
-            lpChange("pool_asset_b")("asset_type"))),
-        maxAmountA = col("op.max_amount_a"),
-        maxAmountB = col("op.max_amount_b"),
-        deltaReserveA = lpDelta("pre_reserve_a", "post_reserve_a"),
-        deltaReserveB = lpDelta("pre_reserve_b", "post_reserve_b"),
-        deltaShares = lpDelta("pre_total_shares", "post_total_shares"),
-        minPriceN = col("op.min_price_n"),
-        minPriceD = col("op.min_price_d"),
-        maxPriceN = col("op.max_price_n"),
-        maxPriceD = col("op.max_price_d"),
-        minAmountA = col("op.min_amount_a"),
-        minAmountB = col("op.min_amount_b"),
-        lpSharesStroops = col("op.lp_shares_stroops"),
-        hostFnTypeName = col("op.host_fn_type"),
-        sorobanContractAddr = when(col("op.soroban_contract_id").isNotNull,
-          strkeyContract(col("op.soroban_contract_id"))),
-        // footprint-derived hashes (`ledgerKeyHashFromTxEnvelope` /
-        // `contractCodeHashFromTxEnvelope`, operation.go:1841-1874)
-        ledgerKeyHashArr = when(col("tx.soroban").isNotNull &&
-            size(col("tx.soroban.footprint_keys_xdr")) > 0,
-          transform(col("tx.soroban.footprint_keys_xdr"), k => sha2(k, 256))),
-        contractCodeHash = when(col("tx.soroban").isNotNull, {
-          val codeKey = get(filter(col("tx.soroban.footprint_keys_xdr"), k =>
-            substring(k, 1, 4) === lit(Array[Byte](0, 0, 0, 7))), lit(0))
-          when(codeKey.isNotNull, lower(hex(substring(codeKey, 5, 32))))
-        }),
-        parametersB64 = when(size(col("op.parameters_xdr")) > 0,
-          transform(col("op.parameters_xdr"), p => base64NoWrap(p))),
-        parametersJson = when(size(col("op.parameters_xdr")) > 0,
-          transform(col("op.parameters_xdr"), p => scvalJson(p))),
-        // amount.String128 scaling: decimal(38,7) holds all but the last
-        // digit of the i128 range without long overflow; 39-digit outliers
-        // keep the raw integer string rather than throwing under ANSI.
-        // Cast to (38,7) BEFORE dividing: (38,7)/(20,0) re-adjusts to
-        // (38,7) under precision-loss rules, while (38,0)/(20,0) lands
-        // on (38,6) and silently zeroes the 7th decimal digit.
-        assetBalanceChanges = when(size(col("op.sac_events")) > 0,
-          transform(sacEventsParse(col("op.sac_events")), e => struct(
-            e("from").as("from"), e("to").as("to"),
-            e("event_type").as("type"),
-            when(length(e("amount")) <= 31,
-              (e("amount").cast("decimal(38,7)") /
-                lit(graft.codec.Amounts.StroopsPerLumen))
-                .cast("decimal(38,7)").cast("string"))
-              .otherwise(e("amount")).as("amount"),
-            e("asset_type").as("asset_type"),
-            e("asset_code").as("asset_code"),
-            e("asset_issuer").as("asset_issuer")))),
-        extendTo = col("op.extend_to"),
-        // create-contract id preimage (`switchContractIdPreimageType`,
-        // operation.go:2275-2295): the "from" tag rides the shared `from`
-        // field and the asset the shared `asset` field
-        preimageTag = when(col("op.preimage_from_address_key").isNotNull
-            || col("op.preimage_from_contract_id").isNotNull,
-            lit("address"))
-          .when(col("op.preimage_from_asset").isNotNull, lit("asset")),
-        preimageAddress = when(col("op.preimage_from_address_key").isNotNull,
-            strkeyAccount(col("op.preimage_from_address_key")))
-          .when(col("op.preimage_from_contract_id").isNotNull,
-            GraftFunctions.strkeyContract(col("op.preimage_from_contract_id"))),
-        preimageAssetCanon = when(col("op.preimage_from_asset").isNotNull,
-          assetCanon(col("op.preimage_from_asset")))))
-    val detailsStruct = OperationDetails.struct(detailInputs)
-
     val ops = ledgers
       .select(col("sequence"), col("closed_at"),
         posexplode(col("transactions")).as(Seq("tx_pos", "tx")))
@@ -483,13 +196,8 @@ object StellarTransforms {
           .as("source_account_muxed"),
         col("op.op_type").as("type"),
         element_at(opTypeNameCol, col("op.op_type")).as("type_string"),
-        // `details` is the typed wide struct — the reference's sparse
-        // per-type map (`schema.go:137`): null fields drop out of NDJSON
-        // via the writer's ignoreNullFields, so the rendered object
-        // carries only the keys the op type populates. `details_json`
-        // (added by `OperationDetails.withJson`) renders this SAME
-        // column (`operation.go:97` assigns outputDetails to both).
-        detailsStruct.as("details"),
+        OperationDetails(col("op"), col("tx"), col("op_pos"))
+          .as("op_details"),
         transactionToid(col("sequence"), col("tx_pos") + 1)
           .as("transaction_id"),
         operationToid(col("sequence"), col("tx_pos") + 1, col("op_pos"))
@@ -497,9 +205,15 @@ object StellarTransforms {
         col("closed_at"),
         col("op.result_code").as("operation_result_code"),
         col("op.trace_code").as("operation_trace_code"),
-        col("sequence").as("ledger_sequence"),
-        successful.as("tx_successful"))
-    OperationDetails.withJson(ops, "tx_successful").drop("tx_successful")
+        col("sequence").as("ledger_sequence"))
+    // `details` is the reference's sparse per-type map (`schema.go:137`):
+    // null fields drop out of NDJSON via the writer's ignoreNullFields;
+    // `details_json` renders the same map (`operation.go:97`)
+    ops.select(ops.columns.toSeq.flatMap {
+      case "op_details" => Seq(col("op_details.details").as("details"),
+        col("op_details.details_json").as("details_json"))
+      case c => Seq(col(c))
+    }: _*)
   }
 
   /** P6/A2 model path — `history_assets`: payment + manage-sell-offer issued

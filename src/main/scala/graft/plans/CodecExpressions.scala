@@ -360,6 +360,24 @@ case class RollingHash64Expression(child: Expression) extends CodecUnaryExpressi
   override def prettyName: String = "rolling_hash64"
 }
 
+/** Lower-case hex of a binary value ([[graft.codec.Hashes.hex]]) — what
+  * `lower(hex(x))` spells, without Spark 4's collation-aware `lower`,
+  * whose first call initialises ICU's case-mapping and break-iterator
+  * data. */
+case class HexLowerExpression(child: Expression) extends CodecUnaryExpression {
+  override def dataType: DataType = StringType
+  override protected def expectedInputType: DataType = BinaryType
+  override protected def nullSafeEval(input: Any): Any =
+    UTF8String.fromString(graft.codec.Hashes.hex(input.asInstanceOf[Array[Byte]]))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
+        s"graft.codec.Hashes$$.MODULE$$.hex($c))")
+  override protected def withNewChildInternal(newChild: Expression): HexLowerExpression =
+    copy(child = newChild)
+  override def prettyName: String = "hex_lower"
+}
+
 /** Strkey account-id encoding of a 32-byte ed25519 key (G… address). */
 case class StrkeyAccountExpression(child: Expression) extends CodecUnaryExpression {
   override def dataType: DataType = StringType

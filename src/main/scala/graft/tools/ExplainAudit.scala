@@ -419,6 +419,34 @@ object ExplainAudit {
     interesting.foreach { case (name, expects, rejects) =>
       check(name, byName(name).fn(spark, sfDir), expects, rejects)
     }
+    // history_operations: one compiled kernel per op renders `details` and
+    // `details_json`; the Column law's to_json → regexp_replace →
+    // parse_json chain over the details struct must not come back. Only
+    // stellar_soroban_real_ops keeps the op frame in its returned plan (the
+    // narrow consumers read a checkpoint of it).
+    locally {
+      import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, StructsToJson}
+      import graft.plans.{OperationDetailsExpression, OperationDetailsKernel}
+      Seq("stellar_soroban_real_ops").foreach { name =>
+        val exprs = byName(name).fn(spark, sfDir).queryExecution.optimizedPlan
+          .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+        val kernels = exprs.count(_.isInstanceOf[OperationDetailsExpression])
+        val chain = exprs.count {
+          case j: StructsToJson =>
+            j.child.dataType == OperationDetailsKernel.DetailsType
+          case _: RegExpReplace => true
+          case _ => false
+        }
+        println(s"\n======== $name (details kernel) ========")
+        Seq(("one operation_details kernel", kernels == 1),
+            ("absent to_json(details) / regexp_replace", chain == 0))
+          .foreach { case (what, ok) =>
+            if (!ok) bad += 1
+            println(s"  CHECK ${if (ok) "PASS" else "MISS"}: $what " +
+              s"(kernels $kernels, json chain $chain)")
+          }
+      }
+    }
     // the LSH pair generator's own plan (the catalog query ends in the
     // clusters RDD scan, which hides the join): candidates MUST come from a
     // bucket equi-join — a BroadcastNestedLoopJoin/CartesianProduct here is

@@ -244,4 +244,16 @@ class DecodeOnceSpec extends AnyFunSuite {
     assert(Hashes.hex(all) == all.map(b => f"${b & 0xff}%02x").mkString)
     assert(Hashes.hex(Array.emptyByteArray) == "")
   }
+
+  test("a ledger header with trailing bytes is an XdrError") {
+    val h = header(77L)
+    val padded = h ++ new Array[Byte](4)
+    val e = intercept[StellarXdr.XdrError](StellarXdr.decodeLedgerHeader(padded))
+    assert(e.getMessage.contains("LedgerHeader: 4 trailing bytes"), e.getMessage)
+    intercept[StellarXdr.XdrError](StellarXdr.decodeLedgerRow(b64(padded), Nil))
+    // the unpadded header still decodes, and the row hashes the header
+    assert(StellarXdr.decodeLedgerHeader(h).ledgerSeq == 77L)
+    assert(java.util.Arrays.equals(
+      StellarXdr.decodeLedgerRow(b64(h), Nil).ledger_hash, Hashes.sha256(h)))
+  }
 }

@@ -63,15 +63,26 @@ class MethodSizeSpec extends AnyFunSuite {
     assert(sizes.get("buf()[B").contains(5), sizes)
   }
 
-  test("every method in graft.codec, graft.sources and graft.model is " +
-      s"under HotSpot's $HugeMethodLimit-byte HugeMethodLimit") {
-    val huge = for {
-      pkg <- Seq("graft.codec", "graft.sources", "graft.model")
+  /** Every method of `pkgs` at or over the limit, with its size. */
+  private def hugeMethods(pkgs: String*): Seq[String] =
+    for {
+      pkg <- pkgs
       f <- classFiles(pkg)
       (method, size) <- codeLengths(Files.readAllBytes(f))
       if size >= HugeMethodLimit
     } yield s"${pkg}.${f.getFileName.toString.stripSuffix(".class")}" +
       s".$method: $size bytes"
+
+  test("every method in graft.codec, graft.sources and graft.model is " +
+      s"under HotSpot's $HugeMethodLimit-byte HugeMethodLimit") {
+    val huge = hugeMethods("graft.codec", "graft.sources", "graft.model")
+    assert(huge.isEmpty, huge.sorted.mkString("\n", "\n", ""))
+  }
+
+  // the per-op kernels (operation details, per-row codecs) run once per
+  // exploded row, so they must stay JIT-compilable too
+  test("graft.operators and graft.plans stay JIT-compilable") {
+    val huge = hugeMethods("graft.operators", "graft.plans")
     assert(huge.isEmpty, huge.sorted.mkString("\n", "\n", ""))
   }
 }

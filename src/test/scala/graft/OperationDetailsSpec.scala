@@ -438,32 +438,93 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"reference detail keys unknown to the renderer: ${missing.toSeq.sorted}")
   }
 
-  /** How many times the optimized plan spells the invoke-host-function
-    * type prefix: only the struct's `function` field uses that literal, so
-    * this counts the copies of the details case law the plan carries. */
-  private def caseLawCopies(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.unsafe.types.UTF8String
-    val tag = UTF8String.fromString("HostFunctionTypeHostFunctionType")
+  /** The details kernels and the Column-law JSON chain (`to_json` →
+    * `regexp_replace` → `parse_json`) in a frame's optimised plan. */
+  private def kernels(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case l @ Literal(v: UTF8String, _) if v == tag => l
+      case k: graft.plans.OperationDetailsExpression => k
+    })).size
+  private def jsonChain(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, StructsToJson}
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: StructsToJson => e
+      case e: RegExpReplace => e
     })).size
   }
 
-  test("details_json renders the details column: the plan carries the " +
-      "case law once on both paths") {
+  test("details kernel: one plan node, no JSON chain") {
     val model = StellarTransforms.historyOperations(
       StellarFixture.ledgers(spark, 2700, 2700))
-    assert(caseLawCopies(model) == 1)
+    assert(kernels(model) == 1)
+    assert(jsonChain(model) == 0)
     // the same transform over ledgers decoded from a datastore tree
     val dir = java.nio.file.Files.createTempDirectory("graft-ds-law").toString
     graft.sources.RealXdrFixture.writeBatchTree(dir, 3000, 3003)
     val datastore = StellarTransforms.historyOperations(
       graft.sources.LcmBatchFiles.ledgerRowsForRange(spark, dir, 3000, 3003))
-    assert(caseLawCopies(datastore) == 1)
-    // a consumer of both columns still plans one copy
-    assert(caseLawCopies(model.select(to_json(col("details")),
+    assert(kernels(datastore) == 1)
+    assert(jsonChain(datastore) == 0)
+    // a consumer of both columns still plans one kernel, and one that reads
+    // neither plans none
+    assert(kernels(model.select(to_json(col("details")),
       col("details_json"))) == 1)
+    assert(kernels(model.select("id", "type")) == 0)
+  }
+
+  /** The NDJSON export of `df`: `write.json`, every part file's lines,
+    * sorted. */
+  private def ndjson(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ops-golden")
+      .resolve("out")
+    df.write.json(dir.toString)
+    val parts = java.nio.file.Files.list(dir)
+    try parts.iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala).sorted
+    finally parts.close()
+  }
+
+  private def assertGolden(lines: Seq[String], name: String): Unit = {
+    val golden = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/test/resources/golden", name)).toArray.toSeq
+    assert(lines.size == golden.size, s"$name: ${lines.size} lines vs ${golden.size}")
+    lines.zip(golden).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"$name line $i:\n  got      $a\n  expected $b")
+    }
+  }
+
+  /** Ledgers of the fixture lattice whose ops cover all 27 types, each in a
+    * successful and in a failed tx, plus two five-tx ledgers (muxed tx
+    * source, fee bump, soroban footprints). */
+  private val allTypesLedgers = Seq(2700, 2701, 2702, 2704, 2705, 2706, 2707,
+    2710, 2711, 2712, 2715, 2716, 2717, 2719, 2720, 2721, 2722, 2725, 2726,
+    2730, 2731, 2735, 2736, 2740, 2741, 2745, 2746, 2750, 2751).map(_.toLong)
+
+  test("history_operations NDJSON is byte-identical to its golden") {
+    val ops = StellarTransforms.historyOperations(
+      StellarFixture.ledgers(spark, 2700, 2751)
+        .where(col("sequence").isin(allTypesLedgers: _*)))
+    val schema = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      "src/test/resources/golden/history_operations_schema.json")).trim
+    assert(ops.schema.json == schema)
+    val lines = ndjson(ops)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(lines.map(l => om.readTree(l).get("type").asInt).toSet ==
+      (0 to 26).toSet)
+    assertGolden(lines, "history_operations_all_types.golden")
+    // genuine wire bytes: soroban invokes with SAC events and footprints,
+    // LP deposit/withdraw and CB create/claim with their entry changes
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ops-real")
+    val soroban = tmp.resolve("soroban").toString
+    val classic = tmp.resolve("classic").toString
+    graft.sources.RealXdrFixture.writeBatchTree(soroban, 3000, 3002)
+    graft.sources.RealXdrFixture.writeClassicBatchTree(classic, 3000, 3003)
+    def realOps(dir: String, end: Long) = StellarTransforms.historyOperations(
+      graft.sources.LcmBatchFiles.ledgerRowsForRange(spark, dir, 3000, end))
+    assertGolden(
+      (ndjson(realOps(soroban, 3002)) ++ ndjson(realOps(classic, 3003))).sorted,
+      "history_operations_real_xdr.golden")
   }
 
   test("details_json is details with null keys dropped, except a failed " +

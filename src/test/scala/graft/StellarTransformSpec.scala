@@ -140,4 +140,35 @@ class StellarTransformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length == expected.size)
     assert(got.toSet == expected)
   }
+
+  test("lowercase hex stays off ICU: no Lower in the ledgers/ops/trades plans") {
+    import org.apache.spark.sql.catalyst.expressions.Lower
+    def lowers(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+        _.collect { case l: Lower => l })).size
+    val ledgers = StellarTransforms.historyLedgers(fixture)
+    val trades = graft.operators.StellarTradesEffects.historyTrades(fixture)
+    assert(lowers(ledgers) == 0)
+    assert(lowers(StellarTransforms.historyOperations(fixture)) == 0)
+    assert(lowers(trades) == 0)
+    // the native rendering is the text lower(hex(...)) gave
+    val expected = fixture.select(col("sequence"),
+      lower(hex(col("ledger_hash"))).as("h"),
+      lower(hex(col("previous_ledger_hash"))).as("p"))
+    val got = ledgers.select(col("sequence"), col("ledger_hash").as("h"),
+      col("previous_ledger_hash").as("p"))
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+    // pool trades: the fixture's LP atoms (path payments of successful txs)
+    val pools = graft.operators.StellarTradesEffects.historyTrades(
+        StellarFixture.ledgers(spark, 2000, 2099))
+      .where(col("selling_liquidity_pool_id").isNotNull)
+      .select("selling_liquidity_pool_id").collect().map(_.getString(0))
+    assert(pools.nonEmpty && pools.forall(_.matches("[0-9a-f]{64}")))
+    val bytes = spark.createDataFrame(Seq(Tuple1(Array.emptyByteArray),
+        Tuple1((0 until 256).map(_.toByte).toArray), Tuple1(null: Array[Byte])))
+      .toDF("b")
+    val diff = bytes.where(!(graft.functions.GraftFunctions.hexLower(col("b"))
+      <=> lower(hex(col("b"))))).count()
+    assert(diff == 0)
+  }
 }
