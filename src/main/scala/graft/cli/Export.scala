@@ -6,6 +6,7 @@ import graft.functions.GraftFunctions._
 import graft.model.LedgerModel.LedgerRow
 import graft.operators._
 import graft.sources.{LcmBatchFiles, StellarFixture}
+import graft.sources.LcmBatchFiles.ObjectDecodeResult
 
 /** Thin command layer mirroring the reference CLI (`cmd/export_*.go`): same
   * command names and flag vocabulary, Spark underneath.
@@ -14,8 +15,11 @@ import graft.sources.{LcmBatchFiles, StellarFixture}
   *     --start 1000 --end 1099 --output /tmp/out \
   *     [--format ndjson|parquet] [--limit N] [--extra-fields k=v,k2=v2]
   *     [--batch-input <datastore tree of zstd LedgerCloseMetaBatch objects>
-  *       | --xdr-input <frame NDJSON of real XDR> [--permissive]
-  *       | --input <parquet dir of decoded LedgerRow>]  (default: fixture)
+  *       [--permissive]]
+  *
+  * `--batch-input` is the one ledger input: the reference's datastore
+  * layout, read through the `graft-lcm-datastore` connector. Without it
+  * the commands read `StellarFixture`'s generated ledgers.
   *
   * `--end` must be at least `--start`. The one exception is `--end 0` on
   * `export_ledger_entry_changes --batch-input`: the continuous mode, which
@@ -50,8 +54,7 @@ object Export {
       // semantics, `cmd/export_ledger_entry_changes.go:26-28,72-89` — every
       // other command there requires a bounded range)
       start: Long = 0, end: Long = -1,
-      output: String = "", input: Option[String] = None,
-      xdrInput: Option[String] = None,
+      output: String = "",
       batchInput: Option[String] = None,
       permissive: Boolean = false,
       format: String = "ndjson",
@@ -97,8 +100,6 @@ object Export {
       case "--start" :: v :: t => loop(a.copy(start = v.toLong), t)
       case "--end" :: v :: t => loop(a.copy(end = v.toLong), t)
       case ("--output" | "-o") :: v :: t => loop(a.copy(output = v), t)
-      case "--input" :: v :: t => loop(a.copy(input = Some(v)), t)
-      case "--xdr-input" :: v :: t => loop(a.copy(xdrInput = Some(v)), t)
       case "--batch-input" :: v :: t => loop(a.copy(batchInput = Some(v)), t)
       case "--permissive" :: t => loop(a.copy(permissive = true), t)
       case "--format" :: v :: t => loop(a.copy(format = v), t)
@@ -218,42 +219,30 @@ object Export {
     written
   }
 
-  private def ledgerSource(spark: SparkSession, a: Args): Dataset[LedgerRow] = {
-    import spark.implicits._
-    (a.batchInput, a.xdrInput, a.input) match {
+  /** The command's ledgers, exactly `[start, end]`: each source trims its
+    * own range, so no row-level filter sits between the transform and the
+    * source's serializer. */
+  private def ledgerSource(spark: SparkSession, a: Args): Dataset[LedgerRow] =
+    a.batchInput match {
       // --batch-input <datastore tree>: the reference's REAL backfill
       // substrate — zstd LedgerCloseMetaBatch objects (1 ledger/file) read
       // through the graft-lcm-datastore connector, bounded to the range
-      case (Some(root), _, _) if a.permissive =>
+      case Some(root) if a.permissive =>
         reportPoisoned(LcmBatchFiles.objectsPermissive(
-          spark, root, a.start, a.end, a.networkId), a, "path").flatMap(_.rows)
-      case (Some(root), _, _) =>
+            spark, root, a.start, a.end, a.networkId), a)
+          .flatMap(_.rows)(LcmBatchFiles.ledgerRowEnc)
+      case Some(root) =>
         LcmBatchFiles.ledgerRowsForRange(
           spark, root, a.start, a.end, a.networkId)
-      // --xdr-input <file/dir of frame NDJSON>: REAL network XDR — one row
-      // per ledger with base64 `ledger_header` + `transactions` array of
-      // (tx_envelope, tx_result[, tx_meta, tx_fee_meta]); decodes in the
-      // executors (RealXdrSource) and feeds the same model-path transforms,
-      // so every export command replays genuine archive bytes
-      case (None, Some(path), _) if a.permissive =>
-        reportPoisoned(graft.operators.RealXdrSource.ledgerRowsPermissive(
-            spark.read.json(path), a.networkId), a, "ledger_header")
-          .flatMap(_.row)
-      case (None, Some(path), _) =>
-        graft.operators.RealXdrSource.ledgerRows(spark.read.json(path),
-          a.networkId)
-      case (None, None, Some(path)) => spark.read.parquet(path).as[LedgerRow]
-      case (None, None, None) => StellarFixture.ledgers(spark, a.start, a.end)
+      case None => StellarFixture.ledgers(spark, a.start, a.end)
     }
-  }
 
-  /** --permissive: poison inputs (frames or datastore objects) become
-    * REPORTED error rows — counted in a stats line and dumped beside the
-    * output with the `evidence` column that identifies them — never
-    * silently dropped. One job counts the persisted result; the export then
-    * reads the same cache. */
-  private def reportPoisoned[R](decoded: Dataset[R], a: Args,
-      evidence: String): Dataset[R] = {
+  /** --permissive: poison datastore objects become REPORTED error rows —
+    * counted in a stats line and dumped beside the output with the object
+    * `path` that identifies them — never silently dropped. One job counts
+    * the persisted result; the export then reads the same cache. */
+  private def reportPoisoned(decoded: Dataset[ObjectDecodeResult],
+      a: Args): Dataset[ObjectDecodeResult] = {
     val res = decoded.persist()
     val c = res.agg(count(lit(1)), count_if(col("error").isNull),
       count_if(col("error").isNotNull)).head()
@@ -261,14 +250,14 @@ object Export {
       s""""xdr_poisoned":${c.getLong(2)}}""")
     if (c.getLong(2) > 0) {
       val errPath = a.output.stripSuffix("/") + "_decode_errors"
-      res.filter(col("error").isNotNull).select(col("error"), col(evidence))
+      res.filter(col("error").isNotNull).select(col("error"), col("path"))
         .write.mode("overwrite").json(errPath)
       println(s"""{"xdr_poisoned":${c.getLong(2)},"errors_path":"$errPath"}""")
     }
     res
   }
 
-  /** Runs `write` over the command's ledgers, trimmed to [start, end]. A
+  /** Runs `write` over the command's ledgers ([[ledgerSource]]). A
     * `--batch-input` export then prints ledgers expected against ledgers
     * read, counted by an observe() riding the export's own query (no extra
     * job): a hole in the datastore tree shows without failing the export.
@@ -280,7 +269,7 @@ object Export {
     * plan. */
   private def withLedgers(spark: SparkSession, a: Args,
       persisted: Boolean = false)(write: Dataset[LedgerRow] => Unit): Unit = {
-    val src = ledgerSource(spark, a).where(col("sequence").between(a.start, a.end))
+    val src = ledgerSource(spark, a)
     val ledgers =
       if (persisted) src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else src
@@ -357,11 +346,11 @@ object Export {
           sink(StellarTransforms.ledgerTransactions(l.toDF()), a))
 
       case "export_contract_events" =>
-        // real-XDR inputs carry the FULL diagnostic grain (tx meta v3
-        // SorobanMeta → TxModel.diag_events); the fixture model carries
-        // op-level SAC events only — each substrate gets its renderer
+        // the datastore's real XDR carries the FULL diagnostic grain (tx
+        // meta v3 SorobanMeta → TxModel.diag_events); the fixture model
+        // carries op-level SAC events only — each substrate gets its renderer
         withLedgers(spark, a)(l =>
-          if (a.batchInput.isDefined || a.xdrInput.isDefined)
+          if (a.batchInput.isDefined)
             sink(graft.operators.SorobanStateTables.contractEventsFromLedgers(l), a)
           else sink(StellarTransforms.contractEvents(l.toDF()), a))
 
@@ -383,16 +372,11 @@ object Export {
 
       case "get_ledger_range_from_times" =>
         // SURVEY §3.3: once ledgers are a table this is a min/max scan, not
-        // an archive binary search. With --input the scan covers the table's
-        // own extent; the generated fallback honors --start/--end and only
-        // defaults to a 5000-ledger window when no bounds were given.
-        val src = a.input match {
-          case Some(_) => ledgerSource(spark, a)
-          case None => ledgerSource(spark,
-            // anchor the default window at --start so a bare high start
-            // still yields a non-empty generated range
-            a.copy(end = if (a.end > 0) a.end else a.start + 5000L))
-        }
+        // an archive binary search. The scan honors --start/--end and only
+        // defaults to a 5000-ledger window, anchored at --start so a bare
+        // high start still yields a non-empty range, when no end was given.
+        val src = ledgerSource(spark,
+          a.copy(end = if (a.end > 0) a.end else a.start + 5000L))
         val ledgers = StellarTransforms.historyLedgers(src)
           .withColumnRenamed("sequence", "ledger_sequence")
         HistoryOps.ledgerRangeForTimes(ledgers,

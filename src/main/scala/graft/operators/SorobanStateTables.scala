@@ -26,7 +26,7 @@ import graft.model.LedgerModel.LedgerRow
   * the header context (closed_at, ledger_sequence). Decode runs in the
   * EXECUTORS — one `Dataset.map` at the deserialization boundary, map-only,
   * no shuffle — so a 100 TB backfill parallelizes per input partition
-  * exactly like `RealXdrSource`.
+  * exactly like the datastore decode ([[graft.sources.LcmBatchFiles]]).
   */
 object SorobanStateTables {
 

@@ -132,8 +132,8 @@ object LcmBatchFiles {
 
   /** Permissive-mode result: one row per OBJECT file — either its decoded
     * ledgers or the error (poison objects must be reported, never dropped;
-    * the caller splits on `error`, mirroring
-    * [[graft.operators.RealXdrSource.ledgerRowsPermissive]]). */
+    * the caller splits on `error`, as `graft.cli.Export`'s `--permissive`
+    * counts and dumps them). */
   final case class ObjectDecodeResult(path: String, rows: Seq[LedgerRow],
       error: Option[String])
 

@@ -154,57 +154,6 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toString("UTF-8").trim == """{"start":null,"end":null}""")
   }
 
-  test("--permissive --xdr-input: a poison frame is reported (counted in " +
-      "the observe() metric, dumped beside the output), never dropped") {
-    // one good real-XDR frame + one truncated header
-    import graft.codec.{Hashes, XdrEncode}
-    def b64(b: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(b)
-    val seq = 77101L
-    val header = b64(XdrEncode.ledgerHeader(
-      XdrEncode.HeaderSpec(seq, 1719600000L)))
-    val env = XdrEncode.txEnvelopeV1(XdrEncode.TxSpec(
-      sourceKey = Hashes.sha256("poison-src".getBytes("UTF-8")),
-      fee = 100L, seqNum = 7L,
-      ops = Seq(XdrEncode.createAccountOp(
-        Hashes.sha256("poison-dst".getBytes("UTF-8")), 5000000L))))
-    val result = XdrEncode.txResult(100L, 0, Seq(XdrEncode.OpResultSpec(0, 0)))
-    val txJson = s"""{"tx_envelope":"${b64(env)}",""" +
-      s""""tx_result":"${b64(result)}"}"""
-    val in = tmpDir("permissive-in")
-    Files.writeString(Paths.get(in, "frames.json"),
-      s"""{"ledger_header":"$header","transactions":[$txJson]}\n""" +
-        s"""{"ledger_header":"${header.dropRight(8)}","transactions":[$txJson]}\n""")
-    val out = tmpDir("permissive-out") + "/ledgers"
-
-    val stdout = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(stdout)) {
-      Export.run(spark, Export.parse(Array(
-        "export_ledgers", "--start", seq.toString, "--end", seq.toString,
-        "--xdr-input", s"$in/frames.json", "--permissive",
-        "--output", out, "--format", "ndjson")))
-    }
-    val printed = stdout.toString("UTF-8")
-    // the poisoned count reaches the stats output...
-    assert(printed.contains(""""xdr_poisoned":1"""), printed)
-    // ...and the offending frame is dumped beside the export
-    val errDir = Paths.get(out + "_decode_errors")
-    assert(Files.exists(errDir))
-    val errRows = Files.list(errDir).iterator().asScala
-      .filter(_.toString.endsWith(".json")).flatMap(ndjsonLines(_)).toSeq
-    assert(errRows.size == 1 && errRows.head.contains("XdrError"))
-    // the good frame still exported
-    val rows = Files.list(Paths.get(out)).iterator().asScala
-      .filter(_.toString.endsWith(".json")).flatMap(ndjsonLines(_)).toSeq
-    assert(rows.size == 1 && rows.head.contains(s""""sequence":$seq"""))
-    // fail-fast default: the same input without --permissive throws
-    intercept[org.apache.spark.SparkException] {
-      Export.run(spark, Export.parse(Array(
-        "export_ledgers", "--start", seq.toString, "--end", seq.toString,
-        "--xdr-input", s"$in/frames.json",
-        "--output", tmpDir("strict-out") + "/x", "--format", "ndjson")))
-    }
-  }
-
   test("upload_to_gcs: upload-verify-delete over the Hadoop FS abstraction") {
     // the reference's K3 contract (upload_to_gcs.go:25-74): copy to the
     // bucket with the LOCAL PATH as the object key, verify the uploaded
@@ -250,6 +199,15 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("the datastore tree is the one ledger input: --xdr-input and --input " +
+      "are unknown flags") {
+    for (flag <- Seq("--xdr-input", "--input")) {
+      val e = intercept[RuntimeException](Export.parse(Array(
+        "export_ledgers", "--start", "1", "--end", "2", flag, "/tmp/x")))
+      assert(e.getMessage == s"unknown flag: $flag", e.getMessage)
+    }
+  }
+
   test("missing --end fails fast; --end 0 is rejected off the changes command") {
     // omitting --end must not silently enter the unbounded streaming arm
     // (pre-r12 regression: Args.end defaulted to 0 and blocked forever)
@@ -278,42 +236,10 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
       ops = Seq(XdrEncode.createAccountOp(destKey, 5000000L))))
     val result = XdrEncode.txResult(100L, 0, Seq(XdrEncode.OpResultSpec(0, 0)))
     val header = XdrEncode.ledgerHeader(XdrEncode.HeaderSpec(77001L, 1719600000L))
-    def b64(b: Array[Byte]) = java.util.Base64.getEncoder.encodeToString(b)
 
-    // --- tx hash over raw archive frames: same bytes, different domain ---
-    val in = tmpDir("net-frames")
-    Files.writeString(Paths.get(in, "frames.json"),
-      s"""{"ledger_header":"${b64(header)}","transactions":[""" +
-        s"""{"tx_envelope":"${b64(env)}","tx_result":"${b64(result)}"}]}\n""")
-    def exportedHash(flags: String*): String = {
-      val out = tmpDir("net-txs") + "/txs"
-      Export.run(spark, Export.parse(Array(
-        "export_transactions", "--start", "77001", "--end", "77001",
-        "--xdr-input", s"$in/frames.json", "--output", out,
-        "--format", "ndjson") ++ flags))
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val rows = Files.list(Paths.get(out)).iterator().asScala
-        .filter(_.toString.endsWith(".json")).flatMap(ndjsonLines(_)).toSeq
-      assert(rows.size == 1)
-      om.readTree(rows.head).get("transaction_hash").asText()
-    }
-    val mainnetHash = exportedHash()
-    val testnetHash = exportedHash("--testnet")
-    assert(mainnetHash != testnetHash)
-    // the testnet hash IS sha256(testnetNetworkId ‖ ENVELOPE_TYPE_TX ‖ tx)
-    assert(testnetHash == Hashes.hex(
-      StellarXdr.decodeTxEnvelope(env, Network.id("testnet")).hash))
-    assert(mainnetHash == Hashes.hex(StellarXdr.decodeTxEnvelope(env).hash))
-    // futurenet is a THIRD domain; testnet wins when both flags are set
-    // (the reference's GetEnvironmentDetails checks IsTest first)
-    assert(exportedHash("--futurenet") != testnetHash)
-    assert(exportedHash("--futurenet") != mainnetHash)
-    assert(exportedHash("--testnet", "--futurenet") == testnetHash)
-
-    // --- SAC asset walk over a TESTNET-written datastore tree ---
     // instance entry whose contract id derives from the TESTNET
-    // passphrase: the walk recovers the asset only when the export runs
-    // with the matching network
+    // passphrase: the SAC asset walk recovers the asset only when the
+    // export runs with the matching network
     val cdKey = ScVal.encode(ScVal.LedgerKeyContractInstance)
     val cdVal = ScVal.encode(ScVal.ContractInstance(None, Seq(
       ScVal.Vec(Seq(ScVal.Sym("AssetInfo"))) ->
@@ -327,12 +253,44 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
         XdrEncode.contractDataEntry(testnetSacId, cdKey, 1, cdVal)))))))
     val feeMeta = XdrEncode.feeMetaPair(srcKey, 1000000L, 999900L)
     val lcmTx = XdrEncode.LcmTx(env, result, meta, feeMeta)
+    // one datastore tree per network: the same tx bytes, with the
+    // result-pair hash each network's core would embed
     def tree(networkId: Array[Byte]): String = {
       val dir = tmpDir("net-tree")
       graft.sources.LcmBatchFiles.writeTree(dir,
         Seq((header, Seq(lcmTx))), networkId)
       dir
     }
+    val trees = Seq("pubnet", "testnet", "futurenet")
+      .map(n => n -> tree(Network.id(n))).toMap
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+
+    // --- tx hash: same bytes, different domain ---
+    def exportedHash(tree: String, flags: String*): String = {
+      val out = tmpDir("net-txs") + "/txs"
+      Export.run(spark, Export.parse(Array(
+        "export_transactions", "--start", "77001", "--end", "77001",
+        "--batch-input", tree, "--output", out,
+        "--format", "ndjson") ++ flags))
+      val rows = jsonRows(out)
+      assert(rows.size == 1)
+      om.readTree(rows.head).get("transaction_hash").asText()
+    }
+    val mainnetHash = exportedHash(trees("pubnet"))
+    val testnetHash = exportedHash(trees("testnet"), "--testnet")
+    assert(mainnetHash != testnetHash)
+    // the testnet hash IS sha256(testnetNetworkId ‖ ENVELOPE_TYPE_TX ‖ tx)
+    assert(testnetHash == Hashes.hex(
+      StellarXdr.decodeTxEnvelope(env, Network.id("testnet")).hash))
+    assert(mainnetHash == Hashes.hex(StellarXdr.decodeTxEnvelope(env).hash))
+    // futurenet is a THIRD domain; testnet wins when both flags are set
+    // (the reference's GetEnvironmentDetails checks IsTest first)
+    val futurenetHash = exportedHash(trees("futurenet"), "--futurenet")
+    assert(futurenetHash != testnetHash && futurenetHash != mainnetHash)
+    assert(exportedHash(trees("testnet"), "--testnet", "--futurenet") ==
+      testnetHash)
+
+    // --- SAC asset walk over the TESTNET-written datastore tree ---
     def exportedContractData(tree: String, flags: String*): String = {
       val out = tmpDir("net-cd")
       Export.run(spark, Export.parse(Array(
@@ -344,8 +302,7 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows.size == 1)
       rows.head
     }
-    val testnetTree = tree(Network.id("testnet"))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val testnetTree = trees("testnet")
     val tn = om.readTree(exportedContractData(testnetTree, "--testnet"))
     assert(tn.get("contract_id").asText() ==
       Strkey.encodeContract(testnetSacId))
@@ -355,8 +312,7 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the same entry on a MAINNET tree under the mainnet default: the
     // self-check derives the mainnet SAC id, which cannot match the
     // testnet-derived contract id — impostor rejected, fields empty
-    val mn = om.readTree(
-      exportedContractData(tree(StellarXdr.PublicNetworkId)))
+    val mn = om.readTree(exportedContractData(trees("pubnet")))
     assert(mn.get("asset_code").asText() == "" &&
       mn.get("asset_type").asText() == "")
     // cross-network decode fails LOUDLY: a testnet tree read as mainnet
@@ -369,23 +325,22 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     // token transfers derive network-correct SAC contract ids: the native
     // asset's C-address differs by network (create_account emits a
     // transfer event whose contract_id is the native SAC)
-    def transferContractIds(flags: String*): Set[String] = {
+    def transferContractIds(tree: String, flags: String*): Set[String] = {
       val out = tmpDir("net-tt") + "/tt"
       Export.run(spark, Export.parse(Array(
         "export_token_transfers", "--start", "77001", "--end", "77001",
-        "--xdr-input", s"$in/frames.json", "--output", out,
+        "--batch-input", tree, "--output", out,
         "--format", "ndjson") ++ flags))
-      Files.list(Paths.get(out)).iterator().asScala
-        .filter(_.toString.endsWith(".json")).flatMap(ndjsonLines(_))
-        .map(l => om.readTree(l).get("contract_id").asText()).toSet
+      jsonRows(out).map(l => om.readTree(l).get("contract_id").asText()).toSet
     }
     val nativeTestnet = SacContractId.contractAddress("native", "",
       Array.emptyByteArray, Network.TestnetPassphrase)
     val nativeMainnet = SacContractId.contractAddress("native", "",
       Array.emptyByteArray)
     assert(nativeTestnet != nativeMainnet)
-    assert(transferContractIds("--testnet") == Set(nativeTestnet))
-    assert(transferContractIds() == Set(nativeMainnet))
+    assert(transferContractIds(trees("testnet"), "--testnet") ==
+      Set(nativeTestnet))
+    assert(transferContractIds(trees("pubnet")) == Set(nativeMainnet))
   }
 
   // ---- --batch-input: the datastore tree through the connector ---------------

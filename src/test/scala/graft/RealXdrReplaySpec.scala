@@ -93,6 +93,25 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
         txs.map(txInput).map(StellarXdr.decodeTx(_)))
     }
 
+  /** The ledgers golden and its tx golden as a datastore tree: each
+    * ledger's header and tx blobs wrapped as one `LedgerCloseMeta` object
+    * (`XdrEncode` writes the framing) under the public key law. */
+  private def goldenTree(ledgerGolden: Seq[JsonNode],
+      txGolden: Seq[JsonNode]): String = {
+    def raw(n: JsonNode, field: String): Array[Byte] =
+      java.util.Base64.getDecoder.decode(
+        Option(n.get(field)).map(_.asText()).getOrElse(""))
+    val bySeq = txsByLedger(txGolden)
+    val dir = java.nio.file.Files.createTempDirectory("golden-tree").toString
+    graft.sources.LcmBatchFiles.writeTree(dir, ledgerGolden.map { n =>
+      (raw(n, "ledger_header"),
+        bySeq.getOrElse(n.get("sequence").asLong(), Nil).map(t =>
+          graft.codec.XdrEncode.LcmTx(raw(t, "tx_envelope"),
+            raw(t, "tx_result"), raw(t, "tx_meta"), raw(t, "tx_fee_meta"))))
+    })
+    dir
+  }
+
   // ---- JSON-tree comparison ------------------------------------------------
 
   /** golden value vs ours, with: integral = exact, floating = 1e-9 relative,
@@ -337,28 +356,17 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- distributed decode --------------------------------------------------
 
-  /** The 100 TB shape: frames load as a plain DataFrame (spark.read.json on
-    * the golden NDJSON), decode IN THE EXECUTORS via RealXdrSource, and the
-    * unchanged transforms reproduce the golden — no driver-side decode
-    * anywhere in the pipeline. */
-  test("distributed decode: frame DataFrame through executors to transforms") {
-    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
-    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
-    val s = spark
-    val txDf = s.read.json(txPath)
-    val ledDf = s.read.json(ledPath)
-    val frames = ledDf.select(col("sequence"), col("ledger_header"))
-      .join(txDf.select(col("ledger_sequence"), col("id"),
-          struct(col("tx_envelope"), col("tx_result"), col("tx_meta"),
-            col("tx_fee_meta")).as("tx")),
-        col("sequence") === col("ledger_sequence"), "left")
-      .groupBy("sequence", "ledger_header")
-      .agg(transform(array_sort(collect_list(struct(col("id"), col("tx")))),
-        x => x("tx")).as("transactions"))
-      .select("ledger_header", "transactions")
-    val out = StellarTransforms.historyTransactions(
-      graft.operators.RealXdrSource.ledgerRows(frames))
+  /** The 100 TB shape: the golden ledgers as a datastore tree, read by
+    * the connector and decoded IN THE EXECUTORS, and the unchanged
+    * transforms reproduce the golden — no driver-side decode anywhere in
+    * the pipeline. */
+  test("distributed decode: datastore tree through executors to transforms") {
     val golden = rows("transactions", "10_ledgers_txs.golden")
+    val ledgers = rows("ledgers", "10_ledgers.golden")
+    val seqs = ledgers.map(_.get("sequence").asLong())
+    val out = StellarTransforms.historyTransactions(
+      graft.sources.LcmBatchFiles.ledgerRowsForRange(spark,
+        goldenTree(ledgers, golden), seqs.min, seqs.max))
     assertNoDiffs(diff(golden, out, "id", txKeys, "dist"))
   }
 
@@ -382,33 +390,6 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(res.opResults.head.traceCode ==
       "ManageSellOfferResultCodeManageSellOfferSuccess")
     assert(res.opResults.head.resultOfferId.isEmpty)
-  }
-
-  // ---- permissive decode ---------------------------------------------------
-
-  /** Poison-frame handling for long backfills: strict mode fails the job,
-    * permissive mode yields one error row per bad frame and decodes the
-    * rest. */
-  test("permissive decode: a poison frame becomes an error row, not a crash") {
-    val s = spark; import s.implicits._
-    val good = rows("ledgers", "10_ledgers.golden").head
-      .get("ledger_header").asText()
-    val frames = Seq(
-      (good, Seq.empty[(String, String)]),
-      (good.dropRight(8), Seq.empty[(String, String)])) // truncated header
-      .toDF("ledger_header", "raw")
-      .select(col("ledger_header"), transform(col("raw"), t =>
-        struct(t("_1").as("tx_envelope"), t("_2").as("tx_result")))
-        .as("transactions"))
-    val res = graft.operators.RealXdrSource.ledgerRowsPermissive(frames)
-      .collect()
-    assert(res.count(_.row.isDefined) == 1)
-    val err = res.find(_.error.isDefined).get
-    assert(err.error.get.contains("XdrError") ||
-      err.error.get.contains("underflow"), err.error.get)
-    intercept[org.apache.spark.SparkException] {
-      graft.operators.RealXdrSource.ledgerRows(frames).collect()
-    }
   }
 
   // ---- meta-derived laws on real data --------------------------------------
@@ -476,111 +457,6 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  // ---- streaming ingest ----------------------------------------------------
-
-  /** The incremental shape: frames land as files, Structured Streaming
-    * tails the directory, the SAME executor-side decode + transform chain
-    * runs per micro-batch — output must equal the batch replay. */
-  test("streaming: real-XDR frames through readStream match the batch path") {
-    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
-    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
-    val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("xdr-stream")
-    val txDf = s.read.json(txPath)
-    val ledDf = s.read.json(ledPath)
-    val frames = ledDf.select(col("sequence"), col("ledger_header"))
-      .join(txDf.select(col("ledger_sequence"), col("id"),
-          struct(col("tx_envelope"), col("tx_result")).as("tx")),
-        col("sequence") === col("ledger_sequence"), "left")
-      .groupBy("sequence", "ledger_header")
-      .agg(transform(array_sort(collect_list(struct(col("id"), col("tx")))),
-        x => x("tx")).as("transactions"))
-      .select("ledger_header", "transactions")
-    frames.coalesce(1).write.mode("overwrite").json(dir.resolve("in").toString)
-    val schema = frames.schema
-    val stream = s.readStream.schema(schema).json(dir.resolve("in").toString)
-    val out = StellarTransforms.historyTransactions(
-      graft.operators.RealXdrSource.ledgerRows(stream))
-    val q = out.writeStream.format("memory").queryName("xdr_stream_txs")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = s.table("xdr_stream_txs")
-      .select("id", "transaction_hash", "fee_charged").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val batch = StellarTransforms.historyTransactions(
-        graft.operators.RealXdrSource.ledgerRows(frames))
-      .select("id", "transaction_hash", "fee_charged").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed.size == 650 && streamed == batch)
-  }
-
-  /** Directive-3 widening: the FULL table fan-out per micro-batch — the
-    * same foreachBatch a production incremental backfill would run
-    * (effects + trades + token transfers off real bytes), multiset-equal
-    * to the batch replay. */
-  test("streaming: full fan-out (effects/trades/transfers) in foreachBatch " +
-      "matches the batch path on real bytes") {
-    val txPath = goldenPath("transactions", "10_ledgers_txs.golden")
-    val ledPath = goldenPath("ledgers", "10_ledgers.golden")
-    val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("xdr-stream-fanout")
-    val txDf = s.read.json(txPath)
-    val ledDf = s.read.json(ledPath)
-    val frames = ledDf.select(col("sequence"), col("ledger_header"))
-      .join(txDf.select(col("ledger_sequence"), col("id"),
-          struct(col("tx_envelope"), col("tx_result"), col("tx_meta"),
-            col("tx_fee_meta")).as("tx")),
-        col("sequence") === col("ledger_sequence"), "left")
-      .groupBy("sequence", "ledger_header")
-      .agg(transform(array_sort(collect_list(struct(col("id"), col("tx")))),
-        x => x("tx")).as("transactions"))
-      .select("ledger_header", "transactions")
-    // several input files → several micro-batches with maxFilesPerTrigger
-    frames.repartition(3).write.mode("overwrite")
-      .json(dir.resolve("in").toString)
-    val stream = s.readStream.schema(frames.schema)
-      .option("maxFilesPerTrigger", "1").json(dir.resolve("in").toString)
-    val streamRows = graft.operators.RealXdrSource.ledgerRows(stream)
-
-    val effAcc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val tradeAcc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val xferAcc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = streamRows.writeStream
-      .foreachBatch { (batch: Dataset[LedgerRow], _: Long) =>
-        val b = batch.persist()
-        graft.operators.StellarTradesEffects.historyEffects(b)
-          .toJSON.collect().foreach(effAcc.add)
-        graft.operators.StellarTradesEffects.historyTrades(b)
-          .toJSON.collect().foreach(tradeAcc.add)
-        graft.operators.TokenTransfers.fromLedgers(b)
-          .toJSON.collect().foreach(xferAcc.add)
-        b.unpersist(); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(180000)
-
-    def multiset(xs: Iterable[String]) = {
-      // drop key order variance by re-parsing to sorted-key canonical form
-      xs.map(x => om.readTree(x)).map(_.toString)
-        .groupBy(identity).view.mapValues(_.size).toMap
-    }
-    val batchRows = toDs(ledgerRows(
-      rows("ledgers", "10_ledgers.golden"),
-      rows("transactions", "10_ledgers_txs.golden")))
-    assert(multiset(effAcc.asScala) == multiset(
-      graft.operators.StellarTradesEffects.historyEffects(batchRows)
-        .toJSON.collect()))
-    assert(multiset(tradeAcc.asScala) == multiset(
-      graft.operators.StellarTradesEffects.historyTrades(batchRows)
-        .toJSON.collect()))
-    assert(multiset(xferAcc.asScala) == multiset(
-      graft.operators.TokenTransfers.fromLedgers(batchRows)
-        .toJSON.collect()))
-    assert(effAcc.size > 0 && tradeAcc.size > 0 && xferAcc.size > 0)
-  }
-
   // ---- decoder robustness --------------------------------------------------
 
   /** Malformed input surfaces as XdrError, never a silent partial decode,
@@ -622,29 +498,18 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- CLI end-to-end on real XDR ------------------------------------------
 
   /** The reference's own CLI golden harness, replayed against OUR CLI:
-    * `export_transactions --xdr-input <frames>` over the real ten-ledger
+    * `export_transactions --batch-input <tree>` over the real ten-ledger
     * range must emit NDJSON whose parsed rows match the reference's
     * `10_ledgers_txs.golden` — the same check `cmd/export_*_test.go` runs
     * against the Go binary. */
-  test("CLI: export_transactions --xdr-input reproduces the reference golden") {
-    val tmp = java.nio.file.Files.createTempDirectory("xdr-frames")
-    val framesPath = tmp.resolve("frames.json").toString
-    // frames NDJSON straight from the goldens
-    val bySeq = txsByLedger(rows("transactions", "10_ledgers_txs.golden"))
-    val frames = rows("ledgers", "10_ledgers.golden").map { n =>
-      val seq = n.get("sequence").asLong()
-      val txs = bySeq.getOrElse(seq, Nil).map { t =>
-        s"""{"tx_envelope":${t.get("tx_envelope")},"tx_result":${t.get("tx_result")},""" +
-          s""""tx_meta":${t.get("tx_meta")},"tx_fee_meta":${t.get("tx_fee_meta")}}"""
-      }.mkString("[", ",", "]")
-      s"""{"sequence":${seq},"ledger_header":${n.get("ledger_header")},"transactions":$txs}"""
-    }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(framesPath),
-      frames.mkString("\n"))
+  test("CLI: export_transactions --batch-input reproduces the reference golden") {
+    val tmp = java.nio.file.Files.createTempDirectory("golden-cli")
+    val tree = goldenTree(rows("ledgers", "10_ledgers.golden"),
+      rows("transactions", "10_ledgers_txs.golden"))
     val outDir = tmp.resolve("out").toString
     graft.cli.Export.run(spark, graft.cli.Export.parse(Array(
       "export_transactions", "--start", "30822015", "--end", "30822025",
-      "--xdr-input", framesPath, "--output", outDir, "--format", "ndjson")))
+      "--batch-input", tree, "--output", outDir, "--format", "ndjson")))
     val outRows = new File(outDir).listFiles()
       .filter(_.getName.endsWith(".json")).toSeq.flatMap(f =>
         scala.io.Source.fromFile(f).getLines().filter(_.trim.nonEmpty))
@@ -662,12 +527,12 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     })
 
-    // and a second command over the same frames: export_effects must
+    // and a second command over the same tree: export_effects must
     // reproduce the effects golden (148 real effects) row for row
     val effOut = tmp.resolve("eff").toString
     graft.cli.Export.run(spark, graft.cli.Export.parse(Array(
       "export_effects", "--start", "30822015", "--end", "30822025",
-      "--xdr-input", framesPath, "--output", effOut, "--format", "ndjson")))
+      "--batch-input", tree, "--output", effOut, "--format", "ndjson")))
     val effRows = new File(effOut).listFiles()
       .filter(_.getName.endsWith(".json")).toSeq.flatMap(f =>
         scala.io.Source.fromFile(f).getLines().filter(_.trim.nonEmpty))
