@@ -732,10 +732,6 @@ object QueryCatalog {
 
   private def plantedWarc: Column = plantedWarcFrom(plantedHtml)
 
-  /** The v8 planted WARC column — exposed for the web-front probe
-    * (`tools/ProbeWebFront`), not a query surface. */
-  private[graft] def v8WarcCol: Column = plantedWarcFrom(plantedHtmlWith(v8HtmlExtra))
-
   private val crlfSql = "chr(13) || chr(10)"
   private val sepSql = "chr(13) || chr(10) || chr(13) || chr(10)"
 

@@ -299,7 +299,6 @@ object StellarXdr {
       source_key = src.map(_.key),
       source_muxed_id = src.flatMap(_.muxId),
       amount_stroops = 0L,
-      details_json = "",
       result_code = "",
       trace_code = "")
     // one method per arm: every `copy` of the wide OpModel costs hundreds of

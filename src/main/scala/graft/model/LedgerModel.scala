@@ -117,16 +117,14 @@ object LedgerModel {
   case class SacEventRaw(contract_id: Array[Byte],
       topics_xdr: Seq[Array[Byte]], data_xdr: Array[Byte])
 
-  /** One operation inside a transaction envelope. `details_json` carries the
-    * per-type sparse union pre-serialized (SURVEY §1.2 option (b) at the
-    * model boundary; the transform emits both `details` struct-JSON and the
-    * passthrough string). */
+  /** One operation inside a transaction envelope. The per-type fields below
+    * are the inputs of `history_operations.details` / `details_json`, which
+    * `plans.OperationDetailsExpression` renders from them by field name. */
   case class OpModel(
       op_type: Int,
       source_key: Option[Array[Byte]], // None → falls back to tx source
       source_muxed_id: Option[Long],
       amount_stroops: Long,
-      details_json: String,
       result_code: String,
       trace_code: String,
       claim_atoms: Seq[ClaimAtom] = Seq.empty,

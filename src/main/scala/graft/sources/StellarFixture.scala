@@ -47,7 +47,6 @@ object StellarFixture {
       source_key = if (o % 3 == 0) None else Some(keyOf(s"op-$l-$t-$o")),
       source_muxed_id = None,
       amount_stroops = 1000000L * (o + 1) + t,
-      details_json = s"""{"amount":"${(o + 1).toDouble}","op":"$ty"}""",
       result_code = "OperationResultCodeOpInner",
       trace_code = "success",
       claim_atoms = atoms,

@@ -133,8 +133,8 @@ class EffectsDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def mkOp(opType: Int): OpModel = OpModel(
     op_type = opType, source_key = None, source_muxed_id = None,
-    amount_stroops = 0L, details_json = "{}",
-    result_code = "OperationResultCodeOpInner", trace_code = "success")
+    amount_stroops = 0L, result_code = "OperationResultCodeOpInner",
+    trace_code = "success")
 
   private def ledgerWith(op: OpModel, muxedSource: Option[Long] = None)
       : Seq[EffectRowOut] = {

@@ -541,7 +541,7 @@ class ReferenceGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
       val tx = TxModel("ab" * 32, Array.fill[Byte](32)(1), None, 1L, 100L,
         100L, successful = true, "TransactionResultCodeTxSuccess", "none",
         None, None, None, None, None, None, None, "", "", "", "", Nil,
-        Seq(OpModel(24, None, None, 0L, "", "", "", sac_events = Seq(ev))))
+        Seq(OpModel(24, None, None, 0L, "", "", sac_events = Seq(ev))))
       val row = LedgerRow(1000L, Array.fill[Byte](32)(2),
         Array.fill[Byte](32)(3), "",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
