@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.model.LedgerModel.LedgerRow
 import graft.operators._
-import graft.sources.{LcmBatchFiles, StellarFixture}
+import graft.sources.LcmBatchFiles
 import graft.sources.LcmBatchFiles.ObjectDecodeResult
 
 /** Thin command layer mirroring the reference CLI (`cmd/export_*.go`): same
@@ -13,25 +13,26 @@ import graft.sources.LcmBatchFiles.ObjectDecodeResult
   *
   *   runMain graft.cli.Export export_transactions \
   *     --start 1000 --end 1099 --output /tmp/out \
-  *     [--format ndjson|parquet] [--limit N] [--extra-fields k=v,k2=v2]
-  *     [--batch-input <datastore tree of zstd LedgerCloseMetaBatch objects>
-  *       [--permissive]]
+  *     --batch-input <datastore tree of zstd LedgerCloseMetaBatch objects>
+  *     [--permissive] [--format ndjson|parquet] [--limit N]
+  *     [--extra-fields k=v,k2=v2]
   *
-  * `--batch-input` is the one ledger input: the reference's datastore
-  * layout, read through the `graft-lcm-datastore` connector. Without it
-  * the commands read `StellarFixture`'s generated ledgers.
+  * `--batch-input` is required and is the one ledger input: the
+  * reference's datastore layout, read through the `graft-lcm-datastore`
+  * connector. Every `export_*` command and `get_ledger_range_from_times`
+  * fails without it, before anything is read.
   *
   * `--end` must be at least `--start`. The one exception is `--end 0` on
-  * `export_ledger_entry_changes --batch-input`: the continuous mode, which
-  * tails the datastore tree from `--start` (see [[streamEntryChanges]]).
+  * `export_ledger_entry_changes`: the continuous mode, which tails the
+  * datastore tree from `--start` (see [[streamEntryChanges]]).
   *
   * Commands: export_ledgers, export_transactions, export_operations,
   * export_effects, export_trades, export_assets, export_token_transfers,
   * export_ledger_transaction, export_contract_events,
   * export_ledger_entry_changes (--export-type all (default) or a comma-list
-  * of account,signer,offer,trustline,claimable_balance,pool,contract_data,
-  * contract_code,config_setting,ttl; --batch-size N; --table-dir for the
-  * state-entry types), get_ledger_range_from_times (--start-time/--end-time
+  * of contract_data,contract_code,config_setting,ttl; --batch-size N;
+  * --strict-export is accepted as the reference's spelling of the default,
+  * fail-fast mode), get_ledger_range_from_times (--start-time/--end-time
   * ISO), version.
   * `upload_to_gcs --gcs-bucket <uri|bucket> --path <local>` is the
   * reference's upload-verify-delete contract over the Hadoop FileSystem
@@ -50,21 +51,19 @@ object Export {
       // end defaults to -1 = "not given": a bounded export with no --end
       // fails fast instead of silently entering the unbounded streaming
       // arm; ONLY an explicit `--end 0` means continuous, and only for
-      // export_ledger_entry_changes --batch-input (the reference's endNum=0
+      // export_ledger_entry_changes (the reference's endNum=0
       // semantics, `cmd/export_ledger_entry_changes.go:26-28,72-89` — every
       // other command there requires a bounded range)
       start: Long = 0, end: Long = -1,
       output: String = "",
-      batchInput: Option[String] = None,
+      batchInput: String = "",
       permissive: Boolean = false,
       format: String = "ndjson",
       limit: Long = -1,
       extraFields: Map[String, String] = Map.empty,
       exportType: String = "all",
       batchSize: Long = 64,
-      tableDir: Option[String] = None,
       startTime: String = "", endTime: String = "",
-      strict: Boolean = false,
       bucket: String = "", path: String = "",
       cloudProvider: String = "",
       testnet: Boolean = false, futurenet: Boolean = false) {
@@ -100,20 +99,20 @@ object Export {
       case "--start" :: v :: t => loop(a.copy(start = v.toLong), t)
       case "--end" :: v :: t => loop(a.copy(end = v.toLong), t)
       case ("--output" | "-o") :: v :: t => loop(a.copy(output = v), t)
-      case "--batch-input" :: v :: t => loop(a.copy(batchInput = Some(v)), t)
+      case "--batch-input" :: v :: t => loop(a.copy(batchInput = v), t)
       case "--permissive" :: t => loop(a.copy(permissive = true), t)
       case "--format" :: v :: t => loop(a.copy(format = v), t)
       case ("--limit" | "-l") :: v :: t => loop(a.copy(limit = v.toLong), t)
       case "--export-type" :: v :: t => loop(a.copy(exportType = v), t)
       case ("--batch-size" | "-b") :: v :: t => loop(a.copy(batchSize = v.toLong), t)
-      case "--table-dir" :: v :: t => loop(a.copy(tableDir = Some(v)), t)
       case "--start-time" :: v :: t => loop(a.copy(startTime = v), t)
       case "--end-time" :: v :: t => loop(a.copy(endTime = v), t)
       case ("--gcs-bucket" | "--bucket" | "--cloud-storage-bucket") :: v :: t =>
         loop(a.copy(bucket = v), t)
       case "--path" :: v :: t => loop(a.copy(path = v), t)
       case "--cloud-provider" :: v :: t => loop(a.copy(cloudProvider = v), t)
-      case "--strict-export" :: t => loop(a.copy(strict = true), t)
+      // the reference's opt-in fail-fast mode is graft's only mode
+      case "--strict-export" :: t => loop(a, t)
       // network selection (`AddCommonFlags`, `internal/utils/main.go:234-235`):
       // the passphrase domain-separates tx hashes and SAC contract ids
       case "--testnet" :: t => loop(a.copy(testnet = true), t)
@@ -219,23 +218,19 @@ object Export {
     written
   }
 
-  /** The command's ledgers, exactly `[start, end]`: each source trims its
-    * own range, so no row-level filter sits between the transform and the
+  /** The command's ledgers, exactly `[start, end]`, from the `--batch-input`
+    * datastore tree: zstd LedgerCloseMetaBatch objects (1 ledger/file) read
+    * through the graft-lcm-datastore connector. Each reader trims its own
+    * range, so no row-level filter sits between the transform and the
     * source's serializer. */
   private def ledgerSource(spark: SparkSession, a: Args): Dataset[LedgerRow] =
-    a.batchInput match {
-      // --batch-input <datastore tree>: the reference's REAL backfill
-      // substrate — zstd LedgerCloseMetaBatch objects (1 ledger/file) read
-      // through the graft-lcm-datastore connector, bounded to the range
-      case Some(root) if a.permissive =>
-        reportPoisoned(LcmBatchFiles.objectsPermissive(
-            spark, root, a.start, a.end, a.networkId), a)
-          .flatMap(_.rows)(LcmBatchFiles.ledgerRowEnc)
-      case Some(root) =>
-        LcmBatchFiles.ledgerRowsForRange(
-          spark, root, a.start, a.end, a.networkId)
-      case None => StellarFixture.ledgers(spark, a.start, a.end)
-    }
+    if (a.permissive)
+      reportPoisoned(LcmBatchFiles.objectsPermissive(
+          spark, a.batchInput, a.start, a.end, a.networkId), a)
+        .flatMap(_.rows)(LcmBatchFiles.ledgerRowEnc)
+    else
+      LcmBatchFiles.ledgerRowsForRange(
+        spark, a.batchInput, a.start, a.end, a.networkId)
 
   /** --permissive: poison datastore objects become REPORTED error rows —
     * counted in a stats line and dumped beside the output with the object
@@ -257,9 +252,9 @@ object Export {
     res
   }
 
-  /** Runs `write` over the command's ledgers ([[ledgerSource]]). A
-    * `--batch-input` export then prints ledgers expected against ledgers
-    * read, counted by an observe() riding the export's own query (no extra
+  /** Runs `write` over the command's ledgers ([[ledgerSource]]). An
+    * unlimited export then prints ledgers expected against ledgers read,
+    * counted by an observe() riding the export's own query (no extra
     * job): a hole in the datastore tree shows without failing the export.
     * Not under `--limit`: the sink's limit stops the read early, so the
     * count would show a hole that is not there (and `--limit 0` prunes the
@@ -273,7 +268,7 @@ object Export {
     val ledgers =
       if (persisted) src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else src
-    if (a.batchInput.isEmpty || a.limit >= 0) write(ledgers)
+    if (a.limit >= 0) write(ledgers)
     else {
       val read = Observation("graft_ledgers_read")
       write(ledgers.observe(read, count(lit(1)).as("ledgers")))
@@ -293,26 +288,26 @@ object Export {
   /** Command dispatch, separated from `main` so tests can drive commands on
     * a shared session without `spark.stop()` tearing it down. */
   def run(spark: SparkSession, a: Args): Unit = {
-    import spark.implicits._
-
-    // fail fast on a missing or impossible range for every export command;
-    // the one continuous mode is export_ledger_entry_changes --batch-input
-    // with an EXPLICIT --end 0
+    // fail fast on a missing or impossible range, or a missing ledger
+    // input, for every export command; the one continuous mode is
+    // export_ledger_entry_changes with an EXPLICIT --end 0
     if (a.command.startsWith("export_")) {
       if (a.end < 0L) sys.error(
         s"${a.command} requires --end (use --end 0 on " +
-          "export_ledger_entry_changes --batch-input for the unbounded " +
-          "streaming mode)")
+          "export_ledger_entry_changes for the unbounded streaming mode)")
       if (a.end == 0L) {
-        if (a.command != "export_ledger_entry_changes" || a.batchInput.isEmpty)
+        if (a.command != "export_ledger_entry_changes")
           sys.error("--end 0 (continuous/unbounded) only applies to " +
-            "export_ledger_entry_changes --batch-input; pass a bounded --end")
+            "export_ledger_entry_changes; pass a bounded --end")
         if (a.permissive) sys.error(
           "--end 0 streams the datastore and --permissive is batch-only; " +
             "pass a bounded --end")
       } else if (a.end < a.start) sys.error(
         s"--end ${a.end} is below --start ${a.start}")
     }
+    if ((a.command.startsWith("export_") ||
+        a.command == "get_ledger_range_from_times") && a.batchInput.isEmpty)
+      sys.error(s"${a.command} requires --batch-input <datastore tree>")
 
     a.command match {
       case "export_ledgers" =>
@@ -346,13 +341,9 @@ object Export {
           sink(StellarTransforms.ledgerTransactions(l.toDF()), a))
 
       case "export_contract_events" =>
-        // the datastore's real XDR carries the FULL diagnostic grain (tx
-        // meta v3 SorobanMeta → TxModel.diag_events); the fixture model
-        // carries op-level SAC events only — each substrate gets its renderer
+        // the full diagnostic grain: tx meta v3 SorobanMeta → TxModel.diag_events
         withLedgers(spark, a)(l =>
-          if (a.batchInput.isDefined)
-            sink(graft.operators.SorobanStateTables.contractEventsFromLedgers(l), a)
-          else sink(StellarTransforms.contractEvents(l.toDF()), a))
+          sink(SorobanStateTables.contractEventsFromLedgers(l), a))
 
       case "version" =>
         println(s"graft 0.4.0 (spark ${spark.version})")
@@ -392,7 +383,9 @@ object Export {
           "export_effects export_trades export_assets export_token_transfers " +
           "export_ledger_transaction export_contract_events " +
           "export_ledger_entry_changes get_ledger_range_from_times version " +
-          "(--output accepts any Hadoop FS URI — the upload_to_gcs analog; " +
+          "(--batch-input <datastore tree> is required by every export and " +
+          "by get_ledger_range_from_times; --output accepts any Hadoop FS " +
+          "URI — the upload_to_gcs analog; " +
           "--testnet/--futurenet select the network passphrase that " +
           "domain-separates tx hashes and SAC contract ids)")
 
@@ -400,30 +393,25 @@ object Export {
     }
   }
 
-  /** The ten `export_ledger_entry_changes` entry types, flag name →
-    * (output resource name, batching column) — resource names are the
+  /** The four `export_ledger_entry_changes` entry types the datastore
+    * carries at the change grain, flag name → output resource name — the
     * reference's `transformedOutputs` keys
-    * (`cmd/export_ledger_entry_changes.go:102-113`). */
-  val EntryTypes: Seq[(String, String, String)] = Seq(
-    ("account", "accounts", "ledger_sequence"),
-    ("signer", "signers", "ledger_sequence"),
-    ("offer", "offers", "ledger_sequence"),
-    ("trustline", "trustlines", "ledger_sequence"),
-    ("claimable_balance", "claimable_balances", "ledger_sequence"),
-    ("pool", "liquidity_pools", "ledger_sequence"),
-    ("contract_data", "contract_data", "ledger_sequence"),
-    ("contract_code", "contract_code", "ledger_sequence"),
-    ("config_setting", "config_settings", "last_modified_ledger"),
-    ("ttl", "ttl", "last_modified_ledger"))
+    * (`cmd/export_ledger_entry_changes.go:102-113`). The classic families
+    * (account, signer, offer, trustline, claimable_balance, pool) are not
+    * exported. */
+  val EntryTypes: Seq[(String, String)] = Seq(
+    "contract_data" -> "contract_data",
+    "contract_code" -> "contract_code",
+    "config_setting" -> "config_settings",
+    "ttl" -> "ttl")
 
-  /** The 10-way per-batch fan-out of `cmd/export_ledger_entry_changes.go:
-    * 95-270`: every `--batch-size` ledgers produce one file per entry type,
-    * named `{batchStart}-{batchEnd}-{resource}.txt` (`exportFilename`,
+  /** The per-batch fan-out of `cmd/export_ledger_entry_changes.go:95-270`:
+    * every `--batch-size` ledgers produce one file per entry type, named
+    * `{batchStart}-{batchEnd}-{resource}.txt` (`exportFilename`,
     * `command_utils.go:105-107`). `--export-type` narrows to a comma-list;
-    * unset ⇒ all ten, the reference's "no flags set ⇒ export everything"
-    * default. Account/signer/offer/trustline project the change stream;
-    * the six state-entry types project the decoded state tables under
-    * `--table-dir` (or SPARK_GRAFT_SF_DIR).
+    * unset ⇒ all four, the reference's "no flags set ⇒ export everything"
+    * default. Each type projects the decoded datastore ledgers at the
+    * change grain, batched by the ledger the change occurred in.
     *
     * Spark shape: the reference loops batches sequentially on one thread;
     * here each resource is ONE distributed job — the batch id is a column,
@@ -432,33 +420,16 @@ object Export {
     * filenames (FS metadata only, no data movement). At 100 TB the batch
     * count, not the driver, is the parallelism bound. */
   private def exportEntryChanges(spark: SparkSession, a: Args): Unit = {
-    import graft.sources.LedgerFixtures
     require(a.batchSize > 0, s"batch-size (${a.batchSize}) must be greater than 0")
-    // --batch-input: the REAL datastore substrate carries the soroban
-    // state families (P13-P16) at the change grain; classic families ride
-    // their own table paths, so "all" narrows to the four real ones here
-    val sorobanTypes = Seq("contract_data", "contract_code",
-      "config_setting", "ttl")
-    val wanted: Seq[String] =
-      if (a.exportType == "all")
-        if (a.batchInput.isDefined) sorobanTypes else EntryTypes.map(_._1)
-      else {
-        val w = a.exportType.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        w.foreach(t => if (!EntryTypes.exists(_._1 == t))
-          sys.error(s"unknown export type: $t"))
-        if (a.batchInput.isDefined)
-          w.foreach(t => if (!sorobanTypes.contains(t)) sys.error(
-            s"--batch-input exports the soroban state types " +
-              s"(${sorobanTypes.mkString(", ")}), not $t"))
-        w
-      }
+    val wanted: Seq[(String, String)] =
+      if (a.exportType == "all") EntryTypes
+      else a.exportType.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+        .map(t => EntryTypes.find(_._1 == t).getOrElse(sys.error(
+          s"--batch-input exports the soroban state types " +
+            s"(${EntryTypes.map(_._1).mkString(", ")}), not $t")))
     require(wanted.nonEmpty, s"no entry type in --export-type '${a.exportType}'")
-    def entryType(t: String) = EntryTypes.find(_._1 == t).get
 
-    // the soroban state families project decoded datastore ledgers; real
-    // changes batch by the ledger they occurred in (the reference's batch
-    // loop walks ledger ranges)
-    def sorobanFrame(t: String, ledgers: Dataset[LedgerRow]): DataFrame = t match {
+    def frame(t: String, ledgers: Dataset[LedgerRow]): DataFrame = t match {
       case "contract_data" =>
         SorobanStateTables.contractDataFromLedgers(ledgers, a.passphrase)
       case "contract_code" => SorobanStateTables.contractCodeFromLedgers(ledgers)
@@ -467,53 +438,19 @@ object Export {
     }
 
     if (a.end == 0L) {
-      val ledgers = LcmBatchFiles.ledgerRowsStream(spark, a.batchInput.get,
+      val ledgers = LcmBatchFiles.ledgerRowsStream(spark, a.batchInput,
         Some(a.start), networkId = a.networkId)
       streamEntryChanges(spark, a,
-        wanted.map(t => entryType(t)._2 -> sorobanFrame(t, ledgers)))
-    } else if (a.batchInput.isDefined)
+        wanted.map { case (t, resource) => resource -> frame(t, ledgers) })
+    } else
       // persisted once: all four state resources project the SAME decoded
       // rows — without this each resource re-reads and re-decodes the tree
       // (4× read amplification on a real backfill)
       withLedgers(spark, a, persisted = true) { ledgers =>
-        wanted.foreach { t =>
-          writeBatchFiles(spark, sorobanFrame(t, ledgers), "ledger_sequence",
-            entryType(t)._2, a)
+        wanted.foreach { case (t, resource) =>
+          writeBatchFiles(spark, frame(t, ledgers), resource, a)
         }
       }
-    else {
-      lazy val changes = StellarFixture.changes(spark, a.start, a.end,
-          includeTrustlines = true)
-        .where(col("ledger_sequence").between(a.start, a.end))
-      lazy val tableDir = a.tableDir.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
-        .getOrElse(sys.error("--table-dir (or SPARK_GRAFT_SF_DIR) is required " +
-          "for state-entry export types"))
-      def tbl(name: String) = LedgerFixtures.table(spark, tableDir, name)
-
-      def frameFor(t: String): DataFrame = t match {
-        case "account" => ChangeTransforms.accounts(changes)
-        case "signer" => ChangeTransforms.accountSigners(changes)
-        case "offer" =>
-          val o = ChangeTransforms.offers(changes)
-          if (a.strict && ChangeTransforms.invalidOffers(o).limit(1).count() > 0)
-            sys.error("strict-export: offer invariant violation")
-          o
-        case "trustline" => ChangeTransforms.trustlines(changes)
-        case "claimable_balance" =>
-          EntryProjections.claimableBalances(tbl("customer"))
-        case "pool" => EntryProjections.liquidityPools(tbl("part"))
-        case "contract_data" => EntryProjections.contractData(tbl("part"))
-        case "contract_code" => EntryProjections.contractCode(tbl("part"))
-        case "config_setting" => EntryProjections.configSettings(tbl("nation"))
-        case "ttl" => EntryProjections.ttls(LedgerFixtures.events(spark, tableDir))
-      }
-
-      // the fixture state tables keep their last-modified convention
-      wanted.foreach { t =>
-        val (_, resource, seqCol) = entryType(t)
-        writeBatchFiles(spark, frameFor(t), seqCol, resource, a)
-      }
-    }
   }
 
   /** `--end 0` ⇒ UNBOUNDED export — the reference's continuous mode
@@ -577,9 +514,11 @@ object Export {
     * reference-shaped `{bs}-{be}-{resource}.{txt|parquet}` names. Batches
     * with no rows still get an empty `.txt` (reference `MustOutFile` always
     * creates the file); empty parquet placeholders are skipped — a 0-byte
-    * file is not valid parquet. */
+    * file is not valid parquet. A batch directory with more than one part
+    * breaks that one-task law and fails the export rather than dropping
+    * or splicing rows. */
   private def writeBatchFiles(spark: SparkSession, df0: DataFrame,
-      seqCol: String, resource: String, a: Args): Unit = {
+      resource: String, a: Args): Unit = {
     import org.apache.hadoop.fs.Path
     val ext = a.format match {
       case "ndjson" => "txt"
@@ -587,8 +526,8 @@ object Export {
       case other => sys.error(s"unknown format: $other")
     }
     val df = withExtras(df0, a.extraFields)
-      .where(col(seqCol).between(a.start, a.end))
-      .withColumn("__batch", batchOf(col(seqCol), a))
+      .where(col("ledger_sequence").between(a.start, a.end))
+      .withColumn("__batch", batchOf(col("ledger_sequence"), a))
     val tmp = new Path(a.output, s".tmp-$resource")
     val writer = df.repartition(col("__batch"))
       .write.mode("overwrite").partitionBy("__batch")
@@ -610,19 +549,12 @@ object Export {
         else Array.empty[Path]
       parts.length match {
         case 0 => if (ext == "txt") fs.create(target, true).close()
-        case 1 => fs.rename(parts.head, target)
-        case _ if ext == "txt" =>
-          // speculative retries can leave extra parts: stream-concatenate
-          val out = fs.create(target, true)
-          parts.foreach { p =>
-            val in = fs.open(p)
-            org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 16, false)
-            in.close()
-          }
-          out.close()
-        case _ => fs.rename(parts.head, target)
+        case 1 =>
+          fs.rename(parts.head, target)
+          written += 1
+        case n => sys.error(
+          s"$resource batch $bs-$be: $n part files, expected at most one")
       }
-      if (parts.nonEmpty) written += 1
     }
     fs.delete(tmp, true)
     println(s"""{"resource":"$resource","batches":$nBatches,"nonEmpty":$written}""")

@@ -102,7 +102,7 @@ object ChangeTransforms {
   }
 
   /** Invariant check (reference errors on negative amounts/prices,
-    * `offer.go:35-60`): rows violating it, for strict-export mode. */
+    * `offer.go:35-60`): rows violating it. */
   def invalidOffers(offersDf: DataFrame): DataFrame =
     offersDf.where(col("amount") < 0 || col("pricen") < 0 || col("priced") < 0)
 

@@ -7,10 +7,11 @@ import org.scalatest.BeforeAndAfterAll
 import graft.cli.Export
 import scala.jdk.CollectionConverters._
 
-/** E2e for `export_ledger_entry_changes`: all ten entry types over a
-  * two-batch range, reference-shaped per-batch filenames
-  * (`{batchStart}-{batchEnd}-{resource}.txt`, `cmd/command_utils.go:105-107`),
-  * each file valid NDJSON. */
+/** E2e for the export CLI over `RealXdrFixture` datastore trees (the
+  * CLI's one ledger input): per-batch `export_ledger_entry_changes` files
+  * with reference filenames (`{batchStart}-{batchEnd}-{resource}.txt`,
+  * `cmd/command_utils.go:105-107`), range and flag checks, uploads and the
+  * stats lines. */
 class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,81 +25,81 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private val sfDir = "/root/testdata/sf0.001"
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-cli-$tag").toString
 
   private def ndjsonLines(path: java.nio.file.Path): Seq[String] =
     Files.readAllLines(path).asScala.toSeq.filter(_.nonEmpty)
 
-  test("all ten entry types export per-batch files with reference filenames") {
+  private def listed(dir: String): Set[String] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
+
+  private def ledgerSequences(lines: Seq[String]): Seq[Long] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    lines.map(l => om.readTree(l).get("ledger_sequence").asLong())
+  }
+
+  test("all four soroban entry types export per-batch files with reference filenames") {
+    val tree = batchTree(100, 227)
     val out = tmpDir("all")
     Export.run(spark, Export.parse(Array(
       "export_ledger_entry_changes",
       "--start", "100", "--end", "227", "--batch-size", "64",
-      "--table-dir", sfDir, "--output", out)))
+      "--batch-input", tree, "--output", out)))
 
     val resources = Export.EntryTypes.map(_._2)
-    val expected = for {
-      (bs, be) <- Seq((100, 163), (164, 227))
-      r <- resources
-    } yield s"$bs-$be-$r.txt"
+    assert(resources ==
+      Seq("contract_data", "contract_code", "config_settings", "ttl"))
+    val batches = Seq((100, 163), (164, 227))
+    val expected = for ((bs, be) <- batches; r <- resources)
+      yield s"$bs-$be-$r.txt"
     expected.foreach { name =>
       assert(Files.exists(Paths.get(out, name)), s"missing batch file $name")
     }
-    // exactly the 20 batch files, no temp residue
-    val listed = Files.list(Paths.get(out)).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
-    assert(listed == expected.toSet)
+    // exactly the 8 batch files, no temp residue
+    assert(listed(out) == expected.toSet)
 
-    // change-stream types: every batch non-empty, rows parse as JSON with
-    // the projection's key field, and ledger_sequence stays in the batch
-    for ((bs, be) <- Seq((100, 163), (164, 227));
-         r <- Seq("accounts", "signers", "offers", "trustlines")) {
+    // every ledger carries one change per soroban family, so every batch is
+    // non-empty, and ledger_sequence stays in the batch
+    for ((bs, be) <- batches; r <- resources) {
       val lines = ndjsonLines(Paths.get(out, s"$bs-$be-$r.txt"))
       assert(lines.nonEmpty, s"$bs-$be-$r.txt is empty")
-      val seqs = spark.read.json(
-        spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
-        .select("ledger_sequence").collect().map(_.getLong(0))
-      assert(seqs.forall(s => s >= bs && s <= be),
+      assert(ledgerSequences(lines).forall(s => s >= bs && s <= be),
         s"$r rows leaked outside batch [$bs,$be]")
     }
-
-    // state-entry types keyed k+100 intersect the 100-227 window at sf0.001
-    for (r <- Seq("claimable_balances", "liquidity_pools", "contract_data",
-        "contract_code", "ttl")) {
-      val total = Seq((100, 163), (164, 227)).map { case (bs, be) =>
-        ndjsonLines(Paths.get(out, s"$bs-$be-$r.txt")).size
-      }.sum
-      assert(total > 0, s"no $r rows exported in range")
-    }
-    // config_settings batches on nation keys 0-24: empty at this window is
-    // the expected steady-state (settings change rarely) — file still exists
-    assert(ndjsonLines(Paths.get(out, "164-227-config_settings.txt")).isEmpty)
   }
 
   test("single-type and comma-list export narrows the output") {
-    val out = tmpDir("narrow")
-    Export.run(spark, Export.parse(Array(
-      "export_ledger_entry_changes",
-      "--start", "1000", "--end", "1063", "--batch-size", "64",
-      "--export-type", "account,offer", "--output", out)))
-    val listed = Files.list(Paths.get(out)).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
-    assert(listed == Set("1000-1063-accounts.txt", "1000-1063-offers.txt"))
+    val tree = batchTree(1000, 1063)
+    def exported(exportType: String): Set[String] = {
+      val out = tmpDir("narrow")
+      Export.run(spark, Export.parse(Array(
+        "export_ledger_entry_changes",
+        "--start", "1000", "--end", "1063", "--batch-size", "64",
+        "--export-type", exportType, "--batch-input", tree, "--output", out)))
+      listed(out)
+    }
+    assert(exported("contract_data,ttl") ==
+      Set("1000-1063-contract_data.txt", "1000-1063-ttl.txt"))
+    assert(exported("config_setting") == Set("1000-1063-config_settings.txt"))
   }
 
   test("short final batch is clipped to --end") {
+    // the tree runs past --end, so the clip is the range's, not the tree's
+    val tree = batchTree(1000, 1110)
     val out = tmpDir("clip")
     Export.run(spark, Export.parse(Array(
       "export_ledger_entry_changes",
       "--start", "1000", "--end", "1100", "--batch-size", "64",
-      "--export-type", "account", "--output", out)))
-    val listed = Files.list(Paths.get(out)).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
-    assert(listed == Set("1000-1063-accounts.txt", "1064-1100-accounts.txt"))
-    val seqs = ndjsonLines(Paths.get(out, "1064-1100-accounts.txt"))
+      "--export-type", "contract_code", "--batch-input", tree,
+      "--output", out)))
+    assert(listed(out) ==
+      Set("1000-1063-contract_code.txt", "1064-1100-contract_code.txt"))
+    val seqs = ledgerSequences(
+      ndjsonLines(Paths.get(out, "1064-1100-contract_code.txt")))
     assert(seqs.nonEmpty)
+    assert(seqs.toSet == (1064L to 1100L).toSet)
   }
 
   test("the reference's singular export_token_transfer spelling runs " +
@@ -111,6 +112,7 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = tmpDir("singular") + "/tt"
     Export.run(spark, Export.parse(Array(
       "export_token_transfer", "--start", "1000", "--end", "1063",
+      "--batch-input", batchTree(1000, 1063),
       "--output", out, "--format", "ndjson")))
     assert(Files.list(Paths.get(out)).iterator().asScala
       .exists(_.toString.endsWith(".json")), "singular spelling wrote no output")
@@ -128,30 +130,25 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A tree spanning ledgers 150-350 for the time-window lookups. */
+  private lazy val rangeTree = batchTree(150, 350)
+
   test("get_ledger_range_from_times resolves the bracketing sequences") {
     // fixture cadence: closed_at = 1700000000s + 5s * sequence, so the
     // window [1700000000+200*5, 1700000000+300*5] must resolve to [200,300]
-    val out = new java.io.ByteArrayOutputStream
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      Export.run(spark, Export.parse(Array(
-        "get_ledger_range_from_times",
-        "--start", "2", "--end", "1000",
-        "--start-time", "2023-11-14 22:30:00",
-        "--end-time", "2023-11-14 22:38:20")))
-    }
-    assert(out.toString("UTF-8").trim == """{"start":200,"end":300}""")
+    val out = printed("get_ledger_range_from_times",
+      "--start", "150", "--end", "350", "--batch-input", rangeTree,
+      "--start-time", "2023-11-14 22:30:00",
+      "--end-time", "2023-11-14 22:38:20")
+    assert(out.trim == """{"start":200,"end":300}""")
   }
 
   test("get_ledger_range_from_times with an empty window reports nulls") {
-    val out = new java.io.ByteArrayOutputStream
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      Export.run(spark, Export.parse(Array(
-        "get_ledger_range_from_times",
-        "--start", "2", "--end", "100",
-        "--start-time", "1999-01-01 00:00:00",
-        "--end-time", "1999-01-02 00:00:00")))
-    }
-    assert(out.toString("UTF-8").trim == """{"start":null,"end":null}""")
+    val out = printed("get_ledger_range_from_times",
+      "--start", "150", "--end", "350", "--batch-input", rangeTree,
+      "--start-time", "1999-01-01 00:00:00",
+      "--end-time", "1999-01-02 00:00:00")
+    assert(out.trim == """{"start":null,"end":null}""")
   }
 
   test("upload_to_gcs: upload-verify-delete over the Hadoop FS abstraction") {
@@ -173,10 +170,11 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Files.exists(Paths.get(file)), "local file must be deleted")
 
     // a whole export directory uploads recursively (MaybeUpload on a sink)
+    val tree = batchTree(100, 103)
     val outDir = tmpDir("upload-export")
     Export.run(spark, Export.parse(Array(
       "export_ledgers", "--start", "100", "--end", "103",
-      "--table-dir", sfDir, "--output", outDir,
+      "--batch-input", tree, "--output", outDir,
       "--cloud-provider", "gcp", "--cloud-storage-bucket", s"file:$bucket")))
     val destDir = Paths.get(bucket, outDir)
     assert(Files.isDirectory(destDir))
@@ -187,21 +185,21 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outStay = tmpDir("upload-stays")
     Export.run(spark, Export.parse(Array(
       "export_ledgers", "--start", "100", "--end", "103",
-      "--table-dir", sfDir, "--output", outStay)))
+      "--batch-input", tree, "--output", outStay)))
     assert(Files.exists(Paths.get(outStay)))
 
     // provider without bucket ⇒ fatal (command_utils.go:129-131)
     intercept[IllegalArgumentException] {
       Export.run(spark, Export.parse(Array(
         "export_ledgers", "--start", "100", "--end", "103",
-        "--table-dir", sfDir, "--output", tmpDir("upload-nobkt"),
+        "--batch-input", tree, "--output", tmpDir("upload-nobkt"),
         "--cloud-provider", "gcp")))
     }
   }
 
   test("the datastore tree is the one ledger input: --xdr-input and --input " +
       "are unknown flags") {
-    for (flag <- Seq("--xdr-input", "--input")) {
+    for (flag <- Seq("--xdr-input", "--input", "--table-dir")) {
       val e = intercept[RuntimeException](Export.parse(Array(
         "export_ledgers", "--start", "1", "--end", "2", flag, "/tmp/x")))
       assert(e.getMessage == s"unknown flag: $flag", e.getMessage)
@@ -479,7 +477,7 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     // continuous mode exists only over the datastore tree
     val (noTree, _) = failure("export_ledger_entry_changes", "--start", "100",
       "--end", "0")
-    assert(noTree.contains("only applies to"), noTree)
+    assert(noTree.contains("requires --batch-input"), noTree)
     assert(failure("export_ledgers", "--start", "9600", "--end", "0",
       "--batch-input", tree)._1.contains("only applies to"))
     // the permissive reader is batch-only
@@ -558,9 +556,14 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("export_effects --format ndjson writes the VARIANT details as a raw " +
       "JSON object with null keys dropped") {
+    // the classic LP/CB tree: pool, claimable-balance and account effects
+    // (trade effects are checked at the transform, EffectsDetailsSpec)
+    val tree = tmpDir("classic-tree")
+    graft.sources.RealXdrFixture.writeClassicBatchTree(tree, 2000, 2039)
     val out = tmpDir("effects-ndjson") + "/effects"
     Export.run(spark, Export.parse(Array("export_effects", "--start", "2000",
-      "--end", "2039", "--output", out, "--format", "ndjson")))
+      "--end", "2039", "--batch-input", tree, "--output", out,
+      "--format", "ndjson")))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val rows = jsonRows(out).map(om.readTree)
     assert(rows.nonEmpty)
@@ -569,11 +572,34 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(d.isObject, s"details must be a raw object: $n")
       assert(!d.elements().asScala.exists(_.isNull), s"null key kept: $n")
     }
-    val trades = rows.filter(_.get("type_string").asText == "trade")
-    assert(trades.nonEmpty)
-    trades.foreach { n =>
-      val d = n.get("details")
-      assert(d.get("seller") != null && d.get("offer_id") != null, n.toString)
-    }
+  }
+
+  test("an export without --batch-input fails naming the flag, before " +
+      "anything is written") {
+    val out = tmpDir("no-input") + "/ledgers"
+    val e = intercept[RuntimeException](Export.run(spark, Export.parse(Array(
+      "export_ledgers", "--start", "100", "--end", "103", "--output", out))))
+    assert(e.getMessage.contains("--batch-input"), e.getMessage)
+    assert(!Files.exists(Paths.get(out)))
+    val range = intercept[RuntimeException](Export.run(spark, Export.parse(
+      Array("get_ledger_range_from_times", "--start", "100",
+        "--start-time", "2023-11-14 22:30:00",
+        "--end-time", "2023-11-14 22:38:20"))))
+    assert(range.getMessage.contains("--batch-input"), range.getMessage)
+  }
+
+  test("export_ledger_entry_changes --batch-input rejects a classic " +
+      "--export-type") {
+    val tree = batchTree(9700, 9701)
+    val out = tmpDir("classic-type") + "/changes"
+    val e = intercept[RuntimeException](Export.run(spark, Export.parse(Array(
+      "export_ledger_entry_changes", "--start", "9700", "--end", "9701",
+      "--export-type", "account", "--batch-input", tree, "--output", out))))
+    assert(e.getMessage.contains("soroban state types"), e.getMessage)
+    assert(e.getMessage.endsWith("not account"), e.getMessage)
+    assert(!Files.exists(Paths.get(out)))
+    // --strict-export is the reference's spelling of the default mode
+    assert(Export.parse(Array("export_ledger_entry_changes",
+      "--strict-export")) == Export.parse(Array("export_ledger_entry_changes")))
   }
 }

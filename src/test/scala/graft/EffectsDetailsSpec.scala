@@ -306,4 +306,24 @@ class EffectsDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
       && x.contains("\"liquidity_pool_id\"")
       && x.contains("\"liquidity_pool_id_strkey\":\"L")), d.mkString("\n"))
   }
+
+  test("trade effects written as NDJSON carry seller and offer_id in their " +
+      "raw details object") {
+    // the export sink's NDJSON write over generated ledgers whose offer ops
+    // cross the book (StellarFixture 2000-2039)
+    val out = java.nio.file.Files.createTempDirectory("graft-effects-trades")
+      .resolve("effects").toString
+    StellarTradesEffects.historyEffects(
+        graft.sources.StellarFixture.ledgers(spark, 2000, 2039))
+      .write.mode("overwrite").json(out)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val trades = spark.read.text(out).collect().map(_.getString(0))
+      .map(om.readTree).filter(_.get("type_string").asText == "trade")
+    assert(trades.nonEmpty)
+    trades.foreach { n =>
+      val d = n.get("details")
+      assert(d.isObject, s"details must be a raw object: $n")
+      assert(d.get("seller") != null && d.get("offer_id") != null, n.toString)
+    }
+  }
 }

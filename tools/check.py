@@ -8,6 +8,7 @@ name, values hashed). Usage: python3 tools/check.py [sfdir] [outdir] [--skip-ver
 import json, math, subprocess, sys, os
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -16,7 +17,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 if "--skip-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-3000:]); print(r.stderr[-3000:]); sys.exit(1)
     for line in r.stderr.splitlines():
