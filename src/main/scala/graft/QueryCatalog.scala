@@ -153,8 +153,11 @@ object QueryCatalog {
 
   /** Session-scoped persisted-frame memo for the stellar op-grain
     * transforms: several `stellar_*` golden queries rebuild
-    * `historyOperations`/`historyEffects`/`historyTrades` over the same
-    * fixture range, and each rebuild re-analyzes a large expression tree.
+    * `historyOperations`/`historyEffects`/`historyTrades`/
+    * `TokenTransfers.fromLedgers` over the same fixture range, and each
+    * rebuild re-analyzes a large expression tree (the token-transfer event
+    * projection is a ~12-branch nested-struct `when` chain that the
+    * `stellar_token_transfers` gate references three times).
     * One persisted frame per (transform, fixture frame) makes every later
     * consumer an InMemoryTableScan — same architecture as the decoded-ledger
     * memo in `StellarFixture.ledgers`. Bounded: one entry per transform ×
@@ -168,14 +171,6 @@ object QueryCatalog {
       // expression tree (huge for the effects fan-out) on EVERY action;
       // checkpointing truncates the lineage to the materialized blocks
       build.transform(Checkpoints.checkpointed))
-
-  /** Long-lived-session hook (see [[graft.operators.TokenTransfers.clearCache]]
-    * for the caveats): drop all memoized frames; ContextCleaner reclaims the
-    * checkpointed blocks once unreachable. */
-  def clearMemos(): Unit = {
-    frameMemo.clear()
-    graft.operators.TokenTransfers.clearCache()
-  }
 
   /** Collect a ONE-row bounded aggregate (a scalar gate: corpus mean/count,
     * a div threshold) and return its columns as typed LITERALS — the
@@ -5807,7 +5802,7 @@ object QueryCatalog {
       })
   )
 
-  /** P4/P5/P8/P10–P18/J3 — the per-entry-type projections and flat-map
+  /** P4/P5/P8/P10–P13/P18/J3 — the per-entry-type projections and flat-map
     * generators (reference transform package case law re-expressed as column algebra). */
   val entryOps: Seq[Q] = Seq(
 
@@ -5986,73 +5981,6 @@ object QueryCatalog {
           .drop("cl")
           .orderBy("balance_id", "claimant_order")),
 
-    Q("p13_contract_data",
-      // ContractDataOutput at the reference key set: DuckDB re-derives the
-      // ScVal XDR bytes for key AND val (RFC 4506 layout: BE discriminants/
-      // lengths, 4-byte padding), both decoded JSONs, the C-strkey contract
-      // id, the G-strkey SAC balance holder, the ledger-key XDR concat and
-      // its hash pair — an external check of the whole codec, not an echo
-      Some(s"""WITH p AS (SELECT *, CAST(p_partkey AS BIGINT) AS k,
-             |    sha256('contract|' || p_name) AS cid,
-             |    '0000000f' || format('{:08x}', length(p_type))
-             |               || hex(encode(p_type))
-             |               || repeat('00', (4 - length(p_type) % 4) % 4)
-             |      AS keyhex,
-             |    '000000110000000100000002' ||
-             |    '0000000f0000000762616c616e636500' ||
-             |    '0000000a' || format('{:016x}', p_partkey)
-             |               || format('{:016x}', p_size) ||
-             |    '0000000f000000036b657900' ||
-             |    '0000000e' || format('{:08x}', length(p_type))
-             |               || hex(encode(p_type))
-             |               || repeat('00', (4 - length(p_type) % 4) % 4)
-             |      AS valhex
-             |  FROM part),
-             |q AS (SELECT *,
-             |    '00000006' || '00000001' || cid || keyhex ||
-             |      CASE WHEN k % 2 = 0 THEN '00000001' ELSE '00000000' END
-             |      AS lkhex
-             |  FROM p)
-             |SELECT ${strkeyC("cid")} AS contract_id,
-             |       'ScValTypeScvSymbol' AS contract_key_type,
-             |       CASE WHEN k % 2 = 0 THEN 'ContractDataDurabilityPersistent'
-             |            ELSE 'ContractDataDurabilityTemporary' END
-             |         AS contract_durability,
-             |       CASE WHEN p_size < 10 THEN 'TK' || (k % 50) ELSE '' END
-             |         AS asset_code,
-             |       CASE WHEN p_size < 10 THEN 'ISS' || (k % 3) ELSE '' END
-             |         AS asset_issuer,
-             |       CASE WHEN p_size < 10 THEN 'credit_alphanum4' ELSE '' END
-             |         AS asset_type,
-             |       CASE WHEN p_size < 10
-             |            THEN ${strkeyG("sha256('holder|' || (k % 13))")}
-             |            ELSE '' END AS balance_holder,
-             |       CASE WHEN p_size < 10
-             |            THEN CAST((CAST(p_partkey AS HUGEINT) << 64) +
-             |                      CAST(p_size AS HUGEINT) AS VARCHAR)
-             |            ELSE '' END AS balance,
-             |       k AS last_modified_ledger, k % 3 AS ledger_entry_change,
-             |       k % 7 = 6 AS deleted,
-             |       make_timestamp((1700000000000 + (k + 100) * 5000) * 1000)
-             |         AS closed_at,
-             |       k + 100 AS ledger_sequence,
-             |       sha256(to_base64(from_hex(lkhex))) AS ledger_key_hash,
-             |       to_base64(from_hex(keyhex)) AS key,
-             |       '{"symbol":"' || p_type || '"}' AS key_decoded,
-             |       to_base64(from_hex(valhex)) AS val,
-             |       '{"map":[{"key":{"symbol":"balance"},"val":{"i128":{"hi":' ||
-             |         p_partkey || ',"lo":' || p_size ||
-             |         '}}},{"key":{"symbol":"key"},"val":{"string":"' ||
-             |         p_type || '"}}]}' AS val_decoded,
-             |       to_base64(from_hex(lkhex || valhex)) AS contract_data_xdr,
-             |       to_base64(from_hex(lkhex)) AS ledger_key_hash_base_64
-             |FROM q ORDER BY contract_id, balance, val""".stripMargin),
-      (s, dir) =>
-        EntryProjections.contractData(T(s, dir, "part"))
-          .withColumn("key_decoded", to_json(col("key_decoded")))
-          .withColumn("val_decoded", to_json(col("val_decoded")))
-          .orderBy("contract_id", "balance", "val")),
-
     Q("p13_sac_storage",
       // SAC storage walk over real ScVal XDR: arm 0 plants an instance entry
       // with AssetInfo storage (k%9==0 gets a WRONG contract id — the walk's
@@ -6101,150 +6029,6 @@ object QueryCatalog {
             col("b.clawback").as("clawback"))
           .orderBy("k")
       }),
-
-    Q("p14_contract_code",
-      Some("""WITH p AS (SELECT *, CAST(p_partkey AS BIGINT) AS k,
-             |                  CAST(p_size AS BIGINT) AS s FROM part)
-             |SELECT sha256('wasm|' || p_name) AS contract_code_hash,
-             |       k % 2 AS contract_code_ext_v,
-             |       k AS last_modified_ledger, k % 3 AS ledger_entry_change,
-             |       k % 7 = 6 AS deleted,
-             |       make_timestamp((1700000000000 + (k + 100) * 5000) * 1000)
-             |         AS closed_at,
-             |       k + 100 AS ledger_sequence,
-             |       sha256('ck|' || p_name) AS ledger_key_hash,
-             |       s * 100 AS n_instructions, s % 20 AS n_functions,
-             |       s % 9 AS n_globals, s % 5 AS n_table_entries,
-             |       s % 11 + 1 AS n_types, s % 4 AS n_data_segments,
-             |       s % 3 AS n_elem_segments, s % 13 AS n_imports,
-             |       s % 17 + 1 AS n_exports, s * 7 AS n_data_segment_bytes,
-             |       to_base64(from_hex(sha256('ck|' || p_name)))
-             |         AS ledger_key_hash_base_64
-             |FROM p ORDER BY contract_code_hash""".stripMargin),
-      (s, dir) =>
-        EntryProjections.contractCode(T(s, dir, "part"))
-          .orderBy("contract_code_hash")),
-
-    Q("p15_config_settings",
-      // arrays (cost params, size window) compare as their JSON rendering;
-      // DuckDB rebuilds the exact strings
-      Some("""WITH n AS (SELECT CAST(n_nationkey AS BIGINT) AS k,
-             |                  CAST(n_regionkey AS BIGINT) AS r, n_name
-             |           FROM nation)
-             |SELECT k AS config_setting_id,
-             |       r * 1000 AS contract_max_size_bytes,
-             |       k * 1000000 + 1000 AS ledger_max_instructions,
-             |       r * 100 + 50 AS tx_max_instructions,
-             |       k * 25 AS fee_rate_per_instructions_increment,
-             |       r * 512 + 64 AS tx_memory_limit,
-             |       k % 10 + 1 AS ledger_max_read_ledger_entries,
-             |       k * 2048 AS ledger_max_read_bytes,
-             |       k % 5 + 1 AS ledger_max_write_ledger_entries,
-             |       k * 1024 AS ledger_max_write_bytes,
-             |       k % 8 + 1 AS tx_max_read_ledger_entries,
-             |       k * 512 AS tx_max_read_bytes,
-             |       k % 4 + 1 AS tx_max_write_ledger_entries,
-             |       k * 256 AS tx_max_write_bytes,
-             |       k * 3 + 1 AS fee_read_ledger_entry,
-             |       k * 5 + 2 AS fee_write_ledger_entry,
-             |       k * 7 + 3 AS fee_read_1kb,
-             |       k * 1000000 AS bucket_list_target_size_bytes,
-             |       r * 11 AS write_fee_1kb_bucket_list_low,
-             |       r * 211 AS write_fee_1kb_bucket_list_high,
-             |       k % 3 + 1 AS bucket_list_write_fee_growth_factor,
-             |       k * 13 AS fee_historical_1kb,
-             |       r * 4096 AS tx_max_contract_events_size_bytes,
-             |       k * 17 AS fee_contract_events_1kb,
-             |       k * 8192 AS ledger_max_txs_size_bytes,
-             |       r * 2048 + 512 AS tx_max_size_bytes,
-             |       k * 19 AS fee_tx_size_1kb,
-             |       '[{"ExtV":"0","ConstTerm":"' || k * 10 ||
-             |         '","LinearTerm":"' || r ||
-             |         '"},{"ExtV":"0","ConstTerm":"' || k * 20 ||
-             |         '","LinearTerm":"' || r + 1 || '"}]'
-             |         AS contract_cost_params_cpu_insns,
-             |       '[{"ExtV":"0","ConstTerm":"' || k * 30 ||
-             |         '","LinearTerm":"' || r + 2 || '"}]'
-             |         AS contract_cost_params_mem_bytes,
-             |       r * 64 + 16 AS contract_data_key_size_bytes,
-             |       r * 128 + 32 AS contract_data_entry_size_bytes,
-             |       k * 100000 + 10000 AS max_entry_ttl,
-             |       16 AS min_temporary_ttl,
-             |       4096 AS min_persistent_ttl,
-             |       k % 5 AS auto_bump_ledgers,
-             |       k * 1000 + 1 AS persistent_rent_rate_denominator,
-             |       k * 100 + 1 AS temp_rent_rate_denominator,
-             |       k % 7 + 1 AS max_entries_to_archive,
-             |       30 AS bucket_list_size_window_sample_size,
-             |       k * 50000 AS eviction_scan_size,
-             |       k % 6 + 1 AS starting_eviction_scan_level,
-             |       r * 100 + 10 AS ledger_max_tx_count,
-             |       '[' || k * 1000 || ',' || k * 1000 + 1 || ',' ||
-             |         k * 1000 + 2 || ']' AS bucket_list_size_window,
-             |       k AS last_modified_ledger,
-             |       k % 3 AS ledger_entry_change,
-             |       k % 7 = 6 AS deleted,
-             |       make_timestamp((1700000000000 + (k + 100) * 5000) * 1000)
-             |         AS closed_at,
-             |       k + 100 AS ledger_sequence
-             |FROM n ORDER BY config_setting_id""".stripMargin),
-      (s, dir) =>
-        EntryProjections.configSettings(T(s, dir, "nation"))
-          .withColumn("contract_cost_params_cpu_insns",
-            to_json(col("contract_cost_params_cpu_insns")))
-          .withColumn("contract_cost_params_mem_bytes",
-            to_json(col("contract_cost_params_mem_bytes")))
-          .withColumn("bucket_list_size_window",
-            to_json(col("bucket_list_size_window")))
-          .orderBy("config_setting_id")),
-
-    Q("p16_ttl",
-      Some("""SELECT sha256(CAST(event_id AS VARCHAR)) AS key_hash,
-             |       event_id + 64 AS live_until_ledger_seq,
-             |       event_id AS last_modified_ledger,
-             |       event_id % 3 AS ledger_entry_change,
-             |       event_id % 7 = 6 AS deleted,
-             |       make_timestamp((1700000000000 + (event_id + 100) * 5000)
-             |         * 1000) AS closed_at,
-             |       event_id + 100 AS ledger_sequence
-             |FROM events ORDER BY key_hash""".stripMargin),
-      (s, dir) =>
-        EntryProjections.ttls(ev(s, dir)).orderBy("key_hash")),
-
-    Q("p17_contract_events",
-      // topics joined to one string: raw array cells break the driver's
-      // pandas sort/hash; the operator itself still emits the typed array.
-      // data/data_decoded: DuckDB re-derives the ScVal XDR map bytes and the
-      // tagged JSON independently (see p13) — external codec check
-      Some("""WITH e AS (SELECT *, CAST(round(value * 100) AS BIGINT) AS cents
-             |           FROM events)
-             |SELECT event_id AS contract_event_id,
-             |       array_to_string([event_type, CAST(user_id AS VARCHAR)], '|')
-             |         AS topics_joined,
-             |       to_base64(from_hex(
-             |         '000000110000000100000003' ||
-             |         '0000000f00000006616d6f756e740000' ||
-             |         '0000000a0000000000000000' || format('{:016x}', cents) ||
-             |         '0000000f000000056576656e74000000' ||
-             |         '0000000f' || format('{:08x}', length(event_type))
-             |                    || hex(encode(event_type))
-             |                    || repeat('00', (4 - length(event_type) % 4) % 4) ||
-             |         '0000000f0000000475736572' ||
-             |         '00000005' || format('{:016x}', user_id)
-             |       )) AS data,
-             |       '{"map":[{"key":{"symbol":"amount"},"val":{"i128":{"hi":0,"lo":' ||
-             |         cents ||
-             |         '}}},{"key":{"symbol":"event"},"val":{"symbol":"' ||
-             |         event_type ||
-             |         '"}},{"key":{"symbol":"user"},"val":{"u64":' ||
-             |         user_id || '}}]}' AS data_decoded,
-             |       event_type = 'error' AS in_failed_contract_call
-             |FROM e ORDER BY contract_event_id""".stripMargin),
-      (s, dir) =>
-        EntryProjections.contractEvents(ev(s, dir))
-          .withColumn("topics_joined", array_join(col("topics"), "|"))
-          .drop("topics")
-          .orderBy("contract_event_id")),
 
     Q("p18_raw_base64",
       Some("""SELECT doc_id, to_base64(encode(text)) AS envelope_b64,
@@ -6644,8 +6428,9 @@ object QueryCatalog {
              |SELECT id, event_topic, CAST(amount AS VARCHAR) AS amount
              |FROM legs ORDER BY id, event_topic, amount""".stripMargin),
       (s, dir) => {
-        val events = TokenTransfers.eventsCached(
-          graft.sources.StellarFixture.ledgers(s, 2000, 2099))
+        val ledgers = graft.sources.StellarFixture.ledgers(s, 2000, 2099)
+        val events =
+          memo("tokenTransfers", ledgers)(TokenTransfers.fromLedgers(ledgers))
         events.select(
             coalesce(col("operation_id"), col("transaction_id")).as("id"),
             col("event_topic"), col("amount_raw").as("amount"))
@@ -6718,7 +6503,8 @@ object QueryCatalog {
       (s, dir) => {
         val ledgers = graft.sources.StellarFixture.ledgers(s, 3000, 3099)
         // persisted: the union + verify reference this frame three times
-        val events = TokenTransfers.eventsCached(ledgers)
+        val events =
+          memo("tokenTransfers", ledgers)(TokenTransfers.fromLedgers(ledgers))
         // the VerifyEvents consistency check runs inside the gate: the union
         // is empty unless fee events stop reconciling
         events.select(col("transaction_id"), col("event_topic"),

@@ -253,27 +253,31 @@ object Export {
   }
 
   /** Runs `write` over the command's ledgers ([[ledgerSource]]). An
-    * unlimited export then prints ledgers expected against ledgers read,
-    * counted by an observe() riding the export's own query (no extra
-    * job): a hole in the datastore tree shows without failing the export.
-    * Not under `--limit`: the sink's limit stops the read early, so the
-    * count would show a hole that is not there (and `--limit 0` prunes the
-    * observed plan away entirely). `persisted` caches the ledgers for an
-    * export that reads them more than once; the cache sits below the
-    * observe(), whose metrics Spark does not report from inside a cached
-    * plan. */
+    * unlimited export then prints ledgers expected against ledgers read, so
+    * a hole in the datastore tree shows without failing the export. Not
+    * under `--limit`: the sink's limit stops the read early, so the count
+    * would show a hole that is not there (and `--limit 0` prunes the read
+    * away entirely). A one-pass export counts with an observe() riding its
+    * own query (no extra job). `persisted` caches the ledgers for an export
+    * that reads them more than once, and counts the cache in one job after
+    * the writes: an observe() there would ride writes whose frames may be
+    * empty, and adaptive execution replaces an empty stage with an empty
+    * relation, dropping the observed metric from the executed plan. */
   private def withLedgers(spark: SparkSession, a: Args,
       persisted: Boolean = false)(write: Dataset[LedgerRow] => Unit): Unit = {
     val src = ledgerSource(spark, a)
-    val ledgers =
-      if (persisted) src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else src
-    if (a.limit >= 0) write(ledgers)
+    def report(read: Any): Unit =
+      println(s"""{"ledgers_expected":${a.end - a.start + 1},""" +
+        s""""ledgers_read":$read}""")
+    if (persisted) {
+      val ledgers = src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      write(ledgers)
+      if (a.limit < 0) report(ledgers.count())
+    } else if (a.limit >= 0) write(src)
     else {
       val read = Observation("graft_ledgers_read")
-      write(ledgers.observe(read, count(lit(1)).as("ledgers")))
-      println(s"""{"ledgers_expected":${a.end - a.start + 1},""" +
-        s""""ledgers_read":${read.get.getOrElse("ledgers", 0L)}}""")
+      write(src.observe(read, count(lit(1)).as("ledgers")))
+      report(read.get.getOrElse("ledgers", 0L))
     }
   }
 

@@ -21,10 +21,6 @@ object Amounts {
     ((BigInt(hi) << 64) + loUnsigned).toString
   }
 
-  /** uint64 lo part interpreted unsigned. */
-  def uint64String(v: Long): String =
-    java.lang.Long.toUnsignedString(v)
-
   /** Price ratio n/d as float64, matching Go float64(n)/float64(d). */
   def priceRatio(n: Int, d: Int): Double = n.toDouble / d.toDouble
 }

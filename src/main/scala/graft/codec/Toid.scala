@@ -24,7 +24,6 @@ object Toid {
   val OperationMask: Long = (1L << 12) - 1
   val LedgerShift: Int = 32
   val TransactionShift: Int = 12
-  val OperationShift: Int = 0
 
   /** Max valid values: 2^20-1 transactions per ledger, 2^12-1 ops per tx. */
   val MaxTxOrder: Long = TransactionMask
@@ -37,7 +36,6 @@ object Toid {
     (ledgerSeq << LedgerShift) | (txOrder << TransactionShift) | opIndex
   }
 
-  def ledgerId(ledgerSeq: Long): Long = pack(ledgerSeq, 0, 0)
   def transactionId(ledgerSeq: Long, txOrder: Long): Long = pack(ledgerSeq, txOrder, 0)
   def operationId(ledgerSeq: Long, txOrder: Long, opIndex: Long): Long =
     pack(ledgerSeq, txOrder, opIndex)

@@ -98,10 +98,6 @@ object GraftFunctions {
   def base64NoWrap(bytes: Column): Column =
     regexp_replace(base64(bytes), "[\\r\\n]", "")
 
-  /** Asset code NUL/space stripping (`contract_data.go:90`). */
-  def cleanAssetCode(code: Column): Column =
-    regexp_replace(code, "[\u0000 ]+$", "")
-
   // ---- opaque codecs --------------------------------------------------------
   // Hot ones are native Catalyst expressions (graft.plans.CodecExpressions):
   // codegen'd static calls, no UDF serialization fence. Cold ones stay UDFs.
@@ -259,26 +255,6 @@ object GraftFunctions {
     }
     encode(p)
   })
-
-  /** Fixture ScVal builders (encode side; cold path, plain UDFs). The event
-    * map mirrors what a SAC-style contract event carries: amount / symbol /
-    * counterparty — deterministic from the synthetic event columns so the
-    * DuckDB oracle can re-derive the exact XDR bytes independently. */
-  val scvalEventBytes = udf((eventType: String, userId: Long, cents: Long) =>
-    ScVal.encode(ScVal.M(Seq(
-      ScVal.Sym("amount") -> ScVal.I128(0L, cents),
-      ScVal.Sym("event") -> ScVal.Sym(eventType),
-      ScVal.Sym("user") -> ScVal.U64(userId)))))
-
-  /** Fixture ScVal for a contract-data entry: balance i128 + storage key. */
-  val scvalContractValBytes = udf((hi: Long, lo: Long, key: String) =>
-    ScVal.encode(ScVal.M(Seq(
-      ScVal.Sym("balance") -> ScVal.I128(hi, lo),
-      ScVal.Sym("key") -> ScVal.Str(key)))))
-
-  /** Fixture ScVal symbol — the contract-data LEDGER KEY shape. */
-  val scvalSymbolBytes = udf((sym: String) =>
-    ScVal.encode(ScVal.Sym(sym)))
 
   // ---- SAC storage walk (`contract_data.go:191-379`) -----------------------
 

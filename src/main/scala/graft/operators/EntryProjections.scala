@@ -4,15 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
-/** P7–P16 — the nine `export_ledger_entry_changes` output projections:
-  * per-entry-type flat tables derived from change-grain rows (reference
-  * `transform/{account,account_signer,offer,trustline,liquidity_pool,
-  * claimable_balance,contract_data,contract_code,config_setting,ttl}.go`).
+/** P8/P10–P12 — the classic `export_ledger_entry_changes` output
+  * projections over TPC-H fixture rows (reference `transform/{account_signer,
+  * trustline,liquidity_pool,claimable_balance}.go`), plus the P18 raw-XDR
+  * passthrough and the J3 sponsor lookup. No datastore transform exists yet
+  * for these tables; the soroban state tables and contract events have
+  * exactly one, [[SorobanStateTables]], the one the export CLI runs.
   *
-  * All are O(1)-per-row column projections — they compose with the change
-  * compaction (A4) and stay entirely inside whole-stage codegen. The fixture
-  * input contracts are documented per function; the real XDR-decoded inputs
-  * share the same shapes. */
+  * All are O(1)-per-row column projections that stay entirely inside
+  * whole-stage codegen. The fixture input contracts are documented per
+  * function. */
 object EntryProjections {
 
   /** P8 — account signers: signer rows ranked by weight desc within account
@@ -131,196 +132,6 @@ object EntryProjections {
         .as("closed_at"),
       (k + 100).as("ledger_sequence"),
       GraftFunctions.strkeyBalance(unhex(balanceHash)).as("balance_id_strkey"))
-  }
-
-  /** P13 — contract data at the reference's `ContractDataOutput` key set
-    * (`schema.go:511-532`, `contract_data.go:49-158,306-379`): C-strkey
-    * contract id, key/val as base64(ScVal XDR) with the recursive decoded
-    * JSON beside each, the SAC balance arm (holder + i128 string, empty
-    * strings when not a SAC entry — the reference's zero-value rendering),
-    * the ledger-key hash pair (hex sha-256 + base64 of the key XDR), and
-    * change metadata. */
-  def contractData(parts: DataFrame): DataFrame = {
-    // val: a real ScVal map {balance:i128, key:str}; key: ScVal symbol of
-    // p_type — both serialized base64 + decoded JSON, the reference's
-    // two-column contract (`serializeScVal`, contract_events.go:128-148)
-    val valScval = GraftFunctions.scvalContractValBytes(
-      col("p_partkey"), col("p_size").cast("long"), col("p_type"))
-    val keyScval = GraftFunctions.scvalSymbolBytes(col("p_type"))
-    val k = col("p_partkey").cast("long")
-    val contractIdHex = sha2(concat(lit("contract|"), col("p_name")), 256)
-    val isSac = col("p_size") < 10
-    // LedgerKey{CONTRACT_DATA=6, ScAddress{CONTRACT=1, id}, key, durability}
-    val ledgerKeyXdr = concat(
-      unhex(lit("00000006")), unhex(lit("00000001")), unhex(contractIdHex),
-      keyScval, unhex(when(k % 2 === 0, lit("00000001"))
-        .otherwise(lit("00000000"))))
-    parts.select(
-      GraftFunctions.strkeyContract(unhex(contractIdHex)).as("contract_id"),
-      lit("ScValTypeScvSymbol").as("contract_key_type"),
-      when(k % 2 === 0, lit("ContractDataDurabilityPersistent"))
-        .otherwise(lit("ContractDataDurabilityTemporary"))
-        .as("contract_durability"),
-      // SAC arm (`AssetFromContractData`/`ContractBalanceFromContractData`,
-      // contract_data.go:162-304): empty strings when not a SAC entry
-      when(isSac, concat(lit("TK"), (k % 50).cast("string"))).otherwise(lit(""))
-        .as("asset_code"),
-      when(isSac, concat(lit("ISS"), (k % 3).cast("string"))).otherwise(lit(""))
-        .as("asset_issuer"),
-      when(isSac, lit("credit_alphanum4")).otherwise(lit("")).as("asset_type"),
-      when(isSac, GraftFunctions.strkeyAccount(
-          unhex(sha2(concat(lit("holder|"), (k % 13).cast("string")), 256))))
-        .otherwise(lit("")).as("balance_holder"),
-      when(isSac, GraftFunctions.int128String(col("p_partkey"),
-          col("p_size").cast("long"))).otherwise(lit("")).as("balance"),
-      k.as("last_modified_ledger"),
-      (k % 3).as("ledger_entry_change"),
-      (k % 7 === 6).as("deleted"),
-      timestamp_millis(lit(1700000000000L) + (k + 100) * 5000L)
-        .as("closed_at"),
-      (k + 100).as("ledger_sequence"),
-      // fixture law: the hex hash is taken over the BASE64 rendering of the
-      // key XDR (DuckDB's sha256 is VARCHAR-only, so the oracle re-derives
-      // this exactly; the raw-bytes sha-256 law itself is pinned by the
-      // footprint ledger_key_hash golden vectors in OperationDetailsSpec)
-      sha2(GraftFunctions.base64NoWrap(ledgerKeyXdr), 256)
-        .as("ledger_key_hash"),
-      GraftFunctions.base64NoWrap(keyScval).as("key"),
-      parse_json(GraftFunctions.scvalJson(keyScval)).as("key_decoded"),
-      GraftFunctions.base64NoWrap(valScval).as("val"),
-      parse_json(GraftFunctions.scvalJson(valScval)).as("val_decoded"),
-      GraftFunctions.base64NoWrap(concat(ledgerKeyXdr, valScval))
-        .as("contract_data_xdr"),
-      GraftFunctions.base64NoWrap(ledgerKeyXdr).as("ledger_key_hash_base_64"))
-  }
-
-  /** P14 — contract code at the reference's `ContractCodeOutput` width
-    * (`schema.go:534-556`, `contract_code.go:12-101`): hash, ext version,
-    * the ten wasm cost stats, change metadata, ledger key hash hex+base64. */
-  def contractCode(parts: DataFrame): DataFrame = {
-    val k = col("p_partkey").cast("long")
-    val s = col("p_size").cast("long")
-    val keyHashHex = sha2(concat(lit("ck|"), col("p_name")), 256)
-    parts.select(
-      sha2(concat(lit("wasm|"), col("p_name")), 256).as("contract_code_hash"),
-      (k % 2).as("contract_code_ext_v"),
-      k.as("last_modified_ledger"),
-      (k % 3).as("ledger_entry_change"),
-      (k % 7 === 6).as("deleted"),
-      timestamp_millis(lit(1700000000000L) + (k + 100) * 5000L)
-        .as("closed_at"),
-      (k + 100).as("ledger_sequence"),
-      keyHashHex.as("ledger_key_hash"),
-      (s * 100).as("n_instructions"),
-      pmod(s, lit(20)).as("n_functions"),
-      (s % 9).as("n_globals"),
-      (s % 5).as("n_table_entries"),
-      (s % 11 + 1).as("n_types"),
-      (s % 4).as("n_data_segments"),
-      (s % 3).as("n_elem_segments"),
-      (s % 13).as("n_imports"),
-      (s % 17 + 1).as("n_exports"),
-      (s * 7).as("n_data_segment_bytes"),
-      GraftFunctions.base64NoWrap(unhex(keyHashHex))
-        .as("ledger_key_hash_base_64"))
-  }
-
-  /** P15 — config settings: the full ~45-scalar projection across the 13
-    * config union arms (`config_setting.go:13-163`): contract size, compute,
-    * ledger cost, historical data, events, bandwidth, cost params (as
-    * `array<map<string,string>>`, `serializeParams` at :152-163), data
-    * key/entry sizes, state archival, execution lanes, bucket-list window.
-    * Values derive deterministically from the nation fixture columns. */
-  def configSettings(nations: DataFrame): DataFrame = {
-    val k = col("n_nationkey").cast("long")
-    val r = col("n_regionkey").cast("long")
-    def costParam(const: Column, linear: Column): Column =
-      map(lit("ExtV"), lit("0"),
-        lit("ConstTerm"), const.cast("string"),
-        lit("LinearTerm"), linear.cast("string"))
-    nations.select(
-      k.as("config_setting_id"),
-      (r * 1000).as("contract_max_size_bytes"),
-      (k * 1000000 + 1000).as("ledger_max_instructions"),
-      (r * 100 + 50).as("tx_max_instructions"),
-      (k * 25).as("fee_rate_per_instructions_increment"),
-      (r * 512 + 64).as("tx_memory_limit"),
-      (k % 10 + 1).as("ledger_max_read_ledger_entries"),
-      (k * 2048).as("ledger_max_read_bytes"),
-      (k % 5 + 1).as("ledger_max_write_ledger_entries"),
-      (k * 1024).as("ledger_max_write_bytes"),
-      (k % 8 + 1).as("tx_max_read_ledger_entries"),
-      (k * 512).as("tx_max_read_bytes"),
-      (k % 4 + 1).as("tx_max_write_ledger_entries"),
-      (k * 256).as("tx_max_write_bytes"),
-      (k * 3 + 1).as("fee_read_ledger_entry"),
-      (k * 5 + 2).as("fee_write_ledger_entry"),
-      (k * 7 + 3).as("fee_read_1kb"),
-      (k * 1000000).as("bucket_list_target_size_bytes"),
-      (r * 11).as("write_fee_1kb_bucket_list_low"),
-      (r * 211).as("write_fee_1kb_bucket_list_high"),
-      (k % 3 + 1).as("bucket_list_write_fee_growth_factor"),
-      (k * 13).as("fee_historical_1kb"),
-      (r * 4096).as("tx_max_contract_events_size_bytes"),
-      (k * 17).as("fee_contract_events_1kb"),
-      (k * 8192).as("ledger_max_txs_size_bytes"),
-      (r * 2048 + 512).as("tx_max_size_bytes"),
-      (k * 19).as("fee_tx_size_1kb"),
-      array(costParam(k * 10, r), costParam(k * 20, r + 1))
-        .as("contract_cost_params_cpu_insns"),
-      array(costParam(k * 30, r + 2)).as("contract_cost_params_mem_bytes"),
-      (r * 64 + 16).as("contract_data_key_size_bytes"),
-      (r * 128 + 32).as("contract_data_entry_size_bytes"),
-      (k * 100000 + 10000).as("max_entry_ttl"),
-      lit(16L).as("min_temporary_ttl"),
-      lit(4096L).as("min_persistent_ttl"),
-      (k % 5).as("auto_bump_ledgers"),
-      (k * 1000 + 1).as("persistent_rent_rate_denominator"),
-      (k * 100 + 1).as("temp_rent_rate_denominator"),
-      (k % 7 + 1).as("max_entries_to_archive"),
-      lit(30L).as("bucket_list_size_window_sample_size"),
-      (k * 50000).as("eviction_scan_size"),
-      (k % 6 + 1).as("starting_eviction_scan_level"),
-      (r * 100 + 10).as("ledger_max_tx_count"),
-      array(k * 1000, k * 1000 + 1, k * 1000 + 2)
-        .as("bucket_list_size_window"),
-      k.as("last_modified_ledger"),
-      (k % 3).as("ledger_entry_change"),
-      (k % 7 === 6).as("deleted"),
-      timestamp_millis(lit(1700000000000L) + (k + 100) * 5000L)
-        .as("closed_at"),
-      (k + 100).as("ledger_sequence"))
-  }
-
-  /** P16 — TTLs at the reference's `TtlOutput` width (`schema.go:610-619`,
-    * `ttl.go:12-49`): key hash + live-until + change metadata. */
-  def ttls(eventGrain: DataFrame): DataFrame = {
-    val k = col("event_id").cast("long")
-    eventGrain.select(
-      sha2(col("event_id").cast("string"), 256).as("key_hash"),
-      (col("event_id") + 64).as("live_until_ledger_seq"),
-      col("event_id").as("last_modified_ledger"),
-      (k % 3).as("ledger_entry_change"),
-      (k % 7 === 6).as("deleted"),
-      timestamp_millis(lit(1700000000000L) + (k + 100) * 5000L)
-        .as("closed_at"),
-      (k + 100).as("ledger_sequence"))
-  }
-
-  /** P17 — contract events: topics array + decoded-JSON payload
-    * (`contract_events.go:20-104,128-169`). */
-  def contractEvents(eventGrain: DataFrame): DataFrame = {
-    // event payload as a real ScVal map {amount:i128, event:sym, user:u64}:
-    // `data` = base64(XDR), `data_decoded` = recursive JSON — the exact
-    // column pair `serializeScVal` emits (`contract_events.go:128-169`)
-    val scval = GraftFunctions.scvalEventBytes(col("event_type"),
-      col("user_id"), round(col("value") * 100).cast("long"))
-    eventGrain.select(
-      col("event_id").as("contract_event_id"),
-      array(col("event_type"), col("user_id").cast("string")).as("topics"),
-      GraftFunctions.base64NoWrap(scval).as("data"),
-      GraftFunctions.scvalJson(scval).as("data_decoded"),
-      (col("event_type") === "error").as("in_failed_contract_call"))
   }
 
   /** P18 — raw XDR passthrough table: base64 envelope columns

@@ -10,9 +10,9 @@ import graft.functions.GraftFunctions
 import graft.model.LedgerModel.LedgerRow
 
 /** The four Soroban STATE tables off REAL ledger-entry XDR, plus the
-  * contract-events table off decoded ledger rows — the real-network twin of
-  * the fixture-driven P13–P17 projections, at the reference's exact output
-  * key sets:
+  * contract-events table off decoded ledger rows (P13–P17): the one
+  * implementation of each, the one the export CLI runs, at the reference's
+  * exact output key sets:
   *
   *   - contract_data   (`/root/reference/internal/transform/contract_data.go:49-158`)
   *   - contract_code   (`contract_code.go:12-110`)

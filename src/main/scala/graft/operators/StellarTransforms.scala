@@ -266,62 +266,4 @@ object StellarTransforms {
         col("tx.fee_meta_b64").as("tx_fee_meta"),
         col("header_b64").as("tx_ledger_history"),
         col("closed_at"))
-
-  /** Model-path `contract_events` at the reference's `ContractEventOutput`
-    * key set (`schema.go:622-637`, `contract_events.go:20-104,128-169`):
-    * one row per contract event in the tx meta, topics/data as
-    * base64(ScVal XDR) beside their recursively-decoded VARIANTs, plus the
-    * whole-event XDR (`contract_event_xdr` — the REAL DiagnosticEvent
-    * layout the reference persists, byte-verified against its golden
-    * blobs in ReferenceGoldenSpec). Map-only fan-out; no shuffle. */
-  def contractEvents(ledgers: DataFrame): DataFrame = {
-    import graft.functions.GraftFunctions._
-    val evs = ledgers
-      .select(col("sequence"), col("closed_at"),
-        posexplode(col("transactions")).as(Seq("tx_pos", "tx")))
-      .select(col("sequence"), col("closed_at"),
-        col("tx.hash_hex").as("transaction_hash"),
-        transactionToid(col("sequence"), col("tx_pos") + 1)
-          .as("transaction_id"),
-        col("tx.successful").as("successful"),
-        explode(col("tx.operations")).as("op"))
-      .select(col("sequence"), col("closed_at"), col("transaction_hash"),
-        col("transaction_id"), col("successful"),
-        explode(col("op.sac_events")).as("ev"))
-    // the REAL persisted layout — a DiagnosticEvent wrapper around the
-    // ContractEvent, byte-verified against all 189 blobs in the
-    // reference's contract_events golden: inSuccessfulContractCall bool ‖
-    // ext(0) ‖ optional contractID ‖ type (CONTRACT = 1) ‖ body v0 ‖
-    // topics<ScVal> ‖ data ScVal
-    val eventXdr = concat(
-      int32be(col("successful").cast("int")), // DiagnosticEvent flag
-      unhex(lit("00000000")), // ContractEvent ext v0
-      unhex(lit("00000001")), col("ev.contract_id"), // optional id, present
-      unhex(lit("00000001")), // ContractEventType CONTRACT = 1
-      unhex(lit("00000000")), // body v0
-      int32be(size(col("ev.topics_xdr"))),
-      concat_binary(col("ev.topics_xdr")),
-      col("ev.data_xdr"))
-    evs.select(
-      col("transaction_hash"), col("transaction_id"), col("successful"),
-      col("sequence").cast("long").as("ledger_sequence"), col("closed_at"),
-      col("successful").as("in_successful_contract_call"),
-      strkeyContract(col("ev.contract_id")).as("contract_id"),
-      lit(1).as("type"), // ContractEventType: 0 system, 1 CONTRACT, 2 diag
-      lit("ContractEventTypeContract").as("type_string"),
-      transform(col("ev.topics_xdr"), t => base64NoWrap(t)).as("topics"),
-      transform(col("ev.topics_xdr"), t => parse_json(scvalJson(t)))
-        .as("topics_decoded"),
-      base64NoWrap(col("ev.data_xdr")).as("data"),
-      parse_json(scvalJson(col("ev.data_xdr"))).as("data_decoded"),
-      base64NoWrap(eventXdr).as("contract_event_xdr"))
-  }
-
-  /** Big-endian uint32 as 4 binary bytes (XDR scalar layout). */
-  private def int32be(c: Column): Column =
-    unhex(lpad(hex(c.cast("int")), 8, "0"))
-
-  /** Binary concat of an array<binary> column (XDR vector body). */
-  private def concat_binary(c: Column): Column =
-    aggregate(c, lit(Array.emptyByteArray), (acc, x) => concat(acc, x))
 }

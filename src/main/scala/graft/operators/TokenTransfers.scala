@@ -258,37 +258,6 @@ object TokenTransfers {
           unhex(sha2(concat(lit("issuer-"), coalesce(issuer, lit(""))), 256))))
         .otherwise(lit(Array.emptyByteArray))))
 
-  /** [[fromLedgers]] evaluated ONCE per fixture frame: the event projection
-    * is a ~12-branch nested-struct `when` chain whose expression tree
-    * Catalyst re-analyzes, re-optimizes and re-codegens at every reference —
-    * the [[verify]] gate alone references it three times, which at sf0.1
-    * turned a 1.4 s query into 23 s of plan re-expansion. Persist pins one
-    * physical evaluation (InMemoryTableScan for every consumer); the memo
-    * (keyed on the — itself memoized — ledger frame) keeps repeated catalog
-    * invocations in the same session from stacking duplicate cache entries.
-    * Entry count is bounded by the number of distinct fixture ranges. */
-  private val eventsCache = new java.util.concurrent.ConcurrentHashMap[
-    Dataset[LedgerRow], DataFrame]()
-
-  def eventsCached(ledgers: Dataset[LedgerRow]): DataFrame =
-    // eager localCheckpoint rather than persist: it truncates the lineage,
-    // so later actions skip re-analyzing the giant projection tree (a
-    // persisted frame re-analyzes on every action — cache matching runs
-    // after analysis)
-    eventsCache.computeIfAbsent(ledgers, l => fromLedgers(l).transform(Checkpoints.checkpointed))
-
-  /** Long-lived-session hook: drop every memoized event frame. The
-    * checkpointed RDD blocks become unreachable and Spark's ContextCleaner
-    * unpersists them asynchronously. Two caveats a long-lived session must
-    * own: (a) under the default (no checkpoint dir) policy the checkpoint
-    * blocks are executor-local and NON-replicated, so losing an executor
-    * invalidates a memoized frame — callers recovering from executor loss
-    * should clear and rebuild, or configure `spark.checkpoint.dir` so
-    * [[Checkpoints]] checkpoints reliably; (b) without clearing, entries live for the
-    * session (bounded by the number of distinct fixture ranges, fine for
-    * the catalog; not fine for an unbounded range stream). */
-  def clearCache(): Unit = eventsCache.clear()
-
   /** `VerifyEvents` analog (`token_transfer.go:15-24`): per transaction the
     * fee event total must reconcile with the charged fee, and per value-
     * moving op the emitted leg count must match the model (2 per claim atom,

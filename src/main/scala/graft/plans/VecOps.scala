@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 /** Dense/sparse vector primitives for the driver-resident classifier
   * rounds (r21): the perceptron/langid/DSIR feature frames carry ONE
@@ -42,9 +42,6 @@ object VecOps {
 }
 
 private[plans] object VecTypes {
-  val FvType: DataType = ArrayType(StructType(Seq(
-    StructField("bucket", LongType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
   def isFv(t: DataType): Boolean = t match {
     case ArrayType(s: StructType, _) if s.length == 2 =>
       s(0).dataType == LongType && s(1).dataType == LongType

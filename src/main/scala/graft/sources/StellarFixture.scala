@@ -617,8 +617,9 @@ object StellarFixture {
           if (i % 4 == 3) Some(keyOf(s"pool-${i % 3}")) else None)))
 
   /** `includeTrustlines` is opt-in so the account+offer-only stream the
-    * oracle catalog fixes on stays byte-stable; the CLI's all-types export
-    * turns it on to populate the trust_lines batch files. */
+    * oracle catalog fixes on stays byte-stable; the reference-golden
+    * parity spec turns it on to give `ChangeTransforms.trustlines` rows.
+    * No export command reads this stream. */
   def changes(spark: SparkSession, start: Long, end: Long,
       perLedger: Int = 8, includeTrustlines: Boolean = false): Dataset[ChangeRow] = {
     import spark.implicits._

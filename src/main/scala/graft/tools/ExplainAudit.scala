@@ -276,7 +276,10 @@ object ExplainAudit {
         Seq("RunningWindowFunction", "Window ")),
       // SAC storage walk: single scan, no exchange before the project
       ("p13_sac_storage", Seq("*(1)"), Seq("Exchange hashpartitioning")),
-      ("p15_config_settings", Seq("*(1)"), Seq("Exchange hashpartitioning")),
+      // state table off the datastore decode: map-only up to the sort, no
+      // shuffle on a key
+      ("stellar_config_setting_real_xdr", Seq("*(1)"),
+        Seq("Exchange hashpartitioning")),
       // token-transfer gate: the event frame must be checkpointed so its
       // huge expression tree is evaluated once — every consumer reads the
       // materialized RDD, not a re-expansion of the projection

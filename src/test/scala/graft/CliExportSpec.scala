@@ -416,6 +416,24 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jsonRows(out).size == 7)
   }
 
+  test("export_ledger_entry_changes counts the ledgers it read when no " +
+      "ledger carries a soroban change, for NDJSON and Parquet") {
+    // every state resource is empty over a classic-only tree, so the count
+    // cannot ride the resource writes: a count of 0 here is a false hole
+    val tree = tmpDir("classic-tree")
+    graft.sources.RealXdrFixture.writeClassicBatchTree(tree, 3000, 3063)
+    for (format <- Seq("ndjson", "parquet")) {
+      val out = tmpDir(s"no-soroban-$format") + "/changes"
+      val log = printed("export_ledger_entry_changes", "--start", "3005",
+        "--end", "3063", "--batch-size", "50", "--format", format,
+        "--batch-input", tree, "--output", out)
+      assert(log.contains("""{"ledgers_expected":59,"ledgers_read":59}"""),
+        s"$format: $log")
+      assert(log.contains(""""resource":"ttl","batches":2,"nonEmpty":0"""),
+        s"$format: $log")
+    }
+  }
+
   test("--batch-input --limit: the export finishes and prints no ledgers " +
       "read line, which a limited read would show as a false hole") {
     import scala.concurrent.{Await, Future}

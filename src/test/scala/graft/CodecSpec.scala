@@ -239,6 +239,23 @@ class CodecSpec extends AnyFunSuite {
       s"""{"address":"${Strkey.encodeAccountId(acct)}"}""")
     assert(ScVal.jsonFromBinary(encode(Sym("transfer"))) ==
       """{"symbol":"transfer"}""")
+    // a contract-event map: symbol keys over i128 / symbol / u64 values,
+    // byte layout and binary decode, and unchanged through Spark's VARIANT
+    // parse and render (what `parse_json` + `to_json` run)
+    val event = encode(M(Seq(Sym("amount") -> I128(0L, 12345L),
+      Sym("event") -> Sym("mint"), Sym("user") -> U64(-1L))))
+    assert(hexStr(event) == "000000110000000100000003" +
+      "0000000f00000006616d6f756e740000" +
+      "0000000a" + "0000000000000000" + "0000000000003039" +
+      "0000000f000000056576656e74000000" + "0000000f000000046d696e74" +
+      "0000000f0000000475736572" + "00000005ffffffffffffffff")
+    val eventJson =
+      """{"map":[{"key":{"symbol":"amount"},"val":{"i128":{"hi":0,"lo":12345}}},""" +
+      """{"key":{"symbol":"event"},"val":{"symbol":"mint"}},""" +
+      """{"key":{"symbol":"user"},"val":{"u64":18446744073709551615}}]}"""
+    assert(ScVal.jsonFromBinary(event) == eventJson)
+    assert(org.apache.spark.types.variant.VariantBuilder
+      .parseJson(eventJson, false).toJson(java.time.ZoneOffset.UTC) == eventJson)
   }
 
   test("scval full arm coverage: error, u256/i256, nonce keys") {

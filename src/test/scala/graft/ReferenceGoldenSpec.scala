@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.codec.{Hashes, Strkey}
 import graft.operators._
-import graft.sources.{LedgerFixtures, StellarFixture}
+import graft.sources.{LcmBatchFiles, LedgerFixtures, RealXdrFixture, StellarFixture}
 
 /** Parity against the reference's OWN published output: the golden NDJSON
   * under `/root/reference/testdata` (real-mainnet rows for 17 table
@@ -118,8 +118,17 @@ class ReferenceGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ---- frames under test (same constructions as the CLI export paths) ------
+  // The classic entry tables, which no export writes yet, use their catalog
+  // stand-ins.
 
   private lazy val fx = StellarFixture.ledgers(spark, 1000, 1004)
+  /** The CLI's ledger input for the soroban tables: a datastore tree read
+    * back through the range scan `--batch-input` runs. */
+  private lazy val sorobanLedgers = {
+    val tree = java.nio.file.Files.createTempDirectory("graft-golden-xdr").toString
+    RealXdrFixture.writeBatchTree(tree, 3000, 3003)
+    LcmBatchFiles.ledgerRowsForRange(spark, tree, 3000, 3003)
+  }
   private lazy val changes =
     StellarFixture.changes(spark, 1000, 1004, includeTrustlines = true)
   private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
@@ -169,8 +178,9 @@ class ReferenceGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("contract_events: exact key/type parity") {
-    assertParity(StellarTransforms.contractEvents(fx.toDF()),
-      goldenRows("contract_events"), exact = true)
+    val rows = goldenRows("contract_events")
+    assertParity(SorobanStateTables.contractEventsFromLedgers(sorobanLedgers),
+      rows, exact = true)
   }
 
   test("ledger_transactions: exact key/type parity") {
@@ -213,11 +223,11 @@ class ReferenceGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("changes: per-entry-type exact parity (pools, contract data/code, config)") {
     assertParity(EntryProjections.liquidityPools(tbl("part")),
       goldenRows("changes", "pools.golden"), exact = true)
-    assertParity(EntryProjections.contractData(tbl("part")),
+    assertParity(SorobanStateTables.contractDataFromLedgers(sorobanLedgers),
       goldenRows("changes", "contract_data.golden"), exact = true)
-    assertParity(EntryProjections.contractCode(tbl("part")),
+    assertParity(SorobanStateTables.contractCodeFromLedgers(sorobanLedgers),
       goldenRows("changes", "contract_code.golden"), exact = true)
-    assertParity(EntryProjections.configSettings(tbl("nation")),
+    assertParity(SorobanStateTables.configSettingsFromLedgers(sorobanLedgers),
       goldenRows("changes", "config_setting.golden"), exact = true)
   }
 
@@ -492,72 +502,6 @@ class ReferenceGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(checked > 300, s"only $checked ScVal values checked")
-  }
-
-  test("contract_event_xdr: our builder reproduces the reference's blob") {
-    // feed a REAL golden event's raw parts (contract id, topic/data ScVal
-    // bytes) through the production builder; the emitted whole-event XDR
-    // must equal the reference's persisted DiagnosticEvent blob byte for
-    // byte — this pins the wrapper layout, the optional-id arm, the type
-    // enum, and the vector encoding
-    import graft.model.LedgerModel._
-    val b64 = java.util.Base64.getDecoder
-    def int32(v: Int): Array[Byte] = Array(
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    // 1) the layout law over ALL golden rows: reassembling the blob from
-    // the row's own parts must reproduce it byte for byte
-    val all = goldenRows("contract_events")
-    assume(all.nonEmpty)
-    all.foreach { r =>
-      val cid = r.get("contract_id").asText
-      val expected = b64.decode(r.get("contract_event_xdr").asText)
-      val rebuilt =
-        int32(if (r.get("in_successful_contract_call").asBoolean) 1 else 0) ++
-        int32(0) ++
-        (if (cid.nonEmpty) int32(1) ++ Strkey.decode(16.toByte, cid)
-         else int32(0)) ++
-        int32(r.get("type").asInt) ++ int32(0) ++
-        int32(r.get("topics").size) ++
-        (0 until r.get("topics").size).flatMap(i =>
-          b64.decode(r.get("topics").get(i).asText)).toArray ++
-        b64.decode(r.get("data").asText)
-      assert(java.util.Arrays.equals(rebuilt, expected),
-        s"layout mismatch for tx ${r.get("transaction_hash").asText.take(8)}")
-    }
-    // 2) the production builder on a real event's raw parts: every golden
-    // row is a DIAGNOSTIC event, while the fixture model only carries
-    // CONTRACT-type events, so the expectation is the golden blob with
-    // the type word (offset 44, after bool‖ext‖hasCid‖cid) set to 1
-    val withCid = all.filter(r => r.get("contract_id").asText.nonEmpty &&
-      r.get("in_successful_contract_call").asBoolean)
-    assume(withCid.nonEmpty)
-    withCid.take(5).foreach { r =>
-      val ev = SacEventRaw(
-        Strkey.decode(16.toByte, r.get("contract_id").asText),
-        (0 until r.get("topics").size).map(i =>
-          b64.decode(r.get("topics").get(i).asText)),
-        b64.decode(r.get("data").asText))
-      val tx = TxModel("ab" * 32, Array.fill[Byte](32)(1), None, 1L, 100L,
-        100L, successful = true, "TransactionResultCodeTxSuccess", "none",
-        None, None, None, None, None, None, None, "", "", "", "", Nil,
-        Seq(OpModel(24, None, None, 0L, "", "", sac_events = Seq(ev))))
-      val row = LedgerRow(1000L, Array.fill[Byte](32)(2),
-        Array.fill[Byte](32)(3), "",
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-        0L, 0L, 0L, 0L, 0L, 21L, 0L, Array.fill[Byte](32)(4),
-        Array.emptyByteArray, 0L, Seq(tx))
-      val s = spark; import s.implicits._
-      val out = graft.operators.StellarTransforms
-        .contractEvents(Seq(row).toDS().toDF())
-        .select("contract_event_xdr", "type").head()
-      val expected = b64.decode(r.get("contract_event_xdr").asText)
-      System.arraycopy(int32(1), 0, expected, 44, 4) // CONTRACT type word
-      assert(out.getString(0) ==
-        java.util.Base64.getEncoder.encodeToString(expected),
-        s"builder blob mismatch for ${r.get("contract_id").asText}")
-      assert(out.getInt(1) == 1)
-    }
   }
 
   test("effects details vocabulary: golden payload keys are all emitted") {
