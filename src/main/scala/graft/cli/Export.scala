@@ -102,7 +102,13 @@ object Export {
       case "--batch-input" :: v :: t => loop(a.copy(batchInput = v), t)
       case "--permissive" :: t => loop(a.copy(permissive = true), t)
       case "--format" :: v :: t => loop(a.copy(format = v), t)
-      case ("--limit" | "-l") :: v :: t => loop(a.copy(limit = v.toLong), t)
+      // a negative limit means every row, as in the reference; above
+      // Int.MaxValue Spark's limit cannot hold it
+      case ("--limit" | "-l") :: v :: t =>
+        val n = v.toLong
+        if (n > Int.MaxValue) sys.error(
+          s"--limit $n is above the largest supported limit, ${Int.MaxValue}")
+        loop(a.copy(limit = n), t)
       case "--export-type" :: v :: t => loop(a.copy(exportType = v), t)
       case ("--batch-size" | "-b") :: v :: t => loop(a.copy(batchSize = v.toLong), t)
       case "--start-time" :: v :: t => loop(a.copy(startTime = v), t)
@@ -146,20 +152,28 @@ object Export {
   private def withExtras(df: DataFrame, extras: Map[String, String]): DataFrame =
     extras.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
 
-  /** K1/K2 sinks + K5 stats line + the MaybeUpload hook. */
-  private def sink(df0: DataFrame, a: Args): Unit = {
+  /** The frame [[sink]] writes: `--limit`, then `--extra-fields`, with the
+    * K5 row count riding the write query as `rows` on `written`. */
+  private[graft] def toWrite(df0: DataFrame, a: Args,
+      written: Observation): DataFrame = {
     val limited = if (a.limit >= 0) df0.limit(a.limit.toInt) else df0
-    val df = withExtras(limited, a.extraFields)
+    withExtras(limited, a.extraFields)
+      .observe(written, count(lit(1)).as("rows"))
+  }
+
+  /** K1/K2 sinks + K5 stats line + the MaybeUpload hook. K5 counts the rows
+    * as the write query emits them, so no second job reads the output
+    * back. An empty output may carry no metric (adaptive execution can
+    * replace an empty stage with an empty relation): that is 0 rows. */
+  private def sink(df0: DataFrame, a: Args): Unit = {
+    val written = Observation("graft_rows_written")
+    val df = toWrite(df0, a, written)
     a.format match {
       case "ndjson" => df.write.mode("overwrite").json(a.output)
       case "parquet" => df.write.mode("overwrite").parquet(a.output)
       case other => sys.error(s"unknown format: $other")
     }
-    // the JSON writer emits one line per record, so a line count is the
-    // row count without a schema-inferring parse; Parquet counts off footers
-    val reread = df.sparkSession.read
-    val n = (if (a.format == "ndjson") reread.text(a.output)
-      else reread.parquet(a.output)).count()
+    val n = written.get.getOrElse("rows", 0L)
     // PrintTransformStats parity (`cmd/command_utils.go:90-103`)
     println(s"""{"attempted":$n,"failed":0,"successful":$n}""")
     maybeUpload(df.sparkSession, a, a.output)
@@ -276,10 +290,16 @@ object Export {
     } else if (a.limit >= 0) write(src)
     else {
       val read = Observation("graft_ledgers_read")
-      write(src.observe(read, count(lit(1)).as("ledgers")))
+      write(countedLedgers(src, read))
       report(read.get.getOrElse("ledgers", 0L))
     }
   }
+
+  /** The command's ledgers with the ledgers-read count riding the export's
+    * own query as `ledgers` on `read`. */
+  private[graft] def countedLedgers(src: Dataset[LedgerRow],
+      read: Observation): Dataset[LedgerRow] =
+    src.observe(read, count(lit(1)).as("ledgers"))
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)

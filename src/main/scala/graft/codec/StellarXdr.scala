@@ -2144,7 +2144,8 @@ object StellarXdr {
       node_id_key = h.nodeId.orNull,
       signature = h.signature.orNull,
       bucket_list_size = bucketListSize,
-      transactions = txs)
+      transactions = txs,
+      tx_counts = TxCounts.of(txs))
 
   // ---- ledger close meta (the datastore wire) --------------------------------
 

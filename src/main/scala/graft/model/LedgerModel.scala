@@ -278,7 +278,24 @@ object LedgerModel {
       // across the tx's whole meta — the P13-P16 state-table grain
       state_changes: Seq[StateChangeModel] = Seq.empty)
 
-  /** One closed ledger. */
+  /** The tx-set counts `history_ledgers` reports (`transform/ledger.go`):
+    * txs that succeeded and failed, ops in the successful txs, and ops in
+    * the whole tx set. Carried as decoded scalars so the ledgers export
+    * reads no `transactions` array; every `LedgerRow` takes them from
+    * [[TxCounts.of]] over its own transactions. */
+  case class TxCounts(
+      successful_txs: Int, failed_txs: Int,
+      successful_ops: Int, tx_set_ops: Int)
+
+  object TxCounts {
+    def of(txs: Seq[TxModel]): TxCounts = {
+      val (ok, failed) = txs.partition(_.successful)
+      TxCounts(ok.size, failed.size, ok.map(_.operations.size).sum,
+        txs.map(_.operations.size).sum)
+    }
+  }
+
+  /** One closed ledger. `tx_counts` is `TxCounts.of(transactions)`. */
   case class LedgerRow(
       sequence: Long,
       ledger_hash: Array[Byte],
@@ -295,5 +312,6 @@ object LedgerModel {
       node_id_key: Array[Byte],
       signature: Array[Byte],
       bucket_list_size: Long,
-      transactions: Seq[TxModel])
+      transactions: Seq[TxModel],
+      tx_counts: TxCounts)
 }

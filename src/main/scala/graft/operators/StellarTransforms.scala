@@ -9,9 +9,10 @@ import graft.model.LedgerModel.LedgerRow
 /** The real history-table transforms over the decoded ledger model
   * (`Dataset[LedgerRow]`) — P1/P2/P3 with the reference's exact output
   * columns (`transform/{ledger,transaction,operation}.go`). Everything is
-  * column algebra over the nested structs: counts are intra-row higher-order
-  * functions, ids are bit expressions, address rendering is the native strkey
-  * expression; the only explode is the grain change itself. */
+  * column algebra over the nested structs: ledger counts are decoded
+  * scalars, other counts intra-row higher-order functions, ids are bit
+  * expressions, address rendering is the native strkey expression; the
+  * only explode is the grain change itself. */
 object StellarTransforms {
 
   /** Go's `xdr.MemoType.String()` names (`transaction.go:74-89`). */
@@ -44,17 +45,14 @@ object StellarTransforms {
       hexLower(col("previous_ledger_hash")).as("previous_ledger_hash"),
       col("header_b64").as("ledger_header"),
       // successful only: txCount - failedTxCount (`ledger.go:149`; golden
-      // single_ledger has transaction_count 46 with 11 failed)
-      size(filter(col("transactions"), t => t("successful")))
-        .as("transaction_count"),
-      aggregate(filter(col("transactions"), t => t("successful")),
-        lit(0), (acc, t) => acc + size(t("operations"))).as("operation_count"),
-      size(filter(col("transactions"), t => t("successful")))
-        .as("successful_transaction_count"),
-      size(filter(col("transactions"), t => !t("successful")))
-        .as("failed_transaction_count"),
-      aggregate(col("transactions"), lit(0), (acc, t) => acc + size(t("operations")))
-        .cast("string").as("tx_set_operation_count"),
+      // single_ledger has transaction_count 46 with 11 failed). The counts
+      // are decoded scalars (`TxCounts`), so this projection reads no
+      // `transactions` and the source's serializer is pruned to the header.
+      col("tx_counts.successful_txs").as("transaction_count"),
+      col("tx_counts.successful_ops").as("operation_count"),
+      col("tx_counts.successful_txs").as("successful_transaction_count"),
+      col("tx_counts.failed_txs").as("failed_transaction_count"),
+      col("tx_counts.tx_set_ops").cast("string").as("tx_set_operation_count"),
       col("closed_at"),
       col("total_coins"), col("fee_pool"), col("base_fee"), col("base_reserve"),
       col("max_tx_set_size"), col("protocol_version"),

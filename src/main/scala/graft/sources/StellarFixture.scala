@@ -499,7 +499,8 @@ object StellarFixture {
         if (t % 5 == 3) Seq(keyOf(s"extra-$l-$t")) else Seq.empty)
   }
 
-  def ledger(seq: Long): LedgerRow =
+  def ledger(seq: Long): LedgerRow = {
+    val txs = (0 until ((seq % 5) + 1).toInt).map(t => tx(seq, t))
     LedgerRow(
       sequence = seq,
       ledger_hash = keyOf(s"ledger-$seq"),
@@ -514,7 +515,9 @@ object StellarFixture {
       node_id_key = keyOf(s"node-${seq % 5}"),
       signature = keyOf(s"sig-$seq").take(16),
       bucket_list_size = 20_000_000_000L + seq,
-      transactions = (0 until ((seq % 5) + 1).toInt).map(t => tx(seq, t)))
+      transactions = txs,
+      tx_counts = TxCounts.of(txs))
+  }
 
   /** Session-scoped decode-once memo, same architecture as
     * `LedgerFixtures.ledgers`: building a ledger row is pure CPU (sha-256

@@ -455,25 +455,85 @@ class CliExportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows1.size == 1)
   }
 
+  /** The rows an export wrote, read back from its files: NDJSON lines, or
+    * the Parquet files' row count (0 when the write left none). */
+  private def rowsOnDisk(out: String, format: String): Long = format match {
+    case "ndjson" => jsonRows(out).size.toLong
+    case "parquet" =>
+      if (Files.list(Paths.get(out)).iterator().asScala
+          .exists(_.toString.endsWith(".parquet")))
+        spark.read.parquet(out).count()
+      else 0L
+  }
+
+  private def k5(n: Long): String =
+    s"""{"attempted":$n,"failed":0,"successful":$n}"""
+
   test("the K5 stats line counts the rows written, for NDJSON and Parquet " +
       "alike, under --limit and --extra-fields") {
     val tree = batchTree(9500, 9503)
-    for (format <- Seq("ndjson", "parquet")) {
-      val out = tmpDir(s"k5-$format") + "/ops"
+    for (format <- Seq("ndjson", "parquet"); limit <- Seq(3L, 0L)) {
+      val out = tmpDir(s"k5-$format-$limit") + "/ops"
       val log = printed("export_operations", "--start", "9500", "--end",
-        "9503", "--batch-input", tree, "--format", format, "--limit", "3",
-        "--extra-fields", "batch=k5", "--output", out)
-      val back = format match {
-        case "ndjson" => spark.read.json(out)
-        case "parquet" => spark.read.parquet(out)
+        "9503", "--batch-input", tree, "--format", format, "--limit",
+        limit.toString, "--extra-fields", "batch=k5", "--output", out)
+      assert(rowsOnDisk(out, format) == limit, s"$format --limit $limit")
+      if (limit > 0) {
+        val back = format match {
+          case "ndjson" => spark.read.json(out)
+          case "parquet" => spark.read.parquet(out)
+        }
+        assert(back.where(org.apache.spark.sql.functions.col("batch") === "k5")
+          .count() == limit, format)
       }
-      val n = back.count()
-      assert(n == 3, format)
-      assert(back.where(org.apache.spark.sql.functions.col("batch") === "k5")
-        .count() == n, format)
-      assert(log.contains(s"""{"attempted":$n,"failed":0,"successful":$n}"""),
-        s"$format: $log")
+      assert(log.contains(k5(limit)), s"$format --limit $limit: $log")
     }
+  }
+
+  test("the K5 line equals a re-read of the output: export_ledgers and " +
+      "export_operations, NDJSON and Parquet") {
+    val tree = batchTree(9600, 9607)
+    for (cmd <- Seq("export_ledgers", "export_operations");
+         format <- Seq("ndjson", "parquet")) {
+      val out = tmpDir(s"k5-$cmd-$format") + "/out"
+      val log = printed(cmd, "--start", "9600", "--end", "9607",
+        "--batch-input", tree, "--format", format, "--output", out)
+      val n = rowsOnDisk(out, format)
+      assert(n >= 8, s"$cmd $format")
+      assert(log.contains(k5(n)), s"$cmd $format: $log")
+    }
+  }
+
+  test("an export whose output is empty prints a K5 count of 0 and returns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // the classic LP/CB tree holds no offers, so it has no trades
+    val tree = tmpDir("classic-no-trades")
+    graft.sources.RealXdrFixture.writeClassicBatchTree(tree, 3000, 3007)
+    for (format <- Seq("ndjson", "parquet")) {
+      val out = tmpDir(s"k5-empty-$format") + "/trades"
+      val log = Await.result(Future(printed("export_trades", "--start",
+        "3000", "--end", "3007", "--batch-input", tree, "--format", format,
+        "--output", out)), 3.minutes)
+      assert(log.contains(k5(0)), s"$format: $log")
+      assert(rowsOnDisk(out, format) == 0L, format)
+    }
+  }
+
+  test("--limit above Int.MaxValue is rejected naming the flag; a negative " +
+      "limit means every row") {
+    val err = intercept[RuntimeException](
+      Export.parse(Array("export_ledgers", "--limit", "3000000000")))
+    assert(err.getMessage.contains("--limit"), err.getMessage)
+    assert(Export.parse(Array("export_ledgers", "-l", "2147483647")).limit ==
+      Int.MaxValue)
+    val tree = batchTree(9800, 9802)
+    val out = tmpDir("negative-limit") + "/ledgers"
+    val log = printed("export_ledgers", "--start", "9800", "--end", "9802",
+      "--batch-input", tree, "--limit", "-5", "--output", out)
+    assert(log.contains(k5(3)), log)
+    assert(jsonRows(out).size == 3)
   }
 
   test("impossible ranges fail before anything is read or written: --end " +

@@ -155,7 +155,8 @@ class EffectsDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
       total_coins = 0L, fee_pool = 0L, base_fee = 100L,
       base_reserve = 5000000L, max_tx_set_size = 100L, protocol_version = 21L,
       soroban_fee_write_1kb = 0L, node_id_key = k32(4), signature = k32(5),
-      bucket_list_size = 0L, transactions = Seq(tx))
+      bucket_list_size = 0L, transactions = Seq(tx),
+      tx_counts = TxCounts.of(Seq(tx)))
     StellarTradesEffects.historyEffects(Seq(row).toDS())
       .selectExpr("type", "to_json(details) AS details")
       .collect().map(r => EffectRowOut(r.getInt(0), r.getString(1))).toSeq
@@ -216,7 +217,8 @@ class EffectsDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
         total_coins = 0L, fee_pool = 0L, base_fee = 100L,
         base_reserve = 5000000L, max_tx_set_size = 100L, protocol_version = 21L,
         soroban_fee_write_1kb = 0L, node_id_key = k32(4), signature = k32(5),
-        bucket_list_size = 0L, transactions = Seq(tx))
+        bucket_list_size = 0L, transactions = Seq(tx),
+        tx_counts = TxCounts.of(Seq(tx)))
       StellarTradesEffects.historyEffects(Seq(l).toDS())
         .selectExpr("type", "address", "address_muxed",
           "to_json(details) AS details")

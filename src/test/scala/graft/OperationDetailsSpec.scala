@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.codec.{ClaimPredicate, Hashes, ScVal, Strkey}
 import graft.operators.StellarTransforms
+import graft.model.LedgerModel.TxCounts
 import graft.sources.StellarFixture
 
 /** Golden-row assertions for the per-type `history_operations.details` case
@@ -340,7 +341,8 @@ class OperationDetailsSpec extends AnyFunSuite with BeforeAndAfterAll {
       blank.copy(op_type = 17, source_key = Some(sponsoree),
         sponsored_id_key = None))
     val tx = StellarFixture.tx(1, 1).copy(source_key = sponsorTx, operations = ops)
-    val ledger = StellarFixture.ledger(1).copy(transactions = Seq(tx))
+    val ledger = StellarFixture.ledger(1).copy(transactions = Seq(tx),
+      tx_counts = TxCounts.of(Seq(tx)))
     val d = StellarTransforms.historyOperations(spark.createDataset(Seq(ledger)))
       .where(col("type") === 17).select(to_json(col("details"), java.util.Map.of("ignoreNullFields", "true"))).head().getString(0)
     assert(d == s"""{"begin_sponsor":"${Strkey.encodeAccountId(keyOf("sponsor-op"))}"}""")

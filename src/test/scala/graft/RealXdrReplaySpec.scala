@@ -88,9 +88,10 @@ class RealXdrReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
     txsByLedger(txGolden).toSeq.map { case (seq, txs) =>
       val closedAt = java.sql.Timestamp.from(
         java.time.Instant.parse(txs.head.get("closed_at").asText()))
+      val decoded = txs.map(txInput).map(StellarXdr.decodeTx(_))
       LedgerRow(seq, Array.emptyByteArray, Array.emptyByteArray, "",
         closedAt, 0L, 0L, 0L, 0L, 0L, 13L, 0L, null, null, 0L,
-        txs.map(txInput).map(StellarXdr.decodeTx(_)))
+        decoded, TxCounts.of(decoded))
     }
 
   /** The ledgers golden and its tx golden as a datastore tree: each

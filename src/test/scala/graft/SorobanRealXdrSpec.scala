@@ -209,7 +209,7 @@ class SorobanRealXdrSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
         LedgerRow(seq, Array.emptyByteArray, Array.emptyByteArray, "",
           ts(evs.head.get("closed_at").asText()), 0L, 0L, 0L, 0L, 0L, 21L,
-          0L, null, null, 0L, txs)
+          0L, null, null, 0L, txs, TxCounts.of(txs))
       }
     val out = SorobanStateTables.contractEventsFromLedgers(ledgers.toDS())
     assertMultisetEqual(golden, out,
